@@ -7,6 +7,15 @@ layer's Spark jobs carry its job group. The caller compares the chain's
 report row and pair count with an untraced ``main()`` on the same input, so
 a chain that drifts from the job fails the run instead of timing something
 else.
+
+The chain caches what ``main()`` caches (the signature frame, and the LSH
+band tables inside ``near_dup_edges``) plus two frames it needs to keep
+layers apart: the near-dup edges and the lifted containment edges. Without
+them the components span would recompute LSH and containment. ``main()``
+computes the edge verify twice, once for components and once for the pairs
+sink; the chain computes it once, so its layer sum is short of the job by
+one verify pass. The keeper layer is materialized but not cached: every
+sink recomputes the keeper window, as in ``main()``.
 """
 
 from __future__ import annotations
@@ -79,10 +88,8 @@ def batch_chain(spark, tracer, input_dir: Path, out: Path, run_dedup) -> dict:
         extra["operators.containment.edges"] = lifted.count()
 
     with tracer.span("operators.components"):
+        # eager: edges are checkpointed, labels come back from the driver
         labels, cc = connected_components(e_near.union(lifted).distinct(), cfg.cc_max_iters)
-        labels = labels.persist()
-        caches.append(labels)
-        labels.count()
     extra["operators.components.edges"] = cc.get("edges", 0)
     extra["operators.components.iterations"] = cc.get("iterations", 0)
     extra["operators.components.mode"] = cc.get("mode")
@@ -100,13 +107,9 @@ def batch_chain(spark, tracer, input_dir: Path, out: Path, run_dedup) -> dict:
             .withColumn("rn", F.row_number().over(w_ord))
             .filter(F.col("group_count") > 1)
             .withColumn("action", F.when(F.col("rn") == 1, F.lit("KEEP")).otherwise(F.lit("DELETE")))
-        ).persist()
-        caches.append(labeled)
+        )
         row = labeled.agg(F.count(F.lit(1)).alias("rows"),
                           F.count_distinct("cluster_id").alias("clusters")).first()
-        report_df = dedup_report(labeled).persist()
-        caches.append(report_df)
-        report_df.count()
     extra["operators.keeper.labeled_rows"] = row["rows"]
     extra["operators.keeper.clusters"] = row["clusters"]
 
@@ -115,7 +118,7 @@ def batch_chain(spark, tracer, input_dir: Path, out: Path, run_dedup) -> dict:
             "overwrite").parquet(str(out / "clusters"))
         exact_edges(sigs, "clip_id").union(e_near).distinct().write.mode(
             "overwrite").parquet(str(out / "pairs"))
-        report = sinks.write_report_json(report_df, out / "report.json")
+        report = sinks.write_report_json(dedup_report(labeled), out / "report.json")
         sinks.append_actions(action_plan(labeled, "clip_id"), out / "actions", run_id=run_id)
         n_parts = sinks.append_partition_lineage(clips, out / "partitions", run_id=run_id)
         (sigs.drop("digest_root").withColumn("run_id", F.lit(run_id))

@@ -170,10 +170,11 @@ def main(argv=None) -> int:
     shutil.rmtree(work, ignore_errors=True)
     host.configure_env(root, work)
     sys.path.insert(0, str(root))
-    sampler = host.RssSampler()
-    sampler.start()
 
     fx = stage.stage(root / ".bench_cache", args.workload, N_CLIPS[args.workload], args.seed)
+    # sampled from here, so datagen's memory on a cache miss is not counted
+    sampler = host.RssSampler()
+    sampler.start()
     run_dedup = load_run_dedup(root)
     from file_deduplicator_spark.session import get_spark
 
@@ -207,9 +208,10 @@ def main(argv=None) -> int:
             jobs.run()
         timed = jobs.ops[1:]
         layer_out = traced(spark, tracer, run_dedup, fx, work, args.seed, jobs)
+    # stopped before the CPU probe starts its own processes
+    peak_rss = sampler.stop()
     probe = host.cpu_probe(root, host.nproc())
     host.stop_spark(spark)
-    peak_rss = sampler.stop()
     if layer_out:
         # the event log is complete once the session has stopped
         finish_layers(layer_out, tracer, work)
@@ -338,6 +340,11 @@ def print_layers(out: dict, walls: list[float]) -> None:
                         for k, v in m.items() if k.startswith(layer + "."))
         print(f"layer {layer}: {cols} spark_jobs_total={g.get('jobs', 0)}")
     print(f"layer operators.components: mode={out['extra'].get('operators.components.mode')}")
+    chain = [la for la in tr.LAYERS if la not in ("setup", "sources.snapshots", "streaming.watch")]
+    total = sum(m[f"{la}.wall_s"] for la in chain)
+    if total:
+        print("layer shares of the traced batch chain (wall): "
+              + " ".join(f"{la}={m[f'{la}.wall_s'] / total:.1%}" for la in chain))
     w = out.get("watch")
     if w:
         print("metric commit_p50_s = "
