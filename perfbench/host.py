@@ -16,6 +16,7 @@ import time
 from pathlib import Path
 
 PAGE = os.sysconf("SC_PAGE_SIZE")
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 
 def nproc() -> int:
@@ -99,6 +100,28 @@ def tree_rss_mb(root_pid: int) -> float:
         except (OSError, IndexError, ValueError):
             pass  # the process ended between the listing and the read
     return total / (1 << 20)
+
+
+def descendants_cpu_s(root_pid: int) -> float:
+    """CPU seconds (user + system) of every process below ``root_pid``,
+    ``root_pid`` itself excluded. A process's reaped children count through
+    its cutime/cstime, so Python workers that exited inside the window are
+    still counted by the pyspark daemon that reaped them."""
+    ticks = 0
+    for pid in descendants(root_pid)[1:]:
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                ticks += sum(int(x) for x in f.read().rsplit(")", 1)[1].split()[11:15])
+        except (OSError, IndexError, ValueError):
+            pass  # the process ended between the listing and the read
+    return ticks / CLK_TCK
+
+
+def job_cpu_s() -> float:
+    """CPU clock of the work a job does: the calling thread (the Python
+    driver, which runs main()) plus the JVM and Python workers below it.
+    The RSS sampler's thread is left out."""
+    return time.thread_time() + descendants_cpu_s(os.getpid())
 
 
 class RssSampler(threading.Thread):

@@ -10,6 +10,8 @@ that the metric lists in run.py match BENCHMARK.json when it is present.
 from __future__ import annotations
 
 import json
+import os
+import subprocess
 import sys
 import tempfile
 from pathlib import Path
@@ -21,6 +23,7 @@ import pandas as pd  # noqa: E402
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
+import host  # noqa: E402
 import run  # noqa: E402
 import stage  # noqa: E402
 import tracing  # noqa: E402
@@ -109,17 +112,34 @@ def test_printing() -> None:
     assert run.tail([1.0] * 10) is None
     p, v = run.tail([float(i) for i in range(1, 21)])
     assert p == 50.0 and v == 10.0
-    line = run.result_line(True, 3, 0, {"setup_s": 1.5, "clips_per_s": 200.25, "peak_rss_mb": 900.0},
+    line = run.result_line(True, 3, 0, {"setup_s": 1.5, "clips_per_cpu_s": 27.5, "peak_rss_mb": 900.0},
                            run.END_TO_END)
     doc = json.loads(line)
     assert set(doc) == {"correct", "attempted", "failed", "metrics"}
-    assert doc["metrics"]["clips_per_s"] == {"value": 200.25, "unit": "clips/s"}
+    assert doc["metrics"]["clips_per_cpu_s"] == {"value": 27.5, "unit": "clips/cpu-s"}
     try:
         run.result_line(True, 1, 0, {"setup_s": 1.0}, run.END_TO_END)
     except KeyError:
         pass
     else:
         raise AssertionError("a missing metric must not print a result")
+
+
+def test_job_cpu() -> None:
+    # a child that burns ~0.3 s of CPU, then waits to be read: it counts as a
+    # descendant of this process, and a process does not count itself
+    child = subprocess.Popen([sys.executable, "-c",
+                              "import sys, time\nt = time.process_time()\n"
+                              "while time.process_time() - t < 0.3: pass\n"
+                              "print(flush=True); sys.stdin.read()"],
+                             stdin=subprocess.PIPE, stdout=subprocess.PIPE)
+    try:
+        child.stdout.readline()
+        assert host.descendants_cpu_s(os.getpid()) >= 0.25
+        assert host.descendants_cpu_s(child.pid) == 0.0
+    finally:
+        child.stdin.close()
+        child.wait()
 
 
 def test_benchmark_json() -> None:
@@ -140,6 +160,7 @@ def main() -> int:
         test_event_log(tmp / "log")
         test_checks(tmp / "checks")
     test_printing()
+    test_job_cpu()
     test_benchmark_json()
     print("perfbench selftest: ok")
     return 0
