@@ -202,8 +202,8 @@ def q_minhash_lsh_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via MinHash LSH over documents — portable md5-based
     hashing (functions/portable.py) so DuckDB computes the identical bands,
     candidates, and agreements (full value-level oracle). The production
-    pipeline path uses the same operators with xxhash64 signatures (pytest
-    parity); only the base hash differs."""
+    pipeline uses the same band/verify operators over the Arrow signature
+    stage's MinHash (blake2b shingle hashes); only the base hash differs."""
     from file_deduplicator_spark.config import DedupConfig
     from file_deduplicator_spark.functions.portable import (
         portable_minhash_bands_col,

@@ -53,15 +53,6 @@ class DedupConfig:
     keep_criteria: str = "first"     # oldest|newest|largest|smallest|path:<s>|first
 
     # --- MinHash / LSH over transcripts (new; north_star requirement) ---
-    # impl: 'arrow' = one combined mapInArrow pass with the audio decode
-    # (zero-copy binary access; blake2b base hashes — the default and the
-    # scaling path); 'pandas' = same kernels via mapInPandas (slower: the
-    # pandas conversion materializes per-row bytes objects); 'sql' = pure
-    # Column expressions (xxhash64 base hashes; zero Python, ~3x slower via
-    # interpreted HOFs). 'arrow' and 'pandas' produce IDENTICAL signatures;
-    # 'sql' signatures are incompatible with both — never mix impl families
-    # within one persisted state.
-    minhash_impl: str = "arrow"
     num_perm: int = 64               # MinHash signature length
     shingle_k: int = 3               # words per shingle
     minhash_bands: int = 16          # b*r must equal num_perm

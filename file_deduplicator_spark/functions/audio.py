@@ -509,8 +509,7 @@ def sig_from_wav_bytes(buf, algo: str = "dhash") -> int:
     s16 payloads take the fused int16 kernel (envelope_s16) — no PCM float
     array is ever built; µ-law falls back to the float decode path (8-bit
     input, a fraction of the traffic). Raises ValueError on undecodable
-    buffers (caller → null signature). Shared by the mapInArrow AND
-    mapInPandas signature stages so both impls stay bit-identical.
+    buffers (caller → null signature via udfs.media_sig_or_none).
     """
     n_frames, bits_fn = _SIG_SHAPES.get(algo, _SIG_SHAPES["dhash"])
     fmt_code, _sr, block_align, depth, data, fact = wav_parse_ext(buf)

@@ -1,20 +1,13 @@
-"""MinHash / SimHash banding as pure Column expressions — zero Python in the
-hot path.
+"""LSH banding, fold pre-filter and verify helpers as Column expressions —
+the JVM-side steps between the Arrow signature stage and the pair list.
 
-Design note (scale): at 10^12 rows the signature computation dominates unless
-it stays inside whole-stage codegen. So shingling, base-hashing (xxhash64),
-the 64 affine permutations, and band hashing are all built from higher-order
-array functions (``transform`` / ``aggregate`` / ``zip_with``) — one pass over
-the shingle array per row, no explode-shuffle, no Python worker, no Arrow
-transfer. The numpy oracle in ``functions/text.py`` computes identical values
-for the parity tests.
-
-Overflow safety: base hashes are folded to 31 bits (``& 0x7FFFFFFF``) so the
-affine step ``a*h + b`` (a, b < 2^31) stays < 2^63 — correct under both ANSI
-and legacy arithmetic, i.e. independent of the session's ansi setting.
-
-Replaces (not ports) the reference's per-row perceptual hashing call site
-main.go:664-674 for the transcript modality.
+The signatures themselves come from ``udfs.signatures_map_in_arrow``
+(numpy kernels in ``functions/text.py``); everything here reads the
+resulting ``minhash_sig`` / ``sim_sig`` columns: MinHash band keys, the
+in-bucket nibble fold and its mismatch count, slot agreement, SimHash
+block-subset band keys and Hamming distance. The word/shingle builders
+(``words_col``, ``shingles_from_words``) serve the text operators
+(``operators/textops.py``, ``operators/containment.py``).
 """
 
 from __future__ import annotations
@@ -22,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from file_deduplicator_spark.functions.text import MERSENNE_61, minhash_params
+from file_deduplicator_spark.functions.text import MERSENNE_61
 
 EMPTY_SLOT = MERSENNE_61 - 1  # signature slot value for "no shingles"
 
@@ -50,74 +43,6 @@ def shingles_from_words(ws: Column, k: int) -> Column:
             )
         )
     )
-
-
-def shingles_col(text: Column, k: int) -> Column:
-    """k-word shingles joined by spaces (matches text.shingles).
-
-    Convenience form for small inputs/tests; hot paths should use
-    ``with_minhash_sig`` / ``with_shingle_hashes`` (words materialized)."""
-    return shingles_from_words(words_col(text), k)
-
-
-def with_shingle_hashes(df, text_col: str, out_col: str, k: int):
-    """df + ``out_col`` = array<long> of 31-bit-folded shingle hashes, with
-    the word array materialized first (linear per row)."""
-    tmp = f"_fds_words_{out_col}"
-    return (
-        df.withColumn(tmp, words_col(F.col(text_col)))
-        .withColumn(
-            out_col,
-            F.transform(
-                shingles_from_words(F.col(tmp), k),
-                lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF)),
-            ),
-        )
-        .drop(tmp)
-    )
-
-
-def with_minhash_sig(df, text_col: str, out_col: str, num_perm: int, k: int, seed: int):
-    """df + ``out_col`` = MinHash signature (array<long>) — the scale path."""
-    tmp = f"_fds_sh_{out_col}"
-    out = with_shingle_hashes(df, text_col, tmp, k)
-    return out.withColumn(out_col, minhash_from_hashes_col(F.col(tmp), num_perm, seed)).drop(tmp)
-
-
-def minhash_from_hashes_col(hashes: Column, num_perm: int, seed: int) -> Column:
-    """Signature from a (materialized) shingle-hash array column."""
-    a, b = minhash_params(num_perm, seed)
-    a_lit = F.array(*[F.lit(int(x)) for x in a])
-    b_lit = F.array(*[F.lit(int(x)) for x in b])
-    init = F.array(*[F.lit(EMPTY_SLOT)] * num_perm)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.zip_with(a_lit, b_lit, lambda ai, bi: (ai * h + bi) % F.lit(MERSENNE_61)),
-            lambda cur, new: F.least(cur, new),
-        ),
-    )
-
-
-def shingle_hashes_col(text: Column, k: int) -> Column:
-    """31-bit-folded xxhash64 of each shingle (array<long>, values < 2^31)."""
-    return F.transform(
-        shingles_col(text, k),
-        lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF)),
-    )
-
-
-def minhash_sig_col(text: Column, num_perm: int, k: int, seed: int) -> Column:
-    """64-slot MinHash signature as array<long> — one aggregate pass.
-
-    sig[i] = min over shingles of (a_i * h31 + b_i) mod (2^61 - 1).
-
-    Convenience single-Column form (quadratic word re-split inside the
-    shingle transform); hot paths use ``with_minhash_sig``.
-    """
-    return minhash_from_hashes_col(shingle_hashes_col(text, k), num_perm, seed)
 
 
 def minhash_bands_col(sig: Column, bands: int, rows: int) -> Column:

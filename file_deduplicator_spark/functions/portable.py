@@ -1,7 +1,8 @@
 """Portable (Spark ⟷ DuckDB) MinHash / SimHash — oracle-checkable variants.
 
-The production pipeline hashes with ``xxhash64`` (JVM-side, fastest), which no
-SQL oracle engine reproduces. For the driver's correctness gate we provide a
+The production pipeline's MinHash hashes shingles with blake2b inside the Arrow
+signature stage (``udfs.signatures_map_in_arrow``), which no SQL oracle engine
+reproduces. For the driver's correctness gate we provide a
 second, mathematically identical construction whose base hash is **md5 hex
 substrings converted to integers** — expressible as pure Column expressions in
 Spark AND as pure SQL in DuckDB, so the LSH/verify operators get a real

@@ -1,10 +1,10 @@
 """Text kernels: tokenization, shingling, MinHash, SimHash — pure Python/numpy.
 
-These are the *oracle* implementations used by unit tests and by the parity
-harness; the production path computes the identical values JVM-side with
-Column expressions (see ``minhash_sql.py``) so that the hot loop never enters
-Python. Determinism: every hash here is seed-fixed (xxhash64-compatible via
-Spark, blake2b-based here only where we don't need JVM parity).
+The MinHash kernels here ARE the production path: the Arrow signature stage
+(``udfs.signatures_map_in_arrow``) calls ``minhash_signatures_batch`` once
+per RecordBatch, and ``minhash_signature_py`` is its per-row reference.
+Determinism: every hash here is seed-fixed — blake2b shingle base hashes,
+affine permutations from ``minhash_params(num_perm, seed)``.
 
 Also: language-ID heuristic, quality scoring, token counting, rolling-hash
 fingerprints — the text-analysis operators a training-data pipeline needs
@@ -28,7 +28,7 @@ MERSENNE_61 = (1 << 61) - 1
 # minhash_signatures_batch). Grows geometrically, never shrinks.
 _AFFINE_SCRATCH: dict = {}
 HASH_MASK_31 = 0x7FFFFFFF  # fold base hashes into 31 bits → a*h+b never
-                           # overflows int64 (a,b < 2^31) — see minhash_sql.py
+                           # overflows int64 (a,b < 2^31)
 
 
 def tokenize(text: str) -> list[str]:
@@ -58,7 +58,7 @@ def minhash_from_hashes(base31: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.
     """sig[i] = min over shingles of (a_i * h + b_i) mod M61.
 
     ``base31`` are 31-bit-folded base hashes, so a_i*h < 2^62 — no overflow
-    in int64 arithmetic, matching the JVM expression exactly.
+    in int64 arithmetic.
     """
     if base31.size == 0:
         return np.full(a.size, MERSENNE_61 - 1, dtype=np.int64)
@@ -158,9 +158,8 @@ def hash_bytes_stable(data: bytes) -> int:
 
 
 def shingle_base31(text: str, k: int) -> np.ndarray:
-    """31-bit-folded blake2b base hashes of the k-word shingles — the Python
-    analog of minhash_sql.shingle_hashes_col (which folds xxhash64). Both
-    feed the identical affine/M61 step (minhash_from_hashes)."""
+    """31-bit-folded blake2b base hashes of the k-word shingles — the input
+    of the affine/M61 step (minhash_from_hashes)."""
     _b2b, _fb = _BLAKE2B, int.from_bytes  # local binds: this is a hot loop
     out = [
         _fb(_b2b(s.encode("utf-8"), digest_size=8).digest(), "big") & HASH_MASK_31
@@ -185,7 +184,7 @@ def minhash_signatures_batch(
     per-row min becomes a segmented ``np.minimum.reduceat`` — ~20 numpy
     dispatches per ROW become ~6 per BATCH (measured 108 → ~25 µs/row on
     the bench fixture's 18-word transcripts; the remaining cost is the
-    per-shingle blake2b, which is the contract with the JVM oracle path).
+    per-shingle blake2b base hash, which the signature values depend on).
     None rows hash as empty text (empty-set signature), matching callers.
 
     The (num_perm × total_shingles) affine product reuses a per-process

@@ -1,15 +1,17 @@
-"""Spark bindings for the audio kernels — vectorized pandas/Arrow UDFs.
+"""Spark bindings for the per-row kernels — the engine's one signature stage.
 
-This is the ONLY place per-row Python runs in the engine, and it is the
-unavoidable place: codec decode of a binary payload is not expressible in
-Catalyst. Everything around it (digests, MinHash, banding, joins, windows)
-is pure Column expressions.
+Codec decode of a binary payload is not expressible in Catalyst, so the
+signature stage (:func:`signatures_map_in_arrow`) is a ``mapInArrow`` pass
+that computes both per-row kernels in Python: the perceptual SimHash of
+``bytes`` and the numpy MinHash of ``transcript`` (``functions/text.py``).
+The digest is computed JVM-side before it; banding, joins and windows
+after it are Column expressions.
 
 Batch-shape notes (SURVEY §7.3 "binary payloads through Arrow"):
-* session sets ``spark.sql.execution.arrow.maxRecordsPerBatch`` low (1024)
+* session sets ``spark.sql.execution.arrow.maxRecordsPerBatch`` low (512)
   so multi-MB clips don't blow the Arrow transfer;
-* callers should project ONLY (id, bytes) into this stage — column pruning
-  keeps the shuffled/scanned footprint minimal;
+* callers should project ONLY the columns they need into this stage —
+  column pruning keeps the scanned footprint minimal;
 * decode failure → null signature; the row remains exact-dedupable —
   mirrors the reference's per-file fallback (main.go:666-674).
 
@@ -19,11 +21,10 @@ Reference parity: computePerceptualHash dispatch perceptual.go:407-431.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from file_deduplicator_spark.functions.audio import SIG_FUNCS, sig_from_wav_bytes, wav_decode
+from file_deduplicator_spark.functions.audio import SIG_FUNCS, sig_from_wav_bytes
 
 # payload sniffing for the shared perceptual-signature channel (round-4,
 # directive 8): image payloads (PPM/PGM/BMP/PNG/GIF/JPEG/WebP magics) take
@@ -64,106 +65,41 @@ def media_sig_from_bytes(buf, algo: str = "dhash") -> int:
     return sig_from_wav_bytes(buf, algo)
 
 
-def _sig_series(data: pd.Series, algo: str) -> pd.Series:
-    out = []
-    for buf in data:
-        if buf is None:
-            out.append(None)
-            continue
-        try:
-            # fused int16 kernel for s16 payloads (no PCM float array) —
-            # same code path as the arrow stage, so impls stay bit-identical
-            out.append(media_sig_from_bytes(bytes(buf), algo))
-        except Exception:  # decode failure → null sig
-            out.append(None)
-    return pd.Series(out, dtype="object")
-
-
-def make_audio_sig_udf(algo: str = "dhash"):
-    """pandas_udf: bytes → 64-bit similarity signature (LongType, nullable)."""
-    if algo not in SIG_FUNCS:
-        algo = "dhash"  # unknown → default, matching getHasher's fallback style
-
-    @F.pandas_udf(T.LongType())
-    def audio_sig(data: pd.Series) -> pd.Series:
-        return _sig_series(data, algo)
-
-    return audio_sig
-
-
-def audio_sig_col(bytes_col: Column, algo: str = "dhash") -> Column:
-    return make_audio_sig_udf(algo)(bytes_col)
-
-
-def signatures_map_in_pandas(df, algo: str, num_perm: int, shingle_k: int, seed: int,
-                             bytes_col: str = "bytes", transcript_col: str = "transcript"):
-    """ONE combined Arrow pass: bytes → audio SimHash, transcript → MinHash —
-    via ``mapInPandas``, consuming the payload column.
-
-    Why mapInPandas and not a pandas_udf projection: ``ArrowEvalPython``
-    buffers every INPUT row in a JVM-side row queue (HybridRowQueue) to
-    rejoin it with the UDF output — with multi-MB ``bytes`` rows that means
-    an extra UnsafeRow copy of the payload per row plus disk spill of the
-    queue; a thread dump under load shows most cores in UnsafeRow.copy /
-    JoinedRow.getBinary / spill-file reads (measured 3.5x ANTI-scaling from
-    8→32 cores). mapInPandas has no rejoin: the Python output REPLACES the
-    input batch, so ``bytes`` crosses Arrow once and dies inside the worker.
-
-    Returns df with ``bytes_col`` REMOVED and (sim_sig, minhash_sig) added.
-    """
-    from pyspark.sql import types as ST
-
-    from file_deduplicator_spark.functions.text import (
-        minhash_params,
-        minhash_signatures_batch,
-    )
-
-    if algo not in SIG_FUNCS:
-        algo = "dhash"
-    a, b = minhash_params(num_perm, seed)
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_schema = ST.StructType(
-        keep
-        + [
-            ST.StructField("sim_sig", ST.LongType()),
-            ST.StructField("minhash_sig", ST.ArrayType(ST.LongType())),
-        ]
-    )
-    keep_names = [f.name for f in keep]
-
-    def run(batches):
-        for pdf in batches:
-            out = pdf[keep_names].copy()
-            out["sim_sig"] = _sig_series(pdf[bytes_col], algo)
-            out["minhash_sig"] = list(
-                minhash_signatures_batch(list(pdf[transcript_col]), a, b, shingle_k)
-            )
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+def media_sig_or_none(buf, algo: str = "dhash") -> int | None:
+    """The per-row decode contract of the signature stage: the payload's
+    signature, or None when it fails to decode. The row stays
+    exact-dedupable either way (main.go:666-674's per-file fallback)."""
+    try:
+        return media_sig_from_bytes(buf, algo)
+    except Exception:  # decode failure → null sig
+        return None
 
 
 def signatures_map_in_arrow(df, algo: str, num_perm: int, shingle_k: int, seed: int,
                             bytes_col: str = "bytes", transcript_col: str = "transcript"):
-    """Same contract as :func:`signatures_map_in_pandas`, via ``mapInArrow``.
+    """ONE Arrow pass: ``bytes_col`` → perceptual SimHash (``sim_sig``,
+    null on decode failure), ``transcript_col`` → MinHash (``minhash_sig``).
+    Returns df with ``bytes_col`` REMOVED and the two signatures appended.
+    When df has no ``bytes_col`` (perceptual matching off), the decode is
+    skipped and every ``sim_sig`` is null.
 
-    Why Arrow RecordBatches and not pandas: converting a 25 KB-per-row
-    BinaryType column to a pandas object Series materializes one Python
-    ``bytes`` object per row inside every worker — measured as the dominant,
-    NON-scaling cost of the signature stage (pass-through comparison on the
-    50k-clip fixture, 32 cores: mapInPandas 10.9s vs mapInArrow 2.0s; at 8
-    cores 19.0s vs 11.4s). Here the payload stays in the Arrow buffer and
-    each row is decoded through a zero-copy ``memoryview`` slice; kept
-    columns pass through untouched (no pandas round-trip), and the MinHash
-    list column is built directly as a ``ListArray`` over one flat int64
+    Why a consuming map and why Arrow (both measured): a pandas_udf
+    projection (``ArrowEvalPython``) buffers every input row in a JVM-side
+    queue to rejoin it with the UDF output — an extra UnsafeRow copy of the
+    multi-MB payload plus queue spill, measured 3.5x ANTI-scaling from 8→32
+    cores; a map stage's output REPLACES its input, so ``bytes`` crosses
+    Arrow once and dies inside the worker. Among map stages, ``mapInPandas``
+    materializes one Python ``bytes`` object per row — the dominant,
+    non-scaling cost (pass-through on the 50k-clip fixture, 32 cores:
+    mapInPandas 10.9s vs mapInArrow 2.0s; 8 cores 19.0s vs 11.4s). Here the
+    payload stays in the Arrow buffer and each row is decoded through a
+    zero-copy ``memoryview`` slice, kept columns pass through untouched, and
+    the MinHash list column is built as one ``ListArray`` over a flat int64
     buffer. Scaling 8→32 cores goes from ~1.0x to ~3.5x on this stage.
     """
     import numpy as np
     import pyarrow as pa
 
-    from pyspark.sql import types as ST
-
     from file_deduplicator_spark.functions.text import (
         minhash_params,
         minhash_signatures_batch,
@@ -172,13 +108,14 @@ def signatures_map_in_arrow(df, algo: str, num_perm: int, shingle_k: int, seed: 
     if algo not in SIG_FUNCS:
         algo = "dhash"
     a, b = minhash_params(num_perm, seed)
+    decode = bytes_col in df.columns
 
     keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_schema = ST.StructType(
+    out_schema = T.StructType(
         keep
         + [
-            ST.StructField("sim_sig", ST.LongType()),
-            ST.StructField("minhash_sig", ST.ArrayType(ST.LongType())),
+            T.StructField("sim_sig", T.LongType()),
+            T.StructField("minhash_sig", T.ArrayType(T.LongType())),
         ]
     )
     keep_names = [f.name for f in keep]
@@ -186,9 +123,9 @@ def signatures_map_in_arrow(df, algo: str, num_perm: int, shingle_k: int, seed: 
     def run(batches):
         for rb in batches:
             n = rb.num_rows
-            barr = rb.column(rb.schema.get_field_index(bytes_col))
             sim = [None] * n
-            if n:
+            if decode and n:
+                barr = rb.column(rb.schema.get_field_index(bytes_col))
                 bufs = barr.buffers()
                 off_item = np.int64 if pa.types.is_large_binary(barr.type) else np.int32
                 offs = np.frombuffer(
@@ -197,20 +134,15 @@ def signatures_map_in_arrow(df, algo: str, num_perm: int, shingle_k: int, seed: 
                 )
                 data = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
                 # Array.is_valid() takes no per-index argument — compute the
-                # null mask once per batch (null bytes row → null signature,
-                # matching the pandas path and main.go:666-674's fallback)
+                # null mask once per batch (null bytes row → null signature)
                 nulls = (
                     np.asarray(barr.is_null()) if barr.null_count > 0 else None
                 )
                 for i in range(n):
-                    if nulls is not None and nulls[i]:
-                        continue
-                    try:
+                    if nulls is None or not nulls[i]:
                         # fused kernel on the zero-copy memoryview slice —
                         # for s16 payloads no float PCM array is ever built
-                        sim[i] = media_sig_from_bytes(data[offs[i]:offs[i + 1]], algo)
-                    except Exception:  # decode failure → null sig
-                        pass
+                        sim[i] = media_sig_or_none(data[offs[i]:offs[i + 1]], algo)
             texts = rb.column(rb.schema.get_field_index(transcript_col)).to_pylist()
             # batched across the RecordBatch: one affine/M61 product + one
             # segmented reduceat-min instead of ~20 numpy dispatches per row
@@ -229,67 +161,20 @@ def signatures_map_in_arrow(df, algo: str, num_perm: int, shingle_k: int, seed: 
 
 
 def make_image_sig_udf(algo: str = "dhash"):
-    """pandas_udf: image bytes (PPM/PGM/BMP) → 64-bit perceptual signature
-    (LongType, nullable). The Spark binding of computePerceptualHash
-    (perceptual.go:406-431): decode → gamma→histeq→blur → Catmull-Rom resize
-    → dHash/aHash/pHash, all vectorized numpy per row; decode failure →
-    null signature (main.go:666-674)."""
-    from file_deduplicator_spark.functions.image import IMAGE_SIG_FUNCS, image_decode
+    """pandas_udf: image bytes → 64-bit perceptual signature (LongType,
+    nullable). The Spark binding of computePerceptualHash
+    (perceptual.go:406-431) via image.image_sig_from_bytes; non-image and
+    undecodable payloads → null signature (main.go:666-674)."""
+    from file_deduplicator_spark.functions.image import image_sig_from_bytes
 
-    fn = IMAGE_SIG_FUNCS.get(algo.lower(), IMAGE_SIG_FUNCS["dhash"])
+    def sig(buf):
+        try:
+            return image_sig_from_bytes(bytes(buf), algo)
+        except Exception:
+            return None
 
     @F.pandas_udf(T.LongType())
     def image_sig(data: pd.Series) -> pd.Series:
-        out = []
-        for buf in data:
-            if buf is None:
-                out.append(None)
-                continue
-            try:
-                out.append(fn(image_decode(bytes(buf))))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, dtype="object")
+        return pd.Series([None if buf is None else sig(buf) for buf in data], dtype="object")
 
     return image_sig
-
-
-def make_minhash_udf(num_perm: int, shingle_k: int, seed: int):
-    """Vectorized MinHash-only UDF (text-only tables / perceptual off)."""
-    from file_deduplicator_spark.functions.text import (
-        minhash_params,
-        minhash_signatures_batch,
-    )
-
-    a, b = minhash_params(num_perm, seed)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash(transcript: pd.Series) -> pd.Series:
-        return pd.Series(list(minhash_signatures_batch(list(transcript), a, b, shingle_k)))
-
-    return minhash
-
-
-@F.pandas_udf(T.StructType([
-    T.StructField("n_samples", T.LongType()),
-    T.StructField("sr_hz", T.IntegerType()),
-    T.StructField("rms", T.DoubleType()),
-    T.StructField("peak", T.DoubleType()),
-    T.StructField("ok", T.BooleanType()),
-]))
-def audio_probe(data: pd.Series) -> pd.DataFrame:
-    """Decode probe: per-clip sample count / sr / rms / peak — the
-    per-row-invariant harness column (decoded-PCM checks) and the
-    compare-mode debug utility (ref compareImagesCLI main.go:2010-2102)."""
-    import numpy as np
-
-    rows = []
-    for buf in data:
-        try:
-            pcm, sr = wav_decode(bytes(buf))
-            rms = float(np.sqrt(np.mean(pcm * pcm))) if pcm.size else 0.0
-            peak = float(np.max(np.abs(pcm))) if pcm.size else 0.0
-            rows.append((pcm.size, sr, rms, peak, True))
-        except Exception:
-            rows.append((None, None, None, None, False))
-    return pd.DataFrame(rows, columns=["n_samples", "sr_hz", "rms", "peak", "ok"])

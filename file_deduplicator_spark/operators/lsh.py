@@ -347,43 +347,6 @@ def candidate_pairs_folded(
     )
 
 
-def bucket_skew_metrics(band_df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Metrics-table row source: bucket-size histogram + capped-bucket count
-    (run-observability requirement of the north rule)."""
-    sizes = band_df.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("n"))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("buckets"),
-        F.max("n").alias("max_bucket"),
-        F.expr("percentile_approx(n, 0.99)").alias("p99_bucket"),
-        F.sum(F.when(F.col("n") > cfg.bucket_cap, 1).otherwise(0)).alias("capped_buckets"),
-    )
-
-
-def verify_pairs_hamming(
-    pairs: DataFrame,
-    sigs: DataFrame,
-    threshold: int,
-    id_col: str = "clip_id",
-    sig_col: str = "sim_sig",
-) -> DataFrame:
-    """Verify stage for 64-bit signatures: keep pairs with
-    bit_count(a XOR b) <= threshold (ref isSimilarImage perceptual.go:401-404;
-    packed-int64 form of hammingDistance perceptual.go:385-397).
-
-    ``sigs`` is the (id, sig) projection — two broadcast-or-shuffle hash
-    joins to attach both sides, then a pure-JVM popcount filter.
-    """
-    a = sigs.select(F.col(id_col).alias("id_a"), F.col(sig_col).alias("sig_a"))
-    b = sigs.select(F.col(id_col).alias("id_b"), F.col(sig_col).alias("sig_b"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
-        .filter(F.col("hamming") <= F.lit(threshold))
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 def verify_pairs_minhash(
     pairs: DataFrame,
     sigs: DataFrame,

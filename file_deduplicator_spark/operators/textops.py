@@ -190,8 +190,8 @@ def ngram_jaccard_pairs(
     from file_deduplicator_spark.functions.minhash_sql import shingles_from_words, words_col
 
     # materialize the word array BEFORE the shingle transform (HOF lambdas
-    # re-evaluate embedded subexpressions per element — the inline
-    # shingles_col form costs O(words^2) per row; warm ngram_jaccard at
+    # re-evaluate embedded subexpressions per element — an inline
+    # split-then-shingle pipeline costs O(words^2) per row; warm ngram_jaccard at
     # sf0.1 measured 7.7s -> 2.3s with this change)
     sh = (
         df.select(F.col(id_col).alias("id"), words_col(F.col(text_col)).alias("_ws"))

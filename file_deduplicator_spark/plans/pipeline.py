@@ -26,12 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
-from file_deduplicator_spark.functions.minhash_sql import (
-    minhash_bands_col,
-    simhash_bands_col,
-    with_minhash_sig,
-)
-from file_deduplicator_spark.functions.udfs import audio_sig_col
+from file_deduplicator_spark.functions.minhash_sql import minhash_bands_col, simhash_bands_col
+from file_deduplicator_spark.functions.udfs import signatures_map_in_arrow
 from file_deduplicator_spark.operators.components import attach_clusters, connected_components
 from file_deduplicator_spark.operators.exact import codec_filter, size_filter, with_digest
 from file_deduplicator_spark.operators.lsh import band_table, candidate_pairs, candidate_pairs_hamming
@@ -55,43 +51,17 @@ def apply_prefilters(df: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def with_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """digest + size + sim_sig (audio SimHash) + minhash_sig (transcript
-    MinHash) in one projection stage.
-
-    Default impl ('pandas'): ONE combined Arrow UDF evaluates both per-row
-    kernels, so ``bytes`` crosses to Python exactly once. 'sql' keeps the
-    whole plan JVM-side (pure Column exprs) at ~3x the signature-stage cost.
+    """digest + size (JVM-side), then the one Arrow signature stage:
+    sim_sig (perceptual SimHash) + minhash_sig (transcript MinHash), with
+    ``bytes`` crossing to Python once and consumed there (see
+    udfs.signatures_map_in_arrow). With ``cfg.perceptual`` off the payload
+    is dropped before the stage, so nothing is decoded and sim_sig is null.
     """
     out = with_digest(df, cfg)
-    if cfg.minhash_impl in ("arrow", "pandas") and cfg.perceptual:
-        from file_deduplicator_spark.functions.udfs import (
-            signatures_map_in_arrow,
-            signatures_map_in_pandas,
-        )
-
-        # digest/size are computed JVM-side in the projection above; the
-        # map stage then CONSUMES bytes (see udfs.py docstrings for why a
-        # consuming map, not a pandas_udf projection, and why mapInArrow
-        # beats mapInPandas ~5x on 25KB binary rows)
-        stage = (signatures_map_in_arrow if cfg.minhash_impl == "arrow"
-                 else signatures_map_in_pandas)
-        return stage(out, cfg.sim_algo, cfg.num_perm, cfg.shingle_k, cfg.minhash_seed)
-    if cfg.perceptual:
-        out = out.withColumn("sim_sig", audio_sig_col(F.col("bytes"), cfg.sim_algo))
-    else:
-        out = out.withColumn("sim_sig", F.lit(None).cast("long"))
-    if cfg.minhash_impl in ("arrow", "pandas"):
-        from file_deduplicator_spark.functions.udfs import make_minhash_udf
-
-        out = out.withColumn(
-            "minhash_sig",
-            make_minhash_udf(cfg.num_perm, cfg.shingle_k, cfg.minhash_seed)(F.col("transcript")),
-        )
-    else:
-        out = with_minhash_sig(
-            out, "transcript", "minhash_sig", cfg.num_perm, cfg.shingle_k, cfg.minhash_seed
-        )
-    return out
+    if not cfg.perceptual:
+        out = out.drop("bytes")
+    return signatures_map_in_arrow(out, cfg.sim_algo, cfg.num_perm, cfg.shingle_k,
+                                   cfg.minhash_seed)
 
 
 def exact_edges(sigs: DataFrame, id_col: str = "clip_id") -> DataFrame:

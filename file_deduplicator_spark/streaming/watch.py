@@ -58,7 +58,8 @@ def _write_checkpoint(state_dir: str | Path, ckpt: dict) -> None:
 def compute_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Shared signature projection (plans.pipeline.with_signatures) slimmed
     to the persisted state columns. NOTE: a persisted state is bound to the
-    cfg it was built with (minhash_impl/seed/algo) — never mix."""
+    cfg it was built with (sim_algo, num_perm, shingle_k, minhash_seed) —
+    never mix."""
     from file_deduplicator_spark.plans.pipeline import with_signatures
 
     return with_signatures(df, cfg).select(*SIG_COLS)

@@ -123,15 +123,14 @@ def test_pack_sign_roundtrip():
 def test_arrow_signature_stage_null_bytes_row(spark):
     """Regression (round-3 advice): a NULL bytes row through the mapInArrow
     signature stage must yield a null sim_sig (the documented fallback), not
-    a task failure — and match the pandas path bit-for-bit."""
+    a task failure — and every row's minhash_sig must equal the per-row
+    numpy reference."""
     import numpy as np
     import pandas as pd
 
-    from file_deduplicator_spark.functions.audio import wav_encode
-    from file_deduplicator_spark.functions.udfs import (
-        signatures_map_in_arrow,
-        signatures_map_in_pandas,
-    )
+    from file_deduplicator_spark.functions.audio import sig_from_wav_bytes, wav_encode
+    from file_deduplicator_spark.functions.text import minhash_params, minhash_signature_py
+    from file_deduplicator_spark.functions.udfs import signatures_map_in_arrow
 
     rng = np.random.RandomState(3)
     wav = wav_encode(rng.uniform(-0.5, 0.5, 4000), 8000)
@@ -139,21 +138,17 @@ def test_arrow_signature_stage_null_bytes_row(spark):
         ("c1", bytearray(wav), "hello world transcript one"),
         ("c2", None, "null payload still gets a minhash"),
         ("c3", bytearray(b"notawav"), ""),
+        ("c4", bytearray(wav), None),
     ]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary, transcript string")
-    out_a = (
+    out = (
         signatures_map_in_arrow(df, "dhash", 64, 3, 42)
         .toPandas().sort_values("clip_id").reset_index(drop=True)
     )
-    out_p = (
-        signatures_map_in_pandas(df, "dhash", 64, 3, 42)
-        .toPandas().sort_values("clip_id").reset_index(drop=True)
-    )
-    assert out_a.loc[0, "sim_sig"] is not None
-    assert pd.isna(out_a.loc[1, "sim_sig"])       # null bytes -> null sig
-    assert pd.isna(out_a.loc[2, "sim_sig"])       # decode failure -> null sig
-    # arrow path == pandas path, including the null rows
-    assert out_a.sim_sig.isna().equals(out_p.sim_sig.isna())
-    assert (out_a.sim_sig.dropna() == out_p.sim_sig.dropna()).all()
-    for a, b in zip(out_a.minhash_sig, out_p.minhash_sig):
-        assert list(a) == list(b)
+    assert "bytes" not in out.columns
+    assert out.loc[0, "sim_sig"] == sig_from_wav_bytes(wav, "dhash")
+    assert pd.isna(out.loc[1, "sim_sig"])       # null bytes -> null sig
+    assert pd.isna(out.loc[2, "sim_sig"])       # decode failure -> null sig
+    a, b = minhash_params(64, 42)
+    for (_, _, text), got in zip(rows, out.minhash_sig):  # rows are in id order
+        assert list(got) == minhash_signature_py(text or "", a, b, 3).tolist()

@@ -1,18 +1,21 @@
-"""JVM-side MinHash must equal the numpy oracle exactly, and behave like a
-Jaccard estimator."""
+"""MinHash: the batched numpy kernel the signature stage runs must equal
+the per-row reference, and slot agreement must behave like a Jaccard
+estimator."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.functions.minhash_sql import (
-    minhash_sig_col,
-    shingles_col,
+    shingles_from_words,
     sig_agreement_col,
+    words_col,
 )
 from file_deduplicator_spark.functions.text import (
     jaccard,
-    minhash_from_hashes,
     minhash_params,
+    minhash_signature_py,
+    minhash_signatures_batch,
     shingles,
 )
 
@@ -31,52 +34,49 @@ def test_shingles_parity(spark):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)], "i int, t string")
     got = {
         r.i: r.s
-        for r in df.select("i", shingles_col(F.col("t"), 3).alias("s")).collect()
+        for r in df.select(
+            "i", shingles_from_words(words_col(F.col("t")), 3).alias("s")
+        ).collect()
     }
     for i, t in enumerate(TEXTS):
         assert got[i] == shingles(t, 3), f"text {i!r}"
 
 
-def test_minhash_jvm_matches_numpy_oracle(spark):
-    """Same base hash (xxhash64 & 0x7FFFFFFF) + same affine params ⇒ identical
-    signatures between the Column expression and the numpy kernel."""
-    k, num_perm, seed = 3, 64, 42
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)], "i int, t string")
-    jvm_sigs = {
-        r.i: r.sig
-        for r in df.select(
-            "i", minhash_sig_col(F.col("t"), num_perm, k, seed).alias("sig")
-        ).collect()
-    }
-    # base hashes via Spark's own xxhash64 (the ground truth for parity)
-    base = (
-        df.select(
-            "i",
-            F.transform(
-                shingles_col(F.col("t"), k),
-                lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF)),
-            ).alias("h"),
-        ).collect()
-    )
+BATCH_TEXTS = TEXTS + [
+    None,
+    "   \t \n  ",
+    "two words",
+    "line one\nline two\tand a tab",
+    "Café naïve ÜBER straße café",
+    " ".join(f"w{i % 13}" for i in range(200)),
+]
+
+
+@pytest.mark.parametrize("num_perm,k,seed", [(64, 3, 42), (16, 1, 7), (128, 5, 1234), (5, 2, 0)])
+def test_batch_kernel_matches_per_row_reference(num_perm, k, seed):
+    """minhash_signatures_batch (the signature stage's kernel) equals
+    minhash_signature_py stacked row for row; None hashes as empty text."""
     a, b = minhash_params(num_perm, seed)
-    for r in base:
-        want = minhash_from_hashes(np.array(r.h, dtype=np.int64), a, b)
-        assert list(want) == list(jvm_sigs[r.i]), f"text {r.i}"
+    got = minhash_signatures_batch(BATCH_TEXTS, a, b, k)
+    want = np.stack([minhash_signature_py(t or "", a, b, k) for t in BATCH_TEXTS])
+    assert got.shape == (len(BATCH_TEXTS), num_perm)
+    assert np.array_equal(got, want)
+    # a batch of only empty rows takes the early-return branch
+    empties = minhash_signatures_batch([None, "", " "], a, b, k)
+    assert np.array_equal(empties, np.stack([minhash_signature_py("", a, b, k)] * 3))
 
 
 def test_agreement_estimates_jaccard(spark):
-    df = spark.createDataFrame([(0, TEXTS[0]), (1, TEXTS[1])], "i int, t string")
-    sigs = df.select("i", minhash_sig_col(F.col("t"), 64, 3, 42).alias("sig"))
-    a = sigs.filter("i=0").select(F.col("sig").alias("sa"))
-    b = sigs.filter("i=1").select(F.col("sig").alias("sb"))
-    est = a.crossJoin(b).select(sig_agreement_col(F.col("sa"), F.col("sb")).alias("e")).first().e
+    a, b = minhash_params(64, 42)
+    sa, sb = (minhash_signature_py(t, a, b, 3).tolist() for t in TEXTS[:2])
+    df = spark.createDataFrame([(sa, sb, sa)], "sa array<long>, sb array<long>, sc array<long>")
+    est, est_same = df.select(
+        sig_agreement_col(F.col("sa"), F.col("sb")),
+        sig_agreement_col(F.col("sa"), F.col("sc")),
+    ).first()
     true_j = jaccard(TEXTS[0], TEXTS[1], 3)
     assert abs(est - true_j) < 0.25  # 64 perms → se ≈ 0.06; generous bound
-    # identical texts → agreement 1.0
-    est_same = a.crossJoin(a.withColumnRenamed("sa", "sb")).select(
-        sig_agreement_col(F.col("sa"), F.col("sb")).alias("e")
-    ).first().e
-    assert est_same == 1.0
+    assert est_same == 1.0  # identical texts → agreement 1.0
 
 
 # ---------------------------------------------------------------------------

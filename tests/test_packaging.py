@@ -184,3 +184,34 @@ def test_job_resume_after_append(spark, tmp_path, clips_df):
     r3 = json.loads((out_full / "report.json").read_text())
     for k in ("total_files", "duplicate_groups", "duplicate_files"):
         assert r2.get(k) == r3.get(k)
+
+
+def test_entry_points_import_only_existing_names():
+    """Every ``from file_deduplicator_spark... import name`` in the scripts,
+    jobs, benchmark and driver entry points resolves — a helper deleted from
+    the package but still imported by a script fails here, not at run time.
+    Parses with ``ast`` and imports modules only: no Spark session."""
+    import ast
+    import importlib
+
+    files = sorted([*REPO.glob("scripts/*.py"), *REPO.glob("jobs/*.py"),
+                    *REPO.glob("perfbench/*.py"), REPO / "bench.py",
+                    REPO / "__spark_entry__.py"])
+    checked, missing = 0, []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not (isinstance(node, ast.ImportFrom) and node.level == 0
+                    and (node.module or "").split(".")[0] == "file_deduplicator_spark"):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                checked += 1
+                if hasattr(mod, alias.name):
+                    continue
+                try:  # a submodule not yet imported as an attribute
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ModuleNotFoundError:
+                    missing.append(f"{path.relative_to(REPO)}:{node.lineno} "
+                                   f"{node.module}.{alias.name}")
+    assert checked > 50
+    assert not missing, missing

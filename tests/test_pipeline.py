@@ -102,6 +102,30 @@ def test_run_metrics_roundtrip(spark, clips_df, tmp_path):
     release_pipeline(result)
 
 
+def test_perceptual_off_skips_decode_and_keeps_text_pairs(spark, clips_df):
+    """perceptual=False runs the same Arrow signature stage without the
+    decode: sim_sig is null on every row, digest and minhash_sig match the
+    perceptual run, and near_dup_edges still returns the text pairs."""
+    from file_deduplicator_spark.plans.pipeline import near_dup_edges, with_signatures
+
+    off_cfg = DedupConfig(perceptual=False)
+    cols = ["clip_id", "digest", "minhash_sig"]
+    on = with_signatures(clips_df, DedupConfig())
+    off = with_signatures(clips_df, off_cfg).persist()
+    try:
+        assert "bytes" not in off.columns
+        assert off.filter(F.col("sim_sig").isNotNull()).count() == 0
+        assert off.count() == clips_df.count()
+        assert off.select(cols).exceptAll(on.select(cols)).count() == 0
+        assert on.select(cols).exceptAll(off.select(cols)).count() == 0
+        text_pairs = near_dup_edges(off, off_cfg).distinct()
+        all_pairs = near_dup_edges(on, DedupConfig()).distinct()
+        assert text_pairs.count() > 0
+        assert text_pairs.exceptAll(all_pairs).count() == 0
+    finally:
+        off.unpersist()
+
+
 def test_partition_lineage_resume_diff(spark, clips_df, tmp_path):
     """North rule: "resumable from checkpoint with per-partition lineage +
     metrics tables". Lineage rows cover every input row; an unchanged input

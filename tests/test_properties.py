@@ -13,7 +13,6 @@ Fixed-seed tests pin known cases; these generate adversarial ones:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -105,12 +104,11 @@ def test_png_roundtrip_exact_arbitrary_images(w, h, seed):
 
 @settings(max_examples=60, deadline=None)
 @given(junk=st.binary(min_size=0, max_size=512))
-def test_sig_series_never_raises_on_junk(junk):
-    from file_deduplicator_spark.functions.udfs import _sig_series
+def test_media_sig_or_none_never_raises_on_junk(junk):
+    from file_deduplicator_spark.functions.udfs import media_sig_or_none
 
-    out = _sig_series(pd.Series([junk], dtype="object"), "dhash")
-    assert len(out) == 1
-    assert out[0] is None or isinstance(out[0], (int, np.integer))
+    out = media_sig_or_none(memoryview(junk), "dhash")
+    assert out is None or isinstance(out, (int, np.integer))
 
 
 @settings(max_examples=60, deadline=None)
@@ -205,11 +203,11 @@ def test_mutated_payloads_degrade_to_null_without_hanging(which, flips):
     """Flip up to 8 bytes anywhere in a valid payload of each container:
     the signature layer must return an int or None — never hang (the
     3 s hypothesis deadline enforces this) and never leak an exception
-    through the _sig_series contract."""
-    from file_deduplicator_spark.functions.udfs import _sig_series
+    through the media_sig_or_none contract the signature stage calls."""
+    from file_deduplicator_spark.functions.udfs import media_sig_or_none
 
     base = bytearray(_mutation_fixtures()[which])
     for frac, val in flips:
         base[int(frac * len(base))] = val
-    out = _sig_series(pd.Series([bytes(base)], dtype="object"), "dhash")
-    assert out[0] is None or isinstance(out[0], (int, np.integer))
+    out = media_sig_or_none(memoryview(bytes(base)), "dhash")
+    assert out is None or isinstance(out, (int, np.integer))
