@@ -211,7 +211,7 @@ def q_minhash_lsh_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from file_deduplicator_spark.operators.lsh import (
         band_table,
-        candidate_pairs,
+        bucket_pairs,
         verify_pairs_minhash,
     )
 
@@ -242,7 +242,7 @@ def q_minhash_lsh_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = band_table(
         docs, portable_minhash_bands_col(F.col("minhash_sig")), id_col="doc_id"
     )
-    pairs = candidate_pairs(bands, cfg)
+    pairs = bucket_pairs(bands, cfg)
     return verify_pairs_minhash(
         pairs, docs.select("doc_id", "minhash_sig"), cfg.jaccard_threshold,
         id_col="doc_id", sig_col="minhash_sig",

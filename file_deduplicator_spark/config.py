@@ -59,12 +59,6 @@ class DedupConfig:
     minhash_rows: int = 4
     jaccard_threshold: float = 0.5   # verify-stage threshold
     minhash_seed: int = 42           # deterministic permutations
-    # in-bucket fold pre-filter (round-4): carry 4 bits/slot into the LSH
-    # buckets and reject candidates whose PROVABLE slot-mismatch count
-    # already fails the verify budget — exactly conservative, so the
-    # verified pair set is unchanged (minhash_sql.minhash_fold_col).
-    # Auto-disabled when num_perm isn't a multiple of 16.
-    minhash_prefilter: bool = True
 
     # --- SimHash LSH (new) ---
     # Block-subset tables (Manku WWW'07): 24-bit keys. design='partition'

@@ -9,7 +9,7 @@ first-class component).
   of) the query's bucket in ≥1 table are scored.
 * ``knn_self_join``      — embedding-cosine near-duplicate pairs at corpus
   scale: multi-table banded buckets feed the SAME skew-guarded pair
-  generator the text/audio LSH uses (operators/lsh.candidate_pairs: capped
+  generator the text/audio LSH uses (operators/lsh.bucket_pairs: capped
   buckets, hot-bucket salting, observable skew metrics), then an exact
   cosine verify.
 
@@ -153,7 +153,7 @@ def knn_plan(threshold: float, target_recall: float = 0.95,
     * ``bits_per_table`` comes from OCCUPANCY: expected random-data
       bucket size is n/2^b, so b = ceil(log2(n / bucket_target)) keeps
       per-bucket candidate generation at ~bucket_target rows (the same
-      bound candidate_pairs enforces by cap+salt when the data is
+      bound bucket_pairs enforces by cap+salt when the data is
       skewed). Without ``n_rows`` it stays at ``min_bits`` — the small-
       fixture scale.
     * ``n_tables`` comes from RECALL: random-hyperplane LSH (Charikar,
@@ -202,10 +202,10 @@ def knn_self_join(
     observation=None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: multi-table banded buckets →
-    skew-guarded candidate pairs (lsh.candidate_pairs: cap + hot-bucket
+    skew-guarded candidate pairs (lsh.bucket_pairs: cap + hot-bucket
     salting + observable metrics) → exact cosine ≥ threshold verify."""
     from file_deduplicator_spark.config import DedupConfig
-    from file_deduplicator_spark.operators.lsh import candidate_pairs
+    from file_deduplicator_spark.operators.lsh import bucket_pairs
 
     dim_row = df.select(F.size(vec_col)).first()
     dim = int(dim_row[0])
@@ -215,7 +215,7 @@ def knn_self_join(
         F.posexplode(udf(F.col(vec_col))).alias("band", "bh"),
     )
     cfg = DedupConfig(bucket_cap=bucket_cap, salt_buckets=salt_buckets)
-    pairs = candidate_pairs(bands, cfg, observation=observation)
+    pairs = bucket_pairs(bands, cfg, observation=observation)
 
     v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
     a = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"))

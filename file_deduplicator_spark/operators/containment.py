@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
 from file_deduplicator_spark.functions.minhash_sql import words_col
+from file_deduplicator_spark.operators.lsh import member_pairs
 
 
 def winnowed_fingerprints_col(hashes: Column, window: int) -> Column:
@@ -95,38 +96,29 @@ def containment_candidates(
     #   x, y emit (x→y) iff wx < wy (equal word counts never pair), and
     #   the needle must carry >= containment_min_words words;
     # * the trailing distinct dedups across shared fingerprints as before.
-    # Same shape as lsh.candidate_pairs — the 100 TB story (capped buckets,
-    # quadratic work bounded per bucket) is unchanged.
+    # The expansion is lsh.member_pairs, the one bucket_pairs uses, with
+    # this orientation as ``emit`` and the word-count rule as ``keep`` — the
+    # 100 TB story (capped buckets, quadratic work bounded per bucket) is
+    # unchanged.
     member = F.struct("id", "n_words")
     grouped = base.groupBy("fp").agg(
         F.slice(F.array_sort(F.collect_list(member)), 1, cfg.bucket_cap).alias("ms")
     )
     min_w = F.lit(cfg.containment_min_words)
-    pairs = F.filter(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), F.size("ms") - F.lit(2)),
-                lambda i: F.transform(
-                    F.slice(F.col("ms"), i + F.lit(2), F.size("ms")),
-                    lambda y: F.struct(
-                        F.element_at(F.col("ms"), i + F.lit(1)).alias("x"),
-                        y.alias("y"),
-                    ),
-                ),
-            )
-        ),
-        lambda p: (p["x"]["n_words"] != p["y"]["n_words"])
-        & (F.least(p["x"]["n_words"], p["y"]["n_words"]) >= min_w),
-    )
+
+    def emit(x, y):
+        x_needle = x["n_words"] < y["n_words"]
+        return F.struct(F.when(x_needle, x["id"]).otherwise(y["id"]).alias("id_a"),
+                        F.when(x_needle, y["id"]).otherwise(x["id"]).alias("id_b"))
+
+    def keep(x, y):
+        return ((x["n_words"] != y["n_words"])
+                & (F.least(x["n_words"], y["n_words"]) >= min_w))
+
     return (
         grouped.filter(F.size("ms") > 1)
-        .select(F.explode(pairs).alias("p"))
-        .select(
-            F.when(F.col("p.x.n_words") < F.col("p.y.n_words"), F.col("p.x.id"))
-            .otherwise(F.col("p.y.id")).alias("id_a"),
-            F.when(F.col("p.x.n_words") < F.col("p.y.n_words"), F.col("p.y.id"))
-            .otherwise(F.col("p.x.id")).alias("id_b"),
-        )
+        .select(F.explode(member_pairs(F.col("ms"), emit, keep)).alias("p"))
+        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .distinct()
     )
 

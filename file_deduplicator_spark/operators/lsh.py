@@ -5,9 +5,9 @@ Topology (SURVEY §7.1 step 4; round-2 single-shuffle design):
 
     rows ──► band table (explode of band hashes)
          ──► groupBy(band, bh): sorted capped member list  [ONE shuffle]
-             (hot buckets detected by a count pass and salted — see
-              bucket_members)
-         ──► in-array combination expansion  [id_a < id_b by construction]
+             (buckets too big to collect are salted — see bucket_members)
+         ──► in-array combination expansion, optional in-bucket predicate
+             [id_a < id_b by construction]                   (bucket_pairs)
          ──► distinct candidate pairs
          ──► verify (Hamming ≤ t / signature agreement ≥ s)
 
@@ -45,7 +45,7 @@ def band_table(df: DataFrame, bands_col, id_col: str = "clip_id",
     simhash_bands_col). ``payload`` maps output-name → source-column for
     extra columns to carry into the buckets (e.g. the 8-byte sim_sig, so
     the verify predicate can run INSIDE the bucket expansion — see
-    candidate_pairs_hamming)."""
+    bucket_pairs' ``keep``)."""
     payload = payload or {}
     proj = [F.col(id_col).alias("id"), F.explode(bands_col).alias("e")] + [
         F.col(src).alias(dst) for dst, src in payload.items()
@@ -83,54 +83,21 @@ def bucket_members(band_df: DataFrame, cap: int, salt: int = 1,
     The salted merge is exact: the global ``cap`` lowest ids are each the
     lowest within their own shard, so pre-capped shards preserve them.
 
-    ADAPTIVE SHORTCUT (round 3, measured): when the band table is CACHED
-    (the pipeline persists it anyway for the multi-pass topology), one cheap
-    probe job — the map-side-combinable count aggregation + limit(1) — asks
-    whether ANY bucket exceeds the cap. On skew-free inputs (the common
-    case: the exact-dup and identical-sig quarantines remove the mass-
-    collision sources before LSH) the whole anti/semi/two-phase topology
-    then collapses to the single plain groupBy: measured 6.5s → 1.7s (text
-    bands) and 2.2s → 1.1s (audio bands) warm at 200k clips, identical
-    output. Skewed inputs keep the full salted topology; uncached inputs
-    skip the probe (it would recompute the band table) and keep the lazy
-    3-scan topology unchanged. The probe is a job count, not a key
-    collect — nothing unbounded comes to the driver.
+    ``max_bucket``: the caller-measured largest bucket (pipeline.near_dup_edges
+    gets it for every band family from one fused probe job). The plain
+    groupBy buffers a whole bucket before F.slice caps it, so what salting
+    protects against is a bucket too big for one agg buffer, not one merely
+    above the cap: with a known ``max_bucket ≤ max(cap, SAFE_COLLECT_MAX)``
+    the single plain groupBy runs (identical output). An unknown
+    ``max_bucket`` with ``salt > 1`` takes the salted topology.
     """
     # any payload columns (sig / fold / ...) ride the member struct; ids are
     # unique so array_sort still orders by id (struct comparison is
     # field-ordered and id is first)
     extras = [c for c in band_df.columns if c not in ("id", "band", "bh")]
     member = F.struct("id", *extras) if extras else F.col("id")
-    # getattr guard: is_cached is a classic-PySpark property; Spark Connect
-    # DataFrames don't expose it — fall back to the lazy salted topology
-    # there instead of raising (round-3 advice)
-    if salt > 1 and max_bucket is not None:
-        # caller already measured the bucket-size maximum (e.g. one fused
-        # probe job over several band families — pipeline.near_dup_edges);
-        # apply the same collect-safety rule without a second probe job
-        if max_bucket <= max(cap, SAFE_COLLECT_MAX):
-            salt = 1
-    elif salt > 1 and getattr(band_df, "is_cached", False):
-        # r06: the probe threshold is the COLLECT-SAFETY bound, not the cap.
-        # The plain groupBy below buffers a full bucket before F.slice caps
-        # it, so what the salted topology actually protects against is a
-        # bucket too big to hold in one agg buffer — not a bucket merely
-        # above the cap. Output is IDENTICAL either way (the slice keeps
-        # the cap lowest ids in both paths); only the buffer bound differs.
-        # The old probe (any bucket_n > cap → full salted topology) made
-        # the 200k bench fixture take the counts + anti/semi-join + double
-        # groupBy path for text buckets of a few hundred rows (max 2.6k),
-        # costing ~2x the plain path. Salting now engages only when a
-        # bucket exceeds SAFE_COLLECT_MAX rows (~3 MB of member structs) —
-        # the 10^6-row mega-bucket regime it was designed for.
-        max_n = (
-            band_df.groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).alias("bucket_n"))
-            .agg(F.max("bucket_n"))
-            .collect()[0][0]
-        )
-        if max_n is None or max_n <= max(cap, SAFE_COLLECT_MAX):
-            salt = 1  # collectable buckets → single-shuffle plain path below
+    if max_bucket is not None and max_bucket <= max(cap, SAFE_COLLECT_MAX):
+        salt = 1
     if salt > 1:
         counts = band_df.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("bucket_n"))
         hot_keys = counts.filter(F.col("bucket_n") > cap)
@@ -159,34 +126,76 @@ def bucket_members(band_df: DataFrame, cap: int, salt: int = 1,
     )
 
 
-def _pair_structs(ids) -> F.Column:
-    """All (ids[i], ids[j]) i<j pairs from a sorted id array — JVM-side
-    combination expansion, no self-join."""
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size(ids) - F.lit(2)),
-            lambda i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda x: F.struct(
-                    F.element_at(ids, i + F.lit(1)).alias("id_a"), x.alias("id_b")
-                ),
-            ),
-        )
-    )
+def member_pairs(ms, emit, keep=None) -> F.Column:
+    """``emit(ms[i], ms[j])`` for every i<j pair of a sorted member array —
+    JVM-side combination expansion, no self-join. ``keep(x, y)``, when
+    given, runs INSIDE the expansion: a rejected pair never gets its output
+    struct (with its string copies) built, let alone shuffled. Callers
+    drop arrays of fewer than two members first."""
+
+    def row(i):
+        x = F.element_at(ms, i + F.lit(1))
+        rest = F.slice(ms, i + F.lit(2), F.size(ms))
+        if keep is not None:
+            rest = F.filter(rest, lambda y: keep(x, y))
+        return F.transform(rest, lambda y: emit(x, y))
+
+    return F.flatten(F.transform(F.sequence(F.lit(0), F.size(ms) - F.lit(2)), row))
 
 
-def candidate_pairs(
-    band_df: DataFrame, cfg: DedupConfig, observation=None,
+def hamming_within(threshold: int):
+    """In-bucket verify for 64-bit signatures carried as the ``sig`` payload:
+    ``bit_count(sig_a XOR sig_b) <= threshold``.
+
+    Why in-bucket (measured, 500k clips): real audio envelope bits are
+    heavily correlated, so the 24-bit SimHash table keys collide far above
+    the uniform estimate — 10.5M in-bucket pairs -> 5.7M distinct
+    candidates, all previously shuffled through a distinct + two verify
+    joins (the pipeline's dominant cost at that scale, and super-linear).
+    Verifying in-bucket drops ~95% of them before the first shuffle; the
+    join-based verify stage disappears for this modality entirely."""
+    return lambda x, y: F.bit_count(x["sig"].bitwiseXOR(y["sig"])) <= F.lit(threshold)
+
+
+def fold_within(num_perm: int, min_agreement: float):
+    """In-bucket MinHash pre-filter over the ``fold`` payload
+    (minhash_sql.minhash_fold_col): reject pairs whose PROVABLE slot-mismatch
+    count (fold_mismatch_col — a lower bound on the true count) already
+    exceeds the verify budget. Exactly conservative: every pair that
+    verify_pairs_minhash keeps at ``min_agreement`` survives (test_minhash
+    pins this), so the filter only spares the distinct and the verify joins
+    the rows it rejects."""
+    from file_deduplicator_spark.functions.minhash_sql import fold_mismatch_col
+
+    # Smallest agreement count k the verify accepts, computed with the SAME
+    # double-division compare the verify uses (k/num_perm >= min_agreement)
+    # — math.ceil(t * num_perm) overshoots when t*num_perm is an exact
+    # integer (ceil(0.55*400) == 221 in IEEE double), which would make the
+    # pre-filter drop pairs the verify keeps.
+    k_min = next((k for k in range(num_perm + 1) if k / num_perm >= min_agreement),
+                 num_perm + 1)
+    max_mismatch = num_perm - k_min
+    return lambda x, y: fold_mismatch_col(x["fold"], y["fold"]) <= F.lit(max_mismatch)
+
+
+def bucket_pairs(
+    band_df: DataFrame, cfg: DedupConfig, keep=None, observation=None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Distinct (id_a < id_b) candidate pairs via per-bucket combination
-    expansion.
+    expansion — the one in-bucket pair operator for every band family.
 
-    Shuffle topology: ONE groupBy(band, bh) (+1 with salting) + the distinct
-    — vs round-1's window + self-join chain (≥3). ``ids`` arrays are sorted,
-    so expansion emits each in-bucket pair once with id_a < id_b already
-    ordered; ``distinct`` then dedups across bands (a pair can collide in
-    many bands; verifying once is the big constant-factor win).
+    Shuffle topology: ONE groupBy(band, bh) (+ the salted topology for hot
+    buckets, see bucket_members) + the distinct — vs round-1's window +
+    self-join chain (≥3). ``ids`` arrays are sorted, so expansion emits each
+    in-bucket pair once with id_a < id_b already ordered; ``distinct`` then
+    dedups across bands (a pair can collide in many bands; verifying once
+    is the big constant-factor win).
+
+    ``keep(x, y)``: optional in-bucket predicate over two member structs
+    (hamming_within / fold_within), so rejected pairs never reach the
+    shuffle. Its payload columns must ride the band table (band_table
+    ``payload``); the output is bare ids either way.
 
     ``observation``: optional pyspark Observation; when given, bucket-count /
     max-size / capped-bucket / dropped-row metrics ride the first action for
@@ -195,153 +204,27 @@ def candidate_pairs(
     grouped = bucket_members(band_df, cfg.bucket_cap, max(1, cfg.salt_buckets),
                              max_bucket=max_bucket)
     if observation is not None:
+        over = F.col("bucket_n") - cfg.bucket_cap
         grouped = grouped.observe(
             observation,
             F.count(F.lit(1)).alias("buckets"),
             F.max("bucket_n").alias("max_bucket"),
-            F.sum((F.col("bucket_n") > cfg.bucket_cap).cast("long")).alias("capped_buckets"),
-            F.sum(
-                F.when(F.col("bucket_n") > cfg.bucket_cap,
-                       F.col("bucket_n") - cfg.bucket_cap).otherwise(F.lit(0))
-            ).alias("capped_dropped_rows"),
+            F.sum((over > 0).cast("long")).alias("capped_buckets"),
+            F.sum(F.greatest(over, F.lit(0))).alias("capped_dropped_rows"),
         )
-    multi = grouped.filter(F.size("ids") > 1)
-    # payload-carrying band tables store struct members — project back to
-    # bare ids here (payloads are for the FUSED variants; reaching this
-    # generic expansion with one must not silently emit struct ids)
-    ids = F.col("ids")
-    if any(c not in ("id", "band", "bh") for c in band_df.columns):
-        ids = F.transform(ids, lambda x: x["id"])
+    has_payload = any(c not in ("id", "band", "bh") for c in band_df.columns)
+
+    def key(m):
+        return m["id"] if has_payload else m
+
+    pairs = member_pairs(
+        F.col("ids"),
+        lambda x, y: F.struct(key(x).alias("id_a"), key(y).alias("id_b")),
+        keep,
+    )
     return (
-        multi.select(F.explode(_pair_structs(ids)).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
-
-
-def _verified_pair_structs(ids, threshold: int) -> F.Column:
-    """(i<j) member pairs from a sorted array<struct<id,sig>> with the
-    Hamming predicate applied INSIDE the expansion — non-matching pairs
-    are rejected by a long-xor popcount before any id struct (with its
-    string copies) is even built."""
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size(ids) - F.lit(2)),
-            lambda i: F.transform(
-                F.filter(
-                    F.slice(ids, i + F.lit(2), F.size(ids)),
-                    lambda x: F.bit_count(
-                        x["sig"].bitwiseXOR(F.element_at(ids, i + F.lit(1))["sig"])
-                    ) <= F.lit(threshold),
-                ),
-                lambda x: F.struct(
-                    F.element_at(ids, i + F.lit(1))["id"].alias("id_a"),
-                    x["id"].alias("id_b"),
-                ),
-            ),
-        )
-    )
-
-
-def candidate_pairs_hamming(
-    band_df: DataFrame, cfg: DedupConfig, threshold: int, observation=None,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Fused candidate generation + Hamming verify for 64-bit signatures.
-
-    ``band_df`` must carry a ``sig`` column (band_table payload). The
-    Hamming predicate ``bit_count(sig_a XOR sig_b) <= threshold`` runs
-    INSIDE the per-bucket combination expansion — pure JVM, before any
-    row leaves the bucket — so only true edges reach the shuffle/distinct.
-
-    Why this exists (measured, 500k clips): real audio envelope bits are
-    heavily correlated, so the 24-bit SimHash table keys collide far above
-    the uniform estimate — 10.5M in-bucket pairs -> 5.7M distinct
-    candidates, all previously shuffled through a distinct + two verify
-    joins (the pipeline's dominant cost at that scale, and super-linear).
-    Verifying in-bucket drops ~95% of them before the first shuffle; the
-    join-based verify stage disappears for this modality entirely.
-    """
-    grouped = bucket_members(band_df, cfg.bucket_cap, max(1, cfg.salt_buckets),
-                             max_bucket=max_bucket)
-    if observation is not None:
-        grouped = grouped.observe(
-            observation,
-            F.count(F.lit(1)).alias("buckets"),
-            F.max("bucket_n").alias("max_bucket"),
-            F.sum((F.col("bucket_n") > cfg.bucket_cap).cast("long")).alias("capped_buckets"),
-            F.sum(
-                F.when(F.col("bucket_n") > cfg.bucket_cap,
-                       F.col("bucket_n") - cfg.bucket_cap).otherwise(F.lit(0))
-            ).alias("capped_dropped_rows"),
-        )
-    multi = grouped.filter(F.size("ids") > 1)
-    return (
-        multi.select(F.explode(_verified_pair_structs(F.col("ids"), threshold)).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
-
-
-def _folded_pair_structs(ids, max_mismatch: int) -> F.Column:
-    """(i<j) member pairs from a sorted array<struct<id,fold>> with the
-    conservative fold pre-filter applied INSIDE the expansion: pairs whose
-    PROVABLE slot-mismatch count (fold_mismatch_col — a lower bound on the
-    true count) already exceeds the verify budget are rejected before any
-    id struct is built or shuffled. Zero false negatives by construction
-    (see minhash_fold_col soundness note)."""
-    from file_deduplicator_spark.functions.minhash_sql import fold_mismatch_col
-
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size(ids) - F.lit(2)),
-            lambda i: F.transform(
-                F.filter(
-                    F.slice(ids, i + F.lit(2), F.size(ids)),
-                    lambda x: fold_mismatch_col(
-                        x["fold"], F.element_at(ids, i + F.lit(1))["fold"]
-                    ) <= F.lit(max_mismatch),
-                ),
-                lambda x: F.struct(
-                    F.element_at(ids, i + F.lit(1))["id"].alias("id_a"),
-                    x["id"].alias("id_b"),
-                ),
-            ),
-        )
-    )
-
-
-def candidate_pairs_folded(
-    band_df: DataFrame, cfg: DedupConfig, max_mismatch: int, observation=None,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Candidate generation with the in-bucket MinHash fold pre-filter.
-
-    ``band_df`` must carry a ``fold`` column (band_table payload,
-    minhash_fold_col). Same shuffle topology as candidate_pairs — ONE
-    groupBy + distinct — but most non-matching candidates die inside the
-    bucket expansion (JVM integer ops on 32-byte folds), so the distinct
-    and the downstream verify joins see only survivors. The pre-filter is
-    exactly conservative: the surviving-pair superset always contains every
-    pair the full verify keeps, so the verified output is identical with
-    the filter on or off (test_minhash.py pins this).
-    """
-    grouped = bucket_members(band_df, cfg.bucket_cap, max(1, cfg.salt_buckets),
-                             max_bucket=max_bucket)
-    if observation is not None:
-        grouped = grouped.observe(
-            observation,
-            F.count(F.lit(1)).alias("buckets"),
-            F.max("bucket_n").alias("max_bucket"),
-            F.sum((F.col("bucket_n") > cfg.bucket_cap).cast("long")).alias("capped_buckets"),
-            F.sum(
-                F.when(F.col("bucket_n") > cfg.bucket_cap,
-                       F.col("bucket_n") - cfg.bucket_cap).otherwise(F.lit(0))
-            ).alias("capped_dropped_rows"),
-        )
-    multi = grouped.filter(F.size("ids") > 1)
-    return (
-        multi.select(F.explode(_folded_pair_structs(F.col("ids"), max_mismatch)).alias("p"))
+        grouped.filter(F.size("ids") > 1)
+        .select(F.explode(pairs).alias("p"))
         .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .distinct()
     )

@@ -236,8 +236,8 @@ def image_near_dup_pairs(
     """Image near-duplicate pairs end-to-end in Spark: perceptual signatures
     (REAL decode + the reference's preprocessing, functions/image.py) → the
     SAME banded SimHash LSH + fused in-bucket Hamming verify the audio path
-    uses (operators/lsh.candidate_pairs_hamming — capped buckets, hot-bucket
-    salting, skew metrics). The Spark-first generalization of
+    uses (operators/lsh.bucket_pairs with hamming_within — capped buckets,
+    hot-bucket salting, skew metrics). The Spark-first generalization of
     findPerceptualDuplicates (main.go:868-902), which compares all pairs.
 
     ``threshold`` defaults to the reference's AdaptiveThreshold(algo,
@@ -245,7 +245,7 @@ def image_near_dup_pairs(
     from file_deduplicator_spark.config import DedupConfig
     from file_deduplicator_spark.functions.minhash_sql import simhash_bands_col
     from file_deduplicator_spark.functions.udfs import make_image_sig_udf
-    from file_deduplicator_spark.operators.lsh import band_table, candidate_pairs_hamming
+    from file_deduplicator_spark.operators.lsh import band_table, bucket_pairs, hamming_within
 
     cfg = cfg or DedupConfig(sim_algo=algo)
     t = threshold if threshold is not None else cfg.effective_threshold
@@ -261,7 +261,7 @@ def image_near_dup_pairs(
         id_col,
         payload={"sig": "sim_sig"},
     )
-    return candidate_pairs_hamming(bands, cfg, t, observation=observation)
+    return bucket_pairs(bands, cfg, hamming_within(t), observation=observation)
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,13 @@ from file_deduplicator_spark.functions.minhash_sql import minhash_bands_col, sim
 from file_deduplicator_spark.functions.udfs import signatures_map_in_arrow
 from file_deduplicator_spark.operators.components import attach_clusters, connected_components
 from file_deduplicator_spark.operators.exact import codec_filter, size_filter, with_digest
-from file_deduplicator_spark.operators.lsh import band_table, candidate_pairs, candidate_pairs_hamming
+from file_deduplicator_spark.operators.lsh import (
+    band_table,
+    bucket_pairs,
+    fold_within,
+    hamming_within,
+    verify_pairs_minhash,
+)
 from file_deduplicator_spark.operators.report import action_plan, cluster_stats, dedup_report
 
 
@@ -96,27 +102,32 @@ def near_dup_edges(
     id_col: str = "clip_id",
     observation=None,
     caches: list | None = None,
+    text_observation=None,
 ) -> DataFrame:
-    """Verified near-duplicate pairs from both modalities.
+    """Verified near-duplicate pairs from both modalities, each family's
+    candidates from the one in-bucket pair operator (lsh.bucket_pairs).
 
     Audio: SimHash bands → Hamming ≤ threshold (ref threshold semantics
     main.go:147 / perceptual.go:401-404), with the Hamming predicate fused
-    INTO the bucket pair-expansion (lsh.candidate_pairs_hamming): the
-    8-byte sim_sig rides the band table, so only true audio edges ever
-    reach a shuffle. This is the round-2.5 rework — measured at 500k
-    clips, the correlated envelope bits made the 24-bit table keys
-    collide into 5.7M distinct candidates whose distinct+join verify
-    dominated the whole pipeline, super-linearly.
+    INTO the bucket pair-expansion (lsh.hamming_within): the 8-byte sim_sig
+    rides the band table, so only true audio edges ever reach a shuffle.
+    This is the round-2.5 rework — measured at 500k clips, the correlated
+    envelope bits made the 24-bit table keys collide into 5.7M distinct
+    candidates whose distinct+join verify dominated the whole pipeline,
+    super-linearly.
 
     Text: MinHash bands → candidate pairs → slot agreement ≥
-    jaccard_threshold via one self-join verify (the 512-byte signature is
-    too fat to carry into buckets; its near-uniform 64-bit band keys keep
-    candidate counts ~linear, so the join stays cheap). Empty transcripts
-    never enter the text band table (degenerate all-EMPTY_SLOT signatures
-    must not match each other).
+    jaccard_threshold via lsh.verify_pairs_minhash (the 512-byte signature
+    is too fat to carry into buckets; its near-uniform 64-bit band keys
+    keep candidate counts ~linear, so the join stays cheap). When
+    ``num_perm`` is a multiple of 16 the 32-byte fold rides the band table
+    and lsh.fold_within rejects provably failing pairs in-bucket (exactly
+    conservative: same verified pair set). Empty transcripts never enter
+    the text band table (degenerate all-EMPTY_SLOT signatures must not
+    match each other).
 
-    ``observation``: optional pyspark Observation for audio bucket-skew
-    metrics (rides the first action; the audio family is the skew driver).
+    ``observation`` / ``text_observation``: optional pyspark Observations
+    for the audio / text bucket-skew metrics (each rides the first action).
     """
     reps = digest_representatives(sigs, id_col)
 
@@ -159,8 +170,8 @@ def near_dup_edges(
             caches.append(bands_a)
 
     text = reps.filter(F.length(F.trim(F.col("transcript"))) > 0)
-    use_fold = cfg.minhash_prefilter and cfg.num_perm % 16 == 0
-    if use_fold:
+    keep_t = None
+    if cfg.num_perm % 16 == 0:
         # round-4: the 32-byte nibble fold rides the band table so
         # non-matching candidates are rejected INSIDE the bucket expansion
         # (provable-mismatch bound — exactly conservative, verified pair
@@ -173,22 +184,17 @@ def near_dup_edges(
         # band collisions far exceed true pairs), where every rejected
         # candidate saves two join lookups and a shuffle row.
         from file_deduplicator_spark.functions.minhash_sql import minhash_fold_col
-        from file_deduplicator_spark.operators.lsh import candidate_pairs_folded
 
         text = text.withColumn(
             "_mh_fold", minhash_fold_col(F.col("minhash_sig"), cfg.num_perm)
         )
-        bands_t = band_table(
-            text,
-            minhash_bands_col(F.col("minhash_sig"), cfg.minhash_bands, cfg.minhash_rows),
-            id_col,
-            payload={"fold": "_mh_fold"},
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        bands_t = band_table(
-            text, minhash_bands_col(F.col("minhash_sig"), cfg.minhash_bands, cfg.minhash_rows),
-            id_col,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        keep_t = fold_within(cfg.num_perm, cfg.jaccard_threshold)
+    bands_t = band_table(
+        text,
+        minhash_bands_col(F.col("minhash_sig"), cfg.minhash_bands, cfg.minhash_rows),
+        id_col,
+        payload={"fold": "_mh_fold"} if keep_t is not None else None,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     if caches is not None:
         caches.append(bands_t)
 
@@ -219,40 +225,13 @@ def near_dup_edges(
 
     if bands_a is not None:
         parts.append(
-            candidate_pairs_hamming(
-                bands_a, cfg, cfg.effective_threshold, observation=observation,
-                max_bucket=max_by_family.get("a"),
-            )
+            bucket_pairs(bands_a, cfg, hamming_within(cfg.effective_threshold),
+                         observation=observation, max_bucket=max_by_family.get("a"))
         )
-    if use_fold:
-        # Smallest agreement count k the verify stage accepts, computed with
-        # the SAME double-division compare the verify uses (k/num_perm >=
-        # threshold) — math.ceil(t * num_perm) overshoots when t*num_perm is
-        # an exact integer (ceil(0.55*400) == 221 in IEEE double), which would
-        # make the "exactly conservative" fold pre-filter drop pairs the
-        # verify keeps.
-        k_min = next(
-            (k for k in range(cfg.num_perm + 1)
-             if k / cfg.num_perm >= cfg.jaccard_threshold),
-            cfg.num_perm + 1,
-        )
-        max_mismatch = cfg.num_perm - k_min
-        pairs_t = candidate_pairs_folded(bands_t, cfg, max_mismatch,
-                                         max_bucket=max_by_family.get("t"))
-    else:
-        pairs_t = candidate_pairs(bands_t, cfg,
-                                  max_bucket=max_by_family.get("t"))
-
-    from file_deduplicator_spark.functions.minhash_sql import sig_agreement_col
-
-    mh = reps.select(F.col(id_col), F.col("minhash_sig"))
-    a = mh.select(F.col(id_col).alias("id_a"), F.col("minhash_sig").alias("_mh_a"))
-    b = mh.select(F.col(id_col).alias("id_b"), F.col("minhash_sig").alias("_mh_b"))
+    pairs_t = bucket_pairs(bands_t, cfg, keep_t, observation=text_observation,
+                           max_bucket=max_by_family.get("t"))
     parts.append(
-        pairs_t.join(a, "id_a")
-        .join(b, "id_b")
-        .filter(sig_agreement_col(F.col("_mh_a"), F.col("_mh_b"))
-                >= F.lit(cfg.jaccard_threshold))
+        verify_pairs_minhash(pairs_t, reps, cfg.jaccard_threshold, id_col)
         .select("id_a", "id_b")
     )
 
@@ -313,8 +292,10 @@ def dedup_pipeline(
     from pyspark.sql import Observation
 
     lsh_obs = Observation("lsh_buckets")
+    lsh_text_obs = Observation("lsh_text_buckets")
     caches: list = [sigs]
-    e_near = near_dup_edges(sigs, cfg, id_col, observation=lsh_obs, caches=caches)
+    e_near = near_dup_edges(sigs, cfg, id_col, observation=lsh_obs, caches=caches,
+                            text_observation=lsh_text_obs)
     cc_edges = e_near
     if extra_edges is not None:
         # containment/extra edges arrive at row granularity — lift to roots
@@ -381,10 +362,11 @@ def dedup_pipeline(
         "plan": action_plan(labeled, id_col),
         "cc_metrics": cc_metrics,
         # bucket-skew metrics (buckets, max_bucket, capped_buckets,
-        # capped_dropped_rows) — populated once any returned DataFrame is
-        # acted on; read with lsh_observation.get (north rule: skew metrics
-        # surfaced, silent caps logged)
+        # capped_dropped_rows) of the audio / text band families — populated
+        # once any returned DataFrame is acted on; read with .get (north
+        # rule: skew metrics surfaced, silent caps logged)
         "lsh_observation": lsh_obs,
+        "lsh_text_observation": lsh_text_obs,
         # persisted frames backing the result — pass to release_pipeline()
         # when the returned DataFrames are no longer needed
         "caches": caches,
@@ -392,8 +374,9 @@ def dedup_pipeline(
 
 
 def collect_run_metrics(result: dict) -> dict:
-    """Flat run-metrics dict (CC convergence + LSH bucket-skew observation)
-    ready for sinks.append_metrics — the reference's Statistics analog
+    """Flat run-metrics dict (CC convergence + per-family LSH bucket-skew
+    observations: ``lsh_*`` audio, ``lsh_text_*`` text) ready for
+    sinks.append_metrics — the reference's Statistics analog
     (main.go:46-59, 1507-1565). Call AFTER at least one action has executed
     on the result (the observation rides the first action)."""
     out: dict = {}
@@ -403,14 +386,16 @@ def collect_run_metrics(result: dict) -> dict:
         if isinstance(v, (int, float)):
             out[f"cc_{k}"] = v
     out["cc_converged"] = 1.0 if cc.get("converged") else 0.0
-    obs = result.get("lsh_observation")
-    if obs is not None:
+    for key, prefix in (("lsh_observation", "lsh_"), ("lsh_text_observation", "lsh_text_")):
+        obs = result.get(key)
+        if obs is None:
+            continue
         try:
             for k, v in obs.get.items():
                 if v is not None:
-                    out[f"lsh_{k}"] = v
+                    out[f"{prefix}{k}"] = v
         except Exception:
-            pass  # no action has run yet — caller gets CC metrics only
+            pass  # family not observed (perceptual off) or no action has run yet
     return out
 
 

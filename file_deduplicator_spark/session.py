@@ -126,11 +126,12 @@ def get_spark(
         # bucket), so every bucket pass was paying a full sort (measured:
         # 7.1M band rows grouped in 9.9s vs 17.7s at 32 cores). NOTE the
         # real memory bound: collect_list accumulates the FULL bucket in the
-        # agg buffer before F.slice caps it, so per-key state is bounded by
-        # bucket_n/salt on hot keys — this override is safe ONLY because
-        # candidate_pairs' hot-bucket salting is mandatory (lsh.py splits
-        # any bucket above the cap across salt_buckets shards before this
-        # aggregation). Don't disable salting while this is set.
+        # agg buffer before F.slice caps it. lsh.bucket_members' plain path
+        # therefore buffers up to SAFE_COLLECT_MAX (65,536) members per
+        # bucket, each held in memory under this threshold; the salted
+        # topology (per-key state ≤ bucket_n/salt) engages only above that
+        # bound or when the caller passes no measured max_bucket. Don't
+        # disable salting (salt_buckets=1) while this is set.
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
                 "16777216")
         # df.persist() builds compressed columnar batches by default; the

@@ -137,20 +137,41 @@ def test_fold_matches_python_and_is_conservative(spark):
 
 
 def test_prefilter_preserves_verified_pair_set(spark, clips_df):
-    """Pipeline-level: near-dup edges with the fold pre-filter ON equal the
-    edges with it OFF, row for row (the round-4 'same verified pair set'
-    gate)."""
+    """Operator-level: text candidates with the in-bucket fold pre-filter,
+    verified, equal the verified candidates without it, row for row (the
+    round-4 'same verified pair set' gate: the fold is exactly
+    conservative)."""
     from file_deduplicator_spark.config import DedupConfig
-    from file_deduplicator_spark.plans.pipeline import near_dup_edges, with_signatures
-    from pyspark.sql import Window
+    from file_deduplicator_spark.functions.minhash_sql import (
+        minhash_bands_col,
+        minhash_fold_col,
+    )
+    from file_deduplicator_spark.operators.lsh import (
+        band_table,
+        bucket_pairs,
+        fold_within,
+        verify_pairs_minhash,
+    )
+    from file_deduplicator_spark.plans.pipeline import with_signatures
 
-    base = DedupConfig()
-    sigs = with_signatures(clips_df, base).drop("bytes").withColumn(
-        "digest_root", F.min("clip_id").over(Window.partitionBy("digest"))
-    ).persist()
+    cfg = DedupConfig()
+    sigs = (with_signatures(clips_df, cfg).drop("bytes")
+            .filter(F.length(F.trim(F.col("transcript"))) > 0)
+            .withColumn("_mh_fold", minhash_fold_col(F.col("minhash_sig"), cfg.num_perm))
+            .persist())
     try:
-        on = near_dup_edges(sigs, DedupConfig(minhash_prefilter=True)).distinct()
-        off = near_dup_edges(sigs, DedupConfig(minhash_prefilter=False)).distinct()
+        bands = band_table(
+            sigs, minhash_bands_col(F.col("minhash_sig"), cfg.minhash_bands,
+                                    cfg.minhash_rows),
+            payload={"fold": "_mh_fold"},
+        )
+
+        def verified(pairs):
+            return verify_pairs_minhash(pairs, sigs, cfg.jaccard_threshold)
+
+        on = verified(bucket_pairs(bands, cfg,
+                                   fold_within(cfg.num_perm, cfg.jaccard_threshold)))
+        off = verified(bucket_pairs(bands, cfg))
         assert on.exceptAll(off).count() == 0
         assert off.exceptAll(on).count() == 0
         assert on.count() > 0

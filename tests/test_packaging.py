@@ -188,15 +188,18 @@ def test_job_resume_after_append(spark, tmp_path, clips_df):
 
 def test_entry_points_import_only_existing_names():
     """Every ``from file_deduplicator_spark... import name`` in the scripts,
-    jobs, benchmark and driver entry points resolves — a helper deleted from
-    the package but still imported by a script fails here, not at run time.
-    Parses with ``ast`` and imports modules only: no Spark session."""
+    jobs, benchmark, driver entry points, the package itself and the tests
+    resolves, including function-level (lazy) imports — a helper deleted
+    from the package but still imported somewhere fails here, not at run
+    time. Parses with ``ast`` and imports modules only: no Spark session."""
     import ast
     import importlib
 
     files = sorted([*REPO.glob("scripts/*.py"), *REPO.glob("jobs/*.py"),
                     *REPO.glob("perfbench/*.py"), REPO / "bench.py",
-                    REPO / "__spark_entry__.py"])
+                    REPO / "__spark_entry__.py",
+                    *REPO.glob("file_deduplicator_spark/**/*.py"),
+                    *REPO.glob("tests/*.py")])
     checked, missing = 0, []
     for path in files:
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):

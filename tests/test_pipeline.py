@@ -96,9 +96,23 @@ def test_run_metrics_roundtrip(spark, clips_df, tmp_path):
     m = collect_run_metrics(result)
     assert "cc_converged" in m and "lsh_buckets" in m
     assert m["lsh_buckets"] > 0
+    # the text band family reports its own bucket metrics (capped text
+    # buckets are counted, not silent)
+    assert m["lsh_text_buckets"] > 0
+    for k in ("max_bucket", "capped_buckets", "capped_dropped_rows"):
+        assert f"lsh_text_{k}" in m
     append_metrics(spark, tmp_path / "metrics", run_id=1, metrics=m)
     back = spark.read.parquet(str(tmp_path / "metrics"))
     assert back.filter("metric = 'lsh_buckets'").count() == 1
+    assert back.filter("metric = 'lsh_text_buckets'").count() == 1
+    release_pipeline(result)
+
+    # perceptual off: no audio family, but the text family still reports
+    result = dedup_pipeline(clips_df, DedupConfig(perceptual=False))
+    result["report"].collect()
+    m = collect_run_metrics(result)
+    assert "lsh_buckets" not in m
+    assert m["lsh_text_buckets"] > 0
     release_pipeline(result)
 
 
@@ -226,28 +240,34 @@ def test_cc_checkpoint_probe(spark):
 
 
 def test_bucket_members_adaptive_shortcut(spark):
-    """Round-3 rework: cached skew-free band tables take the single-shuffle
-    plain path; a bucket above the cap re-engages the salted topology.
-    All three topologies must produce identical capped member lists."""
+    """A measured skew-free max_bucket takes the single-shuffle plain path;
+    without one, salt > 1 runs the salted topology. Both topologies must
+    produce identical capped member lists and true bucket sizes."""
     from file_deduplicator_spark.operators.lsh import bucket_members
+
+    def plan(df):
+        return df._jdf.queryExecution().analyzed().toString()
 
     # skew-free: 100 buckets of 3 members (cap 8)
     rows = [(f"id{i:04d}", 0, i % 100) for i in range(300)]
-    cold = spark.createDataFrame(rows, "id string, band int, bh long").persist()
-    cold.count()
+    cold = spark.createDataFrame(rows, "id string, band int, bh long")
     plain = bucket_members(cold, cap=8, salt=1).orderBy("bh").collect()
-    adaptive = bucket_members(cold, cap=8, salt=16).orderBy("bh").collect()
+    adaptive_df = bucket_members(cold, cap=8, salt=16, max_bucket=3)
+    assert "_salt" not in plan(adaptive_df)
+    adaptive = adaptive_df.orderBy("bh").collect()
     assert [r.ids for r in adaptive] == [r.ids for r in plain]
     assert all(r.bucket_n == 3 for r in adaptive)
-    cold.unpersist()
 
     # one hot bucket (40 > cap 8) among cold ones
     rows = [(f"h{i:03d}", 0, 7) for i in range(40)] + [
         (f"c{i:03d}", 0, 100 + i % 5) for i in range(15)
     ]
-    hot = spark.createDataFrame(rows, "id string, band int, bh long").persist()
-    hot.count()
-    salted = {r.bh: r for r in bucket_members(hot, cap=8, salt=4).collect()}
+    hot = spark.createDataFrame(rows, "id string, band int, bh long")
+    salted_df = bucket_members(hot, cap=8, salt=4)
+    salted_plan = plan(salted_df)
+    # the salted topology really runs: salt shards + cold/hot key split
+    assert "_salt" in salted_plan and "LeftAnti" in salted_plan
+    salted = {r.bh: r for r in salted_df.collect()}
     unsalted = {r.bh: r for r in bucket_members(hot, cap=8, salt=1).collect()}
     assert salted.keys() == unsalted.keys()
     for bh in salted:
@@ -255,4 +275,52 @@ def test_bucket_members_adaptive_shortcut(spark):
         assert salted[bh].ids == unsalted[bh].ids
         assert salted[bh].bucket_n == unsalted[bh].bucket_n
     assert salted[7].bucket_n == 40 and len(salted[7].ids) == 8
-    hot.unpersist()
+    assert salted[7].ids == sorted(f"h{i:03d}" for i in range(40))[:8]
+
+
+def test_bucket_pairs_matches_brute_force(spark):
+    """bucket_pairs against a Python all-pairs reference on a hand-made
+    band table: multi-band collisions emit once, a capped bucket pairs only
+    its cap lowest ids, hamming_within keeps distance t and drops t + 1,
+    and a payload-carrying table without ``keep`` still yields bare ids."""
+    from itertools import combinations
+
+    from file_deduplicator_spark.config import DedupConfig
+    from file_deduplicator_spark.operators.lsh import bucket_pairs, hamming_within
+
+    cap, t = 4, 3
+    cfg = DedupConfig(bucket_cap=cap, salt_buckets=1)
+    sig = {"a": 0, "b": 0b111, "c": 0b1111}  # d(a,b)=3=t, d(a,c)=4=t+1, d(b,c)=1
+    rows = [(i, band, 1) for i in ("a", "b", "c") for band in range(3)]  # 3 bands
+    big = [f"m{i}" for i in range(cap + 3)]
+    sig.update({m: 0 for m in big})
+    rows += [(m, 9, 2) for m in big]  # one bucket of cap + 3 members
+    rows += [("a", 5, 3)]  # singleton bucket: no pairs
+    bands = spark.createDataFrame(
+        [(i, band, bh, sig[i]) for i, band, bh in rows],
+        "id string, band int, bh long, sig long",
+    )
+
+    def reference(keep=lambda x, y: True):
+        buckets: dict = {}
+        for i, band, bh in rows:
+            buckets.setdefault((band, bh), []).append(i)
+        return {(x, y) for ms in buckets.values()
+                for x, y in combinations(sorted(ms)[:cap], 2) if keep(x, y)}
+
+    def got(df):
+        out = df.collect()
+        assert len(out) == len({(r.id_a, r.id_b) for r in out})  # distinct
+        return {(r.id_a, r.id_b) for r in out}
+
+    plain_df = bucket_pairs(bands, cfg)
+    assert dict(plain_df.dtypes) == {"id_a": "string", "id_b": "string"}
+    plain = got(plain_df)
+    assert plain == reference()
+    assert {("a", "b"), ("a", "c"), ("b", "c")} <= plain  # 3 bands, once each
+    kept = sorted(big)[:cap]
+    assert {p for p in plain if p[0].startswith("m")} == set(combinations(kept, 2))
+
+    fused = got(bucket_pairs(bands, cfg, hamming_within(t)))
+    assert fused == reference(lambda x, y: bin(sig[x] ^ sig[y]).count("1") <= t)
+    assert ("a", "b") in fused and ("a", "c") not in fused
