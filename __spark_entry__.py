@@ -484,9 +484,11 @@ def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 watch semantics under the value-level gate (round-4 directive 6):
     one incremental watch micro-batch expressed over the documents table
     and run through the PRODUCTION match function
-    (streaming/watch.match_new_against_state — the same code every watch
-    tier calls per batch), with the portable MinHash builders injected so
-    DuckDB replicates bands + agreement value-for-value.
+    (streaming/watch.match_new_against_state — the matcher that
+    watch.batch_alerts runs per batch for both watch tiers,
+    watch.process_new_snapshots and stream.start_watch_stream's
+    handle_batch), with the portable MinHash builders injected so DuckDB
+    replicates bands + agreement value-for-value.
 
     State = documents with doc_id % 5 != 0 (the already-seen corpus);
     arrivals = doc_id % 5 = 0. The NEW arrival is the victim (SURVEY §2.7

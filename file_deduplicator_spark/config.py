@@ -90,12 +90,6 @@ class DedupConfig:
     watch_auto_clean: bool = False
     watch_clean_action: str = "remove"   # remove | move
     watch_move_to: str = "_quarantine"   # -move-to analog for watch actions
-    # pruned-state matching: persist band/digest/signature INDEXES partitioned
-    # by hash bucket so a micro-batch reads only the buckets its own keys hash
-    # to (replaces the full state scan per batch — the reference's O(n)
-    # per-arrival scan analog, main.go:1874-1886, made sublinear)
-    watch_pruned_state: bool = True
-    state_buckets: int = 64              # partition fan-out of the state indexes
 
     # --- safety (ref -dry-run main.go:127) ---
     dry_run: bool = True             # emit action plan only; never mutate

@@ -1,2 +1,2 @@
-"""Incremental ("watch mode") dedup: snapshot-driven batches, a Structured
-Streaming wrapper, and an applyInPandasWithState stateful tier."""
+"""Incremental ("watch mode") dedup: snapshot-driven batches and a
+Structured Streaming wrapper, both matching through watch.batch_alerts."""

@@ -23,11 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from file_deduplicator_spark.config import DedupConfig
-from file_deduplicator_spark.streaming.watch import (
-    SIG_COLS,
-    _match_new_against_state,
-    compute_signatures,
-)
+from file_deduplicator_spark.streaming.watch import batch_alerts, compute_signatures
 
 CLIPS_SCHEMA = T.StructType(
     [
@@ -67,19 +63,9 @@ def start_watch_stream(
 
         new_sigs = compute_signatures(apply_prefilters(batch_df, cfg), cfg).persist()
         try:
-            have_state = any(Path(sig_dir).glob("*.parquet")) or any(
-                Path(sig_dir).glob("**/*.parquet")
-            )
-            if have_state:
-                state = batch_df.sparkSession.read.parquet(sig_dir)
-                alerts = _match_new_against_state(new_sigs, state.select(*SIG_COLS), cfg)
-            else:
-                alerts = None
-            within = _match_new_against_state(new_sigs, new_sigs.select(*SIG_COLS), cfg).filter(
-                F.col("new_id") > F.col("matched_id")
-            )
-            alerts = within if alerts is None else alerts.unionByName(within)
-            alerts = alerts.distinct().withColumn("epoch", F.lit(epoch_id))
+            have_state = any(Path(sig_dir).glob("**/*.parquet"))
+            state = batch_df.sparkSession.read.parquet(sig_dir) if have_state else None
+            alerts = batch_alerts(new_sigs, state, cfg).withColumn("epoch", F.lit(epoch_id))
             # epoch-keyed output paths + overwrite ⇒ a replayed epoch (crash
             # between writes and the streaming checkpoint commit) rewrites
             # identical files instead of appending duplicates

@@ -65,12 +65,6 @@ def compute_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     return with_signatures(df, cfg).select(*SIG_COLS)
 
 
-def _match_new_against_state(
-    new_sigs: DataFrame, state: DataFrame, cfg: DedupConfig
-) -> DataFrame:
-    return match_new_against_state(new_sigs, state, cfg)
-
-
 def match_new_against_state(
     new_sigs: DataFrame, state: DataFrame, cfg: DedupConfig,
     include: tuple = ("exact", "similar_audio", "similar_text"),
@@ -174,165 +168,19 @@ def match_new_against_state(
     return out.filter(F.col("new_id") != F.col("matched_id"))
 
 
-# ---------------------------------------------------------------------------
-# Pruned banded state (T4 at 10^12-row state): instead of re-deriving band
-# tables from the FULL signature state every batch (a full scan — the direct
-# analog of the reference's O(n) per-arrival threshold scan, main.go:1874-
-# 1886), the state is persisted as hash-bucket-partitioned INDEXES:
-#
-#   sim_bands/batch=<b>/pbkt=<k>   (band, bh, clip_id, sim_sig)
-#   mh_bands/batch=<b>/pbkt=<k>    (band, bh, clip_id)
-#   digests/batch=<b>/dbkt=<k>     (digest, clip_id)
-#   sig_idx/batch=<b>/sbkt=<k>     (clip_id, digest, size, sim_sig, minhash_sig)
-#
-# A micro-batch collects the ≤ state_buckets distinct bucket ids its own keys
-# hash to (a tiny driver round-trip, ONCE per batch) and reads the state with
-# `pbkt IN (...)` — parquet partition pruning skips every other bucket, so
-# batch cost scales with batch size, not state size. Per-batch directories
-# with overwrite semantics keep crash replay idempotent.
-# ---------------------------------------------------------------------------
-
-
-def _pbkt(col, n: int):
-    return F.pmod(F.xxhash64(col), F.lit(n))
-
-
-def _sim_bands_of(df: DataFrame, cfg: DedupConfig, id_col: str = "clip_id") -> DataFrame:
-    return (
-        df.where(F.col("sim_sig").isNotNull())
-        .select(
-            F.col(id_col).alias("clip_id"), "sim_sig",
-            F.explode(simhash_bands_col(
-                F.col("sim_sig"), cfg.simhash_bands, cfg.simhash_rotations,
-                cfg.simhash_key_blocks, cfg.simhash_design)).alias("e"),
-        )
-        .select("clip_id", "sim_sig", F.col("e.band").alias("band"), F.col("e.bh").alias("bh"))
-        .withColumn("pbkt", _pbkt(F.col("bh"), cfg.state_buckets))
-    )
-
-
-def _mh_bands_of(df: DataFrame, cfg: DedupConfig, id_col: str = "clip_id") -> DataFrame:
-    from file_deduplicator_spark.functions.minhash_sql import EMPTY_SLOT
-
-    return (
-        df.where(F.element_at(F.col("minhash_sig"), 1) != F.lit(EMPTY_SLOT))
-        .select(
-            F.col(id_col).alias("clip_id"),
-            F.explode(minhash_bands_col(
-                F.col("minhash_sig"), cfg.minhash_bands, cfg.minhash_rows)).alias("e"),
-        )
-        .select("clip_id", F.col("e.band").alias("band"), F.col("e.bh").alias("bh"))
-        .withColumn("pbkt", _pbkt(F.col("bh"), cfg.state_buckets))
-    )
-
-
-def _append_state_indexes(
-    new_sigs: DataFrame, state_dir: Path, cfg: DedupConfig, batch_id: int
-) -> None:
-    """Write this batch's index slices (overwrite per-batch dirs = replay-safe)."""
-    n = cfg.state_buckets
-    _sim_bands_of(new_sigs, cfg).write.partitionBy("pbkt").mode("overwrite").parquet(
-        str(state_dir / "sim_bands" / f"batch={batch_id}")
-    )
-    _mh_bands_of(new_sigs, cfg).write.partitionBy("pbkt").mode("overwrite").parquet(
-        str(state_dir / "mh_bands" / f"batch={batch_id}")
-    )
-    new_sigs.select("digest", "clip_id").withColumn(
-        "dbkt", _pbkt(F.col("digest"), n)
-    ).write.partitionBy("dbkt").mode("overwrite").parquet(
-        str(state_dir / "digests" / f"batch={batch_id}")
-    )
-    new_sigs.select(*SIG_COLS).withColumn(
-        "sbkt", _pbkt(F.col("clip_id"), n)
-    ).write.partitionBy("sbkt").mode("overwrite").parquet(
-        str(state_dir / "sig_idx" / f"batch={batch_id}")
-    )
-
-
-def _collect_buckets(df: DataFrame, col: str) -> list[int]:
-    return [int(r[0]) for r in df.select(col).distinct().collect()]
-
-
-def _match_new_pruned(
-    spark: SparkSession, new_sigs: DataFrame, state_dir: Path, cfg: DedupConfig
+def batch_alerts(
+    new_sigs: DataFrame, state: DataFrame | None, cfg: DedupConfig
 ) -> DataFrame:
-    """Alerts vs the banded state indexes — reads only matching buckets.
-
-    Same semantics as _match_new_against_state (exact digest join, SimHash
-    Hamming ≤ t, MinHash agreement ≥ threshold, new arrival = victim)."""
-    from file_deduplicator_spark.functions.minhash_sql import sig_agreement_col
-
-    n = cfg.state_buckets
-
-    # exact: digest-bucket pruned join (hashMap lookup, main.go:1846-1856)
-    nd = new_sigs.select(
-        F.col("clip_id").alias("new_id"), F.col("digest")
-    ).withColumn("dbkt", _pbkt(F.col("digest"), n))
-    dbkts = _collect_buckets(nd, "dbkt")
-    sd = (
-        spark.read.parquet(str(state_dir / "digests"))
-        .filter(F.col("dbkt").isin(dbkts))
-        .select(F.col("digest"), F.col("clip_id").alias("old_id"))
-    )
-    exact = (
-        nd.join(sd, "digest")
-        .select("new_id", F.col("old_id").alias("matched_id"),
-                F.lit("exact").alias("match_kind"))
-    )
-
-    # similar audio: pruned band join; sim_sig rides in the index rows so no
-    # second lookup is needed for the Hamming verify
-    nb = _sim_bands_of(new_sigs, cfg).withColumnRenamed("clip_id", "new_id") \
-        .withColumnRenamed("sim_sig", "n_sim")
-    pbkts_a = _collect_buckets(nb, "pbkt")
-    sb = (
-        spark.read.parquet(str(state_dir / "sim_bands"))
-        .filter(F.col("pbkt").isin(pbkts_a))
-        .select("band", "bh", F.col("clip_id").alias("old_id"),
-                F.col("sim_sig").alias("s_sim"))
-    )
-    similar_audio = (
-        nb.join(sb, ["band", "bh"])
-        .filter(F.bit_count(F.col("n_sim").bitwiseXOR(F.col("s_sim")))
-                <= cfg.effective_threshold)
-        .select("new_id", F.col("old_id").alias("matched_id"),
-                F.lit("similar_audio").alias("match_kind"))
-        .distinct()
-    )
-
-    # similar text: pruned band join → candidate ids → signature-bucket pruned
-    # sig_idx lookup for the agreement verify
-    nt = _mh_bands_of(new_sigs, cfg).withColumnRenamed("clip_id", "new_id")
-    pbkts_t = _collect_buckets(nt, "pbkt")
-    st = (
-        spark.read.parquet(str(state_dir / "mh_bands"))
-        .filter(F.col("pbkt").isin(pbkts_t))
-        .select("band", "bh", F.col("clip_id").alias("old_id"))
-    )
-    cand = nt.join(st, ["band", "bh"]).select("new_id", "old_id").distinct()
-    cand = cand.withColumn("sbkt", _pbkt(F.col("old_id"), n))
-    sbkts = _collect_buckets(cand, "sbkt")
-    old_sigs = (
-        spark.read.parquet(str(state_dir / "sig_idx"))
-        .filter(F.col("sbkt").isin(sbkts))
-        .select(F.col("clip_id").alias("old_id"), F.col("minhash_sig").alias("s_mh"))
-    )
-    new_mh = new_sigs.select(F.col("clip_id").alias("new_id"),
-                             F.col("minhash_sig").alias("n_mh"))
-    similar_text = (
-        cand.join(old_sigs, "old_id")
-        .join(new_mh, "new_id")
-        .filter(sig_agreement_col(F.col("n_mh"), F.col("s_mh")) >= cfg.jaccard_threshold)
-        .select("new_id", F.col("old_id").alias("matched_id"),
-                F.lit("similar_text").alias("match_kind"))
-        .distinct()
-    )
-
-    return (
-        exact.unionByName(similar_audio)
-        .unionByName(similar_text)
-        .filter(F.col("new_id") != F.col("matched_id"))
-    )
+    """One micro-batch's alerts: ``new_sigs`` against the persisted
+    ``state`` (None on the bootstrap batch = initialScan, T3), plus
+    duplicates within the batch, where the later clip_id is the victim
+    (arrival order → stable id order, SURVEY §4 determinism note)."""
+    alerts = match_new_against_state(
+        new_sigs, new_sigs.select(*SIG_COLS), cfg
+    ).filter(F.col("new_id") > F.col("matched_id"))
+    if state is not None:
+        alerts = match_new_against_state(new_sigs, state, cfg).unionByName(alerts)
+    return alerts.distinct()
 
 
 def process_new_snapshots(
@@ -348,24 +196,22 @@ def process_new_snapshots(
     from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
 
     state_dir = Path(state_dir)
+    sig_table = state_dir / "signatures"
     ckpt = read_checkpoint(state_dir)
     # persisted signatures are only comparable to signatures produced by the
     # SAME kernel version (borderline envelope bits flip across numeric
     # changes, e.g. the float64→float32 decode switch). A checkpoint without
     # the marker predates versioning = version 1 — and that default applies
     # whenever ANY state artifact exists on disk, not just when the
-    # checkpoint file says a snapshot was processed: a crash between
-    # _append_state_indexes and _write_checkpoint leaves signature state
-    # without a checkpoint, and inferring "fresh state = current version"
-    # there would silently defeat the guard (round-3 advice).
+    # checkpoint file says a snapshot was processed: a crash between the
+    # signatures append (the first state write of a batch) and
+    # _write_checkpoint leaves signature state without a checkpoint, and
+    # inferring "fresh state = current version" there would silently defeat
+    # the guard (round-3 advice).
     if "sig_kernel_version" in ckpt:
         state_ver = ckpt["sig_kernel_version"]
     else:
-        state_artifacts = any(
-            (state_dir / d).exists()
-            for d in ("signatures", "sig_idx", "sim_bands", "mh_bands", "digests")
-        )
-        state_ver = 1 if state_artifacts else SIG_KERNEL_VERSION
+        state_ver = 1 if sig_table.exists() else SIG_KERNEL_VERSION
     if state_ver != SIG_KERNEL_VERSION:
         raise ValueError(
             f"watch state at {state_dir} was built with signature kernel "
@@ -380,7 +226,7 @@ def process_new_snapshots(
         spark, source_table, ckpt["last_source_snapshot"]
     )
     if new_rows is None:
-        return {"new_rows": 0, "alerts": 0, "batch": ckpt["batches"],
+        return {"new_rows": 0, "alerts": 0, "actions": 0, "batch": ckpt["batches"],
                 "last_source_snapshot": ckpt["last_source_snapshot"]}
 
     # F6: re-apply the batch filters to new arrivals (ref main.go:1683-1704
@@ -389,28 +235,14 @@ def process_new_snapshots(
 
     new_rows = apply_prefilters(new_rows, cfg)
     new_sigs = compute_signatures(new_rows, cfg).persist()
-    sig_table = state_dir / "signatures"
 
-    have_state = (sig_table / "_snapshots.json").exists()
-    if not have_state:
-        alerts_vs_state = None  # bootstrap batch = initialScan (T3)
-    elif cfg.watch_pruned_state and (state_dir / "sig_idx").exists():
-        # scale path: bucket-pruned index reads (batch cost ∝ batch size)
-        alerts_vs_state = _match_new_pruned(spark, new_sigs, state_dir, cfg)
-    else:
-        # fallback: full state scan (pre-index states / pruned mode off)
-        state = snap.read_table(spark, sig_table)
-        alerts_vs_state = _match_new_against_state(new_sigs, state, cfg)
-
-    # within-batch duplicates: later clip_id is the victim (arrival order →
-    # stable id order, SURVEY §4 determinism note)
-    earlier = new_sigs.select(*[F.col(c).alias(c) for c in SIG_COLS])
-    within = _match_new_against_state(
-        new_sigs, earlier, cfg
-    ).filter(F.col("new_id") > F.col("matched_id"))
-
-    alerts = within if alerts_vs_state is None else alerts_vs_state.unionByName(within)
-    alerts = alerts.distinct().persist()
+    # the whole signatures table is the state side of every join: each row
+    # has 16 band keys per family, so a 10-row commit already hashes into
+    # ~92% of a 64-bucket band index, whose read is then larger than this
+    # scan (README scale notes)
+    state = (snap.read_table(spark, sig_table)
+             if (sig_table / "_snapshots.json").exists() else None)
+    alerts = batch_alerts(new_sigs, state, cfg).persist()
     n_alerts = alerts.count()
     n_new = new_sigs.count()
     batch_id = ckpt["batches"]
@@ -425,9 +257,6 @@ def process_new_snapshots(
     )
     if not already:
         snap.append_snapshot(new_sigs, sig_table, source_snapshot=latest)
-    if cfg.watch_pruned_state:
-        # per-batch overwrite dirs — replay rewrites identical slices
-        _append_state_indexes(new_sigs, state_dir, cfg, batch_id)
     if n_alerts:
         alerts.withColumn("batch", F.lit(batch_id)).write.mode("overwrite").parquet(
             str(state_dir / "alerts" / f"batch={batch_id}")

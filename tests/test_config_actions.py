@@ -63,6 +63,9 @@ def test_from_profile_precedence(tmp_path):
         "min_size": 2048,
         "sim_algo": "phash",
         "unknown_key_is_ignored": True,
+        # fields of older profiles that DedupConfig no longer has
+        "watch_pruned_state": False,
+        "state_buckets": 32,
     }))
     cfg = DedupConfig.from_profile(p)
     assert cfg.min_size == 2048          # from profile

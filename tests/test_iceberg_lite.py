@@ -303,6 +303,7 @@ def test_watch_over_iceberg_source(spark, tmp_path):
     # noop batch: checkpoint resumes from the Iceberg snapshot id
     s2 = process_new_snapshots(spark, src, state, cfg)
     assert s2["new_rows"] == 0 and s2["last_source_snapshot"] == 1
+    assert s2["actions"] == 0
 
 
 def test_reappend_carries_forward_prev_manifest_counts(spark, tmp_path):

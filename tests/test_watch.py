@@ -58,7 +58,7 @@ def test_bootstrap_then_exact_match(spark, watch_env):
 
     # idempotent no-op when nothing new
     s_noop = process_new_snapshots(spark, env["src"], env["state"], cfg)
-    assert s_noop["new_rows"] == 0
+    assert s_noop["new_rows"] == 0 and s_noop["actions"] == 0
 
     # new arrival byte-identical to clip_a → exact alert, new id is victim
     batch1 = spark.createDataFrame(
@@ -231,52 +231,33 @@ def test_watch_empty_transcripts_never_text_match(spark, watch_env):
         )
 
 
-def test_pruned_state_matches_full_scan(spark, watch_env, tmp_path):
-    """T4 scale path: the bucket-pruned index matcher must produce exactly
-    the alerts of the full-state-scan matcher, and its state reads must be
-    partition-pruned (batch cost ∝ batch size, not state size)."""
+def test_watch_state_is_signatures_table_only(spark, watch_env):
+    """Every commit matches against the `signatures` snapshot table itself:
+    after bootstrap + 2 auto-clean commits the state dir holds only the
+    checkpoint, that table and the per-batch alerts/actions — no
+    hash-bucket-partitioned index directories."""
+    cfg = DedupConfig(watch_auto_clean=True)
     env = watch_env
+    process_new_snapshots(spark, env["src"], env["state"], cfg)
     g = 10 ** (2.0 / 20.0)
-    batch = [
-        _row("clip_c", env["base"], 16000,
-             "the quick brown fox jumps over the lazy dog today"),          # exact dup
-        _row("clip_d", np.clip(env["base"] * g, -1, 1), 16000,
-             "the quick brown fox jumps over the lazy dog today"),          # near dup
-        _row("clip_e", env["third"], 16000, "entirely novel content here"),  # unique
+    commits = [
+        [_row("clip_c", env["base"], 16000,
+              "the quick brown fox jumps over the lazy dog today")],       # exact dup
+        [_row("clip_d", np.clip(env["base"] * g, -1, 1), 16000,
+              "the quick brown fox jumps over the lazy dog today"),        # near dup
+         _row("clip_e", env["third"], 16000, "entirely novel content here")],
     ]
+    for rows in commits:
+        snap.append_snapshot(spark.createDataFrame(rows, CLIP_SCHEMA), env["src"])
+        s = process_new_snapshots(spark, env["src"], env["state"], cfg)
+        assert s["alerts"] >= 1 and s["actions"] == 1
 
-    results = {}
-    for mode in (True, False):
-        cfg = DedupConfig(watch_pruned_state=mode)
-        state = tmp_path / f"state_{mode}"
-        process_new_snapshots(spark, env["src"], state, cfg)
-        src2 = tmp_path / f"src_{mode}"
-        # same source content, separate table so each mode consumes it once
-        import shutil
-
-        shutil.copytree(env["src"], src2)
-        snap.append_snapshot(spark.createDataFrame(batch, CLIP_SCHEMA), src2)
-        # re-point checkpoint at the copied source by re-running bootstrap-free
-        s = process_new_snapshots(spark, src2, state, cfg)
-        alerts = spark.read.parquet(str(state / "alerts")).toPandas()
-        results[mode] = set(
-            map(tuple, alerts[["new_id", "matched_id", "match_kind"]].values)
-        )
-    assert results[True] == results[False]
-    assert ("clip_c", "clip_a", "exact") in results[True]
-
-    # pruned mode: the state band read must carry a partition filter on pbkt
-    from file_deduplicator_spark.config import DedupConfig as DC
-    from file_deduplicator_spark.streaming.watch import _match_new_pruned, compute_signatures
-
-    cfg = DC()
-    new_sigs = compute_signatures(
-        spark.createDataFrame([batch[0]], CLIP_SCHEMA), cfg
-    )
-    plan = _match_new_pruned(
-        spark, new_sigs, tmp_path / "state_True", cfg
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "pbkt" in plan and "PartitionFilters" in plan
+    state = env["state"]
+    assert {p.name for p in state.iterdir()} == {
+        "_checkpoint.json", "signatures", "alerts", "actions"}
+    paths = [str(p.relative_to(state)) for p in state.rglob("*")]
+    assert not [p for p in paths
+                if any(k in p for k in ("pbkt=", "dbkt=", "sbkt="))]
 
 
 def test_snapshot_table_roundtrip(spark, tmp_path):
@@ -344,8 +325,8 @@ def test_watch_image_arrival_matches_persisted_image_state(spark, tmp_path):
 
 def test_watch_kernel_guard_defaults_v1_when_state_without_checkpoint(spark, tmp_path):
     """Round-3 advice: signature state on disk WITHOUT a checkpoint marker
-    (crash between index append and checkpoint write) must be treated as
-    kernel v1, not current — the guard must trip."""
+    (crash between the signatures append and the checkpoint write) must be
+    treated as kernel v1, not current — the guard must trip."""
     from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
 
     src = tmp_path / "src_table"
