@@ -83,16 +83,12 @@ class DedupConfig:
     bucket_cap: int = 256            # max rows considered per LSH bucket
     salt_buckets: int = 16           # salted repartition fan-out for hot keys
     cc_max_iters: int = 30           # connected-components fixpoint bound
-    shuffle_partitions: int = 32
 
     # --- watch mode (ref -watch-auto-clean main.go:156, handleAutoClean
     #     main.go:1952-1984: the new arrival is the victim) ---
     watch_auto_clean: bool = False
     watch_clean_action: str = "remove"   # remove | move
     watch_move_to: str = "_quarantine"   # -move-to analog for watch actions
-
-    # --- safety (ref -dry-run main.go:127) ---
-    dry_run: bool = True             # emit action plan only; never mutate
 
     @staticmethod
     def from_profile(path: str | Path, **overrides) -> "DedupConfig":

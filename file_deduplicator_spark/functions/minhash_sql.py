@@ -217,8 +217,3 @@ def simhash_bands_col(
             out.append(F.struct(F.lit(table).alias("band"), key.alias("bh")))
             table += 1
     return F.array(*out)
-
-
-def hamming64_col(a: Column, b: Column) -> Column:
-    """bit_count(a XOR b) — packed-int64 Hamming (perceptual.go:385-397)."""
-    return F.bit_count(a.bitwiseXOR(b))

@@ -26,10 +26,6 @@ import struct
 _OGG_MAGIC = b"OggS"
 
 
-def is_ogg(buf) -> bool:
-    return len(buf) >= 4 and bytes(buf[:4]) == _OGG_MAGIC
-
-
 def ogg_page_headers(buf):
     """Yield (granulepos, serial, header_type, payload_off, payload_len)
     per page, reading ONLY the 27-byte header + segment table of each."""

@@ -15,7 +15,6 @@ fingerprints — the text-analysis operators a training-data pipeline needs
 from __future__ import annotations
 
 import hashlib
-import math
 import re
 
 import numpy as np
@@ -101,60 +100,12 @@ def simhash_text(text: str, hash_fn) -> int:
 # Text-analysis kernels (oracle forms; Column versions in operators/textops.py)
 # ---------------------------------------------------------------------------
 
-_STOPWORDS = frozenset(
-    "the a an and or of to in is it that for on with as was are be this by "
-    "at from not have has but they you we his her its their".split()
-)
-
 # BPE-ish token regex: words, numbers, or single non-space symbols.
 TOKEN_RE = re.compile(r"\w+|[^\w\s]")
 
 
 def token_count(text: str) -> int:
     return len(TOKEN_RE.findall(text))
-
-
-def quality_score(text: str) -> float:
-    """Heuristic doc-quality in [0,1]: length, alpha ratio, stopword ratio,
-    punctuation density — the usual pretraining-corpus filters."""
-    n = len(text)
-    if n == 0:
-        return 0.0
-    words = text.lower().split()
-    n_words = len(words)
-    alpha = sum(c.isalpha() for c in text) / n
-    punct = sum(not c.isalnum() and not c.isspace() for c in text) / n
-    stop = (sum(w in _STOPWORDS for w in words) / n_words) if n_words else 0.0
-    length_term = min(n_words / 20.0, 1.0)
-    score = 0.35 * length_term + 0.3 * alpha + 0.2 * min(stop * 4, 1.0) + 0.15 * (1 - min(punct * 5, 1.0))
-    return max(0.0, min(1.0, score))
-
-
-def rolling_fingerprint(text: str, window: int = 16, mod: int = 8) -> list[int]:
-    """Winnowing-style document fingerprint: Karp-Rabin rolling hash over
-    characters, keep hashes ≡ 0 (mod ``mod``) — a sparse, position-robust
-    fingerprint set for containment/overlap detection."""
-    if len(text) < window:
-        return [abs(hash_bytes_stable(text.encode("utf-8")))] if text else []
-    base, m = 257, MERSENNE_61
-    h = 0
-    pw = pow(base, window - 1, m)
-    out = []
-    data = text.encode("utf-8", errors="replace")
-    for i, c in enumerate(data):
-        if i >= window:
-            h = (h - data[i - window] * pw) % m
-        h = (h * base + c) % m
-        if i >= window - 1 and h % mod == 0:
-            out.append(h)
-    return out
-
-
-def hash_bytes_stable(data: bytes) -> int:
-    """Stable (non-salted) 63-bit hash for fingerprints/tests."""
-    import hashlib
-
-    return int.from_bytes(hashlib.blake2b(data, digest_size=8).digest(), "big") >> 1
 
 
 def shingle_base31(text: str, k: int) -> np.ndarray:

@@ -53,12 +53,19 @@ def label_keepers(
     size_col: str = "size",
     path_col: str | None = None,
 ) -> DataFrame:
-    """Add ``rn``, ``action`` ('KEEP' rank 1, else 'DELETE' — main.go:948-954)."""
+    """Add ``group_count`` (cluster size), ``rn`` and ``action`` ('KEEP'
+    rank 1, else 'DELETE' — main.go:948-954).
+
+    The count shares the rank's partition and order spec (with an unbounded
+    frame), so both evaluate in one Window operator over one sort."""
     keys = keeper_order_keys(
         criteria, id_col=id_col, mtime_col=mtime_col, size_col=size_col,
         path_col=path_col or id_col,
     )
     w = Window.partitionBy(cluster_col).orderBy(*keys)
-    return clustered.withColumn("rn", F.row_number().over(w)).withColumn(
-        "action", F.when(F.col("rn") == 1, F.lit("KEEP")).otherwise(F.lit("DELETE"))
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return (
+        clustered.withColumn("group_count", F.count(F.lit(1)).over(w_all))
+        .withColumn("rn", F.row_number().over(w))
+        .withColumn("action", F.when(F.col("rn") == 1, F.lit("KEEP")).otherwise(F.lit("DELETE")))
     )

@@ -85,10 +85,6 @@ def decode_image(data: bytes, allow_fake: bool = False) -> np.ndarray:
     return rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
 
 
-# backward-compat alias (round-1/2 name; image decode is no longer a stub)
-decode_image_stub = decode_image
-
-
 def sample_video_frames(
     data: bytes, n_frames: int = 4, allow_fake: bool = False
 ) -> list[np.ndarray]:
@@ -131,10 +127,6 @@ def sample_video_frames(
                 "for the deterministic test fake"
             )
     return [decode_image(data + bytes([i]), allow_fake=True) for i in range(n_frames)]
-
-
-# backward-compat alias (round-1/2 name; PNM-stream video is no longer a stub)
-sample_video_frames_stub = sample_video_frames
 
 
 def resize_gray(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:

@@ -11,7 +11,7 @@ Reference:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -73,15 +73,14 @@ def action_plan(labeled: DataFrame, id_col: str = "clip_id") -> DataFrame:
 
     Side effects (Iceberg ``DELETE FROM`` / ``MERGE INTO``) are a separate,
     explicitly-invoked step — parity with -dry-run (main.go:127) and the
-    TUI confirmation flow (tui/tui.go:362-366)."""
-    keepers = (
-        labeled.filter(F.col("action") == "KEEP")
-        .select(F.col("cluster_id").alias("_kc"), F.col(id_col).alias("keeper_id"))
-    )
+    TUI confirmation flow (tui/tui.go:362-366).
+
+    ``labeled`` needs ``rn`` and ``action`` (keeper.label_keepers); the
+    keeper is the cluster's rank-1 row, taken by a window, not a join."""
+    keeper = F.min_by(F.col(id_col), F.col("rn")).over(Window.partitionBy("cluster_id"))
     return (
-        labeled.filter(F.col("action") == "DELETE")
-        .join(keepers, F.col("cluster_id") == F.col("_kc"), "left")
-        .drop("_kc")
+        labeled.withColumn("keeper_id", keeper)
+        .filter(F.col("action") == "DELETE")
         .select(id_col, "cluster_id", "size", "keeper_id",
                 F.lit("remove").alias("planned_action"))
     )

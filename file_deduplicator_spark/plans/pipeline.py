@@ -29,7 +29,8 @@ from file_deduplicator_spark.config import DedupConfig
 from file_deduplicator_spark.functions.minhash_sql import minhash_bands_col, simhash_bands_col
 from file_deduplicator_spark.functions.udfs import signatures_map_in_arrow
 from file_deduplicator_spark.operators.components import attach_clusters, connected_components
-from file_deduplicator_spark.operators.exact import codec_filter, size_filter, with_digest
+from file_deduplicator_spark.operators.exact import codec_filter, with_digest
+from file_deduplicator_spark.operators.keeper import label_keepers
 from file_deduplicator_spark.operators.lsh import (
     band_table,
     bucket_pairs,
@@ -72,28 +73,17 @@ def with_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 def exact_edges(sigs: DataFrame, id_col: str = "clip_id") -> DataFrame:
     """Star edges digest-min-id → member (linear, not quadratic, per group).
-    Reuses a precomputed ``digest_root`` column when present."""
-    if "digest_root" in sigs.columns:
-        rooted = sigs.withColumn("_root", F.col("digest_root"))
-    else:
-        from pyspark.sql import Window
-
-        rooted = sigs.withColumn("_root", F.min(id_col).over(Window.partitionBy("digest")))
+    Reads the ``digest_root`` column that dedup_pipeline adds."""
     return (
-        rooted.filter(F.col("_root") != F.col(id_col))
-        .select(F.col("_root").alias("id_a"), F.col(id_col).alias("id_b"))
+        sigs.filter(F.col("digest_root") != F.col(id_col))
+        .select(F.col("digest_root").alias("id_a"), F.col(id_col).alias("id_b"))
     )
 
 
 def digest_representatives(sigs: DataFrame, id_col: str = "clip_id") -> DataFrame:
     """One row per digest (min id) — the exact-dup quarantine before LSH.
-    Reuses a precomputed ``digest_root`` column when present."""
-    if "digest_root" in sigs.columns:
-        return sigs.filter(F.col(id_col) == F.col("digest_root"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("digest").orderBy(id_col)
-    return sigs.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+    Reads the ``digest_root`` column that dedup_pipeline adds."""
+    return sigs.filter(F.col(id_col) == F.col("digest_root"))
 
 
 def near_dup_edges(
@@ -126,6 +116,7 @@ def near_dup_edges(
     the text band table (degenerate all-EMPTY_SLOT signatures must not
     match each other).
 
+    ``sigs`` must carry the ``digest_root`` column dedup_pipeline adds.
     ``observation`` / ``text_observation``: optional pyspark Observations
     for the audio / text bucket-skew metrics (each rides the first action).
     """
@@ -238,11 +229,9 @@ def near_dup_edges(
     verified = parts[0]
     for extra in parts[1:]:
         verified = verified.union(extra)
-    # NOTE: a pair verified by BOTH modalities appears twice here; every
-    # consumer applies its own single .distinct() (cc_edges and all_edges in
-    # dedup_pipeline) — deduping here too would shuffle the same edge list
-    # twice (measured as a 4-core pipeline regression when this function
-    # distinct'd before the cc_edges distinct).
+    # NOTE: a pair verified by BOTH modalities appears twice here.
+    # dedup_pipeline applies the one .distinct() and persists the result,
+    # which both CC and the pairs sink read.
     return verified if sig_star is None else sig_star.union(verified)
 
 
@@ -254,8 +243,10 @@ def dedup_pipeline(
     precomputed_sigs: DataFrame | None = None,
 ) -> dict:
     """Run the full pipeline; returns dict of DataFrames + metrics:
-    ``clustered`` (every input row + cluster_id + action), ``pairs`` (edge
-    list), ``report`` (1 row), ``plan`` (action plan), ``cc_metrics``.
+    ``clustered`` (every input row + cluster_id), ``labeled`` (rows of
+    duplicate clusters + group_count/rn/action), ``pairs`` (edge list),
+    ``report`` (1 row), ``clusters`` (per-cluster rollup), ``plan`` (action
+    plan), ``cc_metrics``.
 
     ``precomputed_sigs`` is the resume seam (north rule: "resumable from
     checkpoint with per-partition lineage"): a frame with the
@@ -294,8 +285,12 @@ def dedup_pipeline(
     lsh_obs = Observation("lsh_buckets")
     lsh_text_obs = Observation("lsh_text_buckets")
     caches: list = [sigs]
+    # persisted once: CC and the pairs sink both read it. The Distinct on
+    # top matters — Dataset.union flattens nested unions, so a bare union
+    # frame would never match the cache once a consumer unions it again.
     e_near = near_dup_edges(sigs, cfg, id_col, observation=lsh_obs, caches=caches,
-                            text_observation=lsh_text_obs)
+                            text_observation=lsh_text_obs).distinct().persist()
+    caches.append(e_near)
     cc_edges = e_near
     if extra_edges is not None:
         # containment/extra edges arrive at row granularity — lift to roots
@@ -310,45 +305,26 @@ def dedup_pipeline(
             .select(F.col("root_a").alias("id_a"), F.col("root_b").alias("id_b"))
         )
         cc_edges = cc_edges.union(lifted)
-    cc_edges = cc_edges.distinct()
 
+    # connected_components dedups its input edges itself
     labels, cc_metrics = connected_components(cc_edges, cfg.cc_max_iters)
     # rows inherit the label of their digest root; roots without near-dup
     # edges keep digest_root as the cluster id
-    lab = labels.select(F.col("id").alias("digest_root"), F.col("cluster_id").alias("_cc"))
-    clustered = (
-        sigs.join(lab, "digest_root", "left")
-        .withColumn("cluster_id", F.coalesce(F.col("_cc"), F.col("digest_root")))
-        .drop("_cc")
-    )
-    # distinct: near-dup edges can repeat across modalities (see
-    # near_dup_edges note); 'pairs' is a user-facing edge list and must not
-    # double-count (round-3 advice item)
+    clustered = attach_clusters(sigs, labels, "digest_root")
+    # 'pairs' is a user-facing edge list and must not double-count
     all_edges = exact_edges(sigs, id_col).union(e_near).distinct()
 
-    from pyspark.sql import Window
-
-    from file_deduplicator_spark.operators.keeper import keeper_order_keys
-
-    # ONE window pass for group_count + keeper rank (r06, guide §2.4): the
-    # count and the row_number share (partition, order) specs, so both
-    # evaluate in a single Window operator over one sort — the old
-    # count-window → filter → label_keepers chain sorted the clustered
-    # table twice. Equivalent by construction: the filter drops WHOLE
-    # clusters (group_count is per-cluster), so ranking before or after
-    # the filter yields identical rn within every surviving cluster.
-    keys = keeper_order_keys(cfg.keep_criteria, id_col=id_col)
-    w_ord = Window.partitionBy("cluster_id").orderBy(*keys)
-    w_cnt = w_ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    # the one keeper window (group_count, rn, action). The filter drops
+    # WHOLE clusters, so ranking before it gives the same rn in every
+    # surviving cluster. Persisted slim: clusters, report and plan all
+    # read this frame instead of re-running the window.
     labeled = (
-        clustered.withColumn("group_count", F.count(F.lit(1)).over(w_cnt))
-        .withColumn("rn", F.row_number().over(w_ord))
+        label_keepers(clustered, cfg.keep_criteria, id_col=id_col)
         .filter(F.col("group_count") > 1)
-        .withColumn(
-            "action",
-            F.when(F.col("rn") == 1, F.lit("KEEP")).otherwise(F.lit("DELETE")),
-        )
+        .select(id_col, "cluster_id", "digest", "size", "group_count", "rn", "action")
+        .persist()
     )
+    caches.append(labeled)
 
     return {
         "signatures": sigs,

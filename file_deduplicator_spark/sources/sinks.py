@@ -2,11 +2,9 @@
 
 Reference analogs:
 * exportReport  (main.go:1325-1355)  → ``write_report_json``
-* outputJSON    (main.go:1358-1389)  → ``report_as_json_rows``
-* exportCSV     (dead call, main.go:493-498) → ``write_report_csv`` (we
-  implement what the reference declared but never defined)
-* saveUndoLog / undoLast (main.go:1246-1323) → append-only ``actions`` table
-  + ``read_last_actions`` (ORDER BY ordinal DESC LIMIT 10)
+* saveUndoLog / undoLast (main.go:1246-1323) → append-only ``actions``
+  table; undoLast's display (main.go:1305-1308) is the oracle-gated
+  ``undo_last10`` query in ``__spark_entry__``
 * Statistics    (main.go:46-59, 1507-1565)   → ``append_metrics``
 
 All sinks append (never mutate) — the per-partition lineage / resumability
@@ -34,15 +32,6 @@ def write_report_json(report: DataFrame, out_path: str | Path, version: str = "0
     return doc
 
 
-def write_report_csv(df: DataFrame, out_dir: str | Path) -> None:
-    df.coalesce(1).write.mode("overwrite").csv(str(out_dir), header=True)
-
-
-def report_as_json_rows(df: DataFrame) -> list[str]:
-    """stdout-JSON integration path (main.go:1358-1389) — small frames only."""
-    return df.toJSON().collect()
-
-
 def append_actions(
     plan: DataFrame, actions_dir: str | Path, run_id: int, snapshot_id: int | None = None
 ) -> None:
@@ -53,12 +42,6 @@ def append_actions(
         .withColumn("snapshot_id", F.lit(snapshot_id).cast("long"))
     )
     out.write.mode("append").parquet(str(actions_dir))
-
-
-def read_last_actions(spark: SparkSession, actions_dir: str | Path, n: int = 10) -> DataFrame:
-    """undoLast display semantics: most recent n entries (main.go:1305-1308)."""
-    df = spark.read.parquet(str(actions_dir))
-    return df.orderBy(F.desc("run_id"), F.asc("clip_id")).limit(n)
 
 
 def append_metrics(

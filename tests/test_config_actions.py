@@ -66,6 +66,8 @@ def test_from_profile_precedence(tmp_path):
         # fields of older profiles that DedupConfig no longer has
         "watch_pruned_state": False,
         "state_buckets": 32,
+        "dry_run": True,
+        "shuffle_partitions": 32,
     }))
     cfg = DedupConfig.from_profile(p)
     assert cfg.min_size == 2048          # from profile

@@ -13,7 +13,7 @@ from file_deduplicator_spark.operators.multimodal import (
     extract_media_features,
     image_near_dup_pairs,
     resize_gray,
-    sample_video_frames_stub,
+    sample_video_frames,
 )
 
 
@@ -30,7 +30,7 @@ def test_stub_gating():
     with pytest.raises(NotImplementedError):
         decode_image(b"\x89PNG....")
     with pytest.raises(NotImplementedError):
-        sample_video_frames_stub(b"....ftypmp4")
+        sample_video_frames(b"....ftypmp4")
     img = decode_image(b"\x89PNG....", allow_fake=True)
     assert img.ndim == 3 and img.shape[2] == 3
     # deterministic

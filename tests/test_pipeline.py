@@ -78,6 +78,36 @@ def test_report_and_plan_consistency(spark, clips_df):
     # every victim row's keeper is in its own cluster
     bad = plan.filter(F.col("keeper_id").isNull()).count()
     assert bad == 0
+    # the keeper_id window picks exactly the cluster's KEEP row, and the
+    # plan holds exactly the DELETE rows
+    keep_of = {r.cluster_id: r.clip_id
+               for r in labeled.filter("action='KEEP'").select("cluster_id", "clip_id").collect()}
+    for r in plan.select("cluster_id", "keeper_id").collect():
+        assert r.keeper_id == keep_of[r.cluster_id], r
+    deletes = {r.clip_id for r in labeled.filter("action='DELETE'").select("clip_id").collect()}
+    assert victims == deletes
+
+
+def test_release_pipeline_frees_every_cache(spark, clips_df):
+    """The sinks read the pipeline's persisted frames (signatures, band
+    tables, near-dup edges, labeled); release_pipeline frees all of them."""
+    from file_deduplicator_spark.plans.pipeline import release_pipeline
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    # a plan no other test caches: persist() of a plan another test left
+    # cached would share that test's entry instead of adding its own
+    clips = clips_df.filter(F.col("clip_id") != "")
+    clips_df.count()  # the session fixture's own cache is not ours to count
+    before = persisted()
+    result = dedup_pipeline(clips, CFG)
+    result["report"].collect()
+    result["pairs"].count()
+    result["plan"].count()
+    assert persisted() > before
+    release_pipeline(result)
+    assert persisted() == before
 
 
 def test_run_metrics_roundtrip(spark, clips_df, tmp_path):
@@ -120,12 +150,17 @@ def test_perceptual_off_skips_decode_and_keeps_text_pairs(spark, clips_df):
     """perceptual=False runs the same Arrow signature stage without the
     decode: sim_sig is null on every row, digest and minhash_sig match the
     perceptual run, and near_dup_edges still returns the text pairs."""
+    from pyspark.sql import Window
+
     from file_deduplicator_spark.plans.pipeline import near_dup_edges, with_signatures
+
+    def rooted(sigs):  # the digest_root column dedup_pipeline adds
+        return sigs.withColumn("digest_root", F.min("clip_id").over(Window.partitionBy("digest")))
 
     off_cfg = DedupConfig(perceptual=False)
     cols = ["clip_id", "digest", "minhash_sig"]
-    on = with_signatures(clips_df, DedupConfig())
-    off = with_signatures(clips_df, off_cfg).persist()
+    on = rooted(with_signatures(clips_df, DedupConfig()))
+    off = rooted(with_signatures(clips_df, off_cfg)).persist()
     try:
         assert "bytes" not in off.columns
         assert off.filter(F.col("sim_sig").isNotNull()).count() == 0
