@@ -402,15 +402,18 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_shingles,
         portable_words_col,
     )
-    from file_deduplicator_spark.operators.containment import winnowed_fingerprints_col
+    from file_deduplicator_spark.functions.text import SHINGLE_K
+    from file_deduplicator_spark.operators.containment import (
+        WINNOW_WINDOW,
+        winnowed_fingerprints_col,
+    )
 
-    window = 6  # containment_min_words=8, shingle_k=3 (config defaults)
     docs = _docs(spark, sf_dir).filter(F.length(F.trim(F.col("text"))) > 0)
     base = (
         docs.select(F.col("doc_id"), portable_words_col(F.col("text")).alias("_ws"))
-        .select("doc_id", portable_shingles(F.col("_ws"), 3).alias("_sh"))
+        .select("doc_id", portable_shingles(F.col("_ws"), SHINGLE_K).alias("_sh"))
         .select("doc_id", F.transform(F.col("_sh"), lambda s: h31_col(s)).alias("_h"))
-        .select("doc_id", winnowed_fingerprints_col(F.col("_h"), window).alias("fps"))
+        .select("doc_id", winnowed_fingerprints_col(F.col("_h"), WINNOW_WINDOW).alias("fps"))
     )
     return base.select(
         F.col("doc_id").cast("long").alias("doc_id"),

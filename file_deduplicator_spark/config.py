@@ -52,32 +52,11 @@ class DedupConfig:
     # --- keeper selection (ref main.go:967-1021) ---
     keep_criteria: str = "first"     # oldest|newest|largest|smallest|path:<s>|first
 
-    # --- MinHash / LSH over transcripts (new; north_star requirement) ---
-    num_perm: int = 64               # MinHash signature length
-    shingle_k: int = 3               # words per shingle
-    minhash_bands: int = 16          # b*r must equal num_perm
-    minhash_rows: int = 4
+    # --- MinHash verify over transcripts (new; north_star requirement).
+    #     The signature format and band layout are constants, not knobs:
+    #     functions/text.py (NUM_PERM, SHINGLE_K, MINHASH_SEED) and
+    #     functions/minhash_sql.py (MinHash bands, SimHash tables) ---
     jaccard_threshold: float = 0.5   # verify-stage threshold
-    minhash_seed: int = 42           # deterministic permutations
-
-    # --- SimHash LSH (new) ---
-    # Block-subset tables (Manku WWW'07): 24-bit keys. design='partition'
-    # (two halves × C(4,3) = 8 tables/rotation) GUARANTEES candidates at
-    # Hamming <= 3 with 7x fewer band rows than design='combinations'
-    # (C(8,3)=56 tables, Hamming <= 5) — the candidate stage is the pipeline
-    # cost driver, and planted near-dups measure d <= 3. A second rotation
-    # adds probabilistic recall above the guarantee; pairs beyond it are
-    # also caught by the fused text-MinHash verify. See
-    # minhash_sql.simhash_bands_col for the measured key-width tradeoff.
-    simhash_bands: int = 8           # number of 8-bit blocks
-    simhash_key_blocks: int = 3      # blocks concatenated per table key
-    simhash_design: str = "partition"   # partition | combinations
-    simhash_rotations: tuple[int, ...] = (0, 7)
-
-    # --- containment (suffix-array substring; north_star) ---
-    # candidate generation uses winnowing (window derived from min_words and
-    # shingle_k — operators/containment.py), so no sampling knob exists
-    containment_min_words: int = 8   # min overlap to emit a containment edge
 
     # --- scale / skew (north_star skew clause) ---
     bucket_cap: int = 256            # max rows considered per LSH bucket

@@ -4,10 +4,13 @@ the JVM-side steps between the Arrow signature stage and the pair list.
 The signatures themselves come from ``udfs.signatures_map_in_arrow``
 (numpy kernels in ``functions/text.py``); everything here reads the
 resulting ``minhash_sig`` / ``sim_sig`` columns: MinHash band keys, the
-in-bucket nibble fold and its mismatch count, slot agreement, SimHash
-block-subset band keys and Hamming distance. The word/shingle builders
-(``words_col``, ``shingles_from_words``) serve the text operators
+in-bucket nibble fold and its mismatch count, slot agreement and SimHash
+block-subset band keys. The word/shingle helpers (``words_col``,
+``shingles_from_words``) serve the text operators
 (``operators/textops.py``, ``operators/containment.py``).
+
+The band layout is the constants below, not a setting: batch, watch and
+image matching all band with them, so stored signatures stay comparable.
 """
 
 from __future__ import annotations
@@ -15,9 +18,21 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from file_deduplicator_spark.functions.text import MERSENNE_61
+from file_deduplicator_spark.functions.text import MERSENNE_61, NUM_PERM
 
 EMPTY_SLOT = MERSENNE_61 - 1  # signature slot value for "no shingles"
+
+MINHASH_BANDS = 16  # b
+MINHASH_ROWS = 4    # r
+FOLD_SLOTS_PER_LONG = 16  # 4 bits per slot
+assert MINHASH_BANDS * MINHASH_ROWS == NUM_PERM, "bands x rows must cover the signature"
+assert NUM_PERM % FOLD_SLOTS_PER_LONG == 0, "the in-bucket fold needs NUM_PERM % 16 == 0"
+
+# SimHash tables: 8 blocks of 8 bits, 24-bit keys of 3 blocks taken within
+# each half (simhash_table_combos), at two rotations
+SIMHASH_BLOCKS = 8
+SIMHASH_KEY_BLOCKS = 3
+SIMHASH_ROTATIONS = (0, 7)
 
 
 def words_col(text: Column) -> Column:
@@ -45,24 +60,22 @@ def shingles_from_words(ws: Column, k: int) -> Column:
     )
 
 
-def minhash_bands_col(sig: Column, bands: int, rows: int) -> Column:
+def minhash_bands_col(sig: Column) -> Column:
     """array<struct<band:int, bh:long>> — xxhash64 of each r-slot slice.
 
     LSH OR-amplification: two docs are candidates iff some band agrees on all
-    ``rows`` slots. Collision prob for Jaccard s: 1 - (1 - s^r)^b.
+    r slots. Collision prob for Jaccard s: 1 - (1 - s^r)^b.
     """
     return F.array(
         *[
             F.struct(
                 F.lit(i).alias("band"),
-                F.xxhash64(F.slice(sig, i * rows + 1, rows)).alias("bh"),
+                F.xxhash64(F.slice(sig, i * MINHASH_ROWS + 1, MINHASH_ROWS)).alias("bh"),
             )
-            for i in range(bands)
+            for i in range(MINHASH_BANDS)
         ]
     )
 
-
-FOLD_SLOTS_PER_LONG = 16  # 4 bits per slot
 
 
 def minhash_fold_col(sig: Column, num_perm: int) -> Column:
@@ -146,69 +159,53 @@ def rotate64_col(sig: Column, shift: int) -> Column:
     return F.shiftleft(sig, s).bitwiseOR(F.shiftrightunsigned(sig, 64 - s))
 
 
-def simhash_table_combos(n_blocks: int, key_blocks: int, design: str) -> list[tuple[int, ...]]:
-    """The block-index tuples keyed per table.
+def simhash_table_combos(n_blocks: int, key_blocks: int) -> list[tuple[int, ...]]:
+    """The block-index tuples keyed per table: split the blocks into two
+    halves and key every key_blocks-subset WITHIN each half — 2·C(4,3) = 8
+    tables for the (8, 3) shape.
 
-    design='combinations': all C(n_blocks, key_blocks) tuples (Manku WWW'07)
-      — guarantee d ≤ n_blocks − key_blocks, table count C(8,3) = 56.
-    design='partition': split the blocks into two halves and key all
-      key_blocks-subsets WITHIN each half — 2·C(4,3) = 8 tables for the
-      default shape. Pigeonhole: d ≤ n_blocks/2 − key_blocks + ... precisely,
-      d errors leave n_blocks − d clean blocks; the clean blocks split
-      (a, b) across the halves with a + b = n_blocks − d, so max(a, b) ≥
-      ⌈(n_blocks−d)/2⌉ ≥ key_blocks whenever d ≤ n_blocks − 2·key_blocks + 1
-      — for (8, 3): guaranteed candidates at Hamming ≤ 3 from 7× fewer
-      tables than 'combinations' (which guarantees ≤ 5). Planted near-dups
-      measure d ≤ 3; pairs above the guarantee are caught probabilistically
-      (rotations) and by the fused text-MinHash path.
+    Pigeonhole: d bit errors leave n_blocks − d clean blocks; they split
+    (a, b) across the halves with a + b = n_blocks − d, so max(a, b) ≥
+    ⌈(n_blocks−d)/2⌉ ≥ key_blocks whenever d ≤ n_blocks − 2·key_blocks + 1
+    — for (8, 3): guaranteed candidates at Hamming ≤ 3 (test_minhash pins
+    it). All C(8,3) = 56 subsets (Manku et al., WWW'07) would guarantee
+    d ≤ 5 at 7× the band rows; planted near-dups measure d ≤ 3, and pairs
+    above the guarantee are caught probabilistically (rotations) and by the
+    fused text-MinHash path.
     """
     import itertools as _it
 
-    if design == "partition":
-        half = n_blocks // 2
-        g1 = range(half)
-        g2 = range(half, n_blocks)
-        return list(_it.combinations(g1, key_blocks)) + list(_it.combinations(g2, key_blocks))
-    return list(_it.combinations(range(n_blocks), key_blocks))
+    half = n_blocks // 2
+    return (list(_it.combinations(range(half), key_blocks))
+            + list(_it.combinations(range(half, n_blocks), key_blocks)))
 
 
-def simhash_bands_col(
-    sig: Column,
-    n_blocks: int,
-    rotations: tuple[int, ...],
-    key_blocks: int = 3,
-    design: str = "combinations",
-) -> Column:
+def simhash_bands_col(sig: Column) -> Column:
     """array<struct<band:int, bh:long>> — SimHash LSH tables keyed on
-    block subsets (Manku et al., WWW'07 block-permutation design; see
-    simhash_table_combos for the table-family options).
+    block subsets (simhash_table_combos), at every SIMHASH_ROTATIONS shift.
 
-    Pigeonhole GUARANTEE: d bit errors hit ≤ d of the n_blocks blocks, so
-    every pair at Hamming d within the family's bound shares at least one
-    table whose key_blocks blocks are all clean. Key-width tradeoff,
-    measured on 200k synthetic clips (real audio envelope bits are heavily
-    correlated, so narrow keys collide far above the uniform estimate):
+    Key-width tradeoff, measured on 200k synthetic clips (real audio
+    envelope bits are heavily correlated, so narrow keys collide far above
+    the uniform estimate):
 
-      key_blocks=1:  8-bit keys  → n/256 per bucket → quadratic blow-up
-      key_blocks=2: 16-bit keys, C(8,2)=28 tables, d ≤ 6 guaranteed —
-                    still 65M candidate pairs at 154k distinct sigs
-      key_blocks=3: 24-bit keys — buckets O(1); 'combinations' = 56 tables
-                    (d ≤ 5), 'partition' = 8 tables (d ≤ 3, 7× fewer band
-                    rows — the candidate stage cost driver at scale)
+      1 block:   8-bit keys  → n/256 per bucket → quadratic blow-up
+      2 blocks: 16-bit keys, C(8,2)=28 tables, d ≤ 6 guaranteed —
+                still 65M candidate pairs at 154k distinct sigs
+      3 blocks: 24-bit keys — buckets O(1); 8 tables (d ≤ 3)
 
     Extra rotations re-slice the bits for probabilistic recall above the
     guarantee; band ids are offset per rotation so buckets never mix.
     """
-    width = 64 // n_blocks
+    width = 64 // SIMHASH_BLOCKS
     mask = (1 << width) - 1
-    combos = simhash_table_combos(n_blocks, key_blocks, design)
+    combos = simhash_table_combos(SIMHASH_BLOCKS, SIMHASH_KEY_BLOCKS)
     out = []
     table = 0
-    for rot in rotations:
+    for rot in SIMHASH_ROTATIONS:
         rsig = rotate64_col(sig, rot)
         blocks = [
             F.shiftrightunsigned(rsig, i * width).bitwiseAND(F.lit(mask))
-            for i in range(n_blocks)
+            for i in range(SIMHASH_BLOCKS)
         ]
         for combo in combos:
             key = blocks[combo[0]]

@@ -4,12 +4,12 @@ The MinHash kernels here ARE the production path: the Arrow signature stage
 (``udfs.signatures_map_in_arrow``) calls ``minhash_signatures_batch`` once
 per RecordBatch, and ``minhash_signature_py`` is its per-row reference.
 Determinism: every hash here is seed-fixed — blake2b shingle base hashes,
-affine permutations from ``minhash_params(num_perm, seed)``.
+affine permutations from ``minhash_params(num_perm, seed)``. The pipeline
+runs them at the one format below (NUM_PERM, SHINGLE_K, MINHASH_SEED).
 
-Also: language-ID heuristic, quality scoring, token counting, rolling-hash
-fingerprints — the text-analysis operators a training-data pipeline needs
-(task brief), each mirrored by a Column-expression implementation in
-``operators/textops.py``.
+Also ``token_count`` and the word-token ``simhash_text``: the Python forms
+that ``operators/textops.py``'s ``token_count_col`` / ``simhash_text_col``
+are tested against.
 """
 
 from __future__ import annotations
@@ -22,6 +22,13 @@ import numpy as np
 _BLAKE2B = hashlib.blake2b
 
 MERSENNE_61 = (1 << 61) - 1
+
+# The pipeline's MinHash signature format. Recorded signature tables and
+# watch state compare signatures across runs, so changing any of these
+# changes what a stored signature means: bump audio.SIG_KERNEL_VERSION with it.
+NUM_PERM = 64      # slots per signature
+SHINGLE_K = 3      # words per shingle
+MINHASH_SEED = 42  # seed of the affine permutations (minhash_params)
 
 # Per-process scratch for the batched affine/M61 product (see
 # minhash_signatures_batch). Grows geometrically, never shrinks.

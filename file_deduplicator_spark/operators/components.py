@@ -231,7 +231,6 @@ def connected_components(
     max_iters: int = 20,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    verbose: bool = False,
     driver_threshold: int = 2_000_000,
 ) -> tuple[DataFrame, dict]:
     """Return (labels, metrics): labels = (id, cluster_id) for every node that
@@ -293,8 +292,6 @@ def connected_components(
         "mode": "distributed_two_phase",
         "edges": n_edges,
     }
-    import time as _time
-
     prev_ckpt = labels  # previous round's checkpoint — unpersisted once superseded
     for it in range(max_iters):
         # one round = neighbor propagation + pointer jump (path halving),
@@ -325,7 +322,6 @@ def connected_components(
         )
         # second pointer jump in the same round (labels are small relative to
         # the edge join — one extra cheap join halves the rounds on deep paths)
-        t_ck = _time.perf_counter()
         new_labels = _detached_checkpoint(
             stepped.join(parents, stepped["mid_lbl"] == parents["p_id"], "left")
             .select(
@@ -336,7 +332,6 @@ def connected_components(
                 "old_lbl",
             )
         )
-        t_cnt = _time.perf_counter()
         # release the superseded round's blocks immediately (see
         # _release_checkpoint for why plain unpersist doesn't)
         if prev_ckpt is not None:
@@ -349,13 +344,6 @@ def connected_components(
         changed = None
         if it % 2 == 1 or it == max_iters - 1:
             changed = new_labels.filter(F.col("new_lbl") != F.col("old_lbl")).count()
-        t_done = _time.perf_counter()
-        if verbose:
-            print(
-                f"cc round {it + 1}: changed={changed} "
-                f"ckpt={t_cnt - t_ck:.2f}s count={t_done - t_cnt:.2f}s",
-                flush=True,
-            )
         labels = new_labels.select("id", F.col("new_lbl").alias("lbl"))
         metrics["iterations"] = it + 1
         if changed is not None:

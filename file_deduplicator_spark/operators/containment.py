@@ -9,8 +9,8 @@ Candidate generation (JVM-side, winnowing — Schleimer et al., MOSS 2003):
 over the k-word shingle hash sequence, select the minimum hash of every
 ``window`` consecutive shingles. GUARANTEE: any shared contiguous run of
 ≥ window + k - 1 words shares at least one selected fingerprint, so recall
-for ≥ min_words overlaps is 1.0 at window = min_words - k + 1... we use
-window ≤ containment_min_words - shingle_k + 1.
+for ≥ CONTAINMENT_MIN_WORDS overlaps is 1.0 at WINNOW_WINDOW =
+CONTAINMENT_MIN_WORDS - SHINGLE_K + 1.
 
 Verification (Python, per container): build the suffix array of the
 container transcript ONCE, binary-search each candidate needle
@@ -26,8 +26,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
-from file_deduplicator_spark.functions.minhash_sql import words_col
+from file_deduplicator_spark.functions.minhash_sql import shingles_from_words, words_col
+from file_deduplicator_spark.functions.text import SHINGLE_K
 from file_deduplicator_spark.operators.lsh import member_pairs
+
+CONTAINMENT_MIN_WORDS = 8  # min overlap (words) to emit a containment edge
+WINNOW_WINDOW = max(2, CONTAINMENT_MIN_WORDS - SHINGLE_K + 1)
 
 
 def winnowed_fingerprints_col(hashes: Column, window: int) -> Column:
@@ -54,21 +58,18 @@ def containment_candidates(
 ) -> DataFrame:
     """(id_a=needle, id_b=container) candidate pairs: share a winnowed
     fingerprint AND needle is strictly shorter (in words); needle must have
-    ≥ containment_min_words words. Per-fingerprint buckets capped."""
-    window = max(2, cfg.containment_min_words - cfg.shingle_k + 1)
+    ≥ CONTAINMENT_MIN_WORDS words. Per-fingerprint buckets capped."""
     # words → shingles → hashes materialized stage-by-stage: each HOF input
     # is a plain column reference, never an inline pipeline (HOF lambdas
     # re-evaluate embedded subexpressions per element — an inline
     # split-then-shingle pipeline re-splits the text once per shingle; warm
     # containment_docs at sf0.1 measured 6.1s → 2.4s with this change)
-    from file_deduplicator_spark.functions.minhash_sql import shingles_from_words
-
     base = (
         df.select(F.col(id_col).alias("id"), words_col(F.col(text_col)).alias("_ws"))
         .select(
             "id",
             F.size(F.col("_ws")).alias("n_words"),
-            shingles_from_words(F.col("_ws"), cfg.shingle_k).alias("_sh"),
+            shingles_from_words(F.col("_ws"), SHINGLE_K).alias("_sh"),
         )
         .select(
             "id",
@@ -81,7 +82,7 @@ def containment_candidates(
         .select(
             "id",
             "n_words",
-            F.explode(winnowed_fingerprints_col(F.col("_h"), window)).alias("fp"),
+            F.explode(winnowed_fingerprints_col(F.col("_h"), WINNOW_WINDOW)).alias("fp"),
         )
     )
     # r06 rework (guide §2.4 — remove shuffles outright): ONE capped
@@ -94,7 +95,7 @@ def containment_candidates(
     #   row_number() over (partition by fp order by id) <= cap;
     # * pair orientation: needle = strictly fewer words, so for members
     #   x, y emit (x→y) iff wx < wy (equal word counts never pair), and
-    #   the needle must carry >= containment_min_words words;
+    #   the needle must carry >= CONTAINMENT_MIN_WORDS words;
     # * the trailing distinct dedups across shared fingerprints as before.
     # The expansion is lsh.member_pairs, the one bucket_pairs uses, with
     # this orientation as ``emit`` and the word-count rule as ``keep`` — the
@@ -104,7 +105,7 @@ def containment_candidates(
     grouped = base.groupBy("fp").agg(
         F.slice(F.array_sort(F.collect_list(member)), 1, cfg.bucket_cap).alias("ms")
     )
-    min_w = F.lit(cfg.containment_min_words)
+    min_w = F.lit(CONTAINMENT_MIN_WORDS)
 
     def emit(x, y):
         x_needle = x["n_words"] < y["n_words"]

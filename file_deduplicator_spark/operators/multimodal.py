@@ -247,9 +247,7 @@ def image_near_dup_pairs(
     ).filter(F.col("sim_sig").isNotNull())
     bands = band_table(
         sigs,
-        simhash_bands_col(F.col("sim_sig"), cfg.simhash_bands,
-                          cfg.simhash_rotations, cfg.simhash_key_blocks,
-                          cfg.simhash_design),
+        simhash_bands_col(F.col("sim_sig")),
         id_col,
         payload={"sig": "sim_sig"},
     )

@@ -26,7 +26,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
-from file_deduplicator_spark.functions.minhash_sql import minhash_bands_col, simhash_bands_col
+from file_deduplicator_spark.functions.minhash_sql import (
+    minhash_bands_col,
+    minhash_fold_col,
+    simhash_bands_col,
+)
+from file_deduplicator_spark.functions.text import MINHASH_SEED, NUM_PERM, SHINGLE_K
 from file_deduplicator_spark.functions.udfs import signatures_map_in_arrow
 from file_deduplicator_spark.operators.components import attach_clusters, connected_components
 from file_deduplicator_spark.operators.exact import codec_filter, with_digest
@@ -67,8 +72,7 @@ def with_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     out = with_digest(df, cfg)
     if not cfg.perceptual:
         out = out.drop("bytes")
-    return signatures_map_in_arrow(out, cfg.sim_algo, cfg.num_perm, cfg.shingle_k,
-                                   cfg.minhash_seed)
+    return signatures_map_in_arrow(out, cfg.sim_algo, NUM_PERM, SHINGLE_K, MINHASH_SEED)
 
 
 def exact_edges(sigs: DataFrame, id_col: str = "clip_id") -> DataFrame:
@@ -109,12 +113,11 @@ def near_dup_edges(
     Text: MinHash bands → candidate pairs → slot agreement ≥
     jaccard_threshold via lsh.verify_pairs_minhash (the 512-byte signature
     is too fat to carry into buckets; its near-uniform 64-bit band keys
-    keep candidate counts ~linear, so the join stays cheap). When
-    ``num_perm`` is a multiple of 16 the 32-byte fold rides the band table
-    and lsh.fold_within rejects provably failing pairs in-bucket (exactly
-    conservative: same verified pair set). Empty transcripts never enter
-    the text band table (degenerate all-EMPTY_SLOT signatures must not
-    match each other).
+    keep candidate counts ~linear, so the join stays cheap). The 32-byte
+    fold rides the band table and lsh.fold_within rejects provably failing
+    pairs in-bucket (exactly conservative: same verified pair set). Empty
+    transcripts never enter the text band table (degenerate all-EMPTY_SLOT
+    signatures must not match each other).
 
     ``sigs`` must carry the ``digest_root`` column dedup_pipeline adds.
     ``observation`` / ``text_observation``: optional pyspark Observations
@@ -151,40 +154,28 @@ def near_dup_edges(
         # the explode runs once, spilling to disk if it outgrows memory
         bands_a = band_table(
             sig_reps,
-            simhash_bands_col(F.col("sim_sig"), cfg.simhash_bands,
-                              cfg.simhash_rotations, cfg.simhash_key_blocks,
-                              cfg.simhash_design),
+            simhash_bands_col(F.col("sim_sig")),
             id_col,
             payload={"sig": "sim_sig"},
         ).persist(StorageLevel.MEMORY_AND_DISK)
         if caches is not None:
             caches.append(bands_a)
 
-    text = reps.filter(F.length(F.trim(F.col("transcript"))) > 0)
-    keep_t = None
-    if cfg.num_perm % 16 == 0:
-        # round-4: the 32-byte nibble fold rides the band table so
-        # non-matching candidates are rejected INSIDE the bucket expansion
-        # (provable-mismatch bound — exactly conservative, verified pair
-        # set unchanged); only survivors reach the two verify joins below.
-        # Measured honestly at the 200k bench fixture: banding (b=16, r=4)
-        # is already precise on its bimodal transcripts — 193,548
-        # candidates, all of which pass the verify — so the filter rejects
-        # ~nothing THERE and costs ~4 integer ops per in-bucket pair. Its
-        # value is adversarial/real corpora (boilerplate-heavy text where
-        # band collisions far exceed true pairs), where every rejected
-        # candidate saves two join lookups and a shuffle row.
-        from file_deduplicator_spark.functions.minhash_sql import minhash_fold_col
-
-        text = text.withColumn(
-            "_mh_fold", minhash_fold_col(F.col("minhash_sig"), cfg.num_perm)
-        )
-        keep_t = fold_within(cfg.num_perm, cfg.jaccard_threshold)
+    # round-4: the 32-byte nibble fold rides the band table so non-matching
+    # candidates are rejected INSIDE the bucket expansion (provable-mismatch
+    # bound — exactly conservative, verified pair set unchanged); only
+    # survivors reach the two verify joins below. Measured honestly at the
+    # 200k bench fixture: banding (b=16, r=4) is already precise on its
+    # bimodal transcripts — 193,548 candidates, all of which pass the
+    # verify — so the filter rejects ~nothing THERE and costs ~4 integer ops
+    # per in-bucket pair. Its value is adversarial/real corpora
+    # (boilerplate-heavy text where band collisions far exceed true pairs),
+    # where every rejected candidate saves two join lookups and a shuffle row.
+    text = reps.filter(F.length(F.trim(F.col("transcript"))) > 0).withColumn(
+        "_mh_fold", minhash_fold_col(F.col("minhash_sig"), NUM_PERM))
+    keep_t = fold_within(NUM_PERM, cfg.jaccard_threshold)
     bands_t = band_table(
-        text,
-        minhash_bands_col(F.col("minhash_sig"), cfg.minhash_bands, cfg.minhash_rows),
-        id_col,
-        payload={"fold": "_mh_fold"} if keep_t is not None else None,
+        text, minhash_bands_col(F.col("minhash_sig")), id_col, payload={"fold": "_mh_fold"},
     ).persist(StorageLevel.MEMORY_AND_DISK)
     if caches is not None:
         caches.append(bands_t)

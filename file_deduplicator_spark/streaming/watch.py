@@ -58,8 +58,9 @@ def _write_checkpoint(state_dir: str | Path, ckpt: dict) -> None:
 def compute_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Shared signature projection (plans.pipeline.with_signatures) slimmed
     to the persisted state columns. NOTE: a persisted state is bound to the
-    cfg it was built with (sim_algo, num_perm, shingle_k, minhash_seed) —
-    never mix."""
+    signature kernel version and to the cfg's sim_algo and hash_algo it was
+    built with (the MinHash format is fixed: functions/text.py) —
+    process_new_snapshots refuses to mix them."""
     from file_deduplicator_spark.plans.pipeline import with_signatures
 
     return with_signatures(df, cfg).select(*SIG_COLS)
@@ -118,11 +119,8 @@ def match_new_against_state(
         ).select(id_alias, sig_col, F.col("e.band").alias("band"), F.col("e.bh").alias("bh"))
 
     if "similar_audio" in include:
-        sim_builder = lambda c: simhash_bands_col(  # noqa: E731
-            c, cfg.simhash_bands, cfg.simhash_rotations, cfg.simhash_key_blocks,
-            cfg.simhash_design)
-        nb = explode_bands(n, "n_sim", "new_id", sim_builder)
-        sb = explode_bands(s, "s_sim", "old_id", sim_builder)
+        nb = explode_bands(n, "n_sim", "new_id", simhash_bands_col)
+        sb = explode_bands(s, "s_sim", "old_id", simhash_bands_col)
         parts.append(
             nb.join(sb, ["band", "bh"])
             .filter(F.bit_count(F.col("n_sim").bitwiseXOR(F.col("s_sim"))) <= cfg.effective_threshold)
@@ -146,8 +144,7 @@ def match_new_against_state(
                 F.element_at(F.col(sig_col), 1) != F.lit(EMPTY_SLOT))
 
         guard = mh_guard or default_guard
-        mh_builder = mh_bands_builder or (
-            lambda c: minhash_bands_col(c, cfg.minhash_bands, cfg.minhash_rows))
+        mh_builder = mh_bands_builder or minhash_bands_col
         agree = mh_agreement or (
             lambda a, b: sig_agreement_col(a, b) >= cfg.jaccard_threshold)
         nt = explode_bands(guard(n, "n_mh"), "n_mh", "new_id", mh_builder)
@@ -219,6 +216,15 @@ def process_new_snapshots(
             "the state (delete the state dir and re-bootstrap) — comparing "
             "across kernel versions silently degrades match quality"
         )
+    # likewise the settings that change what a stored signature means; a
+    # checkpoint without them predates this guard and gains them on write
+    for key in ("sim_algo", "hash_algo"):
+        if ckpt.get(key, getattr(cfg, key)) != getattr(cfg, key):
+            raise ValueError(
+                f"watch state at {state_dir} was built with {key}="
+                f"{ckpt[key]!r}, this run has {getattr(cfg, key)!r}: use the "
+                "state's setting or rebuild the state"
+            )
     # backend-agnostic source read: JSON snapshot log or a real Iceberg v2
     # table layout (sources/iceberg_lite.py) — same incremental contract
     source_backend = snap.resolve_backend(source_table)
@@ -286,7 +292,8 @@ def process_new_snapshots(
         )
 
     ckpt = {"last_source_snapshot": latest, "batches": batch_id + 1,
-            "sig_kernel_version": SIG_KERNEL_VERSION}
+            "sig_kernel_version": SIG_KERNEL_VERSION,
+            "sim_algo": cfg.sim_algo, "hash_algo": cfg.hash_algo}
     _write_checkpoint(state_dir, ckpt)
 
     stats = {

@@ -68,7 +68,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                         "partitions, and re-decode ONLY the changed ones. "
                         "Assumes an append/delete-only corpus (rows "
                         "immutable per clip_id — the Iceberg-table posture) "
-                        "and the same signature config as the prior run.")
+                        "and the same --sim-algo, --hash-algo and "
+                        "--no-perceptual as the prior run.")
     p.add_argument("--no-save-signatures", action="store_true",
                    help="skip recording the per-clip signature table "
                         "(disables --resume-from against this run)")

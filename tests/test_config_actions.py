@@ -68,6 +68,17 @@ def test_from_profile_precedence(tmp_path):
         "state_buckets": 32,
         "dry_run": True,
         "shuffle_partitions": 32,
+        # the signature format and band layout, now constants
+        "num_perm": 128,
+        "shingle_k": 5,
+        "minhash_seed": 7,
+        "minhash_bands": 32,
+        "minhash_rows": 4,
+        "simhash_bands": 4,
+        "simhash_key_blocks": 2,
+        "simhash_design": "combinations",
+        "simhash_rotations": [0, 3, 11],
+        "containment_min_words": 12,
     }))
     cfg = DedupConfig.from_profile(p)
     assert cfg.min_size == 2048          # from profile

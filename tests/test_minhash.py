@@ -152,28 +152,61 @@ def test_prefilter_preserves_verified_pair_set(spark, clips_df):
         fold_within,
         verify_pairs_minhash,
     )
+    from file_deduplicator_spark.functions.text import NUM_PERM
     from file_deduplicator_spark.plans.pipeline import with_signatures
 
     cfg = DedupConfig()
     sigs = (with_signatures(clips_df, cfg).drop("bytes")
             .filter(F.length(F.trim(F.col("transcript"))) > 0)
-            .withColumn("_mh_fold", minhash_fold_col(F.col("minhash_sig"), cfg.num_perm))
+            .withColumn("_mh_fold", minhash_fold_col(F.col("minhash_sig"), NUM_PERM))
             .persist())
     try:
         bands = band_table(
-            sigs, minhash_bands_col(F.col("minhash_sig"), cfg.minhash_bands,
-                                    cfg.minhash_rows),
-            payload={"fold": "_mh_fold"},
+            sigs, minhash_bands_col(F.col("minhash_sig")), payload={"fold": "_mh_fold"},
         )
 
         def verified(pairs):
             return verify_pairs_minhash(pairs, sigs, cfg.jaccard_threshold)
 
         on = verified(bucket_pairs(bands, cfg,
-                                   fold_within(cfg.num_perm, cfg.jaccard_threshold)))
+                                   fold_within(NUM_PERM, cfg.jaccard_threshold)))
         off = verified(bucket_pairs(bands, cfg))
         assert on.exceptAll(off).count() == 0
         assert off.exceptAll(on).count() == 0
         assert on.count() > 0
     finally:
         sigs.unpersist()
+
+
+def test_simhash_bands_share_a_table_up_to_hamming_3(spark):
+    """The SimHash table family's pigeonhole guarantee (minhash_sql
+    .simhash_table_combos): two signatures at Hamming distance d <= 3 share
+    at least one (band, bh) key, so the pair always becomes a candidate.
+    Unrelated signatures must almost never share one (a degenerate layout,
+    e.g. constant keys, would pass the first check alone)."""
+    from file_deduplicator_spark.functions.minhash_sql import simhash_bands_col
+
+    rng = np.random.RandomState(2024)
+    n = 2000
+
+    def signed(u):
+        return u - (1 << 64) if u >= (1 << 63) else u
+
+    def draw():
+        return int(rng.randint(0, 1 << 64, dtype=np.uint64))
+
+    rows = []
+    for d in range(4):
+        for _ in range(n):
+            a = draw()
+            mask = sum(1 << int(bit) for bit in rng.choice(64, size=d, replace=False))
+            rows.append((d, signed(a), signed(a ^ mask)))
+    rows += [(-1, signed(draw()), signed(draw())) for _ in range(n)]
+    df = spark.createDataFrame(rows, "d int, a long, b long")
+    shared = F.size(F.array_intersect(simhash_bands_col(F.col("a")),
+                                      simhash_bands_col(F.col("b")))) > 0
+    got = {r.d: (r.rows, r.hits) for r in df.groupBy("d").agg(
+        F.count(F.lit(1)).alias("rows"), F.sum(shared.cast("int")).alias("hits")).collect()}
+    for d in range(4):
+        assert got[d] == (n, n), f"Hamming {d}: {n - got[d][1]} of {n} pairs share no table"
+    assert got[-1][1] <= n // 100, f"unrelated pairs share a table: {got[-1][1]} of {n}"

@@ -218,3 +218,25 @@ def test_entry_points_import_only_existing_names():
                                    f"{node.module}.{alias.name}")
     assert checked > 50
     assert not missing, missing
+
+
+def test_every_config_field_is_read():
+    """Every DedupConfig field is read as an attribute (``.field``) somewhere
+    in the package, the jobs, ``__spark_entry__.py``, the benchmark or the
+    scripts, outside its own declaration — a knob nothing reads is dead
+    configuration, and this keeps one from coming back."""
+    import ast
+    from dataclasses import fields
+
+    from file_deduplicator_spark.config import DedupConfig
+
+    files = [*REPO.glob("file_deduplicator_spark/**/*.py"), *REPO.glob("jobs/*.py"),
+             *REPO.glob("perfbench/*.py"), *REPO.glob("scripts/*.py"),
+             REPO / "bench.py", REPO / "__spark_entry__.py"]
+    read = set()
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                read.add(node.attr)
+    unread = [f.name for f in fields(DedupConfig) if f.name not in read]
+    assert not unread, f"DedupConfig fields nothing reads: {unread}"

@@ -348,6 +348,36 @@ def test_watch_kernel_guard_defaults_v1_when_state_without_checkpoint(spark, tmp
             process_new_snapshots(spark, src, state, cfg)
 
 
+@pytest.mark.parametrize("setting", [{"sim_algo": "phash"}, {"hash_algo": "md5"}])
+def test_watch_state_refuses_other_signature_settings(spark, watch_env, setting):
+    """State bootstrapped with the defaults records sim_algo and hash_algo;
+    a commit processed with another value raises instead of comparing
+    incomparable signatures (md5 digests never exact-match sha256 ones,
+    phash sims against dhash state give wrong audio alerts). A checkpoint
+    written before the guard, without the keys, is still accepted."""
+    import json
+
+    env = watch_env
+    process_new_snapshots(spark, env["src"], env["state"], DedupConfig())
+    ck = read_checkpoint(env["state"])
+    assert (ck["sim_algo"], ck["hash_algo"]) == ("dhash", "sha256")
+    snap.append_snapshot(
+        spark.createDataFrame([_row("clip_e", env["third"], 16000, "novel words")], CLIP_SCHEMA),
+        env["src"],
+    )
+    with pytest.raises(ValueError, match=next(iter(setting))):
+        process_new_snapshots(spark, env["src"], env["state"], DedupConfig(**setting))
+    assert read_checkpoint(env["state"]) == ck  # nothing committed
+
+    # a pre-guard checkpoint: accepted, and it gains the keys on its write
+    ckpt_path = env["state"] / "_checkpoint.json"
+    ckpt_path.write_text(json.dumps({k: v for k, v in ck.items()
+                                     if k not in ("sim_algo", "hash_algo")}))
+    s = process_new_snapshots(spark, env["src"], env["state"], DedupConfig(**setting))
+    assert s["new_rows"] == 1
+    assert read_checkpoint(env["state"])[next(iter(setting))] == next(iter(setting.values()))
+
+
 def test_watch_image_arrival_matches_persisted_image(spark, tmp_path):
     """Round-4 directive 8: the image modality rides the watch/incremental
     path. The sniffing signature dispatch (udfs.media_sig_from_bytes) gives
