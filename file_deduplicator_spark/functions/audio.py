@@ -575,7 +575,7 @@ def sig_from_flac_bytes(buf, algo: str = "dhash") -> int:
 
 def sig_from_mp4_bytes(buf, algo: str = "dhash") -> int:
     """Signature from an ISO-BMFF (mp4/m4a/mov) payload: a video track
-    signs through the image perceptual chain on its MIDDLE sampled frame
+    signs through the image perceptual chain on its FIRST sampled frame
     (one lazy sample read — the container walk never touches the other
     payloads); an audio-only raw-PCM track signs through the fused
     envelope kernel, bit-identical to its WAV sibling. Gated codecs

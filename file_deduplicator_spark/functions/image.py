@@ -63,14 +63,11 @@ def pgm_encode(img: np.ndarray) -> bytes:
     return b"P5\n%d %d\n255\n" % (w, h) + a.tobytes()
 
 
-def _pnm_header(buf: bytes, start: int = 0) -> tuple[bytes, int, int, int, int]:
+def _pnm_header(buf: bytes) -> tuple[bytes, int, int, int, int]:
     """Parse a PNM header (magic, width, height, maxval) allowing arbitrary
-    whitespace and '#' comments; returns (magic, w, h, maxval, data_offset).
-    ``start`` reads the header at an offset WITHOUT slicing ``buf`` (a slice
-    copies the remaining stream — quadratic over a multi-frame walk); the
-    returned data offset is relative to ``start``."""
-    magic = buf[start:start + 2]
-    pos = start + 2
+    whitespace and '#' comments; returns (magic, w, h, maxval, data_offset)."""
+    magic = buf[:2]
+    pos = 2
     vals: list[int] = []
     n = len(buf)
     while len(vals) < 3:
@@ -88,7 +85,7 @@ def _pnm_header(buf: bytes, start: int = 0) -> tuple[bytes, int, int, int, int]:
             raise ValueError("malformed PNM header")
         vals.append(int(buf[d0:pos]))
     # exactly one whitespace byte separates maxval from the raster
-    return magic, vals[0], vals[1], vals[2], pos + 1 - start
+    return magic, vals[0], vals[1], vals[2], pos + 1
 
 
 def pnm_decode(buf: bytes) -> np.ndarray:
@@ -149,69 +146,6 @@ def bmp_decode(buf: bytes) -> np.ndarray:
     if h_signed > 0:
         rgb = rgb[::-1]  # bottom-up → top-down
     return rgb.copy()
-
-
-def pnm_stream_encode(frames: list[np.ndarray]) -> bytes:
-    """Concatenated binary PPM frames — the netpbm video-stream format
-    (what ffmpeg's image2pipe ppm muxer emits)."""
-    return b"".join(ppm_encode(f) for f in frames)
-
-
-def pnm_stream_index(buf: bytes, max_frames: int | None = None) -> list[tuple[int, int]]:
-    """Walk a concatenated-PNM stream and return (start, end) byte offsets of
-    each complete frame — HEADERS ONLY, no raster is touched or copied.
-
-    Each frame is a complete P6/P5 image; frames simply follow each other
-    (the netpbm stream convention). Raises ValueError on a malformed first
-    frame; a trailing truncated/garbage frame is dropped rather than raised,
-    the per-file-degradation contract (main.go:666-674).
-    """
-    buf = bytes(buf)
-    spans: list[tuple[int, int]] = []
-    pos, n = 0, len(buf)
-    while pos < n and (max_frames is None or len(spans) < max_frames):
-        head = buf[pos:pos + 2]
-        if head not in (b"P6", b"P5"):
-            if spans:
-                break  # trailing garbage after valid frames — stop
-            raise ValueError("not a PNM stream")
-        try:
-            magic, w, h, _maxval, off = _pnm_header(buf, pos)
-            size = w * h * (3 if magic == b"P6" else 1)
-            if pos + off + size > n:
-                break  # truncated trailing frame
-            spans.append((pos, pos + off + size))
-            pos += off + size
-        except ValueError:
-            if spans:
-                break
-            raise
-    if not spans:
-        raise ValueError("empty PNM stream")
-    return spans
-
-
-def pnm_stream_decode(buf: bytes, max_frames: int | None = None) -> list[np.ndarray]:
-    """Decode a concatenated-PNM stream → list of (H, W, 3) uint8 frames
-    (see pnm_stream_index for the stream grammar / degradation contract)."""
-    buf = bytes(buf)
-    return [pnm_decode(buf[a:b]) for a, b in pnm_stream_index(buf, max_frames)]
-
-
-def sample_stream_frames(buf: bytes, n_frames: int = 4) -> list[np.ndarray]:
-    """Evenly sample ``n_frames`` frames from a PNM video stream.
-
-    Lazy (round-4 rework): the header walk indexes every frame's byte span
-    first — PNM headers carry exact raster sizes — and ONLY the sampled
-    frames are decoded. A 4-of-N sample costs 4 decodes, not N; at 100 TB of
-    video the old decode-everything pass paid N ndarray materializations
-    per clip."""
-    buf = bytes(buf)
-    spans = pnm_stream_index(buf)
-    if len(spans) > n_frames:
-        idx = np.linspace(0, len(spans) - 1, n_frames).round().astype(int)
-        spans = [spans[i] for i in idx]
-    return [pnm_decode(buf[a:b]) for a, b in spans]
 
 
 def image_decode(buf: bytes) -> np.ndarray:

@@ -1,14 +1,13 @@
 """Dependency-free ISO-BMFF (MP4 / QuickTime .mov) container support.
 
 The reference has no video path at all (its registry is Go's image stdlib,
-perceptual.go:4-14); video frame-sampling is part of this repo's
-LLM-training-data operator family (multimodal.py). The round-4 additions
-covered concatenated-PNM streams and animated GIF; this module adds the
-dominant real-world container. Reader design mirrors the lazy PNM/GIF
-samplers: the box walk + sample tables yield a per-sample
-(offset, size, dts, keyframe) index WITHOUT touching sample payloads, so a
-4-of-N frame sample reads 4 samples — at 100 TB of video the scan cost is
-metadata-sized unless a payload is actually decoded.
+perceptual.go:4-14). Here an mp4 payload in the clips table signs through
+``audio.sig_from_mp4_bytes``: a Motion-JPEG video track through the image
+perceptual chain on its first frame, a raw-PCM audio track through the
+audio envelope kernel. ``--probe`` reads its metadata with ``mp4_probe``.
+The box walk + sample tables yield a per-sample (offset, size, dts,
+keyframe) index WITHOUT touching sample payloads, so a frame sample reads
+only the samples it decodes.
 
 What decodes for real (codecs this repo already implements from scratch):
 
@@ -16,8 +15,8 @@ What decodes for real (codecs this repo already implements from scratch):
 * audio ``sowt`` / ``twos`` sample entries (raw s16 PCM, LE/BE mono)
 
 Everything else (avc1/hev1/vp09/av01 video, mp4a AAC audio, ...) raises
-NotImplementedError with the honest-gate message — the same degradation
-contract as the other multimodal paths (ok=false per ref main.go:666-674).
+NotImplementedError with the honest-gate message; the signature stage turns
+it into a null signature (the per-file fallback of main.go:666-674).
 
 The writer is a minimal deterministic muxer (test grade, like the PNM/GIF/
 WebP/FLAC encoders): creation/modification times fixed at 0 (the 1904
@@ -282,8 +281,8 @@ def mp4_sample_frames(buf, n_frames: int = 4) -> list[np.ndarray]:
     has a sync-sample table (stss), selection is restricted to keyframes —
     for a predictive codec non-sync samples aren't independently decodable,
     and for MJPEG (every frame sync in practice) the restriction is a
-    no-op. Index convention matches image.pnm stream sampling:
-    round(linspace) over the candidate pool.
+    no-op. Indices are round(linspace) over the candidate pool, so
+    ``n_frames=1`` picks the first candidate.
     """
     buf = bytes(buf)
     tracks = [t for t in parse_tracks(buf) if t["handler"] == "vide"]

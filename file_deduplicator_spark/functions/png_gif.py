@@ -133,8 +133,8 @@ def png_decode(buf: bytes) -> np.ndarray:
     """PNG → (H, W, 3) uint8 RGB. See module docstring for coverage.
 
     Every malformed-payload failure mode surfaces as ValueError — the
-    contract callers rely on for ok=false / allow_fake degradation (same
-    wrapper jpeg.py and webp.py carry); a truncated IDAT otherwise leaks
+    contract callers rely on for null-signature / ok=false degradation
+    (same wrapper jpeg.py and webp.py carry); a truncated IDAT otherwise leaks
     zlib.error, a short header struct.error."""
     try:
         return _png_decode(buf)
@@ -307,7 +307,7 @@ def _lzw_decode(data: bytes, min_code_size: int, expected: int) -> np.ndarray:
 def gif_decode(buf: bytes) -> np.ndarray:
     """GIF87a/89a → first frame as (H, W, 3) uint8 RGB.
 
-    Malformed payloads surface as ValueError (ok=false / allow_fake
+    Malformed payloads surface as ValueError (null-signature / ok=false
     degradation contract), never a raw IndexError from the LZW walk."""
     try:
         return _gif_decode(buf)
@@ -443,342 +443,4 @@ def gif_encode(img: np.ndarray) -> bytes:
         out.append(len(block))
         out += block
     out += b"\x00\x3B"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Animated GIF as a video container
-# ---------------------------------------------------------------------------
-#
-# ``gif_decode`` above returns the first frame only — that is Go's
-# ``gif.Decode`` and all the reference ever does with a GIF
-# (perceptual.go:4-14; the reference has no video path at all). The
-# functions below go beyond the reference: they treat a multi-frame GIF as
-# a *compressed video container* for the pipeline's video modality
-# (operators/multimodal.py:sample_video_frames), next to the raw
-# concatenated-PNM stream format. Frame semantics follow GIF89a Graphic
-# Control Extension compositing: per-frame sub-rectangles, transparency,
-# and disposal methods 0/1 (leave), 2 (restore background), 3 (restore
-# previous).
-#
-# Sampling laziness mirrors image.py:sample_stream_frames: the block walk
-# (``gif_frames_index``) never touches LZW data — GIF data sub-blocks are
-# length-prefixed, so skipping a frame's raster is O(#sub-blocks). When
-# every frame up to the last sampled one is INDEPENDENT (full-canvas
-# rectangle, no transparent index), only the sampled frames are
-# LZW-decoded. Delta-coded GIFs (partial rects / transparency — the
-# animated-GIF analog of P-frames) are composited sequentially instead,
-# because frame k's pixels genuinely depend on the canvas before it; no
-# codec can seek a delta stream without its reference frames.
-
-
-def gif_frames_index(buf: bytes) -> list[dict]:
-    """Walk a GIF's block structure and return one descriptor per frame —
-    NO LZW data is decoded or copied.
-
-    Descriptor keys: ``rect`` (ix, iy, iw, ih), ``interlaced``,
-    ``lct_span`` ((off, size_colors) or None), ``min_code``,
-    ``data_spans`` (list of (off, len) LZW sub-block payload spans),
-    ``disposal`` (0-3), ``transparent`` (index or None), ``independent``
-    (full-canvas rect and no transparency).
-
-    Raises ValueError on a malformed stream before the first complete
-    frame; a truncated trailing frame is dropped, the per-file degradation
-    contract (main.go:666-674).
-    """
-    buf = bytes(buf)
-    if buf[:4] != b"GIF8" or buf[4:6] not in (b"7a", b"9a"):
-        raise ValueError("not a GIF buffer")
-    sw, sh, flags, _bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
-    pos = 13
-    if flags & 0x80:
-        pos += (2 << (flags & 0x07)) * 3
-    n = len(buf)
-    frames: list[dict] = []
-    disposal, transparent = 0, None
-    try:
-        while pos < n:
-            b0 = buf[pos]
-            pos += 1
-            if b0 == 0x21:  # extension
-                label = buf[pos]
-                pos += 1
-                if label == 0xF9 and pos + 5 <= n and buf[pos] == 4:
-                    packed = buf[pos + 1]
-                    disposal = (packed >> 2) & 0x07
-                    transparent = buf[pos + 4] if packed & 0x01 else None
-                while pos < n and buf[pos] != 0:
-                    pos += 1 + buf[pos]
-                pos += 1
-            elif b0 == 0x2C:  # image descriptor
-                ix, iy, iw, ih, iflags = struct.unpack_from("<HHHHB", buf, pos)
-                pos += 9
-                lct_span = None
-                if iflags & 0x80:
-                    size = 2 << (iflags & 0x07)
-                    lct_span = (pos, size)
-                    pos += size * 3
-                min_code = buf[pos]
-                pos += 1
-                spans: list[tuple[int, int]] = []
-                while pos < n and buf[pos] != 0:
-                    ln = buf[pos]
-                    if pos + 1 + ln > n:
-                        raise ValueError("GIF: truncated sub-block")
-                    spans.append((pos + 1, ln))
-                    pos += 1 + ln
-                if pos >= n:
-                    raise ValueError("GIF: unterminated frame")
-                pos += 1
-                frames.append({
-                    "rect": (ix, iy, iw, ih),
-                    "interlaced": bool(iflags & 0x40),
-                    "lct_span": lct_span,
-                    "min_code": min_code,
-                    "data_spans": spans,
-                    "disposal": disposal,
-                    "transparent": transparent,
-                    "independent": (
-                        (ix, iy, iw, ih) == (0, 0, sw, sh)
-                        and transparent is None
-                    ),
-                })
-                disposal, transparent = 0, None
-            elif b0 == 0x3B:
-                break
-            else:
-                raise ValueError(f"GIF: unknown block 0x{b0:02x}")
-    except (ValueError, struct.error, IndexError):
-        if not frames:
-            raise
-        # truncated/garbage tail after ≥1 complete frame: degrade
-    if not frames:
-        raise ValueError("GIF: no image data")
-    return frames
-
-
-def _gif_frame_indices(buf: bytes, rec: dict) -> np.ndarray:
-    """LZW-decode one indexed frame raster (deinterlaced) from its spans."""
-    _ix, _iy, iw, ih = rec["rect"]
-    data = b"".join(buf[a:a + ln] for a, ln in rec["data_spans"])
-    idx = _lzw_decode(data, rec["min_code"], iw * ih).reshape(ih, iw)
-    if rec["interlaced"]:
-        deinter = np.empty_like(idx)
-        order = np.concatenate([np.arange(0, ih, 8), np.arange(4, ih, 8),
-                                np.arange(2, ih, 4), np.arange(1, ih, 2)])
-        deinter[order] = idx
-        idx = deinter
-    return idx
-
-
-def _gif_tables(buf: bytes) -> tuple[np.ndarray | None, int, int, int]:
-    """(global color table or None, background index, width, height)."""
-    sw, sh, flags, bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
-    gct = None
-    if flags & 0x80:
-        size = 2 << (flags & 0x07)
-        gct = np.frombuffer(buf, dtype=np.uint8, count=size * 3,
-                            offset=13).reshape(size, 3)
-    return gct, bg, sw, sh
-
-
-def gif_sample_frames(buf: bytes, n_frames: int = 4) -> list[np.ndarray]:
-    """Evenly sample ``n_frames`` RGB frames from an animated GIF.
-
-    Fast path: if every frame up to the last sampled index is independent
-    (full-canvas, opaque), only the sampled frames are LZW-decoded — a
-    4-of-N sample costs 4 rasters, not N. Otherwise the stream is
-    delta-coded and frames are composited sequentially per GIF89a disposal
-    semantics (restore-background paints the GCT background color, the
-    pre-browser reading of disposal 2), materializing RGB copies only at
-    sampled indices.
-
-    Malformed payloads surface as ValueError (degradation contract), never
-    a raw IndexError/struct.error from the LZW or block walk.
-    """
-    try:
-        return _gif_sample_frames(buf, n_frames)
-    except (IndexError, struct.error, OverflowError) as e:
-        raise ValueError(f"corrupt GIF: {type(e).__name__}") from e
-
-
-def _gif_sample_frames(buf: bytes, n_frames: int = 4) -> list[np.ndarray]:
-    buf = bytes(buf)
-    frames = gif_frames_index(buf)
-    gct, bg, sw, sh = _gif_tables(buf)
-    total = len(frames)
-    if total > n_frames:
-        sample = np.unique(
-            np.linspace(0, total - 1, n_frames).round().astype(int))
-    else:
-        sample = np.arange(total)
-    want = set(int(i) for i in sample)
-    last = max(want)
-
-    def table_for(rec: dict) -> np.ndarray:
-        if rec["lct_span"] is not None:
-            off, size = rec["lct_span"]
-            return np.frombuffer(buf, dtype=np.uint8, count=size * 3,
-                                 offset=off).reshape(size, 3)
-        if gct is None:
-            raise ValueError("GIF: no color table")
-        return gct
-
-    if all(frames[i]["independent"] for i in range(last + 1)):
-        out = []
-        for i in sorted(want):
-            rec = frames[i]
-            idx = _gif_frame_indices(buf, rec)
-            table = table_for(rec)
-            if int(idx.max(initial=0)) >= table.shape[0]:
-                raise ValueError("GIF: color index out of range")
-            out.append(table[idx].copy())
-        return out
-
-    # delta-coded: sequential composite up to the last sampled frame
-    bg_rgb = (gct[bg] if gct is not None and bg < gct.shape[0]
-              else np.zeros(3, dtype=np.uint8))
-    canvas = np.broadcast_to(bg_rgb, (sh, sw, 3)).copy()
-    out = []
-    for i in range(last + 1):
-        rec = frames[i]
-        ix, iy, iw, ih = rec["rect"]
-        if ix + iw > sw or iy + ih > sh:
-            raise ValueError("GIF: frame rect outside canvas")
-        saved = canvas[iy:iy + ih, ix:ix + iw].copy() \
-            if rec["disposal"] == 3 else None
-        idx = _gif_frame_indices(buf, rec)
-        table = table_for(rec)
-        if int(idx.max(initial=0)) >= table.shape[0]:
-            raise ValueError("GIF: color index out of range")
-        region = canvas[iy:iy + ih, ix:ix + iw]
-        if rec["transparent"] is not None:
-            opaque = idx != rec["transparent"]
-            region[opaque] = table[idx[opaque]]
-        else:
-            region[:] = table[idx]
-        if i in want:
-            out.append(canvas.copy())
-        if rec["disposal"] == 2:
-            canvas[iy:iy + ih, ix:ix + iw] = bg_rgb
-        elif rec["disposal"] == 3:
-            canvas[iy:iy + ih, ix:ix + iw] = saved
-    return out
-
-
-def gif_stream_encode(
-    frames: list[np.ndarray], mode: str = "full"
-) -> bytes:
-    """frames → animated GIF89a (test-suite encoder, like gif_encode).
-
-    ``mode='full'``: every frame is an independent full-canvas image
-    (exercises the lazy sampling fast path). ``mode='delta'``: frames
-    after the first are encoded as the changed-pixel bounding-box
-    sub-rectangle with disposal=leave (exercises the composite path);
-    unchanged in-rect pixels are written opaquely, so the composite is
-    exact. All frames share one palette (≤256 colors across the stream).
-    """
-    if not frames:
-        raise ValueError("gif_stream_encode: no frames")
-    if mode not in ("full", "delta"):
-        raise ValueError("mode must be 'full' or 'delta'")
-    arrs = [np.ascontiguousarray(np.asarray(f, dtype=np.uint8))
-            for f in frames]
-    h, w = arrs[0].shape[:2]
-    for a in arrs:
-        if a.ndim != 3 or a.shape[2] != 3 or a.shape[:2] != (h, w):
-            raise ValueError("gif_stream_encode: frames must share (H, W, 3)")
-    flat = np.concatenate([a.reshape(-1, 3) for a in arrs])
-    colors = np.unique(flat, axis=0)
-    if colors.shape[0] > 256:
-        raise ValueError("gif_stream_encode: more than 256 distinct colors")
-    depth = max(2, int(np.ceil(np.log2(max(2, colors.shape[0])))))
-    table_size = 1 << depth
-    palette = np.zeros((table_size, 3), dtype=np.uint8)
-    palette[: colors.shape[0]] = colors
-    # color → index lookup via flattened 24-bit key
-    keys = (colors[:, 0].astype(np.int64) << 16) | \
-           (colors[:, 1].astype(np.int64) << 8) | colors[:, 2]
-    lut = dict(zip(keys.tolist(), range(colors.shape[0])))
-
-    def indices_of(a: np.ndarray) -> np.ndarray:
-        k = (a[..., 0].astype(np.int64) << 16) | \
-            (a[..., 1].astype(np.int64) << 8) | a[..., 2]
-        return np.vectorize(lut.__getitem__, otypes=[np.uint16])(k)
-
-    min_code = depth
-    clear = 1 << min_code
-    end_code = clear + 1
-
-    def lzw_literal(idx_flat: np.ndarray) -> bytes:
-        bits = bytearray()
-        acc = 0
-        acc_bits = 0
-        width = min_code + 1
-
-        def emit(code: int):
-            nonlocal acc, acc_bits
-            acc |= code << acc_bits
-            acc_bits += width
-            while acc_bits >= 8:
-                bits.append(acc & 0xFF)
-                acc >>= 8
-                acc_bits -= 8
-
-        emit(clear)
-        next_code = end_code + 1
-        first = True
-        for v in idx_flat:
-            emit(int(v))
-            if first:
-                first = False
-                continue
-            next_code += 1
-            if next_code == (1 << width):
-                if width < 12:
-                    width += 1
-                else:
-                    emit(clear)
-                    next_code = end_code + 1
-                    first = True
-                    width = min_code + 1
-        emit(end_code)
-        if acc_bits:
-            bits.append(acc & 0xFF)
-        return bytes(bits)
-
-    out = bytearray()
-    out += b"GIF89a"
-    out += struct.pack("<HHBBB", w, h, 0x80 | ((depth - 1) & 0x07), 0, 0)
-    out += palette.tobytes()
-    out += b"\x21\xFF\x0BNETSCAPE2.0\x03\x01\x00\x00\x00"  # loop forever
-    prev = None
-    for a in arrs:
-        if mode == "delta" and prev is not None:
-            changed = np.any(a != prev, axis=2)
-            if changed.any():
-                ys, xs = np.nonzero(changed)
-                iy, ix = int(ys.min()), int(xs.min())
-                ih = int(ys.max()) - iy + 1
-                iw = int(xs.max()) - ix + 1
-            else:  # identical frame: 1x1 repaint keeps timing structure
-                iy = ix = 0
-                ih = iw = 1
-            rect = a[iy:iy + ih, ix:ix + iw]
-        else:
-            iy = ix = 0
-            ih, iw = h, w
-            rect = a
-        # GCE: disposal=1 (leave), no transparency, zero delay
-        out += b"\x21\xF9\x04" + bytes([(1 << 2)]) + b"\x00\x00\x00\x00"
-        out += b"\x2C" + struct.pack("<HHHHB", ix, iy, iw, ih, 0)
-        out.append(min_code)
-        data = lzw_literal(indices_of(rect).ravel())
-        for i in range(0, len(data), 255):
-            block = data[i:i + 255]
-            out.append(len(block))
-            out += block
-        out += b"\x00"
-        prev = a
-    out += b"\x3B"
     return bytes(out)

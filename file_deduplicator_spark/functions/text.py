@@ -1,4 +1,4 @@
-"""Text kernels: tokenization, shingling, MinHash, SimHash — pure Python/numpy.
+"""Text kernels: tokenization, shingling, MinHash — pure Python/numpy.
 
 The MinHash kernels here ARE the production path: the Arrow signature stage
 (``udfs.signatures_map_in_arrow``) calls ``minhash_signatures_batch`` once
@@ -7,9 +7,8 @@ Determinism: every hash here is seed-fixed — blake2b shingle base hashes,
 affine permutations from ``minhash_params(num_perm, seed)``. The pipeline
 runs them at the one format below (NUM_PERM, SHINGLE_K, MINHASH_SEED).
 
-Also ``token_count`` and the word-token ``simhash_text``: the Python forms
-that ``operators/textops.py``'s ``token_count_col`` / ``simhash_text_col``
-are tested against.
+Also ``token_count``: the Python form that ``operators/textops.py``'s
+``token_count_col`` is tested against.
 """
 
 from __future__ import annotations
@@ -79,28 +78,6 @@ def jaccard(text_a: str, text_b: str, k: int) -> float:
     inter = len(sa & sb)
     union = len(sa | sb)
     return inter / union if union else 0.0
-
-
-def simhash_text(text: str, hash_fn) -> int:
-    """64-bit SimHash over word tokens (weighted bit-vote; Charikar 2002).
-
-    ``hash_fn(token) -> int64`` must match the JVM-side hash (xxhash64).
-    """
-    counts = np.zeros(64, dtype=np.int64)
-    words = tokenize(text)
-    if not words:
-        return 0
-    for w in words:
-        h = hash_fn(w) & 0xFFFFFFFFFFFFFFFF
-        for bit in range(64):
-            counts[bit] += 1 if (h >> bit) & 1 else -1
-    val = 0
-    for bit in range(64):
-        if counts[bit] > 0:
-            val |= 1 << bit
-    if val >= 1 << 63:
-        val -= 1 << 64
-    return val
 
 
 # ---------------------------------------------------------------------------

@@ -20,8 +20,6 @@ Reference parity: computePerceptualHash dispatch perceptual.go:407-431.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from file_deduplicator_spark.functions.audio import SIG_FUNCS, sig_from_wav_bytes
@@ -159,22 +157,3 @@ def signatures_map_in_arrow(df, algo: str, num_perm: int, shingle_k: int, seed: 
 
     return df.mapInArrow(run, schema=out_schema)
 
-
-def make_image_sig_udf(algo: str = "dhash"):
-    """pandas_udf: image bytes → 64-bit perceptual signature (LongType,
-    nullable). The Spark binding of computePerceptualHash
-    (perceptual.go:406-431) via image.image_sig_from_bytes; non-image and
-    undecodable payloads → null signature (main.go:666-674)."""
-    from file_deduplicator_spark.functions.image import image_sig_from_bytes
-
-    def sig(buf):
-        try:
-            return image_sig_from_bytes(bytes(buf), algo)
-        except Exception:
-            return None
-
-    @F.pandas_udf(T.LongType())
-    def image_sig(data: pd.Series) -> pd.Series:
-        return pd.Series([None if buf is None else sig(buf) for buf in data], dtype="object")
-
-    return image_sig

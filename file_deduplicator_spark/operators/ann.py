@@ -1,12 +1,8 @@
-"""Similarity search over embedding columns (task brief: ANN as a
-first-class component).
+"""Similarity search over embedding columns: the two operators behind the
+``cosine_topk`` and ``knn_self_join`` driver queries.
 
-* ``cosine_topk``        — exact brute-force top-k vs a query vector; the
-  correctness baseline. Dot product via ``F.zip_with`` + ``F.aggregate`` —
-  JVM-side, no UDF, no Python.
-* ``lsh_bucketed_topk``  — the scale path for query top-k: MULTI-TABLE
-  random-hyperplane LSH; only rows sharing (or within ``probe_hamming`` bits
-  of) the query's bucket in ≥1 table are scored.
+* ``cosine_topk``        — exact brute-force top-k vs a query vector. Dot
+  product via ``F.zip_with`` + ``F.aggregate`` — JVM-side, no UDF, no Python.
 * ``knn_self_join``      — embedding-cosine near-duplicate pairs at corpus
   scale: multi-table banded buckets feed the SAME skew-guarded pair
   generator the text/audio LSH uses (operators/lsh.bucket_pairs: capped
@@ -106,87 +102,6 @@ def make_buckets_udf(dim: int, n_tables: int, bits: int, seed: int = 42):
         return pd.Series(list(b))
 
     return buckets
-
-
-def lsh_bucketed_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_tables: int = 8,
-    bits_per_table: int = 12,
-    probe_hamming: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: score only rows whose bucket is within
-    ``probe_hamming`` bits of the query's bucket in AT LEAST ONE table
-    (multi-table + multi-probe LSH)."""
-    dim = len(query_vec)
-    planes = hyperplanes(dim, n_tables * bits_per_table, seed)
-    qb = bucket_ids_np(np.asarray([query_vec], dtype=np.float64), planes, bits_per_table)[0]
-    udf = make_buckets_udf(dim, n_tables, bits_per_table, seed)
-    q_lits = F.array(*[F.lit(int(x)) for x in qb])
-    bucketed = df.withColumn("_bkts", udf(F.col(vec_col)))
-    probed = bucketed.filter(
-        F.exists(
-            F.zip_with(
-                F.col("_bkts"), q_lits,
-                lambda b, q: F.bit_count(b.bitwiseXOR(q)) <= F.lit(probe_hamming),
-            ),
-            lambda hit: hit,
-        )
-    )
-    return cosine_topk(probed.drop("_bkts"), query_vec, k, id_col, vec_col)
-
-
-def knn_plan(threshold: float, target_recall: float = 0.95,
-             n_rows: int | None = None, bucket_target: int = 256,
-             min_bits: int = 4) -> tuple[int, int]:
-    """(bits_per_table, n_tables) sizing rule for the hyperplane-LSH self
-    join — the ANN analog of MinHash (b, r) banding, so a 100 TB user
-    derives parameters from (threshold, corpus size) instead of
-    inheriting the gate-tuned constants (round-4 advice item 8).
-
-    Two independent dials, solved in order:
-
-    * ``bits_per_table`` comes from OCCUPANCY: expected random-data
-      bucket size is n/2^b, so b = ceil(log2(n / bucket_target)) keeps
-      per-bucket candidate generation at ~bucket_target rows (the same
-      bound bucket_pairs enforces by cap+salt when the data is
-      skewed). Without ``n_rows`` it stays at ``min_bits`` — the small-
-      fixture scale.
-    * ``n_tables`` comes from RECALL: random-hyperplane LSH (Charikar,
-      STOC'02) agrees per bit with p = 1 - arccos(s)/pi; a b-bit table
-      collides iff all b bits agree, so T tables give
-      recall(s) = 1 - (1 - p^b)^T at the DECISION BOUNDARY s =
-      threshold (pairs above the threshold recall strictly higher).
-      T = ceil(ln(1-R) / ln(1-p^b)).
-
-    The rule REPRODUCES the gate constants instead of replacing them
-    with new magic: at the driver-embeddings scale (n≈10^3,
-    threshold 0.40) it yields b=4, and T(R=0.999)=41 ≈ the hand-tuned
-    48-table config whose measured recall is 1.0. The honest scale
-    caveat is visible in the same formula: at n=10^12 occupancy forces
-    b≈32, and at a LOW threshold p^b collapses so T explodes — meaning
-    low-threshold all-pairs ANN at that scale needs a different
-    algorithm (the documented brute/IVF tradeoff), while the near-dup
-    regime this engine targets (s ≥ 0.8-0.9, p ≥ 0.80) stays feasible
-    (threshold 0.9 → p^32 = 0.007, T(0.95) ≈ 420 tables).
-    """
-    import math
-
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    b = min_bits
-    if n_rows is not None and n_rows > bucket_target:
-        b = max(min_bits, math.ceil(math.log2(n_rows / bucket_target)))
-    p = 1.0 - math.acos(threshold) / math.pi
-    q = p ** b
-    if q >= 1.0:
-        return b, 1
-    t = max(1, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - q)))
-    return b, t
 
 
 def knn_self_join(

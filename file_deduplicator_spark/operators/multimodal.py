@@ -1,262 +1,17 @@
-"""Multimodal binary-column operators: decode / feature-extract / resize /
-frame-sample plumbing for image, audio, and video payloads.
+"""Corpus probe: container/codec metadata for opaque binary columns.
 
-The engine treats every modality as an opaque ``binary`` column plus typed
-metadata (the clips table's ``bytes + sr_hz/dur_ms/codec`` pattern,
-generalized). Audio decode is REAL (functions/audio.py — WAV/µ-law) and so
-is image decode (functions/image.py — PPM/PGM/BMP since round 3, plus
-dependency-free PNG and GIF since round 4, functions/png_gif.py: stdlib
-zlib inflate + the 5 scanline unfilters / variable-width LZW; plus
-dependency-free baseline + progressive JPEG, functions/jpeg.py: huffman
-entropy decode, Annex G successive approximation, batched matrix IDCT,
-Go's exact integer YCbCr→RGB; plus dependency-free lossless WebP,
-functions/webp.py: full VP8L bitstream — prefix codes, meta-prefix groups,
-color cache, 2-D LZ77, all four transforms — matching all 6 formats Go's
-stdlib registry gives the reference, perceptual.go:4-14, with only the
-lossy VP8 profile gated), all feeding the
-reference's actual gamma→histeq→blur→Catmull-Rom perceptual pipeline
-(perceptual.go:44-65,301-312); so is video frame-sampling for
-concatenated-PNM streams (the netpbm / ffmpeg image2pipe format) AND for
-animated GIF as a compressed container (gif_sample_frames: GIF89a
-sub-rect/transparency/disposal compositing, lazy sampling of independent
-frames). Lossy (VP8) WebP and other compressed video containers (mp4/webm)
-still need external libraries absent from this container: those
-payloads raise inside the decode kernel and yield ok=false rows, or use the
-clearly-marked deterministic fake behind ``allow_fake=True`` (so the
-Spark-side plumbing — schema, batch iteration, partitioning, UDF signatures
-— is testable for those kinds too). Swapping in Pillow/PyAV later changes
-ONE function each, not the plan.
-
-All operators run through ``mapInPandas`` (per-partition Arrow batch
-iterator) — the right shape for multi-MB payloads: bounded batch memory via
-``spark.sql.execution.arrow.maxRecordsPerBatch``, no per-row Python UDF
-dispatch, and the output schema is declared up front.
+``probe_media`` (the job's ``--probe``) sniffs each payload's container and
+reads only header-level metadata: container, codec, kind, sample rate,
+channels, duration, image size, and whether the engine can decode it. It
+runs through ``mapInPandas`` (per-partition Arrow batch iterator) with a
+declared output schema and only the id and bytes columns projected in.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-FEATURE_DIM = 64
-
-MEDIA_FEATURE_SCHEMA = (
-    "media_id string, kind string, ok boolean, "
-    "width int, height int, n_frames int, n_samples bigint, "
-    f"features array<float>"
-)
-
-
-# ---------------------------------------------------------------------------
-# decode kernels (audio real; image/video stubbed)
-# ---------------------------------------------------------------------------
-
-
-def decode_image(data: bytes, allow_fake: bool = False) -> np.ndarray:
-    """Image decode → HxWx3 uint8.
-
-    REAL for the dependency-free formats (PPM/PGM/BMP — functions/image.py;
-    PNG/GIF — functions/png_gif.py; baseline + progressive JPEG —
-    functions/jpeg.py; lossless WebP/VP8L — functions/webp.py); lossy
-    (VP8) WebP needs a codec library absent from this
-    container and raises — unless ``allow_fake=True``, in which case a
-    deterministic content-seeded fake keeps downstream plumbing testable
-    for payloads the container can't decode.
-    """
-    from file_deduplicator_spark.functions.image import image_decode
-
-    try:
-        return image_decode(data)
-    except ValueError:
-        if not allow_fake:
-            raise NotImplementedError(
-                "lossy (VP8) WebP decode requires a codec library (not in "
-                "container); supported real formats: PPM/PGM/BMP/PNG/GIF/"
-                "JPEG/lossless-WebP — or pass allow_fake=True for the "
-                "deterministic test fake"
-            )
-    seed = int.from_bytes(data[:8].ljust(8, b"\0"), "little") % (2**31)
-    rng = np.random.RandomState(seed)
-    h, w = 16 + seed % 48, 16 + (seed // 7) % 48
-    return rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-
-
-def sample_video_frames(
-    data: bytes, n_frames: int = 4, allow_fake: bool = False
-) -> list[np.ndarray]:
-    """Video frame-sampler → n evenly-spaced frames.
-
-    REAL for concatenated-PNM streams (the netpbm / ffmpeg image2pipe ppm
-    format — functions/image.py:pnm_stream_decode) and for animated GIF
-    (functions/png_gif.py:gif_sample_frames — LZW-compressed frames with
-    full GIF89a sub-rect/transparency/disposal compositing; independent
-    full-canvas frames are sampled lazily without decoding the rest).
-    Other compressed containers (mp4/webm/...) need PyAV/ffmpeg, absent
-    from this container, and raise — unless ``allow_fake=True``
-    (deterministic fake frames for plumbing tests).
-    """
-    from file_deduplicator_spark.functions.image import sample_stream_frames
-    from file_deduplicator_spark.functions.mp4 import mp4_sample_frames
-    from file_deduplicator_spark.functions.png_gif import gif_sample_frames
-
-    data = bytes(data)
-    try:
-        # corrupt GIF payloads degrade the same way every other payload
-        # does (allow_fake fallback / NotImplementedError), rather than
-        # leaking a ValueError from inside the LZW walk
-        if data[4:8] == b"ftyp":
-            # ISO-BMFF: lazy sample-table walk; MJPEG decodes for real,
-            # predictive codecs (avc1/hev1/...) gate inside
-            return mp4_sample_frames(data, n_frames)
-        if data[:4] == b"GIF8":
-            return gif_sample_frames(data, n_frames)
-        return sample_stream_frames(data, n_frames)
-    except NotImplementedError:
-        if not allow_fake:
-            raise
-    except ValueError:
-        if not allow_fake:
-            raise NotImplementedError(
-                "compressed video decode requires PyAV/ffmpeg (not in "
-                "container); supported real formats: concatenated-PNM "
-                "stream, animated GIF, MJPEG/mp4 - or pass allow_fake=True "
-                "for the deterministic test fake"
-            )
-    return [decode_image(data + bytes([i]), allow_fake=True) for i in range(n_frames)]
-
-
-def resize_gray(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Grayscale + nearest-neighbor resize (numpy only) — the feature-prep
-    analog of the reference's Catmull-Rom resize (perceptual.go:303-312)."""
-    gray = img.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-    ys = np.clip((np.arange(out_h) + 0.5) * gray.shape[0] / out_h, 0, gray.shape[0] - 1).astype(int)
-    xs = np.clip((np.arange(out_w) + 0.5) * gray.shape[1] / out_w, 0, gray.shape[1] - 1).astype(int)
-    return gray[np.ix_(ys, xs)]
-
-
-def _image_features(img: np.ndarray) -> np.ndarray:
-    g = resize_gray(img, 8, 8).reshape(-1)
-    rng = g.max() - g.min()
-    return ((g - g.min()) / rng if rng > 0 else g * 0).astype(np.float32)
-
-
-def _audio_features(data: bytes) -> tuple[np.ndarray, int]:
-    from file_deduplicator_spark.functions.audio import (
-        audio_decode,
-        energy_envelope,
-        preprocess,
-    )
-
-    pcm, _sr = audio_decode(data)
-    env = energy_envelope(preprocess(pcm), FEATURE_DIM)
-    return env.astype(np.float32), pcm.size
-
-
-# ---------------------------------------------------------------------------
-# the mapInPandas operator
-# ---------------------------------------------------------------------------
-
-
-def extract_media_features(
-    df: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "bytes",
-    kind_col: str = "kind",
-    allow_fake: bool = False,
-) -> DataFrame:
-    """(id, kind, bytes) → per-item feature rows.
-
-    kind ∈ {audio, image, video}. Failures (bad payloads, stubbed codecs
-    without allow_fake) yield ok=false rows — never task failures, mirroring
-    the reference's per-file error fallback (main.go:666-674).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, kind, data in zip(pdf[id_col], pdf[kind_col], pdf[bytes_col]):
-                row = {
-                    "media_id": mid, "kind": kind, "ok": False,
-                    "width": None, "height": None, "n_frames": None,
-                    "n_samples": None, "features": None,
-                }
-                try:
-                    raw = bytes(data)
-                    if kind == "audio":
-                        feats, n = _audio_features(raw)
-                        row.update(ok=True, n_samples=n, features=feats.tolist())
-                    elif kind == "image":
-                        img = decode_image(raw, allow_fake=allow_fake)
-                        row.update(
-                            ok=True, height=img.shape[0], width=img.shape[1],
-                            features=_image_features(img).tolist(),
-                        )
-                    elif kind == "video":
-                        frames = sample_video_frames(raw, allow_fake=allow_fake)
-                        f = np.mean([_image_features(fr) for fr in frames], axis=0)
-                        row.update(
-                            ok=True, n_frames=len(frames),
-                            height=frames[0].shape[0], width=frames[0].shape[1],
-                            features=f.astype(np.float32).tolist(),
-                        )
-                except Exception:
-                    pass
-                out.append(row)
-            yield pd.DataFrame(out)
-
-    # project ONLY the needed columns into the Python stage (column pruning
-    # for the Arrow transfer), then mapInPandas with a declared schema
-    slim = df.select(
-        df[id_col].alias(id_col), df[kind_col].alias(kind_col), df[bytes_col].alias(bytes_col)
-    )
-    return slim.mapInPandas(run, schema=MEDIA_FEATURE_SCHEMA)
-
-
-def image_near_dup_pairs(
-    df: DataFrame,
-    cfg=None,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    algo: str = "dhash",
-    threshold: int | None = None,
-    observation=None,
-) -> DataFrame:
-    """Image near-duplicate pairs end-to-end in Spark: perceptual signatures
-    (REAL decode + the reference's preprocessing, functions/image.py) → the
-    SAME banded SimHash LSH + fused in-bucket Hamming verify the audio path
-    uses (operators/lsh.bucket_pairs with hamming_within — capped buckets,
-    hot-bucket salting, skew metrics). The Spark-first generalization of
-    findPerceptualDuplicates (main.go:868-902), which compares all pairs.
-
-    ``threshold`` defaults to the reference's AdaptiveThreshold(algo,
-    strictness) via cfg (config.py:24)."""
-    from file_deduplicator_spark.config import DedupConfig
-    from file_deduplicator_spark.functions.minhash_sql import simhash_bands_col
-    from file_deduplicator_spark.functions.udfs import make_image_sig_udf
-    from file_deduplicator_spark.operators.lsh import band_table, bucket_pairs, hamming_within
-
-    cfg = cfg or DedupConfig(sim_algo=algo)
-    t = threshold if threshold is not None else cfg.effective_threshold
-    sigs = df.select(
-        df[id_col].alias(id_col),
-        make_image_sig_udf(algo)(df[bytes_col]).alias("sim_sig"),
-    ).filter(F.col("sim_sig").isNotNull())
-    bands = band_table(
-        sigs,
-        simhash_bands_col(F.col("sim_sig")),
-        id_col,
-        payload={"sig": "sim_sig"},
-    )
-    return bucket_pairs(bands, cfg, hamming_within(t), observation=observation)
-
-
-# ---------------------------------------------------------------------------
-# Corpus probe: container/codec metadata for opaque binary columns
-# ---------------------------------------------------------------------------
 
 MEDIA_PROBE_SCHEMA = (
     "media_id string, container string, codec string, kind string, "
@@ -441,8 +196,7 @@ def probe_media(
     """(id, bytes) → one metadata row per payload (MEDIA_PROBE_SCHEMA).
 
     Header-only reads per row; malformed payloads yield ok=false rows,
-    never task failures (main.go:666-674). Column-pruned Arrow transfer
-    like extract_media_features."""
+    never task failures (main.go:666-674)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -1,6 +1,6 @@
 """Text-analysis operators over a documents-like table — the training-data
-pipeline ops (task brief): token counting, quality scoring, language-ID
-heuristic, SimHash, exact n-gram Jaccard similarity join.
+pipeline ops: token counting, quality scoring, language-ID heuristic, and
+the exact n-gram Jaccard similarity join.
 
 All pure Column expressions (JVM, codegen) except nothing — zero UDFs here.
 Each op is written so a DuckDB oracle can reproduce it exactly (shared regex
@@ -93,57 +93,6 @@ def langid_col(text: Column) -> Column:
         .when(t.rlike(r"[぀-ヿ]"), F.lit("ja"))
         .otherwise(latin_pick.otherwise(F.lit("unknown")))
     )
-
-
-# ---------------------------------------------------------------------------
-# SimHash over word tokens (JVM-side bit-vote)
-# ---------------------------------------------------------------------------
-
-
-def simhash_text_col(text: Column) -> Column:
-    """64-bit SimHash of the word-token multiset — pure Column expressions.
-
-    Bit-vote: acc[i] += (xxhash64(word) bit i) ? 1 : -1 over words; sig bit
-    i set iff acc[i] > 0. Matches functions.text.simhash_text with
-    hash_fn = Spark xxhash64 (parity-tested).
-    """
-    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
-    # hash each word exactly once (transform), THEN bit-vote over the hash
-    # array — the bit-unrolled inner array references the bound lambda var,
-    # so xxhash64 is not re-evaluated per bit.
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-    init = F.array(*[F.lit(0).cast("long")] * 64)
-    votes = F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.shiftrightunsigned(h, i)
-                    .bitwiseAND(F.lit(1))
-                    .cast("long")
-                    * F.lit(2)
-                    - F.lit(1)
-                    for i in range(64)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    # Pack via zip_with against a literal power-of-two array, then a single
-    # bitwiseOR fold. CRITICAL: ``votes`` appears exactly ONCE in the tree —
-    # HOF lambdas re-evaluate embedded subexpressions per element, so e.g.
-    # element_at(votes, i) x64 would run the whole vote aggregate 64 times.
-    powers = F.array(
-        *[F.lit(-(1 << 63) if i == 63 else (1 << i)).cast("long") for i in range(64)]
-    )
-    packed = F.aggregate(
-        F.zip_with(votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-    return F.when(F.size(words) == 0, F.lit(0).cast("long")).otherwise(packed)
 
 
 # ---------------------------------------------------------------------------

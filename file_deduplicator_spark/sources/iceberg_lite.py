@@ -221,6 +221,10 @@ _SPARK_TO_ICEBERG = {
     "double": "double",
     "float": "float",
     "date": "date",
+    # Spark's session-zone timestamp is an instant (Iceberg timestamptz);
+    # its timestamp_ntz is a wall-clock value (Iceberg timestamp)
+    "timestamp": "timestamptz",
+    "timestamp_ntz": "timestamp",
 }
 
 

@@ -322,3 +322,40 @@ def test_reappend_carries_forward_prev_manifest_counts(spark, tmp_path):
     assert by_snap[0]["added_files_count"] > 0
     assert by_snap[0]["added_rows_count"] == 2
     assert by_snap[1]["added_rows_count"] == 1
+
+
+def test_iceberg_snapshots_timestamp_columns(spark, tmp_path):
+    """A clips table with modification times commits as a snapshot: Spark
+    timestamp maps to Iceberg timestamptz, timestamp_ntz to timestamp, and
+    both values come back unchanged from a full and an incremental read."""
+    import datetime as dt
+
+    schema = T.StructType(
+        [
+            T.StructField("clip_id", T.StringType()),
+            T.StructField("mtime", T.TimestampType()),
+            T.StructField("mtime_ntz", T.TimestampNTZType()),
+        ]
+    )
+    rows = [
+        ("a", dt.datetime(2021, 3, 4, 5, 6, 7, 890123), dt.datetime(2021, 3, 4, 5, 6, 7, 890123)),
+        ("b", dt.datetime(1999, 12, 31, 23, 59, 59), dt.datetime(2030, 1, 1)),
+    ]
+    t = tmp_path / "tbl"
+    iceberg_lite.append_snapshot(spark.createDataFrame(rows[:1], schema), t)
+    s1 = iceberg_lite.append_snapshot(spark.createDataFrame(rows[1:], schema), t)
+
+    fields = iceberg_lite.table_metadata(t)["schemas"][0]["fields"]
+    assert {f["name"]: f["type"] for f in fields} == {
+        "clip_id": "string", "mtime": "timestamptz", "mtime_ntz": "timestamp",
+    }
+
+    def values(df):
+        return sorted((r.clip_id, r.mtime, r.mtime_ntz) for r in df.collect())
+
+    full = iceberg_lite.read_table(spark, t)
+    assert dict(full.dtypes) == {"clip_id": "string", "mtime": "timestamp",
+                                 "mtime_ntz": "timestamp_ntz"}
+    assert values(full) == sorted(rows)
+    inc, latest = iceberg_lite.read_incremental(spark, t, 0)
+    assert latest == s1 and values(inc) == rows[1:]

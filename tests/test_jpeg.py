@@ -1,7 +1,7 @@
 """Baseline JPEG codec tests (round-4): roundtrips across color/gray,
 4:4:4 vs 4:2:0, odd dimensions, restart markers, the entropy layer at
 quality 100, honest progressive rejection, and decode-dispatch / perceptual
-integration (no allow_fake).
+integration.
 
 The encoder under test is the repo's own minimal writer, so pure roundtrips
 can't catch a shared spec misreading; the structural cases therefore also
@@ -199,9 +199,7 @@ def test_image_decode_dispatch_and_perceptual_chain():
 
 
 def test_multimodal_decode_real_jpeg():
-    from file_deduplicator_spark.operators.multimodal import decode_image
-
     img = _smooth(20, 20, seed=31)
-    out = decode_image(jpeg_encode(img, quality=100))  # no allow_fake
+    out = im.image_decode(jpeg_encode(img, quality=100))
     assert out.shape == img.shape
     assert np.abs(out.astype(int) - img.astype(int)).max() <= 8

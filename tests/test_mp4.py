@@ -107,15 +107,15 @@ def test_signature_identical_to_wav_sibling():
 
 def test_video_signature_via_image_chain():
     """An MJPEG mp4 payload signs through the image perceptual chain on its
-    middle sampled frame (media-sig dispatch)."""
+    first sampled frame (media-sig dispatch)."""
     from file_deduplicator_spark.functions.image import dhash_image
     from file_deduplicator_spark.functions.udfs import media_sig_from_bytes
 
     frames = _frames(5)
     buf = M.mp4_encode_mjpeg(frames)
     sig = media_sig_from_bytes(buf, "dhash")
-    mid = M.mp4_sample_frames(buf, 1)[0]
-    assert sig == dhash_image(mid)
+    first = M.mp4_sample_frames(buf, 1)[0]
+    assert sig == dhash_image(first)
 
 
 def test_audio_decode_dispatch():
@@ -128,19 +128,14 @@ def test_audio_decode_dispatch():
 
 
 def test_multimodal_video_dispatch():
-    from file_deduplicator_spark.operators.multimodal import sample_video_frames
-
     frames = _frames(4)
     buf = M.mp4_encode_mjpeg(frames)
-    got = sample_video_frames(buf, 2)
+    got = M.mp4_sample_frames(buf, 2)
     assert len(got) == 2 and got[0].shape == (32, 48, 3)
-    # gated codec: honest NotImplementedError without allow_fake,
-    # deterministic fake frames with it
+    # gated codec: honest NotImplementedError
     gated = M.mp4_encode_mjpeg(frames, codec=b"avc1")
     with pytest.raises(NotImplementedError):
-        sample_video_frames(gated, 2)
-    fakes = sample_video_frames(gated, 2, allow_fake=True)
-    assert len(fakes) == 2
+        M.mp4_sample_frames(gated, 2)
 
 
 def test_malformed_buffers_raise_valueerror():

@@ -240,3 +240,32 @@ def test_every_config_field_is_read():
                 read.add(node.attr)
     unread = [f.name for f in fields(DedupConfig) if f.name not in read]
     assert not unread, f"DedupConfig fields nothing reads: {unread}"
+
+
+def test_readme_layout_names_every_package_module():
+    """The README "Repository layout" block names every package module
+    (``__init__.py`` aside) and no module that does not exist. Entries nest
+    by two-space indentation under their directory line; description
+    continuation lines never start with a ``.py`` or ``dir/`` token."""
+    import re
+
+    text = (REPO / "README.md").read_text()
+    block = text.split("## Repository layout", 1)[1].split("```")[1]
+    stack: list[str] = []
+    listed = set()
+    for line in block.splitlines():
+        m = re.match(r"( *)([\w./-]+(?:/|\.py))(?:\s|$)", line)
+        if not m:
+            continue
+        depth = len(m.group(1)) // 2
+        name = m.group(2)
+        if name.endswith("/"):
+            stack[depth:] = [name.rstrip("/")]
+        else:
+            listed.add("/".join([*stack[:depth], name]))
+    listed = {p for p in listed if p.startswith("file_deduplicator_spark/")}
+    actual = {str(p.relative_to(REPO))
+              for p in REPO.glob("file_deduplicator_spark/**/*.py")
+              if p.name != "__init__.py"}
+    assert not actual - listed, f"missing from README layout: {sorted(actual - listed)}"
+    assert not listed - actual, f"README layout names absent files: {sorted(listed - actual)}"

@@ -359,3 +359,42 @@ def test_bucket_pairs_matches_brute_force(spark):
     fused = got(bucket_pairs(bands, cfg, hamming_within(t)))
     assert fused == reference(lambda x, y: bin(sig[x] ^ sig[y]).count("1") <= t)
     assert ("a", "b") in fused and ("a", "c") not in fused
+
+
+def test_image_payloads_cluster_through_the_one_pipeline(spark):
+    """Batch image dedup runs through the same signature stage as audio:
+    one textured image stored as PPM, BMP and PNG decodes to identical
+    pixels, so all three share a cluster; an unrelated noise image and an
+    undecodable payload stay singletons, and the undecodable row keeps a
+    null sim_sig."""
+    import numpy as np
+
+    from file_deduplicator_spark.functions.image import bmp_encode, ppm_encode
+    from file_deduplicator_spark.functions.png_gif import png_encode
+
+    rng = np.random.RandomState(17)
+    # 8x8 random blocks upsampled to 64x64 plus a diagonal ramp: textured,
+    # so its hash is not the near-zero hash every flat image shares
+    blocks = np.kron(rng.randint(0, 256, size=(8, 8, 3)), np.ones((8, 8, 1)))
+    ramp = np.add.outer(np.arange(64), np.arange(64))[:, :, None] // 2
+    img = ((blocks + ramp) % 256).astype(np.uint8)
+    noise = rng.randint(0, 256, size=(64, 64, 3), dtype=np.uint8)
+    rows = [
+        ("img_ppm", ppm_encode(img), "ppm", "first transcript about red boats"),
+        ("img_bmp", bmp_encode(img), "bmp", "second transcript on green hills"),
+        ("img_png", png_encode(img), "png", "third transcript near blue lakes"),
+        ("noise", ppm_encode(noise), "ppm", "fourth transcript with grey skies"),
+        ("broken", b"not an image", "ppm", "fifth transcript under white snow"),
+    ]
+    df = spark.createDataFrame(
+        [(cid, bytearray(b), 0, 0, codec, txt) for cid, b, codec, txt in rows],
+        "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
+        "transcript string",
+    )
+    result = dedup_pipeline(df, CFG)
+    got = {r.clip_id: r for r in result["clustered"].collect()}
+    assert got["img_ppm"].cluster_id == got["img_bmp"].cluster_id == got["img_png"].cluster_id
+    others = {got[c].cluster_id for c in ("img_ppm", "noise", "broken")}
+    assert len(others) == 3, "noise and broken rows must be singletons"
+    assert got["broken"].sim_sig is None
+    assert got["img_ppm"].sim_sig is not None and got["noise"].sim_sig is not None

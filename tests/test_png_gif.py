@@ -1,6 +1,5 @@
 """PNG/GIF codec tests (round-4): roundtrips, filter/interlace/depth
-coverage, LZW width growth, decode-dispatch integration, and the lazy
-PNM frame sampler (decode-call counting).
+coverage, LZW width growth and decode-dispatch integration.
 
 The encoders under test are the repo's own minimal writers, so roundtrips
 alone can't catch a shared bias; the filter-coverage and Adam7 cases
@@ -165,7 +164,7 @@ def test_gif_interlaced():
 
 def test_image_decode_dispatch_png_gif():
     """image_decode sniffs PNG/GIF magics and the full perceptual chain
-    produces REAL signatures (no allow_fake) for both — same hash as the
+    produces REAL signatures for both — same hash as the
     identical pixels via PPM."""
     rng = np.random.RandomState(23)
     img = rng.randint(0, 256, size=(48, 64, 3), dtype=np.uint8)
@@ -178,217 +177,10 @@ def test_image_decode_dispatch_png_gif():
 
 
 def test_multimodal_decode_real_png_gif():
-    from file_deduplicator_spark.operators.multimodal import decode_image
-
     rng = np.random.RandomState(29)
     img = rng.randint(0, 256, size=(20, 20, 3), dtype=np.uint8)
-    assert np.array_equal(decode_image(png_encode(img)), img)  # no allow_fake
+    assert np.array_equal(im.image_decode(png_encode(img)), img)
     pal = rng.randint(0, 256, size=(8, 3), dtype=np.uint8)
     gimg = pal[rng.randint(0, 8, size=(20, 20))]
-    assert np.array_equal(decode_image(gif_encode(gimg)), gimg)
+    assert np.array_equal(im.image_decode(gif_encode(gimg)), gimg)
 
-
-def test_sample_stream_frames_lazy(monkeypatch):
-    """The sampler must decode ONLY the sampled frames (round-4 rework):
-    header walk → offsets → n decodes, not len(stream) decodes."""
-    rng = np.random.RandomState(31)
-    frames = [rng.randint(0, 256, size=(8, 8, 3), dtype=np.uint8) for _ in range(20)]
-    buf = im.pnm_stream_encode(frames)
-
-    calls = {"n": 0}
-    real = im.pnm_decode
-
-    def counting(b):
-        calls["n"] += 1
-        return real(b)
-
-    monkeypatch.setattr(im, "pnm_decode", counting)
-    out = im.sample_stream_frames(buf, n_frames=4)
-    assert calls["n"] == 4, "sampler decoded more frames than it sampled"
-    idx = np.linspace(0, 19, 4).round().astype(int)
-    for got, i in zip(out, idx):
-        assert np.array_equal(got, frames[i])
-
-    # fewer frames than requested: all decoded, exactly once each
-    calls["n"] = 0
-    short = im.pnm_stream_encode(frames[:3])
-    assert len(im.sample_stream_frames(short, n_frames=4)) == 3
-    assert calls["n"] == 3
-
-
-def test_pnm_stream_index_offsets_and_truncation():
-    frames = [np.full((4, 5, 3), i, dtype=np.uint8) for i in range(5)]
-    buf = im.pnm_stream_encode(frames)
-    spans = im.pnm_stream_index(buf)
-    assert len(spans) == 5
-    assert spans[0][0] == 0 and spans[-1][1] == len(buf)
-    for (a, b), f in zip(spans, frames):
-        assert np.array_equal(im.pnm_decode(buf[a:b]), f)
-    # truncated tail dropped, not raised
-    assert len(im.pnm_stream_index(buf[:-7])) == 4
-    with pytest.raises(ValueError):
-        im.pnm_stream_index(b"XX not a stream")
-
-
-# ---------------------------------------------------------------------------
-# Animated GIF as a video container (round-4 extension beyond the reference:
-# Go's gif.Decode — and therefore the reference — reads the first frame only)
-# ---------------------------------------------------------------------------
-
-
-def _palette_frames(n, h=12, w=16, seed=41):
-    """n frames sharing a small palette so one GCT covers the stream."""
-    rng = np.random.RandomState(seed)
-    pal = rng.randint(0, 256, size=(13, 3), dtype=np.uint8)
-    return [pal[rng.randint(0, 13, size=(h, w))] for _ in range(n)]
-
-
-def test_gif_stream_full_roundtrip_and_lazy_sampling(monkeypatch):
-    from file_deduplicator_spark.functions import png_gif as pg
-
-    frames = _palette_frames(10)
-    buf = pg.gif_stream_encode(frames, mode="full")
-
-    idxrecs = pg.gif_frames_index(buf)
-    assert len(idxrecs) == 10
-    assert all(r["independent"] for r in idxrecs)
-
-    calls = {"n": 0}
-    real = pg._lzw_decode
-
-    def counting(*a, **k):
-        calls["n"] += 1
-        return real(*a, **k)
-
-    monkeypatch.setattr(pg, "_lzw_decode", counting)
-    out = pg.gif_sample_frames(buf, n_frames=4)
-    assert calls["n"] == 4, "independent-frame GIF must decode only samples"
-    pick = np.linspace(0, 9, 4).round().astype(int)
-    for got, i in zip(out, pick):
-        assert np.array_equal(got, frames[i])
-
-    # first frame via the single-image decoder still matches
-    assert np.array_equal(pg.gif_decode(buf), frames[0])
-
-
-def test_gif_stream_delta_composite_exact():
-    """Delta mode writes changed-bbox sub-rects; sequential compositing must
-    reproduce every sampled frame exactly."""
-    from file_deduplicator_spark.functions import png_gif as pg
-
-    rng = np.random.RandomState(43)
-    pal = rng.randint(0, 256, size=(9, 3), dtype=np.uint8)
-    base = pal[rng.randint(0, 9, size=(15, 20))]
-    frames = [base.copy()]
-    for _ in range(7):
-        nxt = frames[-1].copy()
-        y, x = rng.randint(0, 10), rng.randint(0, 14)
-        nxt[y:y + 5, x:x + 6] = pal[rng.randint(0, 9, size=(5, 6))]
-        frames.append(nxt)
-    buf = pg.gif_stream_encode(frames, mode="delta")
-
-    recs = pg.gif_frames_index(buf)
-    assert len(recs) == 8
-    assert recs[0]["independent"] and not all(r["independent"] for r in recs[1:])
-
-    out = pg.gif_sample_frames(buf, n_frames=4)
-    pick = np.linspace(0, 7, 4).round().astype(int)
-    for got, i in zip(out, pick):
-        assert np.array_equal(got, frames[i])
-
-    # sampling more frames than exist returns all, in order
-    assert len(pg.gif_sample_frames(buf, n_frames=20)) == 8
-
-
-def test_gif_disposal_and_transparency_hand_built():
-    """Hand-built 3-frame GIF: frame 1 disposal=3 (restore previous) with a
-    transparent hole, frame 2 full repaint — checks GCE parsing, transparent
-    skip, and restore-previous compositing against the spec."""
-    from file_deduplicator_spark.functions import png_gif as pg
-
-    pal = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 255], [9, 9, 9]],
-                   dtype=np.uint8)
-    h = w = 4
-
-    def lzw(indices):
-        # reuse the literal-code writer via the public encoder path:
-        # build a tiny stream by hand instead (2-bit codes, width 3)
-        out = bytearray()
-        acc = bits = 0
-
-        def emit(c, wd=3):
-            nonlocal acc, bits
-            acc |= c << bits
-            bits += wd
-            while bits >= 8:
-                out.append(acc & 0xFF)
-                acc >>= 8
-                bits -= 8
-
-        emit(4)  # clear (min_code=2)
-        width = [3]
-        next_code = [6]
-        first = [True]
-        for v in indices:
-            emit(int(v), width[0])
-            if first[0]:
-                first[0] = False
-                continue
-            next_code[0] += 1
-            if next_code[0] == (1 << width[0]) and width[0] < 12:
-                width[0] += 1
-        emit(5, width[0])  # end
-        if bits:
-            out.append(acc & 0xFF)
-        return bytes(out)
-
-    def frame_block(ix, iy, iw, ih, indices, disposal, transparent=None):
-        gce_packed = (disposal << 2) | (1 if transparent is not None else 0)
-        b = bytearray(b"\x21\xF9\x04")
-        b += bytes([gce_packed, 0, 0, transparent or 0, 0])
-        b += b"\x2C" + struct.pack("<HHHHB", ix, iy, iw, ih, 0)
-        b.append(2)  # min_code
-        data = lzw(indices)
-        for i in range(0, len(data), 255):
-            blk = data[i:i + 255]
-            b.append(len(blk))
-            b += blk
-        b += b"\x00"
-        return bytes(b)
-
-    f0 = np.zeros((h, w), dtype=np.uint8)          # all red
-    overlay = np.array([[1, 3], [3, 2]], dtype=np.uint8)  # 3 = transparent
-    f2 = np.full((h, w), 2, dtype=np.uint8)        # all blue
-
-    buf = bytearray()
-    buf += b"GIF89a" + struct.pack("<HHBBB", w, h, 0x80 | 0x01, 0, 0)
-    buf += pal.tobytes()
-    buf += frame_block(0, 0, w, h, f0.ravel(), disposal=1)
-    buf += frame_block(1, 1, 2, 2, overlay.ravel(), disposal=3, transparent=3)
-    buf += frame_block(0, 0, w, h, f2.ravel(), disposal=1)
-    buf += b"\x3B"
-    buf = bytes(buf)
-
-    out = pg.gif_sample_frames(buf, n_frames=3)
-    assert len(out) == 3
-    # frame 0: all red
-    assert np.array_equal(out[0], np.broadcast_to(pal[0], (h, w, 3)))
-    # frame 1: overlay at (1,1), transparent pixels keep red underneath
-    expect1 = np.broadcast_to(pal[0], (h, w, 3)).copy()
-    expect1[1, 1] = pal[1]
-    expect1[2, 2] = pal[2]
-    assert np.array_equal(out[1], expect1)
-    # frame 2: restore-previous undid the overlay, then full blue repaint
-    assert np.array_equal(out[2], np.broadcast_to(pal[2], (h, w, 3)))
-
-
-def test_sample_video_frames_dispatches_gif():
-    from file_deduplicator_spark.functions import png_gif as pg
-    from file_deduplicator_spark.operators.multimodal import sample_video_frames
-
-    frames = _palette_frames(6, seed=47)
-    buf = pg.gif_stream_encode(frames, mode="full")
-    out = sample_video_frames(buf, n_frames=3)
-    pick = np.linspace(0, 5, 3).round().astype(int)
-    for got, i in zip(out, pick):
-        assert np.array_equal(got, frames[i])

@@ -1,11 +1,10 @@
-"""Structured Streaming watch wrapper + compare utility tests."""
+"""Structured Streaming watch wrapper tests."""
 
 import numpy as np
 
 from file_deduplicator_spark.config import DedupConfig
 from file_deduplicator_spark.datagen import _synth_pcm
-from file_deduplicator_spark.functions.audio import ulaw_encode_bytes, wav_encode
-from file_deduplicator_spark.functions.compare import compare_clips
+from file_deduplicator_spark.functions.audio import wav_encode
 from file_deduplicator_spark.streaming.stream import CLIPS_SCHEMA, start_watch_stream
 
 
@@ -47,19 +46,3 @@ def test_watch_stream_detects_duplicates(spark, tmp_path):
     alerts2 = spark.read.parquet(str(state / "alerts")).toPandas()
     assert len(alerts2) == len(alerts)
 
-
-def test_compare_clips_verdicts():
-    rng = np.random.RandomState(3)
-    pcm = _synth_pcm(rng, 16000, 600)
-    a = wav_encode(pcm, 16000)
-    b = ulaw_encode_bytes(pcm, 16000)
-    r = compare_clips(a, b, "same words", "same words")
-    assert r["snr_db"] >= 30
-    assert r["transcript_equal"]
-    for algo in ("dhash", "ahash", "phash"):
-        assert r["algos"][algo]["is_similar"], r["algos"][algo]
-
-    other = wav_encode(_synth_pcm(rng, 16000, 500), 16000)
-    r2 = compare_clips(a, other)
-    assert not r2["algos"]["dhash"]["is_similar"]
-    assert 0 <= r2["algos"]["dhash"]["similarity_pct"] <= 100

@@ -1,13 +1,12 @@
-"""Text-analysis operator tests: SimHash JVM/numpy parity, langid heuristic,
-quality/token kernels."""
+"""Text-analysis operator tests: langid heuristic, quality/token kernels,
+n-gram Jaccard."""
 
 from pyspark.sql import functions as F
 
-from file_deduplicator_spark.functions.text import simhash_text, token_count
+from file_deduplicator_spark.functions.text import token_count
 from file_deduplicator_spark.operators.textops import (
     langid_col,
     ngram_jaccard_pairs,
-    simhash_text_col,
     token_count_col,
 )
 
@@ -18,35 +17,6 @@ TEXTS = [
     "",
     "one",
 ]
-
-
-def test_simhash_jvm_matches_numpy(spark):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)], "i int, t string")
-    jvm = {r.i: r.s for r in df.select("i", simhash_text_col(F.col("t")).alias("s")).collect()}
-    # ground-truth word hashes from Spark's own xxhash64
-    words_rows = df.select(
-        "i", F.filter(F.split(F.lower("t"), r"\s+"), lambda w: w != "").alias("ws")
-    ).collect()
-    hash_rows = {}
-    for r in words_rows:
-        if r.ws:
-            hdf = spark.createDataFrame([(w,) for w in r.ws], "w string")
-            hs = {x.w: x.h for x in hdf.select("w", F.xxhash64("w").alias("h")).collect()}
-        else:
-            hs = {}
-        hash_rows[r.i] = hs
-    for i, t in enumerate(TEXTS):
-        hs = hash_rows[i]
-        want = simhash_text(t, lambda w: hs[w])
-        assert jvm[i] == want, f"text {i!r}: {jvm[i]} != {want}"
-
-
-def test_simhash_similar_texts_close(spark):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS[:3])], "i int, t string")
-    sigs = {r.i: r.s for r in df.select("i", simhash_text_col(F.col("t")).alias("s")).collect()}
-    d01 = bin((sigs[0] ^ sigs[1]) & (2**64 - 1)).count("1")
-    d02 = bin((sigs[0] ^ sigs[2]) & (2**64 - 1)).count("1")
-    assert d01 < d02, (d01, d02)
 
 
 def test_token_count_parity(spark):

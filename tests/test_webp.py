@@ -215,13 +215,10 @@ def test_corruption_fuzz_exception_contract():
 
 def test_image_decode_dispatch_and_perceptual_chain():
     """image_decode sniffs RIFF/WEBP; lossless means the perceptual hash is
-    EXACTLY the PPM hash of the same pixels — no allow_fake."""
+    EXACTLY the PPM hash of the same pixels."""
     img = _img(48, 64, seed=21)
     ref = im.image_sig_from_bytes(im.ppm_encode(img), "phash")
     sig = im.image_sig_from_bytes(
         webp_encode_lossless(img, use_lz77=True), "phash")
     assert sig == ref
-
-    from file_deduplicator_spark.operators.multimodal import decode_image
-
-    assert np.array_equal(decode_image(webp_encode_lossless(img)), img)
+    assert np.array_equal(im.image_decode(webp_encode_lossless(img)), img)
