@@ -237,35 +237,37 @@ def connected_components(
     appears in an edge; cluster_id = min node id in the component.
 
     SIZE-ADAPTIVE strategy: the edge list is tiny relative to the input
-    (only rows that band-collided AND verified), so after materializing it
-    once we know its size for free. Below ``driver_threshold`` edges, a
-    driver-side union-find finishes in O(E α(E)) — milliseconds, where the
-    distributed loop's ~log(diameter) rounds cost ~0.8 s of scheduling each
-    regardless of data size. Above it (the 10^12-row regime), the iterative
-    min-label + pointer-jumping loop below runs fully distributed. The
-    threshold is a driver-memory bound (~100 MB at the default), not a
-    correctness bound; set 0 to force the distributed path.
+    (only rows that band-collided AND verified), so one job collects at
+    most ``driver_threshold + 1`` distinct edges, and that tells the size.
+    Up to ``driver_threshold`` edges, a driver-side union-find finishes in
+    O(E α(E)) — milliseconds, where the distributed loop's ~log(diameter)
+    rounds cost ~0.8 s of scheduling each regardless of data size. Above
+    it (the 10^12-row regime), the iterative min-label + pointer-jumping
+    loop below runs fully distributed. The threshold is a driver-memory
+    bound (~100 MB at the default), not a correctness bound; set 0 to force
+    the distributed path.
     """
-    # materialize the (directed) edge list once — the distributed loop
-    # re-joins it every round, and its size decides the strategy
-    ed = _detached_checkpoint(edges.select(F.col(id_a), F.col(id_b)).distinct())
-    n_edges = ed.count()  # cheap on the checkpointed frame
-    if n_edges <= driver_threshold:
-        pdf = ed.toPandas()  # Arrow path
+    distinct = edges.select(F.col(id_a), F.col(id_b)).distinct()
+    pdf = distinct.limit(driver_threshold + 1).toPandas()  # one job, Arrow path
+    if len(pdf) <= driver_threshold:
         spark = edges.sparkSession
         id_type = dict(edges.dtypes)[id_a]
         labels = _driver_union_find(
             pdf[id_a].tolist(), pdf[id_b].tolist(), spark,
             f"id {id_type}, cluster_id {id_type}",
         )
-        _release_checkpoint(ed)
         return labels, {
             "iterations": 0,
             "converged": True,
             "changed_last": 0,
             "mode": "driver_union_find",
-            "edges": n_edges,
+            "edges": len(pdf),
         }
+
+    # materialize the (directed) edge list once — the distributed loop
+    # re-joins it every round
+    ed = _detached_checkpoint(distinct)
+    n_edges = ed.count()  # cheap on the checkpointed frame
 
     # phase 1 (round-4): per-partition local union-find contraction — chains
     # co-located in a partition collapse to stars before any global barrier,

@@ -1,2 +1,2 @@
-"""Sources & sinks: clips tables, snapshot log (Iceberg-style incremental
-reads), report/action/metrics sinks."""
+"""Sources & sinks: clips tables, the Iceberg table format (incremental
+snapshot reads, the watch state), report/action/metrics sinks."""

@@ -13,9 +13,12 @@ unwired (SURVEY snapshot-integrity note). Semantics preserved:
 * auto-clean emits action rows, never silent deletes (T5)
 * WatchStats counters → metrics table               (A5)
 
-Resumability (north rule): state = a signatures snapshot-table + a checkpoint
-file carrying the last processed source snapshot id; both are committed only
-after a batch fully succeeds, so a crashed batch replays idempotently.
+Resumability (north rule): state = a ``signatures`` Iceberg table
+(sources/iceberg_lite.py), one snapshot per batch tagged with the source
+snapshot it ingested, + a checkpoint file carrying the last processed source
+snapshot id, written only after a batch fully succeeds; a replayed batch
+skips the append its tag shows was made, so it replays idempotently. The
+source is an Iceberg table too, read from the checkpointed snapshot id on.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ from file_deduplicator_spark.functions.minhash_sql import (
     minhash_bands_col,
     simhash_bands_col,
 )
-from file_deduplicator_spark.sources import snapshots as snap
+from file_deduplicator_spark.sources import iceberg_lite
 
 SIG_COLS = ["clip_id", "digest", "size", "sim_sig", "minhash_sig"]
 
@@ -194,6 +197,13 @@ def process_new_snapshots(
 
     state_dir = Path(state_dir)
     sig_table = state_dir / "signatures"
+    if sig_table.exists() and not iceberg_lite.is_iceberg_table(sig_table):
+        raise ValueError(
+            f"watch state at {state_dir} holds a signatures dir that is not an "
+            "Iceberg table (state in the retired JSON snapshot-log format, or "
+            "a bootstrap that died before its first commit): rebuild the "
+            "state (delete the state dir and re-bootstrap)"
+        )
     ckpt = read_checkpoint(state_dir)
     # persisted signatures are only comparable to signatures produced by the
     # SAME kernel version (borderline envelope bits flip across numeric
@@ -225,10 +235,7 @@ def process_new_snapshots(
                 f"{ckpt[key]!r}, this run has {getattr(cfg, key)!r}: use the "
                 "state's setting or rebuild the state"
             )
-    # backend-agnostic source read: JSON snapshot log or a real Iceberg v2
-    # table layout (sources/iceberg_lite.py) — same incremental contract
-    source_backend = snap.resolve_backend(source_table)
-    new_rows, latest = source_backend.read_incremental(
+    new_rows, latest = iceberg_lite.read_incremental(
         spark, source_table, ckpt["last_source_snapshot"]
     )
     if new_rows is None:
@@ -246,8 +253,8 @@ def process_new_snapshots(
     # has 16 band keys per family, so a 10-row commit already hashes into
     # ~92% of a 64-bucket band index, whose read is then larger than this
     # scan (README scale notes)
-    state = (snap.read_table(spark, sig_table)
-             if (sig_table / "_snapshots.json").exists() else None)
+    have_state = iceberg_lite.is_iceberg_table(sig_table)
+    state = iceberg_lite.read_table(spark, sig_table) if have_state else None
     alerts = batch_alerts(new_sigs, state, cfg).persist()
     n_alerts = alerts.count()
     n_new = new_sigs.count()
@@ -255,14 +262,16 @@ def process_new_snapshots(
 
     # commit protocol (idempotent replay): state append is tagged with the
     # SOURCE snapshot id and skipped if that snapshot was already ingested
-    # (crash between append and checkpoint); alerts/actions go to a
-    # deterministic per-batch directory with overwrite semantics, so a
-    # replayed batch rewrites identical output instead of duplicating it.
-    already = any(
-        m.get("source_snapshot") == latest for m in snap.read_manifest(sig_table)
+    # (crash between append and checkpoint; summary values are strings);
+    # alerts/actions go to a deterministic per-batch directory with
+    # overwrite semantics, so a replayed batch rewrites identical output
+    # instead of duplicating it.
+    already = have_state and any(
+        m.get("source_snapshot") == str(latest)
+        for m in iceberg_lite.snapshot_summaries(sig_table)
     )
     if not already:
-        snap.append_snapshot(new_sigs, sig_table, source_snapshot=latest)
+        iceberg_lite.append_snapshot(new_sigs, sig_table, source_snapshot=latest)
     if n_alerts:
         alerts.withColumn("batch", F.lit(batch_id)).write.mode("overwrite").parquet(
             str(state_dir / "alerts" / f"batch={batch_id}")

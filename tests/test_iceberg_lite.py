@@ -20,7 +20,6 @@ import pytest
 from pyspark.sql import types as T
 
 from file_deduplicator_spark.sources import avro_lite, iceberg_lite
-from file_deduplicator_spark.sources import snapshots as snap
 
 # ---------------------------------------------------------------------------
 # avro_lite
@@ -247,16 +246,6 @@ def test_iceberg_delete_manifest_gated(spark, tmp_path):
         iceberg_lite.data_files(t)
 
 
-def test_resolve_backend_sniffs_layout(spark, tmp_path):
-    ice = tmp_path / "ice"
-    iceberg_lite.append_snapshot(_df(spark, [("a", "one", 1)]), ice)
-    assert snap.resolve_backend(ice) is iceberg_lite
-    js = tmp_path / "js"
-    snap.append_snapshot(_df(spark, [("a", "one", 1)]), js)
-    assert snap.resolve_backend(js) is snap
-    assert snap.resolve_backend(tmp_path / "nope") is snap
-
-
 def test_watch_over_iceberg_source(spark, tmp_path):
     """North rule: resumable incremental dedup over Iceberg snapshots — the
     watch path runs UNCHANGED over a real-format Iceberg source table."""
@@ -359,3 +348,66 @@ def test_iceberg_snapshots_timestamp_columns(spark, tmp_path):
     assert values(full) == sorted(rows)
     inc, latest = iceberg_lite.read_incremental(spark, t, 0)
     assert latest == s1 and values(inc) == rows[1:]
+
+
+_SIG_SCHEMA = T.StructType(
+    [
+        T.StructField("clip_id", T.StringType()),
+        T.StructField("minhash_sig", T.ArrayType(T.LongType())),
+        T.StructField("n", T.LongType()),
+    ]
+)
+
+
+def test_iceberg_list_column_roundtrip(spark, tmp_path):
+    """The watch state's `minhash_sig array<long>` commits as an Iceberg
+    list: a null, an empty and a 64-element array come back unchanged from
+    a full and an incremental read, and the metadata carries the list type
+    with an element id counted in last-column-id. Nested lists still raise."""
+    sig = [(-1) ** k * (k << 40) for k in range(64)]
+    rows = [("a", None, 1), ("b", [], 2), ("c", sig, 3)]
+    t = tmp_path / "tbl"
+    iceberg_lite.append_snapshot(spark.createDataFrame(rows[:1], _SIG_SCHEMA), t)
+    s1 = iceberg_lite.append_snapshot(spark.createDataFrame(rows[1:], _SIG_SCHEMA), t)
+
+    meta = iceberg_lite.table_metadata(t)
+    fields = {f["name"]: f for f in meta["schemas"][0]["fields"]}
+    assert fields["minhash_sig"]["type"] == {
+        "type": "list", "element-id": 4, "element": "long", "element-required": False,
+    }
+    assert [f["id"] for f in fields.values()] == [1, 2, 3]
+    assert meta["last-column-id"] == 4
+
+    def values(df):
+        return sorted((r.clip_id, r.minhash_sig, r.n) for r in df.collect())
+
+    full = iceberg_lite.read_table(spark, t)
+    assert dict(full.dtypes)["minhash_sig"] == "array<bigint>"
+    assert values(full) == rows
+    inc, latest = iceberg_lite.read_incremental(spark, t, 0)
+    assert latest == s1 and values(inc) == rows[1:]
+
+    nested = T.StructType([T.StructField("x", T.ArrayType(T.ArrayType(T.LongType())))])
+    with pytest.raises(NotImplementedError, match="array"):
+        iceberg_lite.append_snapshot(spark.createDataFrame([([[1]],)], nested),
+                                     tmp_path / "nested")
+
+
+def test_iceberg_name_mapping_covers_every_column(spark, tmp_path):
+    """Data files are written without Parquet field ids, so the table
+    carries the spec's `schema.name-mapping.default`: it maps every column
+    name, and a list column's `element`, to its field id in the schema."""
+    t = tmp_path / "tbl"
+    iceberg_lite.append_snapshot(
+        spark.createDataFrame([("a", [1, 2], 1)], _SIG_SCHEMA), t)
+    meta = iceberg_lite.table_metadata(t)
+    mapping = json.loads(meta["properties"]["schema.name-mapping.default"])
+
+    by_name = {m["names"][0]: m for m in mapping}
+    fields = meta["schemas"][0]["fields"]
+    assert sorted(by_name) == sorted(f["name"] for f in fields)
+    for f in fields:
+        assert by_name[f["name"]]["field-id"] == f["id"]
+    lst = next(f for f in fields if f["name"] == "minhash_sig")
+    assert by_name["minhash_sig"]["fields"] == [
+        {"field-id": lst["type"]["element-id"], "names": ["element"]}]

@@ -1,8 +1,8 @@
 """Real-Iceberg-JARS smoke test (round-2 verdict item #8): when a future
-container ships Iceberg jars, prove the incremental-read contract
-(`start-snapshot-id`) swaps in for sources/snapshots.py without touching
-the watch logic. Skipped (not failed) when no Iceberg catalog is on the
-classpath — which is the current sandbox state.
+container ships Iceberg jars, prove that Spark's own Iceberg reader serves
+the incremental-read contract (`start-snapshot-id`) that the watch path
+gets from sources/iceberg_lite.read_incremental. Skipped (not failed) when
+no Iceberg catalog is on the classpath — which is the current sandbox state.
 
 The jar-free path is NOT skipped: sources/iceberg_lite.py reads/writes the
 actual Iceberg v2 on-disk format from the public spec and is exercised by
@@ -13,7 +13,22 @@ from __future__ import annotations
 
 import pytest
 
-from file_deduplicator_spark.sources.snapshots import try_iceberg
+
+def try_iceberg(spark) -> bool:
+    """True if an Iceberg catalog is usable in this session.
+
+    NOTE: a bare ``spark._jvm.org.apache.iceberg.Table`` attribute access
+    does NOT prove the class exists — py4j hands back a JavaPackage
+    placeholder without touching the classpath (found by the round-3 smoke
+    test). Class.forName is the real probe.
+    """
+    try:
+        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
+            "org.apache.iceberg.spark.SparkCatalog"
+        )
+        return True
+    except Exception:
+        return False
 
 
 def test_try_iceberg_probe_is_honest(spark):
@@ -24,7 +39,7 @@ def test_try_iceberg_probe_is_honest(spark):
 def test_iceberg_incremental_contract(spark, tmp_path):
     if not try_iceberg(spark):
         pytest.skip("no Iceberg jars on the classpath (expected in sandbox)")
-    # same contract exercised by streaming/watch.py via sources/snapshots:
+    # the contract streaming/watch.py gets from iceberg_lite.read_incremental:
     # append two commits, read rows added strictly after the first snapshot
     wh = tmp_path / "warehouse"
     spark.conf.set("spark.sql.catalog.smoke", "org.apache.iceberg.spark.SparkCatalog")

@@ -11,7 +11,7 @@ from pyspark.sql import types as T
 from file_deduplicator_spark.config import DedupConfig
 from file_deduplicator_spark.datagen import _synth_pcm
 from file_deduplicator_spark.functions.audio import wav_encode
-from file_deduplicator_spark.sources import snapshots as snap
+from file_deduplicator_spark.sources import iceberg_lite
 from file_deduplicator_spark.streaming.watch import process_new_snapshots, read_checkpoint
 
 CLIP_SCHEMA = T.StructType(
@@ -46,7 +46,7 @@ def watch_env(spark, tmp_path):
         ],
         CLIP_SCHEMA,
     )
-    snap.append_snapshot(batch0, src)
+    iceberg_lite.append_snapshot(batch0, src)
     return {"src": src, "state": state, "base": base, "other": other, "third": third}
 
 
@@ -66,7 +66,7 @@ def test_bootstrap_then_exact_match(spark, watch_env):
               "the quick brown fox jumps over the lazy dog today")],
         CLIP_SCHEMA,
     )
-    snap.append_snapshot(batch1, env["src"])
+    iceberg_lite.append_snapshot(batch1, env["src"])
     s1 = process_new_snapshots(spark, env["src"], env["state"], cfg)
     assert s1["new_rows"] == 1 and s1["alerts"] >= 1
 
@@ -88,7 +88,7 @@ def test_similar_audio_and_text_match(spark, watch_env):
               "the quick brown fox jumps over the lazy dog today")],
         CLIP_SCHEMA,
     )
-    snap.append_snapshot(batch, env["src"])
+    iceberg_lite.append_snapshot(batch, env["src"])
     s = process_new_snapshots(spark, env["src"], env["state"], cfg)
     assert s["alerts"] >= 1
     alerts = spark.read.parquet(str(env["state"] / "alerts")).toPandas()
@@ -106,11 +106,11 @@ def test_checkpoint_resume(spark, watch_env):
     ck = read_checkpoint(env["state"])
     assert ck["last_source_snapshot"] == 0 and ck["batches"] == 1
 
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame([_row("clip_e", env["third"], 16000, "novel words")], CLIP_SCHEMA),
         env["src"],
     )
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame([_row("clip_f", env["third"], 16000, "novel words")], CLIP_SCHEMA),
         env["src"],
     )
@@ -139,7 +139,7 @@ def test_watch_filters_new_arrivals(spark, watch_env):
         ],
         CLIP_SCHEMA,
     )
-    snap.append_snapshot(batch, env["src"])
+    iceberg_lite.append_snapshot(batch, env["src"])
     s = process_new_snapshots(spark, env["src"], env["state"], cfg)
     assert s["new_rows"] == 0 and s["alerts"] == 0
 
@@ -152,7 +152,7 @@ def test_watch_auto_clean_actions(spark, watch_env):
     env = watch_env
     process_new_snapshots(spark, env["src"], env["state"], cfg)
 
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [_row("clip_c", env["base"], 16000,
                   "the quick brown fox jumps over the lazy dog today")],
@@ -178,7 +178,7 @@ def test_watch_replay_is_idempotent(spark, watch_env):
     env = watch_env
     process_new_snapshots(spark, env["src"], env["state"], cfg)
 
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [_row("clip_c", env["base"], 16000,
                   "the quick brown fox jumps over the lazy dog today")],
@@ -187,7 +187,7 @@ def test_watch_replay_is_idempotent(spark, watch_env):
         env["src"],
     )
     s1 = process_new_snapshots(spark, env["src"], env["state"], cfg)
-    state_rows = snap.read_table(spark, env["state"] / "signatures").count()
+    state_rows = iceberg_lite.read_table(spark, env["state"] / "signatures").count()
 
     # simulate the crash: rewind the engine checkpoint to before the batch
     ckpt_path = env["state"] / "_checkpoint.json"
@@ -199,7 +199,7 @@ def test_watch_replay_is_idempotent(spark, watch_env):
     s2 = process_new_snapshots(spark, env["src"], env["state"], cfg)
     # state not re-appended; alerts identical to the first run (no clip_c →
     # clip_c self-match rows)
-    assert snap.read_table(spark, env["state"] / "signatures").count() == state_rows
+    assert iceberg_lite.read_table(spark, env["state"] / "signatures").count() == state_rows
     assert s2["alerts"] == s1["alerts"]
     alerts = spark.read.parquet(str(env["state"] / "alerts")).toPandas()
     assert not ((alerts.new_id == alerts.matched_id).any())
@@ -212,7 +212,7 @@ def test_watch_empty_transcripts_never_text_match(spark, watch_env):
     env = watch_env
     process_new_snapshots(spark, env["src"], env["state"], cfg)
 
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [
                 _row("clip_s1", env["third"], 16000, "   "),
@@ -248,7 +248,7 @@ def test_watch_state_is_signatures_table_only(spark, watch_env):
          _row("clip_e", env["third"], 16000, "entirely novel content here")],
     ]
     for rows in commits:
-        snap.append_snapshot(spark.createDataFrame(rows, CLIP_SCHEMA), env["src"])
+        iceberg_lite.append_snapshot(spark.createDataFrame(rows, CLIP_SCHEMA), env["src"])
         s = process_new_snapshots(spark, env["src"], env["state"], cfg)
         assert s["alerts"] >= 1 and s["actions"] == 1
 
@@ -258,20 +258,40 @@ def test_watch_state_is_signatures_table_only(spark, watch_env):
     paths = [str(p.relative_to(state)) for p in state.rglob("*")]
     assert not [p for p in paths
                 if any(k in p for k in ("pbkt=", "dbkt=", "sbkt="))]
+    # the state is an Iceberg table with one snapshot per batch, each tagged
+    # with the source snapshot it ingested
+    assert iceberg_lite.is_iceberg_table(state / "signatures")
+    summaries = iceberg_lite.snapshot_summaries(state / "signatures")
+    assert [(m["snapshot_id"], m["source_snapshot"]) for m in summaries] == [
+        (0, "0"), (1, "1"), (2, "2")]
 
 
-def test_snapshot_table_roundtrip(spark, tmp_path):
-    d = tmp_path / "t"
-    df = spark.range(5).withColumnRenamed("id", "x")
-    sid = snap.append_snapshot(df, d)
-    assert sid == 0
-    sid2 = snap.append_snapshot(spark.range(5, 8).withColumnRenamed("id", "x"), d)
-    assert sid2 == 1
-    assert snap.read_table(spark, d).count() == 8
-    inc, latest = snap.read_incremental(spark, d, 0)
-    assert inc.count() == 3 and latest == 1
-    none_df, latest2 = snap.read_incremental(spark, d, 1)
-    assert none_df is None and latest2 == 1
+def test_watch_refuses_json_snapshot_log_state(spark, watch_env):
+    """A `signatures` dir in the retired JSON snapshot-log format (a
+    `_snapshots.json` log over parquet files, next to a checkpoint that
+    passes every other guard) is neither read nor bootstrapped over: the
+    batch raises and asks for a rebuild."""
+    import json
+
+    from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
+
+    env = watch_env
+    ckpt = {"last_source_snapshot": 0, "batches": 1,
+            "sig_kernel_version": SIG_KERNEL_VERSION,
+            "sim_algo": "dhash", "hash_algo": "sha256"}
+    env["state"].mkdir()
+    (env["state"] / "_checkpoint.json").write_text(json.dumps(ckpt))
+    old = env["state"] / "signatures"
+    data = old / "data" / "snap-000000"
+    spark.createDataFrame(
+        [("clip_z", "d", 1)], "clip_id string, digest string, size long"
+    ).write.parquet(str(data))
+    files = sorted(str(f) for f in data.glob("*.parquet"))
+    (old / "_snapshots.json").write_text(json.dumps(
+        [{"snapshot_id": 0, "files": files, "row_count": 1, "source_snapshot": 0}]))
+    with pytest.raises(ValueError, match="not an Iceberg table"):
+        process_new_snapshots(spark, env["src"], env["state"], DedupConfig())
+    assert read_checkpoint(env["state"]) == ckpt
 
 
 def test_watch_image_arrival_matches_persisted_image_state(spark, tmp_path):
@@ -295,7 +315,7 @@ def test_watch_image_arrival_matches_persisted_image_state(spark, tmp_path):
     def irow(mid, arr, txt):
         return (mid, bytearray(ppm_encode(arr)), 0, 0, "ppm", txt)
 
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [irow("img_a", img, "a sunny hillside photo"),
              irow("img_b", far, "unrelated picture entirely")],
@@ -307,10 +327,10 @@ def test_watch_image_arrival_matches_persisted_image_state(spark, tmp_path):
     assert s0["new_rows"] == 2 and s0["alerts"] == 0
 
     # image signatures really persisted (not nulls from decode failure)
-    sig_state = snap.read_table(spark, state / "signatures").toPandas()
+    sig_state = iceberg_lite.read_table(spark, state / "signatures").toPandas()
     assert sig_state.sim_sig.notna().all()
 
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame([irow("img_c", near, "completely new caption")], CLIP_SCHEMA),
         src,
     )
@@ -332,7 +352,7 @@ def test_watch_kernel_guard_defaults_v1_when_state_without_checkpoint(spark, tmp
     src = tmp_path / "src_table"
     state = tmp_path / "state"
     rng = np.random.RandomState(3)
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [_row("c1", _synth_pcm(rng, 16000, 300), 16000, "hello world sample")],
             CLIP_SCHEMA,
@@ -361,7 +381,7 @@ def test_watch_state_refuses_other_signature_settings(spark, watch_env, setting)
     process_new_snapshots(spark, env["src"], env["state"], DedupConfig())
     ck = read_checkpoint(env["state"])
     assert (ck["sim_algo"], ck["hash_algo"]) == ("dhash", "sha256")
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame([_row("clip_e", env["third"], 16000, "novel words")], CLIP_SCHEMA),
         env["src"],
     )
@@ -406,7 +426,7 @@ def test_watch_image_arrival_matches_persisted_image(spark, tmp_path):
 
     # mixed-modality bootstrap: one image + one audio clip in the same state
     rng = np.random.RandomState(5)
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [img_row("img_grad", ppm_encode(grad), "ppm", "a colorful gradient"),
              _row("aud_a", _synth_pcm(rng, 16000, 500), 16000, "spoken words here")],
@@ -419,7 +439,7 @@ def test_watch_image_arrival_matches_persisted_image(spark, tmp_path):
 
     # arrivals: a lossless BMP re-encode of the stored PPM (near-dup) and an
     # unrelated noise image (must not match anything)
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [img_row("img_dup", bmp_encode(grad), "bmp", "different words entirely"),
              img_row("img_noise", ppm_encode(noise), "ppm", "third transcript text")],
@@ -453,7 +473,7 @@ def test_watch_flac_transcode_arrival_matches_persisted_wav(spark, tmp_path):
     cfg = DedupConfig()
 
     wav = wav_encode(pcm, 16000)
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [("w_orig", bytearray(wav), 16000, 600, "wav", "original spoken words"),
              _row("w_other", other, 16000, "unrelated second clip text")],
@@ -467,7 +487,7 @@ def test_watch_flac_transcode_arrival_matches_persisted_wav(spark, tmp_path):
     # transcode the EXACT stored samples (what a real WAV->FLAC job does)
     s16 = np.round(wav_decode(wav)[0] * 32767.0).astype(np.int16)
     fl = flac_encode(s16, 16000)
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [("f_dup", bytearray(fl), 16000, 600, "flac", "different transcript text")],
             CLIP_SCHEMA,
@@ -500,7 +520,7 @@ def test_watch_aiff_and_adpcm_arrivals_match_persisted_wav(spark, tmp_path):
     cfg = DedupConfig()
 
     wav = wav_encode(pcm, 16000)
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [("w_orig", bytearray(wav), 16000, 600, "wav", "original spoken words"),
              _row("w_other", other, 16000, "unrelated second clip text")],
@@ -517,7 +537,7 @@ def test_watch_aiff_and_adpcm_arrivals_match_persisted_wav(spark, tmp_path):
         ("aiff_dup", aiff_encode_s16(s16, 16000), "aiff"),
         ("adpcm_dup", adpcm_encode_bytes(dec, 16000), "adpcm_ima_wav"),
     ]
-    snap.append_snapshot(
+    iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [(cid, bytearray(buf), 16000, 600, codec, f"text of {cid}")
              for cid, buf, codec in arrivals],
