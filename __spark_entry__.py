@@ -486,9 +486,8 @@ def q_events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 watch semantics under the value-level gate (round-4 directive 6):
     one incremental watch micro-batch expressed over the documents table
-    and run through the PRODUCTION match function
-    (streaming/watch.match_new_against_state — the matcher that
-    watch.batch_alerts runs per batch for both watch tiers,
+    and run through the PRODUCTION matcher (streaming/watch.batch_alerts —
+    the one matcher both watch tiers run per batch,
     watch.process_new_snapshots and stream.start_watch_stream's
     handle_batch), with the portable MinHash builders injected so DuckDB
     replicates bands + agreement value-for-value.
@@ -496,7 +495,10 @@ def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     State = documents with doc_id % 5 != 0 (the already-seen corpus);
     arrivals = doc_id % 5 = 0. The NEW arrival is the victim (SURVEY §2.7
     note; ref main.go:1846-1886): output one row per (arrival, kind) with
-    keeper_id = the min matched pre-existing doc and the match count."""
+    keeper_id = the min matched pre-existing doc and the match count. The
+    matcher also alerts between arrivals (the later id is the victim); the
+    oracle has no within-batch matches, so those alerts (matched_id % 5 = 0)
+    are dropped."""
     from file_deduplicator_spark.config import DedupConfig
     from file_deduplicator_spark.functions.portable import (
         EMPTY_SLOT_P,
@@ -504,7 +506,7 @@ def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_minhash_bands_col,
         with_portable_minhash_arrow,
     )
-    from file_deduplicator_spark.streaming.watch import match_new_against_state
+    from file_deduplicator_spark.streaming.watch import batch_alerts
 
     cfg = DedupConfig(jaccard_threshold=0.35)
     frame = (
@@ -517,7 +519,7 @@ def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     arrivals = frame.filter(F.col("clip_id") % 5 == 0)
     state = frame.filter(F.col("clip_id") % 5 != 0)
-    alerts = match_new_against_state(
+    alerts, _ = batch_alerts(
         arrivals, state, cfg,
         include=("exact", "similar_text"),
         mh_bands_builder=portable_minhash_bands_col,
@@ -526,7 +528,7 @@ def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
         mh_guard=lambda df, sig_col: df.filter(
             F.element_at(F.col(sig_col), 1) != F.lit(EMPTY_SLOT_P)),
     )
-    return alerts.groupBy("new_id", "match_kind").agg(
+    return alerts.filter(F.col("matched_id") % 5 != 0).groupBy("new_id", "match_kind").agg(
         F.min("matched_id").cast("long").alias("keeper_id"),
         F.countDistinct("matched_id").cast("long").alias("n_matches"),
     ).select(F.col("new_id").cast("long").alias("new_id"), "match_kind",

@@ -56,14 +56,15 @@ def band_table(df: DataFrame, bands_col, id_col: str = "clip_id",
 
 
 def bucket_members(band_df: DataFrame, cap: int, salt: int = 1,
-                   max_bucket: int | None = None) -> DataFrame:
+                   max_bucket: int | None = None, rank: str | None = None) -> DataFrame:
     """(band, bh, ids, bucket_n): deterministic capped member list per bucket.
 
     ONE aggregation replaces the round-1 window(count)+window(rank)+self-join
     topology (3 shuffles → 1): per bucket we keep the ``cap`` LOWEST ids
     (sorted collect + slice), so oversized buckets stay linked into clusters
     at bounded cost instead of being dropped; ``bucket_n`` is the TRUE size
-    for the skew metrics.
+    for the skew metrics. ``rank``: a payload column that leads the sort, so
+    members order by (rank, id) and the cap keeps the lowest ranks first.
 
     Skew/salting (north_rule: "partitioning / shuffle / skew handled
     explicitly"), HOT-BUCKET-TARGETED: blanket two-phase salting measured
@@ -83,8 +84,8 @@ def bucket_members(band_df: DataFrame, cap: int, salt: int = 1,
     The salted merge is exact: the global ``cap`` lowest ids are each the
     lowest within their own shard, so pre-capped shards preserve them.
 
-    ``max_bucket``: the caller-measured largest bucket (pipeline.near_dup_edges
-    gets it for every band family from one fused probe job). The plain
+    ``max_bucket``: the caller-measured largest bucket (bucket_stats gets
+    it for every band family from one fused probe job). The plain
     groupBy buffers a whole bucket before F.slice caps it, so what salting
     protects against is a bucket too big for one agg buffer, not one merely
     above the cap: with a known ``max_bucket ≤ max(cap, SAFE_COLLECT_MAX)``
@@ -92,10 +93,11 @@ def bucket_members(band_df: DataFrame, cap: int, salt: int = 1,
     ``max_bucket`` with ``salt > 1`` takes the salted topology.
     """
     # any payload columns (sig / fold / ...) ride the member struct; ids are
-    # unique so array_sort still orders by id (struct comparison is
-    # field-ordered and id is first)
-    extras = [c for c in band_df.columns if c not in ("id", "band", "bh")]
-    member = F.struct("id", *extras) if extras else F.col("id")
+    # unique so array_sort still orders by (rank,) id (struct comparison is
+    # field-ordered and those come first)
+    extras = [c for c in band_df.columns if c not in ("id", "band", "bh", rank)]
+    lead = [rank] if rank else []
+    member = F.struct(*lead, "id", *extras) if lead or extras else F.col("id")
     if max_bucket is not None and max_bucket <= max(cap, SAFE_COLLECT_MAX):
         salt = 1
     if salt > 1:
@@ -124,6 +126,32 @@ def bucket_members(band_df: DataFrame, cap: int, salt: int = 1,
         F.slice(F.array_sort(F.collect_list(member)), 1, cap).alias("ids"),
         F.count(F.lit(1)).alias("bucket_n"),
     )
+
+
+def bucket_stats(band_tables: dict[str, DataFrame], cap: int) -> dict[str, dict[str, int]]:
+    """Per named band table, the metrics bucket_pairs' ``observation``
+    records (``buckets``, ``max_bucket``, ``capped_buckets``,
+    ``capped_dropped_rows`` against ``cap``) before the expansion runs: ONE
+    fused probe job for every family (r06), which also materializes every
+    persisted band table."""
+    sizes = None
+    for fam, bt in band_tables.items():
+        part = (bt.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("n"))
+                .select(F.lit(fam).alias("fam"), "n"))
+        sizes = part if sizes is None else sizes.unionByName(part)
+    over = F.col("n") - cap
+    rows = sizes.groupBy("fam").agg(
+        F.count(F.lit(1)).alias("buckets"),
+        F.max("n").alias("max_bucket"),
+        F.count(F.when(over > 0, 1)).alias("capped_buckets"),
+        F.sum(F.greatest(over, F.lit(0))).alias("capped_dropped_rows"),
+    ).collect()
+    # a family without rows has no bucket, hence no row here: all zeros
+    names = ("buckets", "max_bucket", "capped_buckets", "capped_dropped_rows")
+    out = {fam: dict.fromkeys(names, 0) for fam in band_tables}
+    for row in rows:
+        out[row["fam"]] = {k: row[k] for k in names}
+    return out
 
 
 def member_pairs(ms, emit, keep=None) -> F.Column:
@@ -180,7 +208,7 @@ def fold_within(num_perm: int, min_agreement: float):
 
 def bucket_pairs(
     band_df: DataFrame, cfg: DedupConfig, keep=None, observation=None,
-    max_bucket: int | None = None,
+    max_bucket: int | None = None, emit=None, rank: str | None = None, distinct: bool = True,
 ) -> DataFrame:
     """Distinct (id_a < id_b) candidate pairs via per-bucket combination
     expansion — the one in-bucket pair operator for every band family.
@@ -200,9 +228,15 @@ def bucket_pairs(
     ``observation``: optional pyspark Observation; when given, bucket-count /
     max-size / capped-bucket / dropped-row metrics ride the first action for
     free (df.observe — no extra job), feeding the run-metrics table.
+
+    ``emit(x, y)``: optional output struct of a kept pair of members (x
+    sorts before y) in place of (id_a, id_b); its fields are the output
+    columns. ``rank``: see bucket_members; members then sort by (rank, id).
+    ``distinct=False`` leaves the cross-band dedup to a caller that dedups
+    its own output anyway, saving a shuffle.
     """
     grouped = bucket_members(band_df, cfg.bucket_cap, max(1, cfg.salt_buckets),
-                             max_bucket=max_bucket)
+                             max_bucket=max_bucket, rank=rank)
     if observation is not None:
         over = F.col("bucket_n") - cfg.bucket_cap
         grouped = grouped.observe(
@@ -219,15 +253,11 @@ def bucket_pairs(
 
     pairs = member_pairs(
         F.col("ids"),
-        lambda x, y: F.struct(key(x).alias("id_a"), key(y).alias("id_b")),
+        emit or (lambda x, y: F.struct(key(x).alias("id_a"), key(y).alias("id_b"))),
         keep,
     )
-    return (
-        grouped.filter(F.size("ids") > 1)
-        .select(F.explode(pairs).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
+    out = grouped.filter(F.size("ids") > 1).select(F.explode(pairs).alias("p")).select("p.*")
+    return out.distinct() if distinct else out
 
 
 def verify_pairs_minhash(

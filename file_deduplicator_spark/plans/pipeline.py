@@ -39,6 +39,7 @@ from file_deduplicator_spark.operators.keeper import label_keepers
 from file_deduplicator_spark.operators.lsh import (
     band_table,
     bucket_pairs,
+    bucket_stats,
     fold_within,
     hamming_within,
     verify_pairs_minhash,
@@ -180,30 +181,13 @@ def near_dup_edges(
     if caches is not None:
         caches.append(bands_t)
 
-    # ONE fused probe job for every band family (r06, guide §2.6): the
-    # per-family probes were separate eager jobs, each paying its own
-    # scheduling + cache-materialization pass; a union of the (map-side-
-    # combinable) per-family max-bucket aggregates materializes BOTH band
-    # caches in one job and returns both maxima in one collect. The result
-    # feeds bucket_members' collect-safety rule via max_bucket, skipping
-    # the per-call probes entirely.
+    # one fused probe job sizes both families' largest buckets, so
+    # bucket_members takes the plain groupBy where it is collect-safe
     max_by_family: dict[str, int] = {}
     if cfg.salt_buckets > 1:
-        probes = []
-        if bands_a is not None:
-            probes.append(
-                bands_a.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("n"))
-                .agg(F.max("n").alias("mx")).select(F.lit("a").alias("fam"), "mx")
-            )
-        probes.append(
-            bands_t.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("mx")).select(F.lit("t").alias("fam"), "mx")
-        )
-        fused = probes[0]
-        for extra in probes[1:]:
-            fused = fused.unionByName(extra)
-        for row in fused.collect():
-            max_by_family[row["fam"]] = row["mx"] if row["mx"] is not None else 0
+        families = {"t": bands_t} if bands_a is None else {"a": bands_a, "t": bands_t}
+        max_by_family = {fam: st["max_bucket"]
+                         for fam, st in bucket_stats(families, cfg.bucket_cap).items()}
 
     if bands_a is not None:
         parts.append(

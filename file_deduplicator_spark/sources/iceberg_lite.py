@@ -384,7 +384,9 @@ def append_snapshot(df: DataFrame, table_dir: str | Path, **summary) -> int:
     seq = meta["last-sequence-number"] + 1
 
     out = table_dir / "data" / f"snap-{snap_id:06d}"
-    df.write.mode("error").parquet(str(out))
+    # no metadata references snap_id yet: a dir already here is the orphan of
+    # an append that died before its metadata flip, safe to overwrite
+    df.write.mode("overwrite").parquet(str(out))
     files = sorted(out.glob("*.parquet"))
     import pyarrow.parquet as pq
 

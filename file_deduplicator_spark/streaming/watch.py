@@ -8,8 +8,8 @@ unwired (SURVEY snapshot-integrity note). Semantics preserved:
 * per batch: new rows are checked against the state (T4)
 * THE NEW ARRIVAL IS ALWAYS THE VICTIM — the pre-existing row is the keeper
   (unlike batch keep-criteria; SURVEY §2.7 note)
-* the O(n) per-arrival threshold scan (main.go:1874-1886) is replaced by an
-  LSH band equi-join against the persisted signature state
+* the O(n) per-arrival threshold scan (main.go:1874-1886) is replaced by
+  LSH buckets over the batch and the persisted signature state
 * auto-clean emits action rows, never silent deletes (T5)
 * WatchStats counters → metrics table               (A5)
 
@@ -26,13 +26,25 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
 from file_deduplicator_spark.functions.minhash_sql import (
+    EMPTY_SLOT,
     minhash_bands_col,
+    minhash_fold_col,
+    sig_agreement_col,
     simhash_bands_col,
+)
+from file_deduplicator_spark.functions.text import NUM_PERM
+from file_deduplicator_spark.operators.lsh import (
+    band_table,
+    bucket_pairs,
+    bucket_stats,
+    fold_within,
+    hamming_within,
 )
 from file_deduplicator_spark.sources import iceberg_lite
 
@@ -50,11 +62,11 @@ def read_checkpoint(state_dir: str | Path) -> dict:
     return json.loads(p.read_text())
 
 
-def _write_checkpoint(state_dir: str | Path, ckpt: dict) -> None:
-    p = _checkpoint_path(state_dir)
+def write_json(p: Path, obj: dict) -> None:
+    """Atomic replace: a crash leaves the old file or the new one."""
     p.parent.mkdir(parents=True, exist_ok=True)
     tmp = p.with_suffix(".tmp")
-    tmp.write_text(json.dumps(ckpt))
+    tmp.write_text(json.dumps(obj))
     tmp.rename(p)
 
 
@@ -63,124 +75,155 @@ def compute_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     to the persisted state columns. NOTE: a persisted state is bound to the
     signature kernel version and to the cfg's sim_algo and hash_algo it was
     built with (the MinHash format is fixed: functions/text.py) —
-    process_new_snapshots refuses to mix them."""
+    check_state_settings refuses to mix them, in both watch tiers."""
     from file_deduplicator_spark.plans.pipeline import with_signatures
 
     return with_signatures(df, cfg).select(*SIG_COLS)
 
 
-def match_new_against_state(
-    new_sigs: DataFrame, state: DataFrame, cfg: DedupConfig,
+def check_state_settings(state_dir: str | Path, recorded: dict, state_exists: bool,
+                         cfg: DedupConfig) -> dict:
+    """Raise ValueError when the state was built with another signature
+    kernel version, sim_algo or hash_algo; return the settings to record
+    with it. ``recorded`` is the snapshot tier's checkpoint or the stream
+    tier's settings file, empty when missing. A record without the kernel
+    marker means v1 when ``state_exists``: a snapshot-tier crash between
+    the state append and the checkpoint leaves state without a checkpoint
+    (round-3 advice); the stream tier writes its record before any state,
+    so it passes False. A record without sim_algo/hash_algo gains them."""
+    from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
+
+    state_ver = recorded.get("sig_kernel_version", 1 if state_exists else SIG_KERNEL_VERSION)
+    if state_ver != SIG_KERNEL_VERSION:
+        raise ValueError(
+            f"watch state at {state_dir} was built with signature kernel "
+            f"v{state_ver}, current engine is v{SIG_KERNEL_VERSION}: rebuild "
+            "the state (delete the state dir and re-bootstrap) — comparing "
+            "across kernel versions silently degrades match quality"
+        )
+    for key in ("sim_algo", "hash_algo"):
+        if recorded.get(key, getattr(cfg, key)) != getattr(cfg, key):
+            raise ValueError(
+                f"watch state at {state_dir} was built with {key}="
+                f"{recorded[key]!r}, this run has {getattr(cfg, key)!r}: use the "
+                "state's setting or rebuild the state"
+            )
+    return {"sig_kernel_version": SIG_KERNEL_VERSION,
+            "sim_algo": cfg.sim_algo, "hash_algo": cfg.hash_algo}
+
+
+def batch_alerts(
+    new_sigs: DataFrame, state: DataFrame | None, cfg: DedupConfig,
     include: tuple = ("exact", "similar_audio", "similar_text"),
     mh_bands_builder=None, mh_agreement=None, mh_guard=None,
-) -> DataFrame:
-    """Alerts: (new_id, matched_id, match_kind). New arrival = victim.
+) -> tuple[DataFrame, dict]:
+    """One micro-batch's alerts (new_id, matched_id, match_kind), persisted
+    for the caller to unpersist, and its stats: ``new_sigs`` against the
+    persisted ``state`` (None on the bootstrap batch = initialScan, T3) and
+    each other. THE NEW ARRIVAL IS THE VICTIM; between two arrivals the
+    later clip_id (SURVEY §4 determinism).
 
-    Exact: equi-join on digest (hashMap lookup, main.go:1846-1856).
-    Similar: SimHash band join + Hamming verify (replaces the O(n) scan,
-    main.go:1874-1886) and MinHash band join + agreement verify.
-    State side of the band join is derived from stored signatures — pure
-    column exprs, no re-decode of audio.
+    New ∪ state rows, tagged ``in_state``, feed every match; state rows whose
+    clip_id is in the batch are dropped first, so a replayed batch meets its
+    own rows once, as arrivals. Exact: one digest equi-join (main.go:
+    1846-1856). Similar (replaces the O(n) scan, main.go:1874-1886): per
+    family, lsh.bucket_pairs over the buckets holding a new row, keeping
+    pairs with a new side that pass the in-bucket verify (Hamming; for
+    MinHash the fold pre-filter, then the slot agreement on the survivors,
+    as in the batch path). Members sort new-first, so the cap evicts a new
+    row only from a bucket holding more than ``bucket_cap`` of them. Stats:
+    ``alerts`` and each family's lsh.bucket_stats as ``lsh_*`` /
+    ``lsh_text_*`` (the batch job's names; an Observation loses them when a
+    family yields no pair, as AQE swaps its plan for an empty relation).
 
-    ``include`` selects the match kinds built; ``mh_bands_builder`` /
+    ``include`` selects the match kinds; ``mh_bands_builder`` /
     ``mh_agreement`` / ``mh_guard`` override the MinHash band, verify and
-    degenerate-signature guard expressions — the value-level gate
-    (__spark_entry__.q_watch_arrivals) runs THIS function with the
-    portable (DuckDB-replicable) MinHash builders, so the join/victim
-    topology under the gate is the production watch code path itself.
+    degenerate-signature guard expressions, so the value-level gate
+    (__spark_entry__.q_watch_arrivals) runs THIS function with portable
+    (DuckDB-replicable) builders.
     """
     if not include:
         raise ValueError("include must name at least one match kind")
-    n = new_sigs.select(
-        F.col("clip_id").alias("new_id"),
-        F.col("digest").alias("n_digest"),
-        F.col("sim_sig").alias("n_sim"),
-        F.col("minhash_sig").alias("n_mh"),
-    )
-    s = state.select(
-        F.col("clip_id").alias("old_id"),
-        F.col("digest").alias("s_digest"),
-        F.col("sim_sig").alias("s_sim"),
-        F.col("minhash_sig").alias("s_mh"),
-    )
+    tagged = new_sigs.select(*SIG_COLS, F.lit(False).alias("in_state"))
+    if state is not None:
+        tagged = tagged.unionByName(
+            state.select(*SIG_COLS).join(new_sigs.select("clip_id"), "clip_id", "left_anti")
+            .withColumn("in_state", F.lit(True)))
+    # every match below reads it: the state is scanned and anti-joined once
+    tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
 
     parts = []
     if "exact" in include:
+        matched = tagged.select(F.col("clip_id").alias("matched_id"), "digest",
+                                F.col("in_state").alias("m_state"))
         parts.append(
-            n.join(s, F.col("n_digest") == F.col("s_digest"))
-            # a replayed batch can meet its own rows in state — never
-            # self-match
-            .filter(F.col("new_id") != F.col("old_id"))
-            .select("new_id", F.col("old_id").alias("matched_id"),
-                    F.lit("exact").alias("match_kind"))
-        )
+            tagged.filter(~F.col("in_state")).select(F.col("clip_id").alias("new_id"), "digest")
+            .join(matched, "digest")
+            .filter(F.col("m_state") | (F.col("matched_id") < F.col("new_id")))
+            .select("new_id", "matched_id", F.lit("exact").alias("match_kind")))
 
-    def explode_bands(df, sig_col, id_alias, bands_builder):
-        return df.where(F.col(sig_col).isNotNull()).select(
-            F.col(id_alias), F.col(sig_col),
-            F.explode(bands_builder(F.col(sig_col))).alias("e"),
-        ).select(id_alias, sig_col, F.col("e.band").alias("band"), F.col("e.bh").alias("bh"))
+    def live_bands(rows, bands, **payload):
+        # read by the probe and by the groupBy; state-only buckets never expand
+        bt = band_table(rows, bands, payload={**payload, "in_state": "in_state"})
+        if state is not None:
+            bt = bt.join(bt.filter(~F.col("in_state")).select("band", "bh"),
+                         ["band", "bh"], "left_semi")
+        return bt.persist(StorageLevel.MEMORY_AND_DISK)
 
+    families = {}  # stat prefix → (live band table, in-bucket verify, kind)
     if "similar_audio" in include:
-        nb = explode_bands(n, "n_sim", "new_id", simhash_bands_col)
-        sb = explode_bands(s, "s_sim", "old_id", simhash_bands_col)
-        parts.append(
-            nb.join(sb, ["band", "bh"])
-            .filter(F.bit_count(F.col("n_sim").bitwiseXOR(F.col("s_sim"))) <= cfg.effective_threshold)
-            .select("new_id", F.col("old_id").alias("matched_id"),
-                    F.lit("similar_audio").alias("match_kind"))
-            .distinct()
-        )
-
+        families["lsh_"] = (
+            live_bands(tagged.where(F.col("sim_sig").isNotNull()),
+                       simhash_bands_col(F.col("sim_sig")), sig="sim_sig"),
+            hamming_within(cfg.effective_threshold), "similar_audio")
     if "similar_text" in include:
-        from file_deduplicator_spark.functions.minhash_sql import (
-            EMPTY_SLOT,
-            sig_agreement_col,
-        )
-
         # empty/whitespace transcripts carry the degenerate all-EMPTY_SLOT
-        # signature: agreement would be 1.0 between ANY two silent clips,
-        # so they are excluded from the MinHash join (batch path guards
-        # this with the has-text flag in near_dup_edges; same rule here)
-        def default_guard(df, sig_col):
-            return df.filter(
-                F.element_at(F.col(sig_col), 1) != F.lit(EMPTY_SLOT))
+        # signature, whose agreement is 1.0 between ANY two silent clips:
+        # they never enter the band table (the batch path's has-text rule)
+        guard = mh_guard or (lambda df, c: df.filter(
+            F.element_at(F.col(c), 1) != F.lit(EMPTY_SLOT)))
+        text = guard(tagged, "minhash_sig")
+        agree = mh_agreement or (lambda a, b: sig_agreement_col(a, b) >= cfg.jaccard_threshold)
+        bands = (mh_bands_builder or minhash_bands_col)(F.col("minhash_sig"))
+        if mh_agreement is None:  # the fold bounds the engine's own 64-slot agreement only
+            fold = minhash_fold_col(F.col("minhash_sig"), NUM_PERM)
+            families["lsh_text_"] = (live_bands(text.withColumn("fold", fold), bands, fold="fold"),
+                                     fold_within(NUM_PERM, cfg.jaccard_threshold), "similar_text")
+        else:
+            families["lsh_text_"] = (live_bands(text, bands), lambda x, y: F.lit(True),
+                                     "similar_text")
+    stats = bucket_stats({k: f[0] for k, f in families.items()}, cfg.bucket_cap) if families else {}
 
-        guard = mh_guard or default_guard
-        mh_builder = mh_bands_builder or minhash_bands_col
-        agree = mh_agreement or (
-            lambda a, b: sig_agreement_col(a, b) >= cfg.jaccard_threshold)
-        nt = explode_bands(guard(n, "n_mh"), "n_mh", "new_id", mh_builder)
-        st = explode_bands(guard(s, "s_mh"), "s_mh", "old_id", mh_builder)
-        parts.append(
-            nt.join(st, ["band", "bh"])
-            .filter(agree(F.col("n_mh"), F.col("s_mh")))
-            .select("new_id", F.col("old_id").alias("matched_id"),
-                    F.lit("similar_text").alias("match_kind"))
-            .distinct()
-        )
+    def victim_first(x, y):  # x is new (new rows sort first); y is the victim iff new too
+        return F.struct(F.when(y["in_state"], x["id"]).otherwise(y["id"]).alias("new_id"),
+                        F.when(y["in_state"], y["id"]).otherwise(x["id"]).alias("matched_id"))
+
+    for prefix, (bt, verify, kind) in families.items():
+        pairs = bucket_pairs(
+            bt, cfg, emit=victim_first, rank="in_state", max_bucket=stats[prefix]["max_bucket"],
+            keep=lambda x, y, verify=verify: ~x["in_state"] & verify(x, y), distinct=False)
+        if kind == "similar_text":  # the slot agreement, on the pairs the buckets kept
+            sig = text.select("clip_id", "minhash_sig")
+            a, b = sig.alias("a"), sig.alias("b")
+            pairs = (pairs.join(a, F.col("new_id") == F.col("a.clip_id"))
+                     .join(b, F.col("matched_id") == F.col("b.clip_id"))
+                     .filter(agree(F.col("a.minhash_sig"), F.col("b.minhash_sig")))
+                     .select("new_id", "matched_id"))
+        parts.append(pairs.withColumn("match_kind", F.lit(kind)))
 
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    # replayed rows meeting themselves in state must never alert,
-    # whatever the match kind
-    return out.filter(F.col("new_id") != F.col("matched_id"))
-
-
-def batch_alerts(
-    new_sigs: DataFrame, state: DataFrame | None, cfg: DedupConfig
-) -> DataFrame:
-    """One micro-batch's alerts: ``new_sigs`` against the persisted
-    ``state`` (None on the bootstrap batch = initialScan, T3), plus
-    duplicates within the batch, where the later clip_id is the victim
-    (arrival order → stable id order, SURVEY §4 determinism note)."""
-    alerts = match_new_against_state(
-        new_sigs, new_sigs.select(*SIG_COLS), cfg
-    ).filter(F.col("new_id") > F.col("matched_id"))
-    if state is not None:
-        alerts = match_new_against_state(new_sigs, state, cfg).unionByName(alerts)
-    return alerts.distinct()
+    # a clip_id twice in one batch must never match itself, and one that two
+    # commits stored must not alert twice; the distinct also merges a pair's
+    # copies from several bands, and gives the alerts few partitions, so
+    # each batch writes few files
+    alerts = out.filter(F.col("new_id") != F.col("matched_id")).distinct().persist()
+    n_alerts = alerts.count()
+    for df in [tagged] + [bt for bt, _, _ in families.values()]:
+        df.unpersist()
+    return alerts, {"alerts": n_alerts, **{f"{prefix}{k}": v for prefix, fam in stats.items()
+                                           for k, v in fam.items()}}
 
 
 def process_new_snapshots(
@@ -193,8 +236,6 @@ def process_new_snapshots(
     duplicates vs state (and within the batch), extend state, advance the
     checkpoint. Returns WatchStats-style metrics (A5).
     """
-    from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
-
     state_dir = Path(state_dir)
     sig_table = state_dir / "signatures"
     if sig_table.exists() and not iceberg_lite.is_iceberg_table(sig_table):
@@ -205,36 +246,7 @@ def process_new_snapshots(
             "state (delete the state dir and re-bootstrap)"
         )
     ckpt = read_checkpoint(state_dir)
-    # persisted signatures are only comparable to signatures produced by the
-    # SAME kernel version (borderline envelope bits flip across numeric
-    # changes, e.g. the float64→float32 decode switch). A checkpoint without
-    # the marker predates versioning = version 1 — and that default applies
-    # whenever ANY state artifact exists on disk, not just when the
-    # checkpoint file says a snapshot was processed: a crash between the
-    # signatures append (the first state write of a batch) and
-    # _write_checkpoint leaves signature state without a checkpoint, and
-    # inferring "fresh state = current version" there would silently defeat
-    # the guard (round-3 advice).
-    if "sig_kernel_version" in ckpt:
-        state_ver = ckpt["sig_kernel_version"]
-    else:
-        state_ver = 1 if sig_table.exists() else SIG_KERNEL_VERSION
-    if state_ver != SIG_KERNEL_VERSION:
-        raise ValueError(
-            f"watch state at {state_dir} was built with signature kernel "
-            f"v{state_ver}, current engine is v{SIG_KERNEL_VERSION}: rebuild "
-            "the state (delete the state dir and re-bootstrap) — comparing "
-            "across kernel versions silently degrades match quality"
-        )
-    # likewise the settings that change what a stored signature means; a
-    # checkpoint without them predates this guard and gains them on write
-    for key in ("sim_algo", "hash_algo"):
-        if ckpt.get(key, getattr(cfg, key)) != getattr(cfg, key):
-            raise ValueError(
-                f"watch state at {state_dir} was built with {key}="
-                f"{ckpt[key]!r}, this run has {getattr(cfg, key)!r}: use the "
-                "state's setting or rebuild the state"
-            )
+    settings = check_state_settings(state_dir, ckpt, sig_table.exists(), cfg)
     new_rows, latest = iceberg_lite.read_incremental(
         spark, source_table, ckpt["last_source_snapshot"]
     )
@@ -246,26 +258,21 @@ def process_new_snapshots(
     # runs the same size/pattern checks per watch event)
     from file_deduplicator_spark.plans.pipeline import apply_prefilters
 
-    new_rows = apply_prefilters(new_rows, cfg)
-    new_sigs = compute_signatures(new_rows, cfg).persist()
+    new_sigs = compute_signatures(apply_prefilters(new_rows, cfg), cfg).persist()
 
-    # the whole signatures table is the state side of every join: each row
-    # has 16 band keys per family, so a 10-row commit already hashes into
-    # ~92% of a 64-bucket band index, whose read is then larger than this
-    # scan (README scale notes)
+    # the whole signatures table is the state side of every match: a band
+    # index read more than this scan (README scale notes)
     have_state = iceberg_lite.is_iceberg_table(sig_table)
     state = iceberg_lite.read_table(spark, sig_table) if have_state else None
-    alerts = batch_alerts(new_sigs, state, cfg).persist()
-    n_alerts = alerts.count()
+    alerts, match_stats = batch_alerts(new_sigs, state, cfg)
+    n_alerts = match_stats["alerts"]
     n_new = new_sigs.count()
     batch_id = ckpt["batches"]
 
-    # commit protocol (idempotent replay): state append is tagged with the
-    # SOURCE snapshot id and skipped if that snapshot was already ingested
-    # (crash between append and checkpoint; summary values are strings);
-    # alerts/actions go to a deterministic per-batch directory with
-    # overwrite semantics, so a replayed batch rewrites identical output
-    # instead of duplicating it.
+    # commit protocol (idempotent replay): the state append is tagged with
+    # the SOURCE snapshot id (summary values are strings) and skipped if that
+    # snapshot was already ingested; alerts/actions overwrite a per-batch
+    # directory, so a replayed batch rewrites identical output.
     already = have_state and any(
         m.get("source_snapshot") == str(latest)
         for m in iceberg_lite.snapshot_summaries(sig_table)
@@ -300,18 +307,10 @@ def process_new_snapshots(
             str(state_dir / "actions" / f"batch={batch_id}")
         )
 
-    ckpt = {"last_source_snapshot": latest, "batches": batch_id + 1,
-            "sig_kernel_version": SIG_KERNEL_VERSION,
-            "sim_algo": cfg.sim_algo, "hash_algo": cfg.hash_algo}
-    _write_checkpoint(state_dir, ckpt)
+    write_json(_checkpoint_path(state_dir),
+               {"last_source_snapshot": latest, "batches": batch_id + 1, **settings})
 
-    stats = {
-        "new_rows": n_new,
-        "alerts": n_alerts,
-        "actions": n_actions,
-        "batch": batch_id,
-        "last_source_snapshot": latest,
-    }
     new_sigs.unpersist()
     alerts.unpersist()
-    return stats
+    return {"new_rows": n_new, "actions": n_actions, "batch": batch_id,
+            "last_source_snapshot": latest, **match_stats}

@@ -46,3 +46,33 @@ def test_watch_stream_detects_duplicates(spark, tmp_path):
     alerts2 = spark.read.parquet(str(state / "alerts")).toPandas()
     assert len(alerts2) == len(alerts)
 
+
+
+def test_watch_stream_refuses_state_built_with_other_settings(spark, tmp_path):
+    """A restart with another sim_algo would match phash arrivals against
+    dhash state: it raises before the stream starts, as the snapshot tier
+    does."""
+    import json
+
+    import pytest
+
+    rng = np.random.RandomState(12)
+    inp = tmp_path / "incoming"
+    inp.mkdir()
+    state = tmp_path / "state"
+    spark.createDataFrame(
+        [_row("s1", _synth_pcm(rng, 16000, 400), 16000, "alpha beta gamma delta")],
+        CLIPS_SCHEMA,
+    ).write.mode("append").parquet(str(inp))
+    start_watch_stream(spark, inp, state, DedupConfig()).awaitTermination(120)
+    assert any((state / "signatures").glob("**/*.parquet"))
+
+    with pytest.raises(ValueError, match="sim_algo"):
+        start_watch_stream(spark, inp, state, DedupConfig(sim_algo="phash"))
+
+    # a state written before the settings file existed says nothing of its
+    # settings: the restart records its own, and warns
+    (state / "_state_settings.json").unlink()
+    with pytest.warns(UserWarning, match="unchecked"):
+        start_watch_stream(spark, inp, state, DedupConfig(sim_algo="phash")).awaitTermination(120)
+    assert json.loads((state / "_state_settings.json").read_text())["sim_algo"] == "phash"

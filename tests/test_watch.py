@@ -551,3 +551,154 @@ def test_watch_aiff_and_adpcm_arrivals_match_persisted_wav(spark, tmp_path):
     sim = set(zip(alerts.new_id, alerts.matched_id))
     assert ("aiff_dup", "w_orig") in sim
     assert ("adpcm_dup", "w_orig") in sim
+
+
+def test_watch_replay_of_within_batch_duplicates_is_idempotent(spark, watch_env):
+    """Two byte-identical arrivals in one commit: the later id is the victim.
+    A replay after a crash between the state append and the checkpoint finds
+    both rows in state; it must alert exactly as the first run did, not on
+    each pair in both directions (which would mark the keeper for removal
+    too)."""
+    import json
+
+    cfg = DedupConfig(watch_auto_clean=True)
+    env = watch_env
+    process_new_snapshots(spark, env["src"], env["state"], cfg)
+    iceberg_lite.append_snapshot(
+        spark.createDataFrame(
+            [_row(cid, env["third"], 16000, "identical words in both copies")
+             for cid in ("x1", "x2")],
+            CLIP_SCHEMA,
+        ),
+        env["src"],
+    )
+
+    def outputs():
+        alerts = spark.read.parquet(str(env["state"] / "alerts" / "batch=1")).toPandas()
+        actions = spark.read.parquet(str(env["state"] / "actions" / "batch=1")).toPandas()
+        return (sorted(zip(alerts.new_id, alerts.matched_id, alerts.match_kind)),
+                sorted(zip(actions.clip_id, actions.keeper_id, actions.action)))
+
+    s1 = process_new_snapshots(spark, env["src"], env["state"], cfg)
+    first = outputs()
+    assert first[0] == [("x2", "x1", k) for k in ("exact", "similar_audio", "similar_text")]
+    assert first[1] == [("x2", "x1", "remove")]
+
+    ckpt_path = env["state"] / "_checkpoint.json"
+    ck = json.loads(ckpt_path.read_text())
+    ck["last_source_snapshot"] -= 1
+    ck["batches"] -= 1
+    ckpt_path.write_text(json.dumps(ck))
+
+    s2 = process_new_snapshots(spark, env["src"], env["state"], cfg)
+    assert outputs() == first
+    assert (s2["alerts"], s2["actions"]) == (s1["alerts"], s1["actions"]) == (3, 1)
+
+
+def test_watch_batch_replays_over_orphan_snapshot_dir(spark, watch_env, tmp_path):
+    """A batch that died inside the state append leaves the next snapshot's
+    data dir without metadata. The replay overwrites that orphan and alerts
+    exactly as an uninterrupted run does."""
+    import shutil
+
+    cfg = DedupConfig()
+    env = watch_env
+    clean = tmp_path / "clean_state"
+    for state in (env["state"], clean):
+        process_new_snapshots(spark, env["src"], state, cfg)
+    data = env["state"] / "signatures" / "data"
+    shutil.copytree(data / "snap-000000", data / "snap-000001")
+
+    iceberg_lite.append_snapshot(
+        spark.createDataFrame(
+            [_row("clip_c", env["base"], 16000,
+                  "the quick brown fox jumps over the lazy dog today")],
+            CLIP_SCHEMA,
+        ),
+        env["src"],
+    )
+
+    def alerts(state):
+        s = process_new_snapshots(spark, env["src"], state, cfg)
+        df = spark.read.parquet(str(state / "alerts")).toPandas()
+        return s["alerts"], sorted(zip(df.new_id, df.matched_id, df.match_kind))
+
+    got, want = alerts(env["state"]), alerts(clean)
+    assert got == want and want[0] >= 1
+    assert iceberg_lite.read_table(spark, env["state"] / "signatures").count() == 3
+
+
+def test_watch_arrival_sorting_below_its_state_match_is_the_victim(spark, tmp_path):
+    """Inside an id-sorted bucket the arrival may come first: it is still the
+    victim and the state row the keeper."""
+    rng = np.random.RandomState(9)
+    pcm = _synth_pcm(rng, 16000, 500)
+    src, state = tmp_path / "src", tmp_path / "state"
+    cfg = DedupConfig(watch_auto_clean=True)
+    txt = "one transcript shared by the stored clip and its copy"
+    iceberg_lite.append_snapshot(
+        spark.createDataFrame([_row("z999", pcm, 16000, txt)], CLIP_SCHEMA), src)
+    process_new_snapshots(spark, src, state, cfg)
+    iceberg_lite.append_snapshot(
+        spark.createDataFrame([_row("a000", pcm * 0.5, 16000, txt)], CLIP_SCHEMA), src)
+    s = process_new_snapshots(spark, src, state, cfg)
+
+    alerts = spark.read.parquet(str(state / "alerts")).toPandas()
+    assert sorted(zip(alerts.new_id, alerts.matched_id, alerts.match_kind)) == [
+        ("a000", "z999", "similar_audio"), ("a000", "z999", "similar_text")]
+    actions = spark.read.parquet(str(state / "actions")).toPandas()
+    assert list(zip(actions.clip_id, actions.keeper_id)) == [("a000", "z999")]
+    assert s["actions"] == 1
+
+
+def test_watch_hot_state_bucket_is_capped_and_counted(spark, tmp_path):
+    """Six state clips share one audio signature (one PCM as WAV, as FLAC and
+    at four gains: distinct digests, equal sim_sig), so each of the audio
+    band buckets they fall in is hot. Two arrivals with that signature join
+    them: 8 members per bucket against bucket_cap=4.
+
+    What the cap does to alerts: members sort new-first, so each bucket
+    keeps both arrivals and the 2 lowest state ids. Every arrival is still
+    alerted, and keeps the keeper an uncapped run gives it (h0 → h1, h9 → h0),
+    but against fewer matches: h0 against h1-h2 (uncapped h1-h6), h9 against
+    h0-h2 (uncapped h0-h6). The commit's stats count it: every capped bucket
+    drops 8 - 4 = 4 rows."""
+    from file_deduplicator_spark.functions.audio import wav_decode
+    from file_deduplicator_spark.functions.flac import flac_encode
+
+    rng = np.random.RandomState(21)
+    pcm = _synth_pcm(rng, 16000, 600)
+    wav = wav_encode(pcm, 16000)
+    s16 = np.round(wav_decode(wav)[0] * 32767.0).astype(np.int16)
+
+    words = iter(["amber basin", "cobalt drift", "ember fjord", "garnet hollow",
+                  "indigo jetty", "kelp lantern", "mossy nectar", "onyx prairie"])
+
+    def clip(cid, payload, codec):
+        return (cid, bytearray(payload), 16000, 600, codec, f"{next(words)} {cid} spoken")
+
+    stored = [clip("h1", wav, "wav"), clip("h2", flac_encode(s16, 16000), "flac")] + [
+        clip(f"h{i}", wav_encode(pcm * g, 16000), "wav")
+        for i, g in ((3, 0.9), (4, 0.8), (5, 0.7), (6, 0.6))]
+    src, state = tmp_path / "src", tmp_path / "state"
+    cfg = DedupConfig(bucket_cap=4, watch_auto_clean=True)
+    iceberg_lite.append_snapshot(spark.createDataFrame(stored, CLIP_SCHEMA), src)
+    process_new_snapshots(spark, src, state, cfg)
+    assert iceberg_lite.read_table(spark, state / "signatures").select(
+        "sim_sig").distinct().count() == 1
+
+    iceberg_lite.append_snapshot(spark.createDataFrame(
+        [clip("h0", wav_encode(pcm * 0.5, 16000), "wav"),
+         clip("h9", wav_encode(pcm * 0.4, 16000), "wav")], CLIP_SCHEMA), src)
+    s = process_new_snapshots(spark, src, state, cfg)
+
+    assert s["lsh_max_bucket"] == 8
+    assert s["lsh_capped_buckets"] >= 1
+    assert s["lsh_capped_dropped_rows"] == 4 * s["lsh_capped_buckets"]
+    assert s["lsh_text_capped_buckets"] == 0
+    alerts = spark.read.parquet(str(state / "alerts" / "batch=1")).toPandas()
+    assert sorted(zip(alerts.new_id, alerts.matched_id, alerts.match_kind)) == [
+        (new, old, "similar_audio")
+        for new, old in (("h0", "h1"), ("h0", "h2"), ("h9", "h0"), ("h9", "h1"), ("h9", "h2"))]
+    actions = spark.read.parquet(str(state / "actions" / "batch=1")).toPandas()
+    assert sorted(zip(actions.clip_id, actions.keeper_id)) == [("h0", "h1"), ("h9", "h0")]
