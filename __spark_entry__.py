@@ -453,7 +453,9 @@ def q_events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     by (ts, event_id), a new batch starts when the gap from the previous
     event exceeds the interval. 300 s here — scaled to the synthetic
     table's minutes-apart gaps; the reference default is 2 s on fsnotify
-    streams. Streaming equivalent lives in streaming/stream.py (T2)."""
+    streams. At runtime T2's cadence is the schedule on which the caller
+    runs watch.process_new_snapshots (one batch per call); this query stays
+    as the value-level T2 analog."""
     from pyspark.sql import Window
 
     interval_us = 300 * 1_000_000
@@ -487,10 +489,9 @@ def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 watch semantics under the value-level gate (round-4 directive 6):
     one incremental watch micro-batch expressed over the documents table
     and run through the PRODUCTION matcher (streaming/watch.batch_alerts —
-    the one matcher both watch tiers run per batch,
-    watch.process_new_snapshots and stream.start_watch_stream's
-    handle_batch), with the portable MinHash builders injected so DuckDB
-    replicates bands + agreement value-for-value.
+    the matcher watch.process_new_snapshots runs per batch), with the
+    portable MinHash builders injected so DuckDB replicates bands +
+    agreement value-for-value.
 
     State = documents with doc_id % 5 != 0 (the already-seen corpus);
     arrivals = doc_id % 5 = 0. The NEW arrival is the victim (SURVEY §2.7

@@ -50,8 +50,8 @@ from file_deduplicator_spark.operators.report import action_plan, cluster_stats,
 def apply_prefilters(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Cheap predicates BEFORE the expensive signature stage (filter-then-
     hash, ref main.go:396-441), expressed directly on ``bytes`` so Catalyst
-    pushes them into the scan. Shared by the batch pipeline AND the
-    watch/stream paths — the reference re-applies the same size/pattern
+    pushes them into the scan. Shared by the batch pipeline AND watch
+    (streaming/watch.py) — the reference re-applies the same size/pattern
     checks per watch event (main.go:1683-1704, F6)."""
     pre = df
     if cfg.min_size > 0 or cfg.max_size > 0:

@@ -1,2 +1,2 @@
-"""Incremental ("watch mode") dedup: snapshot-driven batches and a
-Structured Streaming wrapper, both matching through watch.batch_alerts."""
+"""Incremental ("watch mode") dedup: one driver, watch.process_new_snapshots,
+matching each commit through watch.batch_alerts."""

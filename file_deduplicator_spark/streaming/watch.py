@@ -5,7 +5,9 @@ processNewFiles main.go:1829-1921), which at HEAD is design-complete but
 unwired (SURVEY snapshot-integrity note). Semantics preserved:
 
 * initial scan bootstraps the signature state       (initialScan, T3)
-* per batch: new rows are checked against the state (T4)
+* per batch: new rows are checked against the state (T4); a batch is one
+  ``process_new_snapshots`` call, so the caller's schedule for it is the
+  fsnotify loop's cadence (T1/T2)
 * THE NEW ARRIVAL IS ALWAYS THE VICTIM — the pre-existing row is the keeper
   (unlike batch keep-criteria; SURVEY §2.7 note)
 * the O(n) per-arrival threshold scan (main.go:1874-1886) is replaced by
@@ -15,10 +17,12 @@ unwired (SURVEY snapshot-integrity note). Semantics preserved:
 
 Resumability (north rule): state = a ``signatures`` Iceberg table
 (sources/iceberg_lite.py), one snapshot per batch tagged with the source
-snapshot it ingested, + a checkpoint file carrying the last processed source
-snapshot id, written only after a batch fully succeeds; a replayed batch
-skips the append its tag shows was made, so it replays idempotently. The
-source is an Iceberg table too, read from the checkpointed snapshot id on.
+snapshot it ingested, + ``_checkpoint.json`` carrying the last processed
+source snapshot id and the signature settings, written only after a batch
+fully succeeds, + ``alerts/batch=N`` and ``actions/batch=N``. A replayed
+batch skips the append its tag shows was made and overwrites its batch
+dirs, so it replays idempotently. The source is an Iceberg table too, read
+from the checkpointed snapshot id on.
 """
 
 from __future__ import annotations
@@ -70,30 +74,19 @@ def write_json(p: Path, obj: dict) -> None:
     tmp.rename(p)
 
 
-def compute_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Shared signature projection (plans.pipeline.with_signatures) slimmed
-    to the persisted state columns. NOTE: a persisted state is bound to the
-    signature kernel version and to the cfg's sim_algo and hash_algo it was
-    built with (the MinHash format is fixed: functions/text.py) —
-    check_state_settings refuses to mix them, in both watch tiers."""
-    from file_deduplicator_spark.plans.pipeline import with_signatures
-
-    return with_signatures(df, cfg).select(*SIG_COLS)
-
-
-def check_state_settings(state_dir: str | Path, recorded: dict, state_exists: bool,
-                         cfg: DedupConfig) -> dict:
+def check_signature_settings(state_dir: str | Path, ckpt: dict, cfg: DedupConfig) -> dict:
     """Raise ValueError when the state was built with another signature
-    kernel version, sim_algo or hash_algo; return the settings to record
-    with it. ``recorded`` is the snapshot tier's checkpoint or the stream
-    tier's settings file, empty when missing. A record without the kernel
-    marker means v1 when ``state_exists``: a snapshot-tier crash between
-    the state append and the checkpoint leaves state without a checkpoint
-    (round-3 advice); the stream tier writes its record before any state,
-    so it passes False. A record without sim_algo/hash_algo gains them."""
+    kernel version, sim_algo or hash_algo; return the settings to record in
+    its checkpoint. A persisted state is bound to all three (the MinHash
+    format is fixed: functions/text.py), and comparing across them silently
+    degrades matches. A checkpoint without the kernel marker means v1 when a
+    ``signatures`` table exists: a crash between the state append and the
+    checkpoint write leaves state without a checkpoint. A checkpoint without
+    sim_algo/hash_algo gains them."""
     from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
 
-    state_ver = recorded.get("sig_kernel_version", 1 if state_exists else SIG_KERNEL_VERSION)
+    state_exists = (Path(state_dir) / "signatures").exists()
+    state_ver = ckpt.get("sig_kernel_version", 1 if state_exists else SIG_KERNEL_VERSION)
     if state_ver != SIG_KERNEL_VERSION:
         raise ValueError(
             f"watch state at {state_dir} was built with signature kernel "
@@ -102,10 +95,10 @@ def check_state_settings(state_dir: str | Path, recorded: dict, state_exists: bo
             "across kernel versions silently degrades match quality"
         )
     for key in ("sim_algo", "hash_algo"):
-        if recorded.get(key, getattr(cfg, key)) != getattr(cfg, key):
+        if ckpt.get(key, getattr(cfg, key)) != getattr(cfg, key):
             raise ValueError(
                 f"watch state at {state_dir} was built with {key}="
-                f"{recorded[key]!r}, this run has {getattr(cfg, key)!r}: use the "
+                f"{ckpt[key]!r}, this run has {getattr(cfg, key)!r}: use the "
                 "state's setting or rebuild the state"
             )
     return {"sig_kernel_version": SIG_KERNEL_VERSION,
@@ -246,7 +239,7 @@ def process_new_snapshots(
             "state (delete the state dir and re-bootstrap)"
         )
     ckpt = read_checkpoint(state_dir)
-    settings = check_state_settings(state_dir, ckpt, sig_table.exists(), cfg)
+    settings = check_signature_settings(state_dir, ckpt, cfg)
     new_rows, latest = iceberg_lite.read_incremental(
         spark, source_table, ckpt["last_source_snapshot"]
     )
@@ -256,9 +249,9 @@ def process_new_snapshots(
 
     # F6: re-apply the batch filters to new arrivals (ref main.go:1683-1704
     # runs the same size/pattern checks per watch event)
-    from file_deduplicator_spark.plans.pipeline import apply_prefilters
+    from file_deduplicator_spark.plans.pipeline import apply_prefilters, with_signatures
 
-    new_sigs = compute_signatures(apply_prefilters(new_rows, cfg), cfg).persist()
+    new_sigs = with_signatures(apply_prefilters(new_rows, cfg), cfg).select(*SIG_COLS).persist()
 
     # the whole signatures table is the state side of every match: a band
     # index read more than this scan (README scale notes)

@@ -268,12 +268,6 @@ def test_cc_checkpoint_fallback_path_converges(spark, monkeypatch):
     assert comp._CKPT_PATH_ACTIVE == "fallback"
 
 
-def test_cc_checkpoint_probe(spark):
-    from file_deduplicator_spark.operators.components import detached_checkpoint_probe
-
-    assert detached_checkpoint_probe(spark) in ("internal", "fallback")
-
-
 def test_bucket_members_adaptive_shortcut(spark):
     """A measured skew-free max_bucket takes the single-shuffle plain path;
     without one, salt > 1 runs the salted topology. Both topologies must
