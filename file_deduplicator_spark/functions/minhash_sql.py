@@ -6,8 +6,8 @@ The signatures themselves come from ``udfs.signatures_map_in_arrow``
 resulting ``minhash_sig`` / ``sim_sig`` columns: MinHash band keys, the
 in-bucket nibble fold and its mismatch count, slot agreement and SimHash
 block-subset band keys. The word/shingle helpers (``words_col``,
-``shingles_from_words``) serve the text operators
-(``operators/textops.py``, ``operators/containment.py``).
+``shingles_from_words``) serve the text operators in
+``operators/textops.py``.
 
 The band layout is the constants below, not a setting: batch, watch and
 image matching all band with them, so stored signatures stay comparable.

@@ -7,8 +7,10 @@ Determinism: every hash here is seed-fixed — blake2b shingle base hashes,
 affine permutations from ``minhash_params(num_perm, seed)``. The pipeline
 runs them at the one format below (NUM_PERM, SHINGLE_K, MINHASH_SEED).
 
-Also ``token_count``: the Python form that ``operators/textops.py``'s
-``token_count_col`` is tested against.
+Also ``winnowed_fingerprints_batch``, the containment stage's candidate
+kernel (``operators/containment.py``) — same tokenizer and shingle hash as
+the MinHash — and ``token_count``: the Python form that
+``operators/textops.py``'s ``token_count_col`` is tested against.
 """
 
 from __future__ import annotations
@@ -43,7 +45,11 @@ def tokenize(text: str) -> list[str]:
 
 def shingles(text: str, k: int) -> list[str]:
     """k-word shingles joined by single spaces; < k words → one shingle of all."""
-    words = tokenize(text)
+    return word_shingles(tokenize(text), k)
+
+
+def word_shingles(words: list[str], k: int) -> list[str]:
+    """``shingles`` over an already tokenized text."""
     if not words:
         return []
     if len(words) < k:
@@ -95,12 +101,67 @@ def token_count(text: str) -> int:
 def shingle_base31(text: str, k: int) -> np.ndarray:
     """31-bit-folded blake2b base hashes of the k-word shingles — the input
     of the affine/M61 step (minhash_from_hashes)."""
+    return _base31(shingles(text, k))
+
+
+def _base31(shingle_list: list[str]) -> np.ndarray:
     _b2b, _fb = _BLAKE2B, int.from_bytes  # local binds: this is a hot loop
     out = [
         _fb(_b2b(s.encode("utf-8"), digest_size=8).digest(), "big") & HASH_MASK_31
-        for s in shingles(text, k)
+        for s in shingle_list
     ]
     return np.asarray(out, dtype=np.int64)
+
+
+def winnow_batch(hashes: list[np.ndarray], window: int) -> tuple[np.ndarray, np.ndarray]:
+    """Distinct window-minimum fingerprints of each row's hash sequence, as
+    flat ``(row, fp)`` arrays sorted by row, then fp.
+
+    A row of 0 hashes gives nothing; a row of ``size <= window`` hashes one
+    window, the min of all; a longer row ``size - window + 1`` windows. The
+    sliding min runs once over the batch's concatenated hashes; windows
+    that straddle two rows are never read. Hashes must be non-negative and
+    < 2^31 (``shingle_base31``): each (row, fp) packs into one int64 key
+    for the per-row distinct."""
+    counts = np.fromiter((h.size for h in hashes), dtype=np.int64, count=len(hashes))
+    if not counts.any():
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    allh = np.concatenate([h for h in hashes if h.size]).astype(np.int64, copy=False)
+    offs = np.zeros(counts.size, dtype=np.int64)
+    np.cumsum(counts[:-1], out=offs[1:])
+    # short rows: one window, the min of the whole row (reduceat over every
+    # non-empty row's start, so each segment ends where its row does)
+    nz = counts > 0
+    short = nz & (counts <= window)
+    short_fp = np.minimum.reduceat(allh, offs[nz])[short[nz]]
+    # long rows: window starts off .. off + count - window
+    long_ = counts > window
+    n_win = counts[long_] - window + 1
+    if n_win.size:
+        mins = np.lib.stride_tricks.sliding_window_view(allh, window).min(axis=1)
+        first = np.repeat(offs[long_] - np.cumsum(n_win) + n_win, n_win)
+        long_fp = mins[first + np.arange(first.size, dtype=np.int64)]
+    else:
+        long_fp = allh[:0]
+    key = np.unique(np.concatenate([
+        (np.flatnonzero(short) << 31) | short_fp,
+        (np.repeat(np.flatnonzero(long_), n_win) << 31) | long_fp,
+    ]))
+    return key >> 31, key & HASH_MASK_31
+
+
+def winnowed_fingerprints_batch(
+    texts, k: int, window: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Containment candidates for a batch of texts: ``(n_words, row, fp)``.
+
+    ``n_words`` has one entry per text (its ``tokenize`` word count);
+    ``row``/``fp`` are ``winnow_batch`` over each text's ``shingle_base31``
+    hashes. None rows count as empty text: 0 words, no fingerprints."""
+    words = [tokenize(t) if t is not None else [] for t in texts]
+    n_words = np.fromiter((len(w) for w in words), dtype=np.int32, count=len(words))
+    row, fp = winnow_batch([_base31(word_shingles(w, k)) for w in words], window)
+    return n_words, row, fp
 
 
 def minhash_signature_py(text: str, a: np.ndarray, b: np.ndarray, k: int) -> np.ndarray:

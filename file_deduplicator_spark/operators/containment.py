@@ -5,28 +5,30 @@ the reference only matches whole-content digests and whole-image hashes).
 Why not MinHash: containment of a short transcript A inside a long B has
 Jaccard |A|/|B| → 0, so symmetric MinHash misses it by design.
 
-Candidate generation (JVM-side, winnowing — Schleimer et al., MOSS 2003):
-over the k-word shingle hash sequence, select the minimum hash of every
-``window`` consecutive shingles. GUARANTEE: any shared contiguous run of
+Candidate generation (winnowing — Schleimer et al., MOSS 2003): over the
+k-word shingle hash sequence, select the minimum hash of every ``window``
+consecutive shingles. GUARANTEE: any shared contiguous run of
 ≥ window + k - 1 words shares at least one selected fingerprint, so recall
 for ≥ CONTAINMENT_MIN_WORDS overlaps is 1.0 at WINNOW_WINDOW =
-CONTAINMENT_MIN_WORDS - SHINGLE_K + 1.
+CONTAINMENT_MIN_WORDS - SHINGLE_K + 1. The fingerprints come from one
+``mapInArrow`` pass (``fingerprint_rows``) running the Python text kernel
+``text.winnowed_fingerprints_batch``: the tokenizer and shingle hash of the
+MinHash stage, and the verify's own ``lower().split()`` words. The capped
+per-fingerprint grouping and the pair expansion are Column expressions.
 
 Verification (Python, per container): build the suffix array of the
 container transcript ONCE, binary-search each candidate needle
-(functions/suffix.py). Grouped by container id via applyInPandas — each
-group is one container + all its candidate needles; skew-bounded by the
-per-fingerprint bucket cap.
+(functions/suffix.py). Rows are shuffled by container id and sorted, so
+each container and all its candidate needles arrive together;
+skew-bounded by the per-fingerprint bucket cap.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
-from file_deduplicator_spark.functions.minhash_sql import shingles_from_words, words_col
 from file_deduplicator_spark.functions.text import SHINGLE_K
 from file_deduplicator_spark.operators.lsh import member_pairs
 
@@ -50,6 +52,33 @@ def winnowed_fingerprints_col(hashes: Column, window: int) -> Column:
     return F.when(n <= 0, F.array().cast("array<long>")).otherwise(F.array_distinct(wins))
 
 
+def fingerprint_rows(
+    df: DataFrame, id_col: str = "clip_id", text_col: str = "transcript"
+) -> DataFrame:
+    """(id, n_words, fp): one row per distinct winnowed fingerprint of each
+    transcript, from one ``mapInArrow`` pass over (id, transcript). Rows
+    with no words (null or blank text) emit nothing."""
+    import pyarrow as pa
+
+    id_type = dict(df.dtypes)[id_col]
+
+    def run(batches):
+        from file_deduplicator_spark.functions.text import winnowed_fingerprints_batch
+
+        for rb in batches:
+            n_words, row, fp = winnowed_fingerprints_batch(
+                rb.column(1).to_pylist(), SHINGLE_K, WINNOW_WINDOW)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).take(pa.array(row, type=pa.int64())),
+                 pa.array(n_words[row], type=pa.int32()),
+                 pa.array(fp, type=pa.int64())],
+                names=["id", "n_words", "fp"],
+            )
+
+    return df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")).mapInArrow(
+        run, schema=f"id {id_type}, n_words int, fp long")
+
+
 def containment_candidates(
     df: DataFrame,
     cfg: DedupConfig,
@@ -59,32 +88,7 @@ def containment_candidates(
     """(id_a=needle, id_b=container) candidate pairs: share a winnowed
     fingerprint AND needle is strictly shorter (in words); needle must have
     ≥ CONTAINMENT_MIN_WORDS words. Per-fingerprint buckets capped."""
-    # words → shingles → hashes materialized stage-by-stage: each HOF input
-    # is a plain column reference, never an inline pipeline (HOF lambdas
-    # re-evaluate embedded subexpressions per element — an inline
-    # split-then-shingle pipeline re-splits the text once per shingle; warm
-    # containment_docs at sf0.1 measured 6.1s → 2.4s with this change)
-    base = (
-        df.select(F.col(id_col).alias("id"), words_col(F.col(text_col)).alias("_ws"))
-        .select(
-            "id",
-            F.size(F.col("_ws")).alias("n_words"),
-            shingles_from_words(F.col("_ws"), SHINGLE_K).alias("_sh"),
-        )
-        .select(
-            "id",
-            "n_words",
-            F.transform(
-                F.col("_sh"),
-                lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF)),
-            ).alias("_h"),
-        )
-        .select(
-            "id",
-            "n_words",
-            F.explode(winnowed_fingerprints_col(F.col("_h"), WINNOW_WINDOW)).alias("fp"),
-        )
-    )
+    base = fingerprint_rows(df, id_col, text_col)
     # r06 rework (guide §2.4 — remove shuffles outright): ONE capped
     # groupBy(fp) + in-array pair expansion replaces the old topology of
     # TWO sort+window cap passes (the winnowing subtree was evaluated once

@@ -45,12 +45,17 @@ def cluster_stats(
 
 def dedup_report(labeled: DataFrame, cluster_col: str = "cluster_id") -> DataFrame:
     """Global one-row report (main.go:1326-1338): group count, duplicate rows,
-    reclaimable bytes."""
-    per = cluster_stats(labeled, cluster_col)
-    return per.agg(
-        F.count(F.lit(1)).alias("duplicate_groups"),
-        F.coalesce(F.sum("duplicates"), F.lit(0)).alias("duplicate_rows"),
-        F.coalesce(F.sum("reclaimable_bytes"), F.lit(0)).alias("reclaimable_bytes"),
+    reclaimable bytes.
+
+    One aggregate over ``labeled`` (keeper.label_keepers output): every
+    cluster has exactly one KEEP row and ``group_count - 1`` DELETE rows, so
+    the per-cluster rollup (``cluster_stats``) need not run first.
+    ``cluster_col`` is kept for callers; the counts do not read it."""
+    delete = F.col("action") == "DELETE"
+    return labeled.agg(
+        F.count(F.when(F.col("action") == "KEEP", F.lit(1))).alias("duplicate_groups"),
+        F.count(F.when(delete, F.lit(1))).alias("duplicate_rows"),
+        F.coalesce(F.sum(F.when(delete, F.col("size"))), F.lit(0)).alias("reclaimable_bytes"),
     )
 
 

@@ -19,12 +19,24 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _pretouch_opts() -> str:
-    """` -Xms<mem> -XX:+AlwaysPreTouch` when SPARK_GRAFT_PRETOUCH=1, else ""."""
-    if os.environ.get("SPARK_GRAFT_PRETOUCH", "0") != "1":
-        return ""
-    mem = os.environ.get("SPARK_DRIVER_MEM", "24g")
-    return f" -Xms{mem} -XX:+AlwaysPreTouch"
+def _driver_mem() -> str:
+    """SPARK_DRIVER_MEM, else min(24g, half of physical RAM): a heap bound
+    above what the host has lets the OS kill the JVM mid-run instead of
+    the JVM collecting."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return f"{min(24 * 1024, half_mb)}m"
+
+
+def _java_opts(cpus: int) -> str:
+    """ParallelGC with at most 8 GC threads, never more than the task cores
+    (see the note at spark.driver.extraJavaOptions), plus the pretouch
+    options when SPARK_GRAFT_PRETOUCH=1."""
+    opts = f"-XX:+UseParallelGC -XX:ParallelGCThreads={min(8, cpus)}"
+    if os.environ.get("SPARK_GRAFT_PRETOUCH", "0") == "1":
+        opts += f" -Xms{_driver_mem()} -XX:+AlwaysPreTouch"
+    return opts
 
 
 def get_spark(
@@ -72,8 +84,9 @@ def get_spark(
         # buffers instead of per-row objects): 200k-clip pipeline, 32 cores,
         # warm best-of-5 — 12g 32.3s (edge-checkpoint stage spent 2/3 of
         # task time in GC), 16g 24.2s, 24g 19.4s, 32g 19.9s, 48g 50s+
-        # (host memory pressure). 24g wins; override with SPARK_DRIVER_MEM.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # (host memory pressure). 24g wins, capped at half of physical RAM
+        # on smaller hosts; override with SPARK_DRIVER_MEM.
+        .config("spark.driver.memory", _driver_mem())
         # iterative jobs (CC fixpoint, watch batches) accumulate shuffle files
         # and checkpoint blocks that only a driver GC lets the ContextCleaner
         # reclaim — force one periodically instead of never on a quiet heap
@@ -93,19 +106,18 @@ def get_spark(
         # collapses under 32 task threads allocating 24KB byte[] per row
         # (survivor churn; measured 10x slowdown of the Arrow feed stage —
         # 84-167s vs 9-17s for the same 200k-clip signature pass).
-        # GC threads capped at 8: the default (= all 32 cores) contends with
-        # the 32 task threads + 32 python workers (16.6s vs 20.2s first-run).
+        # GC threads capped at min(8, cores): the default (= all 32 cores)
+        # contends with the 32 task threads + 32 python workers (16.6s vs
+        # 20.2s first-run), and on a small host 8 would exceed the cores.
         # SPARK_GRAFT_PRETOUCH=1 (bench/scaling sessions set it) adds
         # -Xms=<driver mem> -XX:+AlwaysPreTouch: the heap is faulted in at
         # JVM start instead of page-by-page inside the first measured runs.
         # Under host allocation pressure first-touch zeroing stalls to ~20 s
         # per GB-scale buffer (see scripts/membw_probe.py note) — heap
         # growth during run 1 is the same stall class. Off by default so
-        # test sessions don't pre-zero 24 GB each.
-        .config("spark.driver.extraJavaOptions",
-                "-XX:+UseParallelGC -XX:ParallelGCThreads=8" + _pretouch_opts())
-        .config("spark.executor.extraJavaOptions",
-                "-XX:+UseParallelGC -XX:ParallelGCThreads=8" + _pretouch_opts())
+        # test sessions don't pre-zero the whole heap each.
+        .config("spark.driver.extraJavaOptions", _java_opts(int(cpus)))
+        .config("spark.executor.extraJavaOptions", _java_opts(int(cpus)))
         .config("spark.ui.enabled", "false")
         # Joins (guide §3.1): allow shuffled-hash join when a side's
         # per-partition build fits (skips the sort-merge sorts — the LSH

@@ -48,9 +48,20 @@ def append_metrics(
     spark: SparkSession, metrics_dir: str | Path, run_id: int, metrics: dict
 ) -> None:
     """Run-metrics table: one row per (run, metric) — CC iterations, bucket
-    skew stats, phase timings, row counts."""
-    rows = [(run_id, k, float(v)) for k, v in metrics.items() if v is not None]
-    df = spark.createDataFrame(rows, "run_id long, metric string, value double")
+    skew stats, phase timings, row counts.
+
+    The frame is built from an Arrow table, which ships to the JVM as one
+    Arrow stream: a Python list (and a pandas frame, which falls back to
+    the list path when empty) goes through ``sc.parallelize``, and that
+    starts a second Python daemon and worker for a few dozen rows."""
+    import pyarrow as pa
+
+    kept = {k: float(v) for k, v in metrics.items() if v is not None}
+    table = pa.table(
+        {"run_id": pa.array([run_id] * len(kept), type=pa.int64()),
+         "metric": pa.array(list(kept), type=pa.string()),
+         "value": pa.array(list(kept.values()), type=pa.float64())})
+    df = spark.createDataFrame(table, "run_id long, metric string, value double")
     df.coalesce(1).write.mode("append").parquet(str(metrics_dir))
 
 

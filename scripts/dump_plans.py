@@ -13,10 +13,11 @@ import sys
 from contextlib import redirect_stdout
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = Path("/root/repo/plans/r06")
+OUT = REPO / "plans" / "r06"
 
 BENCH_QUERIES = [
     "exact_dup_groups",
@@ -65,7 +66,7 @@ def main() -> None:
         )
 
         clips = spark.read.parquet(
-            "/root/repo/.cache/clips_n200000_s42/clips.parquet"
+            str(REPO / ".cache" / "clips_n200000_s42" / "clips.parquet")
         )
         res = dedup_pipeline(clips, DedupConfig())
         (OUT / f"clips_dedup_pipeline_report_{suffix}.txt").write_text(

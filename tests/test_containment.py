@@ -53,3 +53,63 @@ def test_containment_edges_on_clips(spark, clips_df, clips_fixture):
         ta, tb = tx[a], tx[b]
         needle, container = (ta, tb) if len(ta.split()) < len(tb.split()) else (tb, ta)
         assert word_contains(container, needle)
+
+
+def test_winnow_batch_matches_column_winnowing(spark):
+    """The Arrow kernel and the Column form (kept for q_doc_fingerprint)
+    select the same fingerprint set, at every size class of WINNOW_WINDOW."""
+    from pyspark.sql import functions as F
+
+    from file_deduplicator_spark.functions.text import winnow_batch
+    from file_deduplicator_spark.operators.containment import (
+        WINNOW_WINDOW,
+        winnowed_fingerprints_col,
+    )
+
+    rng = np.random.RandomState(7)
+    w = WINNOW_WINDOW
+    sizes = [0, 1, w - 1, w, w + 1, 40]
+    arrays = [rng.randint(0, 2**31 - 1, size=n).astype(np.int64) for n in sizes]
+    arrays.append(rng.randint(0, 5, size=60).astype(np.int64))  # long, with repeats
+    rows, fps = winnow_batch(arrays, w)
+    got = {i: set() for i in range(len(arrays))}
+    for r, f in zip(rows.tolist(), fps.tolist()):
+        got[r].add(f)
+
+    df = spark.createDataFrame(
+        [(i, [int(x) for x in a]) for i, a in enumerate(arrays)], "i int, h array<long>")
+    want = {r.i: set(r.fps) for r in
+            df.select("i", winnowed_fingerprints_col(F.col("h"), w).alias("fps")).collect()}
+    assert got == want
+    assert got[0] == set() and len(got[1]) == 1
+
+
+def test_containment_recall_on_embedded_needles(spark):
+    """Every needle of >= CONTAINMENT_MIN_WORDS words, embedded at a random
+    offset in a longer transcript (any case, any spacing), is found."""
+    from file_deduplicator_spark.operators.containment import CONTAINMENT_MIN_WORDS
+
+    rng = np.random.RandomState(11)
+    vocab = [f"w{i}" for i in range(3000)]
+    rows, want = [], set()
+    for k in range(40):
+        needle = list(rng.choice(vocab, size=rng.randint(CONTAINMENT_MIN_WORDS, 30)))
+        pre = list(rng.choice(vocab, size=rng.randint(0, 25)))
+        post = list(rng.choice(vocab, size=rng.randint(1 if not pre else 0, 25)))
+        container = pre + [w.upper() if rng.rand() < 0.2 else w for w in needle] + post
+        rows.append((f"n{k:02d}", " ".join(needle)))
+        rows.append((f"c{k:02d}", "  ".join(container) if k % 2 else " ".join(container)))
+        want.add((f"n{k:02d}", f"c{k:02d}"))
+    rows += [("blank", "   "), ("null", None)]
+    df = spark.createDataFrame(rows, "clip_id string, transcript string")
+    got = {(r.id_a, r.id_b) for r in containment_edges(df, DedupConfig()).collect()}
+    assert want <= got, sorted(want - got)
+
+
+def test_containment_plan_is_one_arrow_pass(spark, clips_df):
+    """Candidate fingerprints come from a mapInArrow pass: no JVM-side
+    lower() (ICU case-mapping setup) or split() of the transcripts."""
+    plan = containment_edges(clips_df, DedupConfig())._jdf.queryExecution().toString()
+    assert "MapInArrow" in plan
+    assert "lower(" not in plan
+    assert "split(" not in plan

@@ -146,6 +146,46 @@ def test_run_metrics_roundtrip(spark, clips_df, tmp_path):
     release_pipeline(result)
 
 
+def test_append_metrics_builds_no_python_rdd(spark, tmp_path, monkeypatch):
+    """The metrics frame ships to the JVM as Arrow: nothing goes through
+    sc.parallelize (a second Python daemon and worker), not even for an
+    empty metrics dict."""
+    from file_deduplicator_spark.sources.sinks import append_metrics
+
+    def no_rdd(*a, **k):
+        raise AssertionError("append_metrics went through sc.parallelize")
+
+    monkeypatch.setattr(spark.sparkContext, "parallelize", no_rdd)
+    out = tmp_path / "metrics"
+    append_metrics(spark, out, run_id=7, metrics={"a": 1, "b": 2.5, "skip": None})
+    append_metrics(spark, out, run_id=8, metrics={})
+    monkeypatch.undo()
+    back = spark.read.parquet(str(out))
+    assert back.schema.simpleString() == "struct<run_id:bigint,metric:string,value:double>"
+    assert sorted(tuple(r) for r in back.collect()) == [(7, "a", 1.0), (7, "b", 2.5)]
+
+
+def test_dedup_report_equals_cluster_rollup(spark, clips_df):
+    """The one-aggregate report equals the sum over cluster_stats, with the
+    same column types, on the pipeline's labeled frame and on an empty one."""
+    from file_deduplicator_spark.operators.report import cluster_stats, dedup_report
+    from file_deduplicator_spark.plans.pipeline import release_pipeline
+
+    result = dedup_pipeline(clips_df, CFG)
+    labeled = result["labeled"]
+    for lab in (labeled, labeled.limit(0)):
+        rollup = cluster_stats(lab).agg(
+            F.count(F.lit(1)).alias("duplicate_groups"),
+            F.coalesce(F.sum("duplicates"), F.lit(0)).alias("duplicate_rows"),
+            F.coalesce(F.sum("reclaimable_bytes"), F.lit(0)).alias("reclaimable_bytes"),
+        )
+        rep = dedup_report(lab)
+        assert rep.dtypes == rollup.dtypes
+        assert rep.collect() == rollup.collect()
+    assert dedup_report(labeled).first().duplicate_groups > 0
+    release_pipeline(result)
+
+
 def test_perceptual_off_skips_decode_and_keeps_text_pairs(spark, clips_df):
     """perceptual=False runs the same Arrow signature stage without the
     decode: sim_sig is null on every row, digest and minhash_sig match the
