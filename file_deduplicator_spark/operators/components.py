@@ -112,32 +112,24 @@ def _release_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def _driver_union_find(col_a, col_b, spark, schema) -> DataFrame:
-    """Union-find with path compression over collected edge columns; labels =
-    min id per component. O(E α(E)) — 222k edges ≈ 0.3 s. Input/output ride
-    Arrow (pandas), not the row-pickle path (~10x on six-figure row counts)."""
-    import pandas as pd
-
+def _union_find(edges) -> dict:
+    """node → min id of its component, over an iterable of (a, b) edges:
+    union-find with path compression, O(E α(E)) — 222k edges ≈ 0.3 s."""
     parent: dict = {}
 
     def find(x):
         root = x
-        while parent.get(root, root) != root:
+        while parent[root] != root:
             root = parent[root]
-        while parent.get(x, x) != root:  # compress
+        while parent[x] != root:  # compress
             parent[x], x = root, parent[x]
         return root
 
-    nodes = set()
-    for a, b in zip(col_a, col_b):
-        nodes.add(a)
-        nodes.add(b)
-        ra, rb = find(a), find(b)
+    for a, b in edges:
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    ordered = sorted(nodes)
-    pdf = pd.DataFrame({"id": ordered, "cluster_id": [find(n) for n in ordered]})
-    return spark.createDataFrame(pdf, schema=schema)
+    return {n: find(n) for n in parent}
 
 
 def _local_contraction(
@@ -173,40 +165,16 @@ def _local_contraction(
     import pandas as pd
 
     def contract(batches):
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        nodes = set()
-        for pdf in batches:
-            for a, b in zip(pdf[id_a], pdf[id_b]):
-                nodes.add(a)
-                nodes.add(b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-        out_a, out_b = [], []
-        for n in nodes:
-            r = find(n)
-            if r != n:
-                out_a.append(r)
-                out_b.append(n)
-        # isolated roots (nodes seen only in self-loop edges, or left alone
-        # by this partition's view) must survive as self-edges, or they
-        # vanish from the label table — the driver union-find labels them
-        # with their own id, and the two strategies must agree on node set
-        roots_with_members = set(out_a)
-        for n in nodes:
-            if find(n) == n and n not in roots_with_members:
-                out_a.append(n)
-                out_b.append(n)
-        yield pd.DataFrame({id_a: out_a, id_b: out_b})
+        roots = _union_find(
+            (a, b) for pdf in batches for a, b in zip(pdf[id_a], pdf[id_b]))
+        # a root keeps a self-edge, so isolated roots (nodes seen only in
+        # self-loop edges, or left alone by this partition's view) survive:
+        # the driver union-find labels them with their own id, and the two
+        # strategies must agree on node set
+        members = [(r, n) for n, r in roots.items() if r != n]
+        linked = {r for r, _ in members}
+        members += [(n, n) for n, r in roots.items() if r == n and n not in linked]
+        yield pd.DataFrame(members, columns=[id_a, id_b])
 
     out = edges
     for p in range(passes):
@@ -236,21 +204,28 @@ def connected_components(
     bound (~100 MB at the default), not a correctness bound; set 0 to force
     the distributed path.
     """
+    import pyarrow as pa
+
     distinct = edges.select(F.col(id_a), F.col(id_b)).distinct()
-    pdf = distinct.limit(driver_threshold + 1).toPandas()  # one job, Arrow path
-    if len(pdf) <= driver_threshold:
-        spark = edges.sparkSession
+    collected = distinct.limit(driver_threshold + 1).toArrow()  # one job
+    if collected.num_rows <= driver_threshold:
+        # labels ship to the JVM as one Arrow stream: a pandas frame falls
+        # back to sc.parallelize when empty (a second Python daemon+worker)
+        roots = _union_find(zip(collected.column(id_a).to_pylist(),
+                                collected.column(id_b).to_pylist()))
+        ordered = sorted(roots)
+        id_pa = collected.schema.field(id_a).type
         id_type = dict(edges.dtypes)[id_a]
-        labels = _driver_union_find(
-            pdf[id_a].tolist(), pdf[id_b].tolist(), spark,
-            f"id {id_type}, cluster_id {id_type}",
-        )
+        labels = edges.sparkSession.createDataFrame(
+            pa.table({"id": pa.array(ordered, type=id_pa),
+                      "cluster_id": pa.array([roots[n] for n in ordered], type=id_pa)}),
+            f"id {id_type}, cluster_id {id_type}")
         return labels, {
             "iterations": 0,
             "converged": True,
             "changed_last": 0,
             "mode": "driver_union_find",
-            "edges": len(pdf),
+            "edges": collected.num_rows,
         }
 
     # materialize the (directed) edge list once — the distributed loop

@@ -13,8 +13,11 @@ for ≥ CONTAINMENT_MIN_WORDS overlaps is 1.0 at WINNOW_WINDOW =
 CONTAINMENT_MIN_WORDS - SHINGLE_K + 1. The fingerprints come from one
 ``mapInArrow`` pass (``fingerprint_rows``) running the Python text kernel
 ``text.winnowed_fingerprints_batch``: the tokenizer and shingle hash of the
-MinHash stage, and the verify's own ``lower().split()`` words. The capped
-per-fingerprint grouping and the pair expansion are Column expressions.
+MinHash stage, and the verify's own ``lower().split()`` words. The rows
+form a band table with one constant band (``bh`` = fingerprint), so the
+fingerprint buckets go through the one in-bucket pair operator,
+``lsh.bucket_pairs``: capped, salted above ``SAFE_COLLECT_MAX``, and sized
+by ``lsh.bucket_stats`` (``containment_*`` in the run metrics).
 
 Verification (Python, per container): build the suffix array of the
 container transcript ONCE, binary-search each candidate needle
@@ -30,7 +33,7 @@ from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
 from file_deduplicator_spark.functions.text import SHINGLE_K
-from file_deduplicator_spark.operators.lsh import member_pairs
+from file_deduplicator_spark.operators.lsh import bucket_pairs, bucket_stats
 
 CONTAINMENT_MIN_WORDS = 8  # min overlap (words) to emit a containment edge
 WINNOW_WINDOW = max(2, CONTAINMENT_MIN_WORDS - SHINGLE_K + 1)
@@ -55,9 +58,10 @@ def winnowed_fingerprints_col(hashes: Column, window: int) -> Column:
 def fingerprint_rows(
     df: DataFrame, id_col: str = "clip_id", text_col: str = "transcript"
 ) -> DataFrame:
-    """(id, n_words, fp): one row per distinct winnowed fingerprint of each
-    transcript, from one ``mapInArrow`` pass over (id, transcript). Rows
-    with no words (null or blank text) emit nothing."""
+    """(id, band, bh, n_words): the fingerprint band table — one row per
+    distinct winnowed fingerprint ``bh`` of each transcript, all in band 0,
+    from one ``mapInArrow`` pass over (id, transcript). Rows with no words
+    (null or blank text) emit nothing."""
     import pyarrow as pa
 
     id_type = dict(df.dtypes)[id_col]
@@ -72,43 +76,22 @@ def fingerprint_rows(
                 [rb.column(0).take(pa.array(row, type=pa.int64())),
                  pa.array(n_words[row], type=pa.int32()),
                  pa.array(fp, type=pa.int64())],
-                names=["id", "n_words", "fp"],
+                names=["id", "n_words", "bh"],
             )
 
-    return df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")).mapInArrow(
-        run, schema=f"id {id_type}, n_words int, fp long")
+    fps = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")).mapInArrow(
+        run, schema=f"id {id_type}, n_words int, bh long")
+    return fps.select("id", F.lit(0).alias("band"), "bh", "n_words")
 
 
 def containment_candidates(
-    df: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "clip_id",
-    text_col: str = "transcript",
+    bands: DataFrame, cfg: DedupConfig, max_bucket: int | None = None
 ) -> DataFrame:
-    """(id_a=needle, id_b=container) candidate pairs: share a winnowed
-    fingerprint AND needle is strictly shorter (in words); needle must have
-    ≥ CONTAINMENT_MIN_WORDS words. Per-fingerprint buckets capped."""
-    base = fingerprint_rows(df, id_col, text_col)
-    # r06 rework (guide §2.4 — remove shuffles outright): ONE capped
-    # groupBy(fp) + in-array pair expansion replaces the old topology of
-    # TWO sort+window cap passes (the winnowing subtree was evaluated once
-    # per join side — no exchange reuse across the broadcast wrapper) + a
-    # fingerprint equi-join + a distinct. Identical candidate set:
-    # * the capped membership is the cap LOWEST ids per fp — array_sort of
-    #   struct(id, n_words) orders by the unique id, exactly like the old
-    #   row_number() over (partition by fp order by id) <= cap;
-    # * pair orientation: needle = strictly fewer words, so for members
-    #   x, y emit (x→y) iff wx < wy (equal word counts never pair), and
-    #   the needle must carry >= CONTAINMENT_MIN_WORDS words;
-    # * the trailing distinct dedups across shared fingerprints as before.
-    # The expansion is lsh.member_pairs, the one bucket_pairs uses, with
-    # this orientation as ``emit`` and the word-count rule as ``keep`` — the
-    # 100 TB story (capped buckets, quadratic work bounded per bucket) is
-    # unchanged.
-    member = F.struct("id", "n_words")
-    grouped = base.groupBy("fp").agg(
-        F.slice(F.array_sort(F.collect_list(member)), 1, cfg.bucket_cap).alias("ms")
-    )
+    """(id_a=needle, id_b=container) candidate pairs over a fingerprint
+    band table: share a fingerprint AND needle is strictly shorter (in
+    words); needle must have ≥ CONTAINMENT_MIN_WORDS words. Members sort by
+    the unique id (``struct(id, n_words)``), so a bucket above the cap keeps
+    its ``bucket_cap`` lowest ids; ``max_bucket`` is bucket_members'."""
     min_w = F.lit(CONTAINMENT_MIN_WORDS)
 
     def emit(x, y):
@@ -120,12 +103,7 @@ def containment_candidates(
         return ((x["n_words"] != y["n_words"])
                 & (F.least(x["n_words"], y["n_words"]) >= min_w))
 
-    return (
-        grouped.filter(F.size("ms") > 1)
-        .select(F.explode(member_pairs(F.col("ms"), emit, keep)).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
+    return bucket_pairs(bands, cfg, keep, emit=emit, max_bucket=max_bucket)
 
 
 def verify_containment(
@@ -189,5 +167,12 @@ def verify_containment(
 
 def containment_edges(df: DataFrame, cfg: DedupConfig, id_col: str = "clip_id",
                       text_col: str = "transcript") -> DataFrame:
-    cands = containment_candidates(df, cfg, id_col, text_col)
+    """Verified (needle, container) edges of ``df``'s transcripts on their
+    own, outside dedup_pipeline: the band table is sized by its own
+    bucket_stats job, then read again by the pair expansion."""
+    bands = fingerprint_rows(df, id_col, text_col)
+    max_bucket = None
+    if cfg.salt_buckets > 1:
+        max_bucket = bucket_stats({"c": bands}, cfg.bucket_cap)["c"]["max_bucket"]
+    cands = containment_candidates(bands, cfg, max_bucket)
     return verify_containment(cands, df, cfg, id_col, text_col)

@@ -17,8 +17,8 @@ explicitly"):
 * AQE skew-join splits oversized shuffle partitions, but NOT the quadratic
   pair blow-up inside one bucket; that's what ``bucket_cap`` is for: buckets
   above the cap keep their ``cap`` lowest ids (still linking the bucket into
-  clusters) and the overflow is COUNTED into the observation metrics —
-  no silent drops.
+  clusters) and the overflow is COUNTED by bucket_stats, the one probe
+  that sizes every band family — no silent drops.
 * Dedup of candidate pairs BEFORE the verify stage: a pair can collide in
   many bands; verifying once is the big constant-factor win.
 * Exact duplicates should be removed before near-dup pairing (quarantine —
@@ -26,6 +26,8 @@ explicitly"):
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -129,16 +131,20 @@ def bucket_members(band_df: DataFrame, cap: int, salt: int = 1,
 
 
 def bucket_stats(band_tables: dict[str, DataFrame], cap: int) -> dict[str, dict[str, int]]:
-    """Per named band table, the metrics bucket_pairs' ``observation``
-    records (``buckets``, ``max_bucket``, ``capped_buckets``,
-    ``capped_dropped_rows`` against ``cap``) before the expansion runs: ONE
-    fused probe job for every family (r06), which also materializes every
-    persisted band table."""
-    sizes = None
-    for fam, bt in band_tables.items():
-        part = (bt.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("n"))
-                .select(F.lit(fam).alias("fam"), "n"))
-        sizes = part if sizes is None else sizes.unionByName(part)
+    """Per named band table (named by metric prefix in the batch and watch
+    paths), its bucket metrics — ``buckets``, ``max_bucket``,
+    ``capped_buckets``, ``capped_dropped_rows`` against ``cap`` — before
+    the expansion runs: ONE probe for every family, with one bucket-count
+    shuffle keyed by (fam, band, bh), which also materializes every
+    persisted band table. bh types differ only when the portable (string)
+    MinHash bands meet the engine's long ones."""
+    bh = F.col("bh")
+    if len({dict(bt.dtypes)["bh"] for bt in band_tables.values()}) > 1:
+        bh = bh.cast("string")
+    keys = [bt.select(F.lit(fam).alias("fam"), "band", bh.alias("bh"))
+            for fam, bt in band_tables.items()]
+    sizes = reduce(DataFrame.unionByName, keys).groupBy("fam", "band", "bh").agg(
+        F.count(F.lit(1)).alias("n"))
     over = F.col("n") - cap
     rows = sizes.groupBy("fam").agg(
         F.count(F.lit(1)).alias("buckets"),
@@ -225,9 +231,11 @@ def bucket_pairs(
     shuffle. Its payload columns must ride the band table (band_table
     ``payload``); the output is bare ids either way.
 
-    ``observation``: optional pyspark Observation; when given, bucket-count /
-    max-size / capped-bucket / dropped-row metrics ride the first action for
-    free (df.observe — no extra job), feeding the run-metrics table.
+    ``observation``: optional pyspark Observation of the same four numbers
+    bucket_stats gives, riding the first action (df.observe). Only the
+    traced benchmark (perfbench/layers.py) reads it; it loses its row when
+    the family yields no pair (AQE swaps the plan for an empty relation),
+    so the run metrics come from bucket_stats.
 
     ``emit(x, y)``: optional output struct of a kept pair of members (x
     sorts before y) in place of (id_a, id_b); its fields are the output

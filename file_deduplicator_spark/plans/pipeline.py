@@ -22,6 +22,8 @@ recovered by unioning digest edges into CC.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,6 +36,11 @@ from file_deduplicator_spark.functions.minhash_sql import (
 from file_deduplicator_spark.functions.text import MINHASH_SEED, NUM_PERM, SHINGLE_K
 from file_deduplicator_spark.functions.udfs import signatures_map_in_arrow
 from file_deduplicator_spark.operators.components import attach_clusters, connected_components
+from file_deduplicator_spark.operators.containment import (
+    containment_candidates,
+    fingerprint_rows,
+    verify_containment,
+)
 from file_deduplicator_spark.operators.exact import codec_filter, with_digest
 from file_deduplicator_spark.operators.keeper import label_keepers
 from file_deduplicator_spark.operators.lsh import (
@@ -91,45 +98,22 @@ def digest_representatives(sigs: DataFrame, id_col: str = "clip_id") -> DataFram
     return sigs.filter(F.col(id_col) == F.col("digest_root"))
 
 
-def near_dup_edges(
-    sigs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "clip_id",
-    observation=None,
-    caches: list | None = None,
-    text_observation=None,
-) -> DataFrame:
-    """Verified near-duplicate pairs from both modalities, each family's
-    candidates from the one in-bucket pair operator (lsh.bucket_pairs).
-
-    Audio: SimHash bands → Hamming ≤ threshold (ref threshold semantics
-    main.go:147 / perceptual.go:401-404), with the Hamming predicate fused
-    INTO the bucket pair-expansion (lsh.hamming_within): the 8-byte sim_sig
-    rides the band table, so only true audio edges ever reach a shuffle.
-    This is the round-2.5 rework — measured at 500k clips, the correlated
-    envelope bits made the 24-bit table keys collide into 5.7M distinct
-    candidates whose distinct+join verify dominated the whole pipeline,
-    super-linearly.
-
-    Text: MinHash bands → candidate pairs → slot agreement ≥
-    jaccard_threshold via lsh.verify_pairs_minhash (the 512-byte signature
-    is too fat to carry into buckets; its near-uniform 64-bit band keys
-    keep candidate counts ~linear, so the join stays cheap). The 32-byte
-    fold rides the band table and lsh.fold_within rejects provably failing
-    pairs in-bucket (exactly conservative: same verified pair set). Empty
-    transcripts never enter the text band table (degenerate all-EMPTY_SLOT
-    signatures must not match each other).
-
-    ``sigs`` must carry the ``digest_root`` column dedup_pipeline adds.
-    ``observation`` / ``text_observation``: optional pyspark Observations
-    for the audio / text bucket-skew metrics (each rides the first action).
+def near_dup_bands(
+    sigs: DataFrame, cfg: DedupConfig, id_col: str = "clip_id", caches: list | None = None,
+) -> tuple[DataFrame | None, dict[str, DataFrame]]:
+    """The near-dup band tables of the digest representatives, keyed by
+    metric prefix — ``lsh_`` audio (perceptual only; the 8-byte sim_sig
+    rides as the ``sig`` payload) and ``lsh_text_`` text (non-empty
+    transcripts; the fold rides as ``fold``) — plus the audio
+    signature-star edges (None with perceptual off). Each table is
+    persisted into ``caches``: the probe and the bucket groupBy both read
+    it, so the explode runs once, spilling to disk if it outgrows memory.
     """
-    reps = digest_representatives(sigs, id_col)
-
-    sig_star = None
-    parts = []
-    bands_a = None
     from pyspark import StorageLevel
+
+    reps = digest_representatives(sigs, id_col)
+    sig_star = None
+    families: dict[str, DataFrame] = {}
 
     if cfg.perceptual:
         audio = reps.filter(F.col("sim_sig").isNotNull())
@@ -149,23 +133,14 @@ def near_dup_edges(
             .select(F.col("_root").alias("id_a"), F.col(id_col).alias("id_b"))
         )
         sig_reps = ranked.filter(F.col("_rn") == 1).select(id_col, "sim_sig")
-
-        # the hot-bucket-targeted skew guard reads the band table three
-        # times (count pass, cold anti-join, hot semi-join) — persist so
-        # the explode runs once, spilling to disk if it outgrows memory
-        bands_a = band_table(
-            sig_reps,
-            simhash_bands_col(F.col("sim_sig")),
-            id_col,
-            payload={"sig": "sim_sig"},
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        if caches is not None:
-            caches.append(bands_a)
+        families["lsh_"] = band_table(
+            sig_reps, simhash_bands_col(F.col("sim_sig")), id_col, payload={"sig": "sim_sig"},
+        )
 
     # round-4: the 32-byte nibble fold rides the band table so non-matching
     # candidates are rejected INSIDE the bucket expansion (provable-mismatch
     # bound — exactly conservative, verified pair set unchanged); only
-    # survivors reach the two verify joins below. Measured honestly at the
+    # survivors reach the two verify joins. Measured honestly at the
     # 200k bench fixture: banding (b=16, r=4) is already precise on its
     # bimodal transcripts — 193,548 candidates, all of which pass the
     # verify — so the filter rejects ~nothing THERE and costs ~4 integer ops
@@ -174,54 +149,97 @@ def near_dup_edges(
     # where every rejected candidate saves two join lookups and a shuffle row.
     text = reps.filter(F.length(F.trim(F.col("transcript"))) > 0).withColumn(
         "_mh_fold", minhash_fold_col(F.col("minhash_sig"), NUM_PERM))
-    keep_t = fold_within(NUM_PERM, cfg.jaccard_threshold)
-    bands_t = band_table(
+    families["lsh_text_"] = band_table(
         text, minhash_bands_col(F.col("minhash_sig")), id_col, payload={"fold": "_mh_fold"},
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if caches is not None:
-        caches.append(bands_t)
-
-    # one fused probe job sizes both families' largest buckets, so
-    # bucket_members takes the plain groupBy where it is collect-safe
-    max_by_family: dict[str, int] = {}
-    if cfg.salt_buckets > 1:
-        families = {"t": bands_t} if bands_a is None else {"a": bands_a, "t": bands_t}
-        max_by_family = {fam: st["max_bucket"]
-                         for fam, st in bucket_stats(families, cfg.bucket_cap).items()}
-
-    if bands_a is not None:
-        parts.append(
-            bucket_pairs(bands_a, cfg, hamming_within(cfg.effective_threshold),
-                         observation=observation, max_bucket=max_by_family.get("a"))
-        )
-    pairs_t = bucket_pairs(bands_t, cfg, keep_t, observation=text_observation,
-                           max_bucket=max_by_family.get("t"))
-    parts.append(
-        verify_pairs_minhash(pairs_t, reps, cfg.jaccard_threshold, id_col)
-        .select("id_a", "id_b")
     )
+    for prefix, bt in families.items():
+        families[prefix] = bt.persist(StorageLevel.MEMORY_AND_DISK)
+        if caches is not None:
+            caches.append(families[prefix])
+    return sig_star, families
 
-    verified = parts[0]
-    for extra in parts[1:]:
-        verified = verified.union(extra)
+
+def near_dup_pairs(
+    sigs: DataFrame,
+    cfg: DedupConfig,
+    sig_star: DataFrame | None,
+    families: dict[str, DataFrame],
+    max_bucket: dict[str, int],
+    id_col: str = "clip_id",
+    observation=None,
+) -> DataFrame:
+    """Verified near-dup pairs of near_dup_bands' families, each from the
+    one in-bucket pair operator (lsh.bucket_pairs) sized by ``max_bucket``
+    (prefix → largest bucket, from lsh.bucket_stats).
+
+    Audio: Hamming ≤ threshold (ref threshold semantics main.go:147 /
+    perceptual.go:401-404), fused INTO the bucket pair-expansion
+    (lsh.hamming_within), so only true audio edges ever reach a shuffle —
+    the round-2.5 rework: at 500k clips the correlated envelope bits made
+    the 24-bit table keys collide into 5.7M distinct candidates whose
+    distinct+join verify dominated the pipeline, super-linearly.
+
+    Text: lsh.fold_within rejects provably failing pairs in-bucket, then
+    slot agreement ≥ jaccard_threshold via lsh.verify_pairs_minhash (the
+    512-byte signature is too fat to carry into buckets; its near-uniform
+    band keys keep candidate counts ~linear, so the join stays cheap).
+
+    ``observation``: the audio family's bucket_pairs Observation.
+    """
+    parts = [] if sig_star is None else [sig_star]
+    if "lsh_" in families:
+        parts.append(bucket_pairs(families["lsh_"], cfg, hamming_within(cfg.effective_threshold),
+                                  observation=observation, max_bucket=max_bucket.get("lsh_")))
+    pairs_t = bucket_pairs(families["lsh_text_"], cfg, fold_within(NUM_PERM, cfg.jaccard_threshold),
+                           max_bucket=max_bucket.get("lsh_text_"))
+    parts.append(verify_pairs_minhash(pairs_t, digest_representatives(sigs, id_col),
+                                      cfg.jaccard_threshold, id_col).select("id_a", "id_b"))
     # NOTE: a pair verified by BOTH modalities appears twice here.
     # dedup_pipeline applies the one .distinct() and persists the result,
     # which both CC and the pairs sink read.
-    return verified if sig_star is None else sig_star.union(verified)
+    return reduce(DataFrame.union, parts)
+
+
+def near_dup_edges(
+    sigs: DataFrame,
+    cfg: DedupConfig,
+    id_col: str = "clip_id",
+    observation=None,
+    caches: list | None = None,
+) -> DataFrame:
+    """Verified near-duplicate pairs from both modalities: near_dup_bands,
+    one fused lsh.bucket_stats probe (when ``cfg.salt_buckets`` > 1, so
+    bucket_members takes the plain groupBy where it is collect-safe), then
+    near_dup_pairs — the pieces dedup_pipeline composes. ``sigs`` must
+    carry the ``digest_root`` column dedup_pipeline adds. ``observation``:
+    see near_dup_pairs; ``caches`` collects the persisted band tables.
+    """
+    sig_star, families = near_dup_bands(sigs, cfg, id_col, caches)
+    max_bucket: dict[str, int] = {}
+    if cfg.salt_buckets > 1:
+        max_bucket = {p: st["max_bucket"]
+                      for p, st in bucket_stats(families, cfg.bucket_cap).items()}
+    return near_dup_pairs(sigs, cfg, sig_star, families, max_bucket, id_col, observation)
 
 
 def dedup_pipeline(
     clips: DataFrame,
     cfg: DedupConfig = DedupConfig(),
     id_col: str = "clip_id",
-    extra_edges: DataFrame | None = None,
+    containment: bool = False,
     precomputed_sigs: DataFrame | None = None,
 ) -> dict:
     """Run the full pipeline; returns dict of DataFrames + metrics:
     ``clustered`` (every input row + cluster_id), ``labeled`` (rows of
     duplicate clusters + group_count/rn/action), ``pairs`` (edge list),
     ``report`` (1 row), ``clusters`` (per-cluster rollup), ``plan`` (action
-    plan), ``cc_metrics``.
+    plan), ``cc_metrics``, ``bucket_stats`` (metric prefix → the four
+    lsh.bucket_stats numbers of each band family) and ``caches``.
+
+    ``containment``: also link contained transcripts (containment.py) —
+    the fingerprint band table of every signature row is a third band
+    family (``containment_``), sized in the same probe job; its verified
+    edges are lifted to digest roots and join CC (not the ``pairs`` list).
 
     ``precomputed_sigs`` is the resume seam (north rule: "resumable from
     checkpoint with per-partition lineage"): a frame with the
@@ -231,7 +249,7 @@ def dedup_pipeline(
     (jobs/run_dedup.py --resume-from). The scan/decode stage is skipped
     entirely; prefilters are assumed already applied (signatures are
     always recorded post-filter). Everything downstream — digest_root
-    contraction, LSH, CC, keeper — is identical to a full run.
+    contraction, LSH, containment, CC, keeper — is identical to a full run.
     """
     if precomputed_sigs is not None:
         sigs = precomputed_sigs
@@ -246,6 +264,7 @@ def dedup_pipeline(
     # band joins, CC, keeper ranking — runs on the slim columns only.
     # digest_root rides along: one window pass serves both the exact-dup
     # star contraction and representative selection.
+    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     w_digest = Window.partitionBy("digest")
@@ -255,23 +274,29 @@ def dedup_pipeline(
     # column directly — they never enter the iterative CC. CC runs only on
     # edges BETWEEN digest representatives (near-dup + containment), so its
     # node count is |distinct digests that near-collided|, not |dup rows|.
-    from pyspark.sql import Observation
-
-    lsh_obs = Observation("lsh_buckets")
-    lsh_text_obs = Observation("lsh_text_buckets")
     caches: list = [sigs]
+    sig_star, families = near_dup_bands(sigs, cfg, id_col, caches)
+    if containment:
+        families["containment_"] = fingerprint_rows(sigs, id_col).persist(
+            StorageLevel.MEMORY_AND_DISK)
+        caches.append(families["containment_"])
+    # one probe job sizes every family (bucket_members then takes the plain
+    # groupBy where it is collect-safe), materializes the persisted band
+    # tables, and gives the run's bucket-skew metrics
+    stats = bucket_stats(families, cfg.bucket_cap)
+    max_bucket = {prefix: st["max_bucket"] for prefix, st in stats.items()}
     # persisted once: CC and the pairs sink both read it. The Distinct on
     # top matters — Dataset.union flattens nested unions, so a bare union
     # frame would never match the cache once a consumer unions it again.
-    e_near = near_dup_edges(sigs, cfg, id_col, observation=lsh_obs, caches=caches,
-                            text_observation=lsh_text_obs).distinct().persist()
+    e_near = near_dup_pairs(sigs, cfg, sig_star, families, max_bucket, id_col).distinct().persist()
     caches.append(e_near)
     cc_edges = e_near
-    if extra_edges is not None:
-        # containment/extra edges arrive at row granularity — lift to roots
+    if containment:
+        cands = containment_candidates(families["containment_"], cfg, max_bucket["containment_"])
+        # containment edges arrive at row granularity — lift to roots
         root_map = sigs.select(F.col(id_col), F.col("digest_root"))
         lifted = (
-            extra_edges.select("id_a", "id_b")
+            verify_containment(cands, sigs, cfg, id_col)
             .join(root_map.withColumnRenamed(id_col, "id_a")
                   .withColumnRenamed("digest_root", "root_a"), "id_a")
             .join(root_map.withColumnRenamed(id_col, "id_b")
@@ -313,11 +338,10 @@ def dedup_pipeline(
         "plan": action_plan(labeled, id_col),
         "cc_metrics": cc_metrics,
         # bucket-skew metrics (buckets, max_bucket, capped_buckets,
-        # capped_dropped_rows) of the audio / text band families — populated
-        # once any returned DataFrame is acted on; read with .get (north
-        # rule: skew metrics surfaced, silent caps logged)
-        "lsh_observation": lsh_obs,
-        "lsh_text_observation": lsh_text_obs,
+        # capped_dropped_rows) per band family, keyed by metric prefix —
+        # every family reports, with or without a pair (north rule: skew
+        # metrics surfaced, silent caps logged)
+        "bucket_stats": stats,
         # persisted frames backing the result — pass to release_pipeline()
         # when the returned DataFrames are no longer needed
         "caches": caches,
@@ -325,11 +349,10 @@ def dedup_pipeline(
 
 
 def collect_run_metrics(result: dict) -> dict:
-    """Flat run-metrics dict (CC convergence + per-family LSH bucket-skew
-    observations: ``lsh_*`` audio, ``lsh_text_*`` text) ready for
-    sinks.append_metrics — the reference's Statistics analog
-    (main.go:46-59, 1507-1565). Call AFTER at least one action has executed
-    on the result (the observation rides the first action)."""
+    """Flat run-metrics dict (CC convergence + each band family's bucket
+    stats under its prefix: ``lsh_*`` audio, ``lsh_text_*`` text,
+    ``containment_*`` fingerprints) ready for sinks.append_metrics — the
+    reference's Statistics analog (main.go:46-59, 1507-1565)."""
     out: dict = {}
     cc = result.get("cc_metrics") or {}
     for k in ("iterations", "changed_last", "edges", "edges_sym"):
@@ -337,23 +360,12 @@ def collect_run_metrics(result: dict) -> dict:
         if isinstance(v, (int, float)):
             out[f"cc_{k}"] = v
     out["cc_converged"] = 1.0 if cc.get("converged") else 0.0
-    for key, prefix in (("lsh_observation", "lsh_"), ("lsh_text_observation", "lsh_text_")):
-        obs = result.get(key)
-        if obs is None:
-            continue
-        try:
-            for k, v in obs.get.items():
-                if v is not None:
-                    out[f"{prefix}{k}"] = v
-        except Exception:
-            pass  # family not observed (perceptual off) or no action has run yet
+    for prefix, fam in (result.get("bucket_stats") or {}).items():
+        out.update({f"{prefix}{k}": v for k, v in fam.items()})
     return out
 
 
 def release_pipeline(result: dict) -> None:
     """Unpersist every cached frame a dedup_pipeline result holds."""
     for df in result.get("caches", []):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        df.unpersist()

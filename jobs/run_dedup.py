@@ -52,8 +52,9 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--no-perceptual", action="store_true")
     p.add_argument("--no-containment", action="store_true",
                    help="skip the suffix-array contained-transcript stage "
-                        "(north_star lists it as a pipeline stage; it adds "
-                        "a transcript-only pass, no payload rescan)")
+                        "(north_star lists it as a pipeline stage; its "
+                        "fingerprints come from the persisted signature "
+                        "rows' transcripts, no payload rescan)")
     p.add_argument("--jaccard-threshold", type=float, default=0.5)
     p.add_argument("--probe", action="store_true",
                    help="also write a header-only media-probe table "
@@ -211,15 +212,7 @@ def main(argv: list[str] | None = None) -> dict:
         precomputed, resume_info = build_resume_signatures(
             spark, clips, cfg, out, args.resume_from)
 
-    # suffix-array contained-transcript edges (north_star pipeline stage);
-    # a transcript-only pass — the payload column is pruned from its scan —
-    # lifted to digest roots inside dedup_pipeline before CC
-    extra = None
-    if not args.no_containment:
-        from file_deduplicator_spark.operators.containment import containment_edges
-
-        extra = containment_edges(clips, cfg)
-    result = dedup_pipeline(clips, cfg, extra_edges=extra,
+    result = dedup_pipeline(clips, cfg, containment=not args.no_containment,
                             precomputed_sigs=precomputed)
 
     # clusters + pairs land as parquet (distributed writes); the O(1)-row

@@ -113,3 +113,32 @@ def test_containment_plan_is_one_arrow_pass(spark, clips_df):
     assert "MapInArrow" in plan
     assert "lower(" not in plan
     assert "split(" not in plan
+
+
+def test_salted_containment_path_matches_plain(spark, monkeypatch):
+    """A fingerprint bucket above both ``bucket_cap`` and SAFE_COLLECT_MAX
+    takes bucket_members' salted topology (a ``_salt`` grouping) instead
+    of one whole-bucket collect, and yields the plain path's edges."""
+    from file_deduplicator_spark.operators import lsh
+
+    rng = np.random.RandomState(5)
+    vocab = [f"w{i}" for i in range(3000)]
+    b = " ".join(rng.choice(vocab, size=12))
+    # the container sorts first, so the cap of 3 keeps it and two needles
+    rows = [("a_container", " ".join(rng.choice(vocab, size=10)) + " " + b)]
+    rows += [(f"n{k:02d}", b) for k in range(10)]
+    rows += [(f"x{k:02d}", " ".join(rng.choice(vocab, size=20))) for k in range(10)]
+    df = spark.createDataFrame(rows, "clip_id string, transcript string")
+    cfg = DedupConfig(bucket_cap=3)
+
+    def run():
+        edges = containment_edges(df, cfg)
+        plan = edges._jdf.queryExecution().toString()
+        return {(r.id_a, r.id_b) for r in edges.collect()}, "_salt" in plan
+
+    plain, plain_salted = run()
+    monkeypatch.setattr(lsh, "SAFE_COLLECT_MAX", 3)
+    salted, salted_salted = run()
+    assert not plain_salted and salted_salted
+    assert salted == plain
+    assert plain == {("n00", "a_container"), ("n01", "a_container")}

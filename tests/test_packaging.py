@@ -242,6 +242,21 @@ def test_every_config_field_is_read():
     assert not unread, f"DedupConfig fields nothing reads: {unread}"
 
 
+def test_one_bucket_operator_and_no_hidden_metric_loss():
+    """Bucket grouping lives in lsh.py alone: no other operator collects a
+    member list (textops.py holds the exact PPJoin prefix join, not a
+    bucket operator). The pipeline reads bucket metrics from the
+    lsh.bucket_stats probe: no Observation, no failure swallowed whole."""
+    import re
+
+    ops = REPO / "file_deduplicator_spark" / "operators"
+    collectors = sorted(p.name for p in ops.glob("*.py") if "collect_list(" in p.read_text())
+    assert collectors == ["lsh.py", "textops.py"]
+    src = (REPO / "file_deduplicator_spark" / "plans" / "pipeline.py").read_text()
+    assert "Observation(" not in src
+    assert not re.search(r"except Exception:\s*pass", src)
+
+
 def test_readme_layout_names_every_package_module():
     """The README "Repository layout" block names every package module
     (``__init__.py`` aside) and no module that does not exist. Entries nest

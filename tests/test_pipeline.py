@@ -145,6 +145,84 @@ def test_run_metrics_roundtrip(spark, clips_df, tmp_path):
     assert m["lsh_text_buckets"] > 0
     release_pipeline(result)
 
+    # a text family that yields no pair still reports (the probe sizes the
+    # band table; an Observation on the expansion lost its row here)
+    unique = clips_df.filter(F.col("scenario") == "unique")
+    result = dedup_pipeline(unique, DedupConfig())
+    assert result["pairs"].count() == 0
+    m = collect_run_metrics(result)
+    assert m["lsh_text_buckets"] > 0 and m["lsh_buckets"] > 0
+    assert m["lsh_text_max_bucket"] == 1
+    release_pipeline(result)
+
+    # containment is a third band family with the same four metrics
+    result = dedup_pipeline(clips_df, DedupConfig(), containment=True)
+    result["report"].collect()
+    m = collect_run_metrics(result)
+    for k in ("buckets", "max_bucket", "capped_buckets", "capped_dropped_rows"):
+        assert f"containment_{k}" in m
+    assert m["containment_buckets"] > 0 and m["containment_max_bucket"] > 1
+    release_pipeline(result)
+
+
+def test_containment_cap_loss_is_counted(spark):
+    """300 clips share one 12-word transcript B and a 301st clip holds 18
+    other words followed by B. B's one winnowed fingerprint makes a bucket
+    of 301 members; the cap keeps the 256 lowest ids, so the container,
+    which sorts last, is dropped and containment links none of the 300
+    needles to it. That loss stays open (identical transcripts should enter
+    containment once); this pins that the run's metrics count it instead of
+    hiding it. Perceptual matching is off so that the random payloads do
+    not link the clips through audio."""
+    import datetime
+
+    import numpy as np
+
+    from file_deduplicator_spark.plans.pipeline import collect_run_metrics, release_pipeline
+
+    rng = np.random.RandomState(3)  # a B with exactly one winnowed fingerprint
+    words = list(rng.choice([f"w{i}" for i in range(5000)], size=30, replace=False))
+    b = " ".join(words[:12])
+    ids = [f"a{i:04d}" for i in range(300)] + ["z0001"]
+    texts = [b] * 300 + [" ".join(words[12:]) + " " + b]
+    t0 = datetime.datetime(2024, 1, 1)
+    pdf = pd.DataFrame({
+        "clip_id": ids,
+        "bytes": [bytearray(rng.bytes(64)) for _ in ids],
+        "sr_hz": 16000, "dur_ms": 1000, "codec": "wav",
+        "transcript": texts, "mtime": t0, "scenario": "item1",
+    })
+    df = spark.createDataFrame(
+        pdf, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
+             "transcript string, mtime timestamp, scenario string")
+    result = dedup_pipeline(df, DedupConfig(perceptual=False), containment=True)
+    result["report"].collect()
+    m = collect_run_metrics(result)
+    release_pipeline(result)
+    assert m["containment_max_bucket"] == 301
+    assert m["containment_capped_buckets"] == 1
+    assert m["containment_capped_dropped_rows"] == 301 - DedupConfig().bucket_cap == 45
+
+
+def test_driver_union_find_builds_no_python_rdd(spark, monkeypatch):
+    """connected_components' driver path ships its labels as Arrow: nothing
+    goes through sc.parallelize, not even for an edge-free batch."""
+    edges = spark.createDataFrame(
+        pd.DataFrame({"id_a": ["b", "c", "e"], "id_b": ["a", "b", "d"]}),
+        "id_a string, id_b string")
+    empty = edges.limit(0)
+
+    def no_rdd(*a, **k):
+        raise AssertionError("connected_components went through sc.parallelize")
+
+    monkeypatch.setattr(spark.sparkContext, "parallelize", no_rdd)
+    labels, metrics = connected_components(empty)
+    assert labels.collect() == [] and metrics["edges"] == 0
+    labels, metrics = connected_components(edges)
+    got = {r.id: r.cluster_id for r in labels.collect()}
+    assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
+    assert metrics["mode"] == "driver_union_find"
+
 
 def test_append_metrics_builds_no_python_rdd(spark, tmp_path, monkeypatch):
     """The metrics frame ships to the JVM as Arrow: nothing goes through
