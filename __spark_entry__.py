@@ -489,9 +489,11 @@ def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 watch semantics under the value-level gate (round-4 directive 6):
     one incremental watch micro-batch expressed over the documents table
     and run through the PRODUCTION matcher (streaming/watch.batch_alerts —
-    the matcher watch.process_new_snapshots runs per batch), with the
-    portable MinHash builders injected so DuckDB replicates bands +
-    agreement value-for-value.
+    the matcher watch.process_new_snapshots runs per batch). Its seam is
+    two builders: the portable MinHash bands and the portable has-text
+    guard, so DuckDB replicates bands + agreement value-for-value; the
+    verify is the engine's own (lsh.verify_pairs_minhash — on the 16-slot
+    portable signature its matches / size equals the oracle's matches / 16).
 
     State = documents with doc_id % 5 != 0 (the already-seen corpus);
     arrivals = doc_id % 5 = 0. The NEW arrival is the victim (SURVEY §2.7
@@ -503,7 +505,6 @@ def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from file_deduplicator_spark.config import DedupConfig
     from file_deduplicator_spark.functions.portable import (
         EMPTY_SLOT_P,
-        portable_agreement_col,
         portable_minhash_bands_col,
         with_portable_minhash_arrow,
     )
@@ -524,10 +525,7 @@ def q_watch_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
         arrivals, state, cfg,
         include=("exact", "similar_text"),
         mh_bands_builder=portable_minhash_bands_col,
-        mh_agreement=lambda x, y: (
-            portable_agreement_col(x, y) >= F.lit(cfg.jaccard_threshold)),
-        mh_guard=lambda df, sig_col: df.filter(
-            F.element_at(F.col(sig_col), 1) != F.lit(EMPTY_SLOT_P)),
+        mh_guard=lambda sig: F.element_at(sig, 1) != F.lit(EMPTY_SLOT_P),
     )
     return alerts.filter(F.col("matched_id") % 5 != 0).groupBy("new_id", "match_kind").agg(
         F.min("matched_id").cast("long").alias("keeper_id"),

@@ -22,6 +22,19 @@ from file_deduplicator_spark.functions.text import MERSENNE_61, NUM_PERM
 
 EMPTY_SLOT = MERSENNE_61 - 1  # signature slot value for "no shingles"
 
+
+def has_text_col(sig: Column) -> Column:
+    """The one "this row has text" rule of batch and watch matching: the
+    MinHash signature's first slot is not ``EMPTY_SLOT``. It is the kernel's
+    own decision: ``text.tokenize`` (``str.split()``) finds no word in tabs,
+    newlines, CR or NBSP, so such a transcript gets the all-``EMPTY_SLOT``
+    signature, whose slot agreement with any other blank one is 1.0. A null
+    signature fails the predicate. Bound: a row with text fails it only if
+    its first slot's min over shingles is M61−1, which needs every shingle
+    to hash to that one value."""
+    return F.element_at(sig, 1) != F.lit(EMPTY_SLOT)
+
+
 MINHASH_BANDS = 16  # b
 MINHASH_ROWS = 4    # r
 FOLD_SLOTS_PER_LONG = 16  # 4 bits per slot

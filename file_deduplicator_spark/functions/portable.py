@@ -123,7 +123,7 @@ def with_portable_minhash_arrow(df, text_col: str, out_col: str,
     (all < 2^62, exact in int64); no shingles → every slot EMPTY_SLOT_P.
     Tokenization and NULL propagation stay JVM-side: the words array is
     computed by ``portable_words_col`` and crosses Arrow once; a NULL text
-    yields the all-EMPTY_SLOT signature exactly like the expression form
+    yields the all-EMPTY_SLOT_P signature exactly like the expression form
     (whose coalesce() maps the null affine chain to EMPTY_SLOT_P)."""
     import numpy as np
     import pyarrow as pa
@@ -336,14 +336,6 @@ def with_portable_simhash_arrow(df, text_col: str, hi_col: str, lo_col: str):
 
     staged = df.withColumn(ws_col, portable_words_col(F.col(text_col)))
     return staged.mapInArrow(run, schema=out_schema)
-
-
-def portable_agreement_col(sig_a: Column, sig_b: Column, num_perm: int = NUM_PERM) -> Column:
-    return F.aggregate(
-        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(float(num_perm))
 
 
 # ---------------------------------------------------------------------------

@@ -274,17 +274,23 @@ def verify_pairs_minhash(
     min_agreement: float,
     id_col: str = "clip_id",
     sig_col: str = "minhash_sig",
+    pair_cols: tuple[str, str] = ("id_a", "id_b"),
 ) -> DataFrame:
-    """Verify stage for MinHash signatures: slot-agreement fraction (unbiased
-    Jaccard estimator) >= min_agreement. Avoids re-shingling inside the join."""
+    """The one MinHash text verify of batch and watch: keep the pairs whose
+    slot-agreement fraction (unbiased Jaccard estimator, minhash_sql
+    .sig_agreement_col) is >= min_agreement, with it as ``agreement``.
+    ``pair_cols`` names the pair's two id columns (watch's alerts are
+    new_id / matched_id); each side takes its signature from ``sigs`` in one
+    join, so nothing is re-shingled."""
     from file_deduplicator_spark.functions.minhash_sql import sig_agreement_col
 
-    a = sigs.select(F.col(id_col).alias("id_a"), F.col(sig_col).alias("sig_a"))
-    b = sigs.select(F.col(id_col).alias("id_b"), F.col(sig_col).alias("sig_b"))
+    ca, cb = pair_cols
+    a = sigs.select(F.col(id_col).alias(ca), F.col(sig_col).alias("sig_a"))
+    b = sigs.select(F.col(id_col).alias(cb), F.col(sig_col).alias("sig_b"))
     return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
+        pairs.join(a, ca)
+        .join(b, cb)
         .withColumn("agreement", sig_agreement_col(F.col("sig_a"), F.col("sig_b")))
         .filter(F.col("agreement") >= F.lit(min_agreement))
-        .select("id_a", "id_b", "agreement")
+        .select(ca, cb, "agreement")
     )

@@ -24,11 +24,13 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
 from file_deduplicator_spark.functions.minhash_sql import (
+    has_text_col,
     minhash_bands_col,
     minhash_fold_col,
     simhash_bands_col,
@@ -99,32 +101,65 @@ def digest_representatives(sigs: DataFrame, id_col: str = "clip_id") -> DataFram
 
 
 def near_dup_bands(
-    sigs: DataFrame, cfg: DedupConfig, id_col: str = "clip_id", caches: list | None = None,
-) -> tuple[DataFrame | None, dict[str, DataFrame]]:
-    """The near-dup band tables of the digest representatives, keyed by
-    metric prefix — ``lsh_`` audio (perceptual only; the 8-byte sim_sig
-    rides as the ``sig`` payload) and ``lsh_text_`` text (non-empty
-    transcripts; the fold rides as ``fold``) — plus the audio
-    signature-star edges (None with perceptual off). Each table is
-    persisted into ``caches``: the probe and the bucket groupBy both read
-    it, so the explode runs once, spilling to disk if it outgrows memory.
+    audio: DataFrame, text: DataFrame, cfg: DedupConfig, id_col: str = "clip_id",
+    carry: tuple[str, ...] = (), text_bands=minhash_bands_col, has_text=has_text_col,
+) -> dict:
+    """The near-dup band families of batch and watch, keyed by metric prefix
+    → (band table, in-bucket ``keep`` for lsh.bucket_pairs), unpersisted:
+
+    * ``lsh_`` — ``audio`` rows with a sim_sig (only when ``cfg.perceptual``);
+      the 8-byte sim_sig rides as the ``sig`` payload for lsh.hamming_within.
+    * ``lsh_text_`` — ``text`` rows that pass ``has_text`` (minhash_sql
+      .has_text_col), banded by ``text_bands``. With the engine's bands the
+      nibble fold rides as ``fold`` for lsh.fold_within; the fold bounds
+      only the engine's NUM_PERM-slot agreement, so other band builders (the
+      gate's portable ones) get no in-bucket filter.
+
+    ``carry`` names extra columns every band table carries as payload (watch
+    carries ``in_state``). The caller quarantines before and persists after.
     """
-    from pyspark import StorageLevel
-
-    reps = digest_representatives(sigs, id_col)
-    sig_star = None
-    families: dict[str, DataFrame] = {}
-
+    families: dict = {}
+    carried = {c: c for c in carry}
     if cfg.perceptual:
-        audio = reps.filter(F.col("sim_sig").isNotNull())
+        families["lsh_"] = (
+            band_table(audio.filter(F.col("sim_sig").isNotNull()),
+                       simhash_bands_col(F.col("sim_sig")), id_col,
+                       payload={"sig": "sim_sig", **carried}),
+            hamming_within(cfg.effective_threshold))
+    rows = text.filter(has_text(F.col("minhash_sig")))
+    keep = None
+    if text_bands is minhash_bands_col:
+        # round-4: the fold rejects pairs INSIDE the bucket expansion and is
+        # exactly conservative (verified pair set unchanged). On the 200k
+        # bench fixture all 193,548 candidates pass the verify, so it rejects
+        # ~nothing there; its value is boilerplate-heavy corpora, where band
+        # collisions far exceed true pairs and each rejected candidate saves
+        # two join lookups and a shuffle row.
+        rows = rows.withColumn("_mh_fold", minhash_fold_col(F.col("minhash_sig"), NUM_PERM))
+        carried = {"fold": "_mh_fold", **carried}
+        keep = fold_within(NUM_PERM, cfg.jaccard_threshold)
+    families["lsh_text_"] = (
+        band_table(rows, text_bands(F.col("minhash_sig")), id_col, payload=carried), keep)
+    return families
+
+
+def _batch_families(
+    sigs: DataFrame, cfg: DedupConfig, id_col: str, caches: list, containment: bool = False,
+) -> tuple[DataFrame | None, dict]:
+    """The batch band families — near_dup_bands over the digest
+    representatives, plus the ``containment_`` fingerprint table of every
+    row — each persisted into ``caches``: the probe and the bucket groupBy
+    both read it, so the explode runs once, spilling to disk if it outgrows
+    memory. Returns (audio signature-star edges or None, families)."""
+    reps = digest_representatives(sigs, id_col)
+    sig_star, audio = None, reps
+    if cfg.perceptual:
         # second-level quarantine: rows with IDENTICAL signatures (Hamming 0)
         # are linked by linear star edges and enter LSH as one representative
         # — near-identical corpora otherwise re-create the quadratic buckets
         # the digest quarantine just removed.
-        from pyspark.sql import Window
-
         w_sig = Window.partitionBy("sim_sig").orderBy(id_col)
-        ranked = audio.select(id_col, "sim_sig").withColumn(
+        ranked = reps.filter(F.col("sim_sig").isNotNull()).select(id_col, "sim_sig").withColumn(
             "_rn", F.row_number().over(w_sig)
         ).withColumn("_root", F.min(id_col).over(w_sig.rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing)))
@@ -132,30 +167,13 @@ def near_dup_bands(
             ranked.filter(F.col("_rn") > 1)
             .select(F.col("_root").alias("id_a"), F.col(id_col).alias("id_b"))
         )
-        sig_reps = ranked.filter(F.col("_rn") == 1).select(id_col, "sim_sig")
-        families["lsh_"] = band_table(
-            sig_reps, simhash_bands_col(F.col("sim_sig")), id_col, payload={"sig": "sim_sig"},
-        )
-
-    # round-4: the 32-byte nibble fold rides the band table so non-matching
-    # candidates are rejected INSIDE the bucket expansion (provable-mismatch
-    # bound — exactly conservative, verified pair set unchanged); only
-    # survivors reach the two verify joins. Measured honestly at the
-    # 200k bench fixture: banding (b=16, r=4) is already precise on its
-    # bimodal transcripts — 193,548 candidates, all of which pass the
-    # verify — so the filter rejects ~nothing THERE and costs ~4 integer ops
-    # per in-bucket pair. Its value is adversarial/real corpora
-    # (boilerplate-heavy text where band collisions far exceed true pairs),
-    # where every rejected candidate saves two join lookups and a shuffle row.
-    text = reps.filter(F.length(F.trim(F.col("transcript"))) > 0).withColumn(
-        "_mh_fold", minhash_fold_col(F.col("minhash_sig"), NUM_PERM))
-    families["lsh_text_"] = band_table(
-        text, minhash_bands_col(F.col("minhash_sig")), id_col, payload={"fold": "_mh_fold"},
-    )
-    for prefix, bt in families.items():
-        families[prefix] = bt.persist(StorageLevel.MEMORY_AND_DISK)
-        if caches is not None:
-            caches.append(families[prefix])
+        audio = ranked.filter(F.col("_rn") == 1).select(id_col, "sim_sig")
+    families = near_dup_bands(audio, reps, cfg, id_col)
+    if containment:
+        families["containment_"] = (fingerprint_rows(sigs, id_col), None)
+    for prefix, (bt, keep) in families.items():
+        families[prefix] = (bt.persist(StorageLevel.MEMORY_AND_DISK), keep)
+        caches.append(families[prefix][0])
     return sig_star, families
 
 
@@ -163,13 +181,14 @@ def near_dup_pairs(
     sigs: DataFrame,
     cfg: DedupConfig,
     sig_star: DataFrame | None,
-    families: dict[str, DataFrame],
+    families: dict,
     max_bucket: dict[str, int],
     id_col: str = "clip_id",
     observation=None,
 ) -> DataFrame:
-    """Verified near-dup pairs of near_dup_bands' families, each from the
-    one in-bucket pair operator (lsh.bucket_pairs) sized by ``max_bucket``
+    """Verified near-dup pairs of the ``lsh_`` / ``lsh_text_`` families
+    (near_dup_bands), each from the one in-bucket pair operator
+    (lsh.bucket_pairs) with its family's ``keep``, sized by ``max_bucket``
     (prefix → largest bucket, from lsh.bucket_stats).
 
     Audio: Hamming ≤ threshold (ref threshold semantics main.go:147 /
@@ -179,19 +198,21 @@ def near_dup_pairs(
     the 24-bit table keys collide into 5.7M distinct candidates whose
     distinct+join verify dominated the pipeline, super-linearly.
 
-    Text: lsh.fold_within rejects provably failing pairs in-bucket, then
-    slot agreement ≥ jaccard_threshold via lsh.verify_pairs_minhash (the
-    512-byte signature is too fat to carry into buckets; its near-uniform
-    band keys keep candidate counts ~linear, so the join stays cheap).
+    Text: the fold pre-filter in-bucket, then the slot agreement ≥
+    jaccard_threshold in lsh.verify_pairs_minhash, the one text verify of
+    batch and watch (the 512-byte signature is too fat to carry into
+    buckets; its near-uniform band keys keep candidate counts ~linear, so
+    the join stays cheap).
 
     ``observation``: the audio family's bucket_pairs Observation.
     """
     parts = [] if sig_star is None else [sig_star]
     if "lsh_" in families:
-        parts.append(bucket_pairs(families["lsh_"], cfg, hamming_within(cfg.effective_threshold),
-                                  observation=observation, max_bucket=max_bucket.get("lsh_")))
-    pairs_t = bucket_pairs(families["lsh_text_"], cfg, fold_within(NUM_PERM, cfg.jaccard_threshold),
-                           max_bucket=max_bucket.get("lsh_text_"))
+        bt, keep = families["lsh_"]
+        parts.append(bucket_pairs(bt, cfg, keep, observation=observation,
+                                  max_bucket=max_bucket.get("lsh_")))
+    bt, keep = families["lsh_text_"]
+    pairs_t = bucket_pairs(bt, cfg, keep, max_bucket=max_bucket.get("lsh_text_"))
     parts.append(verify_pairs_minhash(pairs_t, digest_representatives(sigs, id_col),
                                       cfg.jaccard_threshold, id_col).select("id_a", "id_b"))
     # NOTE: a pair verified by BOTH modalities appears twice here.
@@ -207,18 +228,19 @@ def near_dup_edges(
     observation=None,
     caches: list | None = None,
 ) -> DataFrame:
-    """Verified near-duplicate pairs from both modalities: near_dup_bands,
-    one fused lsh.bucket_stats probe (when ``cfg.salt_buckets`` > 1, so
-    bucket_members takes the plain groupBy where it is collect-safe), then
-    near_dup_pairs — the pieces dedup_pipeline composes. ``sigs`` must
-    carry the ``digest_root`` column dedup_pipeline adds. ``observation``:
-    see near_dup_pairs; ``caches`` collects the persisted band tables.
+    """Verified near-duplicate pairs from both modalities: the batch band
+    families, one fused lsh.bucket_stats probe (when ``cfg.salt_buckets``
+    > 1, so bucket_members takes the plain groupBy where it is
+    collect-safe), then near_dup_pairs — the pieces dedup_pipeline
+    composes. ``sigs`` must carry the ``digest_root`` column dedup_pipeline
+    adds. ``observation``: see near_dup_pairs; ``caches`` collects the
+    persisted band tables.
     """
-    sig_star, families = near_dup_bands(sigs, cfg, id_col, caches)
+    sig_star, families = _batch_families(sigs, cfg, id_col, [] if caches is None else caches)
     max_bucket: dict[str, int] = {}
     if cfg.salt_buckets > 1:
-        max_bucket = {p: st["max_bucket"]
-                      for p, st in bucket_stats(families, cfg.bucket_cap).items()}
+        max_bucket = {p: st["max_bucket"] for p, st in bucket_stats(
+            {p: bt for p, (bt, _) in families.items()}, cfg.bucket_cap).items()}
     return near_dup_pairs(sigs, cfg, sig_star, families, max_bucket, id_col, observation)
 
 
@@ -264,9 +286,6 @@ def dedup_pipeline(
     # band joins, CC, keeper ranking — runs on the slim columns only.
     # digest_root rides along: one window pass serves both the exact-dup
     # star contraction and representative selection.
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
     w_digest = Window.partitionBy("digest")
     sigs = sigs.drop("bytes").withColumn("digest_root", F.min(id_col).over(w_digest)).persist()
 
@@ -275,15 +294,11 @@ def dedup_pipeline(
     # edges BETWEEN digest representatives (near-dup + containment), so its
     # node count is |distinct digests that near-collided|, not |dup rows|.
     caches: list = [sigs]
-    sig_star, families = near_dup_bands(sigs, cfg, id_col, caches)
-    if containment:
-        families["containment_"] = fingerprint_rows(sigs, id_col).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        caches.append(families["containment_"])
+    sig_star, families = _batch_families(sigs, cfg, id_col, caches, containment)
     # one probe job sizes every family (bucket_members then takes the plain
     # groupBy where it is collect-safe), materializes the persisted band
     # tables, and gives the run's bucket-skew metrics
-    stats = bucket_stats(families, cfg.bucket_cap)
+    stats = bucket_stats({p: bt for p, (bt, _) in families.items()}, cfg.bucket_cap)
     max_bucket = {prefix: st["max_bucket"] for prefix, st in stats.items()}
     # persisted once: CC and the pairs sink both read it. The Distinct on
     # top matters — Dataset.union flattens nested unions, so a bare union
@@ -292,7 +307,7 @@ def dedup_pipeline(
     caches.append(e_near)
     cc_edges = e_near
     if containment:
-        cands = containment_candidates(families["containment_"], cfg, max_bucket["containment_"])
+        cands = containment_candidates(families["containment_"][0], cfg, max_bucket["containment_"])
         # containment edges arrive at row granularity — lift to roots
         root_map = sigs.select(F.col(id_col), F.col("digest_root"))
         lifted = (

@@ -35,21 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
-from file_deduplicator_spark.functions.minhash_sql import (
-    EMPTY_SLOT,
-    minhash_bands_col,
-    minhash_fold_col,
-    sig_agreement_col,
-    simhash_bands_col,
-)
-from file_deduplicator_spark.functions.text import NUM_PERM
-from file_deduplicator_spark.operators.lsh import (
-    band_table,
-    bucket_pairs,
-    bucket_stats,
-    fold_within,
-    hamming_within,
-)
+from file_deduplicator_spark.functions.minhash_sql import has_text_col, minhash_bands_col
+from file_deduplicator_spark.operators.lsh import bucket_pairs, bucket_stats, verify_pairs_minhash
+from file_deduplicator_spark.plans.pipeline import apply_prefilters, near_dup_bands, with_signatures
 from file_deduplicator_spark.sources import iceberg_lite
 
 SIG_COLS = ["clip_id", "digest", "size", "sim_sig", "minhash_sig"]
@@ -108,7 +96,7 @@ def check_signature_settings(state_dir: str | Path, ckpt: dict, cfg: DedupConfig
 def batch_alerts(
     new_sigs: DataFrame, state: DataFrame | None, cfg: DedupConfig,
     include: tuple = ("exact", "similar_audio", "similar_text"),
-    mh_bands_builder=None, mh_agreement=None, mh_guard=None,
+    mh_bands_builder=minhash_bands_col, mh_guard=has_text_col,
 ) -> tuple[DataFrame, dict]:
     """One micro-batch's alerts (new_id, matched_id, match_kind), persisted
     for the caller to unpersist, and its stats: ``new_sigs`` against the
@@ -119,21 +107,21 @@ def batch_alerts(
     New ∪ state rows, tagged ``in_state``, feed every match; state rows whose
     clip_id is in the batch are dropped first, so a replayed batch meets its
     own rows once, as arrivals. Exact: one digest equi-join (main.go:
-    1846-1856). Similar (replaces the O(n) scan, main.go:1874-1886): per
-    family, lsh.bucket_pairs over the buckets holding a new row, keeping
-    pairs with a new side that pass the in-bucket verify (Hamming; for
-    MinHash the fold pre-filter, then the slot agreement on the survivors,
-    as in the batch path). Members sort new-first, so the cap evicts a new
-    row only from a bucket holding more than ``bucket_cap`` of them. Stats:
-    ``alerts`` and each family's lsh.bucket_stats as ``lsh_*`` /
-    ``lsh_text_*`` (the batch job's names; an Observation loses them when a
-    family yields no pair, as AQE swaps its plan for an empty relation).
+    1846-1856). Similar (replaces the O(n) scan, main.go:1874-1886): the
+    batch path's near-dup core — pipeline.near_dup_bands builds the band
+    families (carrying ``in_state``; ``include`` picks which are kept),
+    narrowed to the buckets holding a new row, then lsh.bucket_pairs keeps
+    pairs with a new side that pass the family's in-bucket verify, and text
+    pairs take the one slot-agreement verify, lsh.verify_pairs_minhash.
+    Members sort new-first, so the cap evicts a new row only from a bucket
+    holding more than ``bucket_cap`` of them. Stats: ``alerts`` and each
+    kept family's lsh.bucket_stats as ``lsh_*`` / ``lsh_text_*`` (the batch
+    job's names).
 
-    ``include`` selects the match kinds; ``mh_bands_builder`` /
-    ``mh_agreement`` / ``mh_guard`` override the MinHash band, verify and
-    degenerate-signature guard expressions, so the value-level gate
-    (__spark_entry__.q_watch_arrivals) runs THIS function with portable
-    (DuckDB-replicable) builders.
+    ``mh_bands_builder`` / ``mh_guard`` replace the MinHash band builder and
+    the has-text predicate (minhash_sql.has_text_col), so the value-level
+    gate (__spark_entry__.q_watch_arrivals) runs THIS function on portable
+    (DuckDB-replicable) signatures.
     """
     if not include:
         raise ValueError("include must name at least one match kind")
@@ -155,54 +143,33 @@ def batch_alerts(
             .filter(F.col("m_state") | (F.col("matched_id") < F.col("new_id")))
             .select("new_id", "matched_id", F.lit("exact").alias("match_kind")))
 
-    def live_bands(rows, bands, **payload):
-        # read by the probe and by the groupBy; state-only buckets never expand
-        bt = band_table(rows, bands, payload={**payload, "in_state": "in_state"})
-        if state is not None:
-            bt = bt.join(bt.filter(~F.col("in_state")).select("band", "bh"),
-                         ["band", "bh"], "left_semi")
-        return bt.persist(StorageLevel.MEMORY_AND_DISK)
-
-    families = {}  # stat prefix → (live band table, in-bucket verify, kind)
-    if "similar_audio" in include:
-        families["lsh_"] = (
-            live_bands(tagged.where(F.col("sim_sig").isNotNull()),
-                       simhash_bands_col(F.col("sim_sig")), sig="sim_sig"),
-            hamming_within(cfg.effective_threshold), "similar_audio")
-    if "similar_text" in include:
-        # empty/whitespace transcripts carry the degenerate all-EMPTY_SLOT
-        # signature, whose agreement is 1.0 between ANY two silent clips:
-        # they never enter the band table (the batch path's has-text rule)
-        guard = mh_guard or (lambda df, c: df.filter(
-            F.element_at(F.col(c), 1) != F.lit(EMPTY_SLOT)))
-        text = guard(tagged, "minhash_sig")
-        agree = mh_agreement or (lambda a, b: sig_agreement_col(a, b) >= cfg.jaccard_threshold)
-        bands = (mh_bands_builder or minhash_bands_col)(F.col("minhash_sig"))
-        if mh_agreement is None:  # the fold bounds the engine's own 64-slot agreement only
-            fold = minhash_fold_col(F.col("minhash_sig"), NUM_PERM)
-            families["lsh_text_"] = (live_bands(text.withColumn("fold", fold), bands, fold="fold"),
-                                     fold_within(NUM_PERM, cfg.jaccard_threshold), "similar_text")
-        else:
-            families["lsh_text_"] = (live_bands(text, bands), lambda x, y: F.lit(True),
-                                     "similar_text")
-    stats = bucket_stats({k: f[0] for k, f in families.items()}, cfg.bucket_cap) if families else {}
+    kinds = {"lsh_": "similar_audio", "lsh_text_": "similar_text"}
+    families = {}  # stat prefix → (live band table, in-bucket verify)
+    for prefix, (bt, verify) in near_dup_bands(
+            tagged, tagged, cfg, carry=("in_state",), text_bands=mh_bands_builder,
+            has_text=mh_guard).items():
+        if kinds[prefix] in include:
+            if state is not None:  # state-only buckets never expand
+                bt = bt.join(bt.filter(~F.col("in_state")).select("band", "bh"),
+                             ["band", "bh"], "left_semi")
+            # read by the probe and by the groupBy
+            families[prefix] = (bt.persist(StorageLevel.MEMORY_AND_DISK), verify)
+    stats = bucket_stats({k: bt for k, (bt, _) in families.items()},
+                         cfg.bucket_cap) if families else {}
 
     def victim_first(x, y):  # x is new (new rows sort first); y is the victim iff new too
         return F.struct(F.when(y["in_state"], x["id"]).otherwise(y["id"]).alias("new_id"),
                         F.when(y["in_state"], y["id"]).otherwise(x["id"]).alias("matched_id"))
 
-    for prefix, (bt, verify, kind) in families.items():
+    for prefix, (bt, verify) in families.items():
         pairs = bucket_pairs(
             bt, cfg, emit=victim_first, rank="in_state", max_bucket=stats[prefix]["max_bucket"],
-            keep=lambda x, y, verify=verify: ~x["in_state"] & verify(x, y), distinct=False)
-        if kind == "similar_text":  # the slot agreement, on the pairs the buckets kept
-            sig = text.select("clip_id", "minhash_sig")
-            a, b = sig.alias("a"), sig.alias("b")
-            pairs = (pairs.join(a, F.col("new_id") == F.col("a.clip_id"))
-                     .join(b, F.col("matched_id") == F.col("b.clip_id"))
-                     .filter(agree(F.col("a.minhash_sig"), F.col("b.minhash_sig")))
-                     .select("new_id", "matched_id"))
-        parts.append(pairs.withColumn("match_kind", F.lit(kind)))
+            keep=lambda x, y, v=verify: ~x["in_state"] if v is None else ~x["in_state"] & v(x, y),
+            distinct=False)
+        if prefix == "lsh_text_":
+            pairs = verify_pairs_minhash(pairs, tagged, cfg.jaccard_threshold,
+                                         pair_cols=("new_id", "matched_id"))
+        parts.append(pairs.select("new_id", "matched_id", F.lit(kinds[prefix]).alias("match_kind")))
 
     out = parts[0]
     for p in parts[1:]:
@@ -213,7 +180,7 @@ def batch_alerts(
     # each batch writes few files
     alerts = out.filter(F.col("new_id") != F.col("matched_id")).distinct().persist()
     n_alerts = alerts.count()
-    for df in [tagged] + [bt for bt, _, _ in families.values()]:
+    for df in [tagged] + [bt for bt, _ in families.values()]:
         df.unpersist()
     return alerts, {"alerts": n_alerts, **{f"{prefix}{k}": v for prefix, fam in stats.items()
                                            for k, v in fam.items()}}
@@ -249,8 +216,6 @@ def process_new_snapshots(
 
     # F6: re-apply the batch filters to new arrivals (ref main.go:1683-1704
     # runs the same size/pattern checks per watch event)
-    from file_deduplicator_spark.plans.pipeline import apply_prefilters, with_signatures
-
     new_sigs = with_signatures(apply_prefilters(new_rows, cfg), cfg).select(*SIG_COLS).persist()
 
     # the whole signatures table is the state side of every match: a band

@@ -143,6 +143,7 @@ def test_prefilter_preserves_verified_pair_set(spark, clips_df):
     conservative)."""
     from file_deduplicator_spark.config import DedupConfig
     from file_deduplicator_spark.functions.minhash_sql import (
+        has_text_col,
         minhash_bands_col,
         minhash_fold_col,
     )
@@ -157,7 +158,7 @@ def test_prefilter_preserves_verified_pair_set(spark, clips_df):
 
     cfg = DedupConfig()
     sigs = (with_signatures(clips_df, cfg).drop("bytes")
-            .filter(F.length(F.trim(F.col("transcript"))) > 0)
+            .filter(has_text_col(F.col("minhash_sig")))
             .withColumn("_mh_fold", minhash_fold_col(F.col("minhash_sig"), NUM_PERM))
             .persist())
     try:

@@ -257,6 +257,23 @@ def test_one_bucket_operator_and_no_hidden_metric_loss():
     assert not re.search(r"except Exception:\s*pass", src)
 
 
+def test_one_near_dup_core_for_batch_and_watch():
+    """Batch and watch share one near-dup core: one has-text rule
+    (minhash_sql.has_text_col, the only reader of EMPTY_SLOT), one band
+    builder (pipeline.near_dup_bands) and one text verify
+    (lsh.verify_pairs_minhash), so watch builds no band table and writes no
+    slot agreement of its own, and batch has no second has-text rule."""
+    import re
+
+    pkg = REPO / "file_deduplicator_spark"
+    readers = sorted(str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+                     if re.search(r"\bEMPTY_SLOT\b", p.read_text()))
+    assert readers == ["functions/minhash_sql.py"]
+    watch = (pkg / "streaming" / "watch.py").read_text()
+    assert "band_table(" not in watch and "sig_agreement_col" not in watch
+    assert "F.trim(" not in (pkg / "plans" / "pipeline.py").read_text()
+
+
 def test_readme_layout_names_every_package_module():
     """The README "Repository layout" block names every package module
     (``__init__.py`` aside) and no module that does not exist. Entries nest

@@ -2,6 +2,7 @@
 (near-miss) pairs, chain merging via CC, hot-bucket skew boundedness."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
@@ -202,6 +203,41 @@ def test_containment_cap_loss_is_counted(spark):
     assert m["containment_max_bucket"] == 301
     assert m["containment_capped_buckets"] == 1
     assert m["containment_capped_dropped_rows"] == 301 - DedupConfig().bucket_cap == 45
+
+
+@pytest.mark.parametrize("perceptual", [True, False])
+def test_whitespace_only_transcripts_never_text_match(spark, perceptual):
+    """Five clips with their own audio and transcripts that hold no word for
+    the signature kernel (tab, newline, CR, NBSP) all carry the degenerate
+    all-EMPTY_SLOT MinHash signature. The has-text rule (minhash_sql
+    .has_text_col) keeps them out of the text family, so there is no pair,
+    no cluster and no DELETE, with or without audio matching."""
+    import datetime
+
+    import numpy as np
+
+    from file_deduplicator_spark.datagen import _synth_pcm
+    from file_deduplicator_spark.functions.audio import wav_encode
+    from file_deduplicator_spark.plans.pipeline import release_pipeline
+
+    rng = np.random.RandomState(5)
+    texts = ["\t", "\n", "\t\n ", "\u00a0", "\r\n"]
+    pdf = pd.DataFrame({
+        "clip_id": [f"w{i}" for i in range(len(texts))],
+        "bytes": [bytearray(wav_encode(_synth_pcm(rng, 16000, 800), 16000)) for _ in texts],
+        "sr_hz": 16000, "dur_ms": 800, "codec": "wav",
+        "transcript": texts, "mtime": datetime.datetime(2024, 1, 1), "scenario": "blank",
+    })
+    df = spark.createDataFrame(
+        pdf, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
+             "transcript string, mtime timestamp, scenario string")
+    result = dedup_pipeline(df, DedupConfig(perceptual=perceptual))
+    try:
+        assert result["pairs"].count() == 0
+        assert result["clusters"].count() == 0
+        assert result["plan"].count() == 0  # the plan holds the DELETE rows
+    finally:
+        release_pipeline(result)
 
 
 def test_driver_union_find_builds_no_python_rdd(spark, monkeypatch):

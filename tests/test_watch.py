@@ -206,29 +206,31 @@ def test_watch_replay_is_idempotent(spark, watch_env):
 
 
 def test_watch_empty_transcripts_never_text_match(spark, watch_env):
-    """Two unrelated silent/blank-transcript clips share the degenerate
-    all-EMPTY_SLOT MinHash signature — they must NOT raise similar_text."""
+    """Unrelated clips whose transcripts hold no word for the signature
+    kernel (blank, or only tab / newline / CR / NBSP) share the degenerate
+    all-EMPTY_SLOT MinHash signature — they must NOT raise similar_text,
+    against the state or against each other. Their audio still matches:
+    clip_s2 is clip_b at half gain."""
     cfg = DedupConfig()
     env = watch_env
     process_new_snapshots(spark, env["src"], env["state"], cfg)
 
-    iceberg_lite.append_snapshot(
-        spark.createDataFrame(
-            [
-                _row("clip_s1", env["third"], 16000, "   "),
-                _row("clip_s2", env["other"] * 0.5, 16000, ""),
-            ],
-            CLIP_SCHEMA,
-        ),
-        env["src"],
-    )
-    s = process_new_snapshots(spark, env["src"], env["state"], cfg)
-    alerts_dir = env["state"] / "alerts"
-    if alerts_dir.exists():
-        alerts = spark.read.parquet(str(alerts_dir)).toPandas()
-        assert "similar_text" not in set(
-            alerts.query("new_id in ('clip_s1','clip_s2')").match_kind
-        )
+    rng = np.random.RandomState(5)
+    blank = ["\t", "\n", "\t\n ", "\u00a0", "\r\n"]
+    commits = [
+        [_row("clip_s1", env["third"], 16000, "   "),
+         _row("clip_s2", env["other"] * 0.5, 16000, "")],
+        [_row(f"clip_w{i}", _synth_pcm(rng, 16000, 800), 16000, t) for i, t in enumerate(blank)],
+    ]
+    for rows in commits:
+        iceberg_lite.append_snapshot(spark.createDataFrame(rows, CLIP_SCHEMA), env["src"])
+        process_new_snapshots(spark, env["src"], env["state"], cfg)
+    alerts = spark.read.parquet(str(env["state"] / "alerts")).toPandas()
+    assert ("clip_s2", "clip_b", "similar_audio") in set(
+        zip(alerts.new_id, alerts.matched_id, alerts.match_kind))
+    blank_ids = {"clip_s1", "clip_s2"} | {f"clip_w{i}" for i in range(len(blank))}
+    text = alerts[alerts.match_kind == "similar_text"]
+    assert not blank_ids & (set(text.new_id) | set(text.matched_id))
 
 
 def test_watch_state_is_signatures_table_only(spark, watch_env):
