@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 # which checkpoint path is in use: None = no checkpoint taken yet, then
@@ -164,7 +164,7 @@ def _local_contraction(
     """
     import pandas as pd
 
-    def contract(batches):
+    def contract_partition(batches):
         roots = _union_find(
             (a, b) for pdf in batches for a, b in zip(pdf[id_a], pdf[id_b]))
         # a root keeps a self-edge, so isolated roots (nodes seen only in
@@ -179,7 +179,7 @@ def _local_contraction(
     out = edges
     for p in range(passes):
         key = id_a if p % 2 == 0 else id_b
-        out = out.repartition(F.col(key)).mapInPandas(contract, schema=edges.schema)
+        out = out.repartition(F.col(key)).mapInPandas(contract_partition, schema=edges.schema)
     return out
 
 
@@ -319,6 +319,30 @@ def connected_components(
                 break
     _release_checkpoint(sym)  # returned labels depend only on the final checkpoint
     return labels.withColumnRenamed("lbl", "cluster_id"), metrics
+
+
+def class_window(key: str, id_col: str = "clip_id") -> WindowSpec:
+    """Identity classes of ``key``: rows with an equal, non-null key; a row
+    with a null key is its own class (null payloads never group)."""
+    return Window.partitionBy(F.col(key), F.when(F.col(key).isNull(), F.col(id_col)))
+
+
+def contract(df: DataFrame, key: str, id_col: str = "clip_id", root_col: str = "root") -> DataFrame:
+    """The one contraction operator (SURVEY §7.3; DS2: handle skew at the
+    key that causes it): ``root_col`` = min id of the row's class, so a
+    class enters pairing as its root plus linear star edges, not a clique."""
+    return df.withColumn(root_col, F.min(id_col).over(class_window(key, id_col)))
+
+
+def representatives(df: DataFrame, id_col: str = "clip_id", root_col: str = "root") -> DataFrame:
+    """Rows of a contracted frame that are their class's root."""
+    return df.filter(F.col(id_col) == F.col(root_col))
+
+
+def star_edges(df: DataFrame, id_col: str = "clip_id", root_col: str = "root") -> DataFrame:
+    """(id_a=root, id_b=member), id_a < id_b, per non-root row of a contracted frame."""
+    return (df.filter(F.col(root_col) != F.col(id_col))
+            .select(F.col(root_col).alias("id_a"), F.col(id_col).alias("id_b")))
 
 
 def attach_clusters(

@@ -15,10 +15,11 @@ and AQE partition coalescing come free from expressing this as window/groupBy.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
+from file_deduplicator_spark.operators.components import class_window, contract
 
 _DIGESTS = {
     "sha256": lambda c: F.sha2(c, 256),
@@ -47,11 +48,13 @@ def with_digest(
     )
 
 
-def size_filter(df: DataFrame, cfg: DedupConfig, size_col: str = "size") -> DataFrame:
+def size_filter(df: DataFrame, cfg: DedupConfig, size: str | Column = "size") -> DataFrame:
     """min/max size predicate (ref main.go:396-434): keep
-    ``size >= min && (max == 0 || size <= max)``. Applied BEFORE any
-    expensive compute so Catalyst pushes it into the scan."""
-    c = F.col(size_col)
+    ``size >= min && (max == 0 || size <= max)``, no filter when both are 0.
+    ``size``: a column name or Column (the prefilter's ``length(bytes)``)."""
+    if cfg.min_size <= 0 and cfg.max_size <= 0:
+        return df
+    c = F.col(size) if isinstance(size, str) else size
     pred = c >= F.lit(cfg.min_size)
     if cfg.max_size > 0:
         pred = pred & (c <= F.lit(cfg.max_size))
@@ -73,13 +76,14 @@ def exact_dup_clusters(
 ) -> DataFrame:
     """Rows belonging to an exact-duplicate group (count > 1), labeled with
     ``group_count`` and a deterministic ``cluster_id`` = min(id) over the
-    digest. One shuffle; no nested structs.
+    digest (components.contract, a null digest is no group). One shuffle;
+    no nested structs.
     """
-    w = Window.partitionBy(digest_col_name)
+    w = class_window(digest_col_name, id_col)
     return (
-        df.withColumn("group_count", F.count(F.lit(1)).over(w))
+        contract(df, digest_col_name, id_col, "cluster_id")
+        .withColumn("group_count", F.count(F.lit(1)).over(w))
         .filter(F.col("group_count") > 1)
-        .withColumn("cluster_id", F.min(id_col).over(w))
     )
 
 

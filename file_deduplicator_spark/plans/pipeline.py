@@ -14,10 +14,10 @@ Scale shape: one wide stage computes all signatures in a single pass over
 that feeds CC is tiny relative to the input; everything downstream shuffles
 on cluster_id once.
 
-Exact-dup quarantine (SURVEY §7.3 skew): only one representative per digest
-enters the near-dup stage — byte-identical rows (e.g. the hot_bucket silence
-clips) can't create quadratic LSH buckets; their cluster membership is
-recovered by unioning digest edges into CC.
+Quarantine (SURVEY §7.3 skew) is one operator, components.contract, at
+three keys: the digest (e.g. the hot_bucket silence clips), then among its
+roots sim_sig (audio LSH) and the minhash_sig of rows with text (text LSH,
+containment). A class enters pairing as its root plus linear star edges.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from __future__ import annotations
 from functools import reduce
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
@@ -38,12 +38,13 @@ from file_deduplicator_spark.functions.minhash_sql import (
 from file_deduplicator_spark.functions.text import MINHASH_SEED, NUM_PERM, SHINGLE_K
 from file_deduplicator_spark.functions.udfs import signatures_map_in_arrow
 from file_deduplicator_spark.operators.components import attach_clusters, connected_components
+from file_deduplicator_spark.operators.components import contract, representatives, star_edges
 from file_deduplicator_spark.operators.containment import (
     containment_candidates,
     fingerprint_rows,
     verify_containment,
 )
-from file_deduplicator_spark.operators.exact import codec_filter, with_digest
+from file_deduplicator_spark.operators.exact import codec_filter, size_filter, with_digest
 from file_deduplicator_spark.operators.keeper import label_keepers
 from file_deduplicator_spark.operators.lsh import (
     band_table,
@@ -62,14 +63,7 @@ def apply_prefilters(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     pushes them into the scan. Shared by the batch pipeline AND watch
     (streaming/watch.py) — the reference re-applies the same size/pattern
     checks per watch event (main.go:1683-1704, F6)."""
-    pre = df
-    if cfg.min_size > 0 or cfg.max_size > 0:
-        size_expr = F.length(F.col("bytes")).cast("long")
-        pred = size_expr >= F.lit(cfg.min_size)
-        if cfg.max_size > 0:
-            pred = pred & (size_expr <= F.lit(cfg.max_size))
-        pre = pre.filter(pred)
-    return codec_filter(pre, cfg)
+    return codec_filter(size_filter(df, cfg, F.length(F.col("bytes")).cast("long")), cfg)
 
 
 def with_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -86,18 +80,9 @@ def with_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def exact_edges(sigs: DataFrame, id_col: str = "clip_id") -> DataFrame:
-    """Star edges digest-min-id → member (linear, not quadratic, per group).
-    Reads the ``digest_root`` column that dedup_pipeline adds."""
-    return (
-        sigs.filter(F.col("digest_root") != F.col(id_col))
-        .select(F.col("digest_root").alias("id_a"), F.col(id_col).alias("id_b"))
-    )
-
-
-def digest_representatives(sigs: DataFrame, id_col: str = "clip_id") -> DataFrame:
-    """One row per digest (min id) — the exact-dup quarantine before LSH.
-    Reads the ``digest_root`` column that dedup_pipeline adds."""
-    return sigs.filter(F.col(id_col) == F.col("digest_root"))
+    """The digest star edges (components.star_edges) of the ``digest_root``
+    column that dedup_pipeline adds."""
+    return star_edges(sigs, id_col, "digest_root")
 
 
 def near_dup_bands(
@@ -145,49 +130,49 @@ def near_dup_bands(
 
 def _batch_families(
     sigs: DataFrame, cfg: DedupConfig, id_col: str, caches: list, containment: bool = False,
-) -> tuple[DataFrame | None, dict]:
-    """The batch band families — near_dup_bands over the digest
-    representatives, plus the ``containment_`` fingerprint table of every
-    row — each persisted into ``caches``: the probe and the bucket groupBy
-    both read it, so the explode runs once, spilling to disk if it outgrows
-    memory. Returns (audio signature-star edges or None, families)."""
-    reps = digest_representatives(sigs, id_col)
-    sig_star, audio = None, reps
+) -> tuple[list[DataFrame], dict]:
+    """The batch band families over the second-level roots: digest roots
+    contract on ``sim_sig`` and, those with text (has_text_col: blank rows
+    never contract), on ``minhash_sig``; the families (``containment_``
+    too) see those roots only. Equal signatures verify at Hamming 0 /
+    agreement 1.0, so each star edge is a pair the family would verify, and
+    a class above ``bucket_cap`` stays whole. Each band table is persisted
+    into ``caches``: the probe and the bucket groupBy both read it, so the
+    explode runs once. Returns (signature and transcript stars, families)."""
+    reps = representatives(sigs, id_col, "digest_root")
+    stars, audio = [], reps
+
+    def roots(df: DataFrame, key: str) -> DataFrame:
+        # persisted: the band table and the star edges both read it
+        classes = contract(df, key, id_col).persist()
+        caches.append(classes)
+        stars.append(star_edges(classes, id_col))
+        return representatives(classes, id_col)
+
     if cfg.perceptual:
-        # second-level quarantine: rows with IDENTICAL signatures (Hamming 0)
-        # are linked by linear star edges and enter LSH as one representative
-        # — near-identical corpora otherwise re-create the quadratic buckets
-        # the digest quarantine just removed.
-        w_sig = Window.partitionBy("sim_sig").orderBy(id_col)
-        ranked = reps.filter(F.col("sim_sig").isNotNull()).select(id_col, "sim_sig").withColumn(
-            "_rn", F.row_number().over(w_sig)
-        ).withColumn("_root", F.min(id_col).over(w_sig.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing)))
-        sig_star = (
-            ranked.filter(F.col("_rn") > 1)
-            .select(F.col("_root").alias("id_a"), F.col(id_col).alias("id_b"))
-        )
-        audio = ranked.filter(F.col("_rn") == 1).select(id_col, "sim_sig")
-    families = near_dup_bands(audio, reps, cfg, id_col)
+        audio = roots(reps.select(id_col, "sim_sig"), "sim_sig")
+    text = roots(reps.filter(has_text_col(F.col("minhash_sig")))
+                 .select(id_col, "minhash_sig", "transcript"), "minhash_sig")
+    families = near_dup_bands(audio, text, cfg, id_col)
     if containment:
-        families["containment_"] = (fingerprint_rows(sigs, id_col), None)
+        families["containment_"] = (fingerprint_rows(text, id_col), None)
     for prefix, (bt, keep) in families.items():
         families[prefix] = (bt.persist(StorageLevel.MEMORY_AND_DISK), keep)
         caches.append(families[prefix][0])
-    return sig_star, families
+    return stars, families
 
 
 def near_dup_pairs(
     sigs: DataFrame,
     cfg: DedupConfig,
-    sig_star: DataFrame | None,
+    stars: list[DataFrame],
     families: dict,
     max_bucket: dict[str, int],
     id_col: str = "clip_id",
     observation=None,
 ) -> DataFrame:
-    """Verified near-dup pairs of the ``lsh_`` / ``lsh_text_`` families
-    (near_dup_bands), each from the one in-bucket pair operator
+    """The ``stars`` of _batch_families plus the verified pairs of the
+    ``lsh_`` / ``lsh_text_`` families, each from the one in-bucket pair operator
     (lsh.bucket_pairs) with its family's ``keep``, sized by ``max_bucket``
     (prefix → largest bucket, from lsh.bucket_stats).
 
@@ -206,14 +191,14 @@ def near_dup_pairs(
 
     ``observation``: the audio family's bucket_pairs Observation.
     """
-    parts = [] if sig_star is None else [sig_star]
+    parts = list(stars)
     if "lsh_" in families:
         bt, keep = families["lsh_"]
         parts.append(bucket_pairs(bt, cfg, keep, observation=observation,
                                   max_bucket=max_bucket.get("lsh_")))
     bt, keep = families["lsh_text_"]
     pairs_t = bucket_pairs(bt, cfg, keep, max_bucket=max_bucket.get("lsh_text_"))
-    parts.append(verify_pairs_minhash(pairs_t, digest_representatives(sigs, id_col),
+    parts.append(verify_pairs_minhash(pairs_t, representatives(sigs, id_col, "digest_root"),
                                       cfg.jaccard_threshold, id_col).select("id_a", "id_b"))
     # NOTE: a pair verified by BOTH modalities appears twice here.
     # dedup_pipeline applies the one .distinct() and persists the result,
@@ -234,14 +219,14 @@ def near_dup_edges(
     collect-safe), then near_dup_pairs — the pieces dedup_pipeline
     composes. ``sigs`` must carry the ``digest_root`` column dedup_pipeline
     adds. ``observation``: see near_dup_pairs; ``caches`` collects the
-    persisted band tables.
+    persisted class and band tables.
     """
-    sig_star, families = _batch_families(sigs, cfg, id_col, [] if caches is None else caches)
+    stars, families = _batch_families(sigs, cfg, id_col, [] if caches is None else caches)
     max_bucket: dict[str, int] = {}
     if cfg.salt_buckets > 1:
         max_bucket = {p: st["max_bucket"] for p, st in bucket_stats(
             {p: bt for p, (bt, _) in families.items()}, cfg.bucket_cap).items()}
-    return near_dup_pairs(sigs, cfg, sig_star, families, max_bucket, id_col, observation)
+    return near_dup_pairs(sigs, cfg, stars, families, max_bucket, id_col, observation)
 
 
 def dedup_pipeline(
@@ -259,9 +244,9 @@ def dedup_pipeline(
     lsh.bucket_stats numbers of each band family) and ``caches``.
 
     ``containment``: also link contained transcripts (containment.py) —
-    the fingerprint band table of every signature row is a third band
+    the fingerprint band table of the transcript roots is a third band
     family (``containment_``), sized in the same probe job; its verified
-    edges are lifted to digest roots and join CC (not the ``pairs`` list).
+    edges join roots already, so they join CC as they are (not ``pairs``).
 
     ``precomputed_sigs`` is the resume seam (north rule: "resumable from
     checkpoint with per-partition lineage"): a frame with the
@@ -270,8 +255,9 @@ def dedup_pipeline(
     partitions unioned with freshly computed rows for changed ones
     (jobs/run_dedup.py --resume-from). The scan/decode stage is skipped
     entirely; prefilters are assumed already applied (signatures are
-    always recorded post-filter). Everything downstream — digest_root
-    contraction, LSH, containment, CC, keeper — is identical to a full run.
+    always recorded post-filter). Everything downstream — the digest,
+    signature and transcript contractions, LSH, containment, CC, keeper —
+    is identical to a full run.
     """
     if precomputed_sigs is not None:
         sigs = precomputed_sigs
@@ -284,17 +270,13 @@ def dedup_pipeline(
     # shuffle. Signatures are extracted in the (narrow) projection stage
     # above; everything downstream — windows over digest/cluster_id, LSH
     # band joins, CC, keeper ranking — runs on the slim columns only.
-    # digest_root rides along: one window pass serves both the exact-dup
-    # star contraction and representative selection.
-    w_digest = Window.partitionBy("digest")
-    sigs = sigs.drop("bytes").withColumn("digest_root", F.min(id_col).over(w_digest)).persist()
-
     # CONTRACTION: exact-duplicate stars are resolved by the digest_root
     # column directly — they never enter the iterative CC. CC runs only on
     # edges BETWEEN digest representatives (near-dup + containment), so its
     # node count is |distinct digests that near-collided|, not |dup rows|.
+    sigs = contract(sigs.drop("bytes"), "digest", id_col, "digest_root").persist()
     caches: list = [sigs]
-    sig_star, families = _batch_families(sigs, cfg, id_col, caches, containment)
+    stars, families = _batch_families(sigs, cfg, id_col, caches, containment)
     # one probe job sizes every family (bucket_members then takes the plain
     # groupBy where it is collect-safe), materializes the persisted band
     # tables, and gives the run's bucket-skew metrics
@@ -303,23 +285,12 @@ def dedup_pipeline(
     # persisted once: CC and the pairs sink both read it. The Distinct on
     # top matters — Dataset.union flattens nested unions, so a bare union
     # frame would never match the cache once a consumer unions it again.
-    e_near = near_dup_pairs(sigs, cfg, sig_star, families, max_bucket, id_col).distinct().persist()
+    e_near = near_dup_pairs(sigs, cfg, stars, families, max_bucket, id_col).distinct().persist()
     caches.append(e_near)
     cc_edges = e_near
     if containment:
         cands = containment_candidates(families["containment_"][0], cfg, max_bucket["containment_"])
-        # containment edges arrive at row granularity — lift to roots
-        root_map = sigs.select(F.col(id_col), F.col("digest_root"))
-        lifted = (
-            verify_containment(cands, sigs, cfg, id_col)
-            .join(root_map.withColumnRenamed(id_col, "id_a")
-                  .withColumnRenamed("digest_root", "root_a"), "id_a")
-            .join(root_map.withColumnRenamed(id_col, "id_b")
-                  .withColumnRenamed("digest_root", "root_b"), "id_b")
-            .filter(F.col("root_a") != F.col("root_b"))
-            .select(F.col("root_a").alias("id_a"), F.col("root_b").alias("id_b"))
-        )
-        cc_edges = cc_edges.union(lifted)
+        cc_edges = cc_edges.union(verify_containment(cands, sigs, cfg, id_col))
 
     # connected_components dedups its input edges itself
     labels, cc_metrics = connected_components(cc_edges, cfg.cc_max_iters)

@@ -274,6 +274,17 @@ def test_one_near_dup_core_for_batch_and_watch():
     assert "F.trim(" not in (pkg / "plans" / "pipeline.py").read_text()
 
 
+def test_one_contraction_operator():
+    """Digest, signature and transcript classes contract through
+    components.contract alone: the pipeline and the exact operators hold no
+    window of their own and no join that lifts edges back to roots."""
+    pkg = REPO / "file_deduplicator_spark"
+    for rel in ("plans/pipeline.py", "operators/exact.py"):
+        src = (pkg / rel).read_text()
+        for token in ("Window.partitionBy(", "row_number(", "root_map"):
+            assert token not in src, (rel, token)
+
+
 def test_readme_layout_names_every_package_module():
     """The README "Repository layout" block names every package module
     (``__init__.py`` aside) and no module that does not exist. Entries nest

@@ -166,17 +166,27 @@ def test_run_metrics_roundtrip(spark, clips_df, tmp_path):
     release_pipeline(result)
 
 
-def test_containment_cap_loss_is_counted(spark):
-    """300 clips share one 12-word transcript B and a 301st clip holds 18
-    other words followed by B. B's one winnowed fingerprint makes a bucket
-    of 301 members; the cap keeps the 256 lowest ids, so the container,
-    which sorts last, is dropped and containment links none of the 300
-    needles to it. That loss stays open (identical transcripts should enter
-    containment once); this pins that the run's metrics count it instead of
-    hiding it. Perceptual matching is off so that the random payloads do
-    not link the clips through audio."""
+def _clips(spark, ids, payloads, texts, scenario):
     import datetime
 
+    pdf = pd.DataFrame({
+        "clip_id": ids, "bytes": payloads, "sr_hz": 16000, "dur_ms": 1000, "codec": "wav",
+        "transcript": texts, "mtime": datetime.datetime(2024, 1, 1), "scenario": scenario,
+    })
+    return spark.createDataFrame(
+        pdf, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
+             "transcript string, mtime timestamp, scenario string")
+
+
+def test_identical_transcripts_enter_containment_once(spark):
+    """300 clips share one 12-word transcript B and a 301st clip holds 18
+    other words followed by B. The transcript contraction sends B into
+    containment once, as its root a0000, so B's one winnowed fingerprint
+    makes a bucket of two, well under the cap, and containment links a0000
+    to the container z0001. The other 299 clips join through transcript
+    star edges: one cluster of 301, and CC sees 299 star edges plus the one
+    containment edge. Perceptual matching is off so that the random
+    payloads do not link the clips through audio."""
     import numpy as np
 
     from file_deduplicator_spark.plans.pipeline import collect_run_metrics, release_pipeline
@@ -186,23 +196,65 @@ def test_containment_cap_loss_is_counted(spark):
     b = " ".join(words[:12])
     ids = [f"a{i:04d}" for i in range(300)] + ["z0001"]
     texts = [b] * 300 + [" ".join(words[12:]) + " " + b]
-    t0 = datetime.datetime(2024, 1, 1)
-    pdf = pd.DataFrame({
-        "clip_id": ids,
-        "bytes": [bytearray(rng.bytes(64)) for _ in ids],
-        "sr_hz": 16000, "dur_ms": 1000, "codec": "wav",
-        "transcript": texts, "mtime": t0, "scenario": "item1",
-    })
-    df = spark.createDataFrame(
-        pdf, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
-             "transcript string, mtime timestamp, scenario string")
+    df = _clips(spark, ids, [bytearray(rng.bytes(64)) for _ in ids], texts, "item1")
     result = dedup_pipeline(df, DedupConfig(perceptual=False), containment=True)
-    result["report"].collect()
-    m = collect_run_metrics(result)
-    release_pipeline(result)
-    assert m["containment_max_bucket"] == 301
-    assert m["containment_capped_buckets"] == 1
-    assert m["containment_capped_dropped_rows"] == 301 - DedupConfig().bucket_cap == 45
+    try:
+        sizes = [r.group_count for r in result["clusters"].collect()]
+        pairs = {(r.id_a, r.id_b) for r in result["pairs"].collect()}
+        m = collect_run_metrics(result)
+    finally:
+        release_pipeline(result)
+    assert sizes == [301]
+    # the pairs list holds the transcript stars only: the link to z0001 is
+    # the containment edge a0000 → z0001
+    assert pairs == {("a0000", i) for i in ids[1:300]}
+    assert m["cc_edges"] == 299 + 1
+    assert m["containment_max_bucket"] == 2
+    assert m["containment_capped_dropped_rows"] == 0
+
+
+def test_identical_transcripts_above_bucket_cap_cluster_whole(spark):
+    """Twenty clips with their own audio share one transcript. At
+    bucket_cap 8 each of its text buckets would keep 8 members and drop 12
+    rows from the cluster; contracted, the class enters text LSH as one
+    root with 19 star edges, so it clusters whole and no text row is
+    capped."""
+    import numpy as np
+
+    from file_deduplicator_spark.datagen import _synth_pcm
+    from file_deduplicator_spark.functions.audio import wav_encode
+    from file_deduplicator_spark.plans.pipeline import collect_run_metrics, release_pipeline
+
+    rng = np.random.RandomState(11)
+    ids = [f"u{i:02d}" for i in range(20)]
+    payloads = [bytearray(wav_encode(_synth_pcm(rng, 16000, 1000), 16000)) for _ in ids]
+    df = _clips(spark, ids, payloads, ["one shared transcript over distinct audio"] * 20, "cap")
+    result = dedup_pipeline(df, DedupConfig(bucket_cap=8))
+    try:
+        clusters = {r.cluster_id: r.group_count for r in result["clusters"].collect()}
+        m = collect_run_metrics(result)
+    finally:
+        release_pipeline(result)
+    assert clusters == {"u00": 20}
+    assert m["lsh_text_capped_dropped_rows"] == 0
+
+
+def test_null_payloads_are_never_exact_duplicates(spark):
+    """sha2(null) is null; the digest contraction gives a null key no class,
+    so two clips with no payload and unrelated transcripts are no pair, no
+    cluster and no DELETE."""
+    from file_deduplicator_spark.plans.pipeline import release_pipeline
+
+    df = _clips(spark, ["c1", "c2"], [None, None],
+                ["the quick brown fox jumps over", "a wholly different spoken line here"],
+                "null_bytes")
+    result = dedup_pipeline(df, DedupConfig())
+    try:
+        assert result["pairs"].count() == 0
+        assert result["clusters"].count() == 0
+        assert result["plan"].count() == 0
+    finally:
+        release_pipeline(result)
 
 
 @pytest.mark.parametrize("perceptual", [True, False])
