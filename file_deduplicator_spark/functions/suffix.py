@@ -2,8 +2,9 @@
 matching — north_star: "suffix-array substring matching for contained-
 duplicate transcripts".
 
-Used inside the per-container ``applyInPandas`` verify stage
-(operators/containment.py): build the SA of a container transcript once,
+Used inside the containment verify stage, one ``mapInArrow`` pass over
+rows sorted by container (operators/containment.verify_containment): build
+the SA of a container transcript once,
 then binary-search every candidate needle against it. O((n + Σm) log n)
 per container instead of naive scan per pair.
 """

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from file_deduplicator_spark.config import DedupConfig
+from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
 from file_deduplicator_spark.functions.minhash_sql import (
     has_text_col,
     minhash_bands_col,
@@ -77,6 +78,27 @@ def with_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     if not cfg.perceptual:
         out = out.drop("bytes")
     return signatures_map_in_arrow(out, cfg.sim_algo, NUM_PERM, SHINGLE_K, MINHASH_SEED)
+
+
+def signature_settings(cfg: DedupConfig) -> dict:
+    """What a stored with_signatures row depends on beyond its input (the
+    MinHash format is fixed); recorded in every ``signatures`` snapshot."""
+    return {"sig_kernel_version": SIG_KERNEL_VERSION, "sim_algo": cfg.sim_algo,
+            "hash_algo": cfg.hash_algo, "perceptual": cfg.perceptual}
+
+
+def check_signature_settings(summaries: list[dict], cfg: DedupConfig, where: str) -> None:
+    """Raise ValueError unless each snapshot summary whose rows are about to
+    be read records the signature_settings of ``cfg`` (a snapshot without
+    them predates the record): md5 digests never equal sha256 ones, phash
+    sims never match dhash ones. ``where`` names the store."""
+    for snap in summaries:
+        for key, value in signature_settings(cfg).items():
+            if snap.get(key) != str(value):
+                raise ValueError(
+                    f"{where}: snapshot {snap['snapshot_id']} was built with {key}="
+                    f"{snap.get(key, '<not recorded>')}, this run has {key}={value}: rebuild "
+                    "the state (an empty watch state dir; a run without --resume-from)")
 
 
 def exact_edges(sigs: DataFrame, id_col: str = "clip_id") -> DataFrame:
@@ -259,13 +281,8 @@ def dedup_pipeline(
     signature and transcript contractions, LSH, containment, CC, keeper —
     is identical to a full run.
     """
-    if precomputed_sigs is not None:
-        sigs = precomputed_sigs
-        if "bytes" in sigs.columns:
-            sigs = sigs.drop("bytes")
-    else:
-        filtered = apply_prefilters(clips, cfg)
-        sigs = with_signatures(filtered, cfg)
+    sigs = (precomputed_sigs if precomputed_sigs is not None
+            else with_signatures(apply_prefilters(clips, cfg), cfg))
     # CRITICAL scale rule: the multi-MB payload column must never enter a
     # shuffle. Signatures are extracted in the (narrow) projection stage
     # above; everything downstream — windows over digest/cluster_id, LSH

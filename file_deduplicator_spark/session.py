@@ -154,6 +154,10 @@ def get_spark(
         # free). Our cached frames are slim signature/label tables that are
         # re-read a handful of times — CPU trade loses to memory there.
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+        # one main() call compiles ~220 generated classes; the default cache
+        # of 100 evicts most of them, so every later call in one session (a
+        # watch commit, a warm benchmark pass) compiled them all again
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -22,9 +22,9 @@ column's ``element``) to its field id.
 
 It is the one snapshot-table format of the engine: the incremental watch
 path (streaming/watch.py, north rule: resumable from Iceberg-snapshot
-checkpoints) reads its source with ``read_incremental`` and keeps its
-``signatures`` state as a table of this module (``read_table`` /
-``append_snapshot`` / ``snapshot_summaries``).
+checkpoints) reads its source with ``read_incremental``, and both drivers
+keep their ``signatures`` as a table of this module: watch one snapshot
+per batch, the batch job (jobs/run_dedup.py) one per run.
 
 Honest gates: position/equality DELETE manifests (v2 row-level deletes)
 raise NotImplementedError — the dedup source contract is append-only;
@@ -173,18 +173,20 @@ def read_table(spark: SparkSession, table_dir: str | Path) -> DataFrame:
 
 
 def read_incremental(
-    spark: SparkSession, table_dir: str | Path, after_snapshot: int | None
+    spark: SparkSession, table_dir: str | Path, after_snapshot: int | None,
+    end_snapshot: int | None = None,
 ) -> tuple[DataFrame | None, int | None]:
     """Rows added strictly after ``after_snapshot`` (None = from the start)
-    and the latest snapshot id — Iceberg ``start-snapshot-id`` semantics.
-    Returns (None, latest) when nothing is new.
+    up to ``end_snapshot`` (None = the latest), and that end snapshot id —
+    Iceberg ``start-``/``end-snapshot-id`` semantics. (None, end) when
+    nothing is new.
 
     Computed as the file-set difference between the two snapshots (exactly
     the files added, for the append-only tables the dedup source contract
     requires); a file DELETED between the snapshots would signal a rewrite
     and raises rather than silently double-counting."""
     meta = table_metadata(table_dir)
-    latest = meta.get("current-snapshot-id")
+    latest = meta.get("current-snapshot-id") if end_snapshot is None else end_snapshot
     if latest in (None, -1):
         return None, after_snapshot
     new_files = {f["file_path"] for f in data_files(table_dir, latest, meta)}
@@ -254,6 +256,12 @@ def _iceberg_schema(df: DataFrame) -> tuple[dict, int]:
         for i, f in enumerate(df.schema.fields, start=1)
     ]
     return {"type": "struct", "schema-id": 0, "fields": fields}, next(ids) - 1
+
+
+def _columns(schema: dict) -> dict:
+    """Column name → type, ids and nullability aside (a list: its element)."""
+    return {f["name"]: f["type"]["element"] + "[]" if isinstance(f["type"], dict)
+            else f["type"] for f in schema["fields"]}
 
 
 def _name_mapping(schema: dict) -> list[dict]:
@@ -344,14 +352,14 @@ def append_snapshot(df: DataFrame, table_dir: str | Path, **summary) -> int:
     Parquet data files under a snapshot-scoped directory, one new manifest,
     a manifest list carrying all live manifests, a new metadata version,
     version-hint flip.
-    Extra ``summary`` keys land in the snapshot summary (stringified, e.g.
-    ``source_snapshot=...`` for idempotent crash replay — watch.py reads it
-    back via snapshot_summaries)."""
+    Extra ``summary`` keys land in the snapshot summary (stringified; read
+    back via snapshot_summaries). A frame whose column names or types differ
+    from the table's schema raises ValueError before anything is written."""
     table_dir = Path(table_dir)
     md = _metadata_dir(table_dir)
     md.mkdir(parents=True, exist_ok=True)
+    schema, last_id = _iceberg_schema(df)
     if not is_iceberg_table(table_dir):
-        schema, last_id = _iceberg_schema(df)
         meta = {
             "format-version": 2,
             "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, str(table_dir))),
@@ -378,6 +386,12 @@ def append_snapshot(df: DataFrame, table_dir: str | Path, **summary) -> int:
     else:
         meta = table_metadata(table_dir)
         version = int((md / "version-hint.text").read_text().strip())
+        # the metadata declares one schema: files of another would be read
+        # under the wrong columns, or their new columns dropped
+        cur = next(t for t in meta["schemas"] if t["schema-id"] == meta["current-schema-id"])
+        if _columns(schema) != _columns(cur):
+            raise ValueError(f"iceberg_lite: columns {_columns(schema)} differ from "
+                             f"the schema of {table_dir}: {_columns(cur)}")
 
     prev = snapshots(meta)
     snap_id = (prev[-1]["snapshot-id"] + 1) if prev else 0
@@ -489,10 +503,11 @@ def append_snapshot(df: DataFrame, table_dir: str | Path, **summary) -> int:
 
 
 def snapshot_summaries(table_dir: str | Path) -> list[dict]:
-    """(snapshot-id, summary) pairs in commit order; summary values are
-    strings. watch.py probes them for an already-ingested source snapshot."""
+    """Each snapshot's id, parent id (None for the first) and summary (string
+    values: source_snapshot, run_id, the signature settings), commit order."""
     meta = table_metadata(table_dir)
     return [
-        {"snapshot_id": s["snapshot-id"], **(s.get("summary") or {})}
+        {"snapshot_id": s["snapshot-id"], "parent_snapshot_id": s.get("parent-snapshot-id"),
+         **(s.get("summary") or {})}
         for s in snapshots(meta)
     ]

@@ -152,21 +152,18 @@ def append_partition_lineage(
 ) -> int:
     """Append this run's per-partition lineage rows (north rule: "resumable
     from checkpoint with per-partition lineage + metrics tables"). Returns
-    the number of input partitions recorded."""
+    the number of input partitions recorded. Collected once as Arrow (one
+    row per input file: metadata-sized at 100 TB, see input_part_expr), so
+    the write and the count do not run the aggregate again."""
     lin = (
         partition_lineage(clips)
         .withColumn("run_id", F.lit(run_id))
         .withColumn("snapshot_id", F.lit(snapshot_id).cast("long"))
     )
-    # persist the (one row per input partition) aggregate so the count
-    # reuses the write's computation — re-reading the lineage directory
-    # would rescan every historical run's files just to count this one
-    lin = lin.persist()
-    try:
-        lin.write.mode("append").parquet(str(lineage_dir))
-        return lin.count()
-    finally:
-        lin.unpersist()
+    table = lin.toArrow()
+    clips.sparkSession.createDataFrame(table, lin.schema).write.mode("append").parquet(
+        str(lineage_dir))
+    return table.num_rows
 
 
 def changed_partitions(
@@ -178,9 +175,7 @@ def changed_partitions(
     resumed run must redo; an empty result proves the input is bit-identical
     at the partition level and the prior run's outputs can be reused."""
     prev = (
-        # mergeSchema: lineage written before the file_path column existed
-        # must still read
-        spark.read.option("mergeSchema", "true").parquet(str(lineage_dir))
+        spark.read.parquet(str(lineage_dir))
         .where(F.col("run_id") == run_id)
         .select("part", F.col("rows").alias("prev_rows"),
                 F.col("id_checksum").alias("prev_checksum"))

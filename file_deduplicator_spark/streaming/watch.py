@@ -17,12 +17,14 @@ unwired (SURVEY snapshot-integrity note). Semantics preserved:
 
 Resumability (north rule): state = a ``signatures`` Iceberg table
 (sources/iceberg_lite.py), one snapshot per batch tagged with the source
-snapshot it ingested, + ``_checkpoint.json`` carrying the last processed
-source snapshot id and the signature settings, written only after a batch
-fully succeeds, + ``alerts/batch=N`` and ``actions/batch=N``. A replayed
-batch skips the append its tag shows was made and overwrites its batch
-dirs, so it replays idempotently. The source is an Iceberg table too, read
-from the checkpointed snapshot id on.
+snapshot it ingested and the signature settings it was built with (each
+checked by pipeline.check_signature_settings before the state is read),
++ ``_checkpoint.json`` carrying progress only (the last processed source
+snapshot id, the batch count), written only after a batch fully succeeds,
++ ``alerts/batch=N`` and ``actions/batch=N``. A replayed batch skips the
+append its tag shows was made and overwrites its batch dirs, so it
+replays idempotently. The source is an Iceberg table too, read from the
+checkpointed snapshot id on.
 """
 
 from __future__ import annotations
@@ -37,7 +39,9 @@ from pyspark.sql import functions as F
 from file_deduplicator_spark.config import DedupConfig
 from file_deduplicator_spark.functions.minhash_sql import has_text_col, minhash_bands_col
 from file_deduplicator_spark.operators.lsh import bucket_pairs, bucket_stats, verify_pairs_minhash
-from file_deduplicator_spark.plans.pipeline import apply_prefilters, near_dup_bands, with_signatures
+from file_deduplicator_spark.plans.pipeline import (apply_prefilters, check_signature_settings,
+                                                    near_dup_bands, signature_settings,
+                                                    with_signatures)
 from file_deduplicator_spark.sources import iceberg_lite
 
 SIG_COLS = ["clip_id", "digest", "size", "sim_sig", "minhash_sig"]
@@ -60,37 +64,6 @@ def write_json(p: Path, obj: dict) -> None:
     tmp = p.with_suffix(".tmp")
     tmp.write_text(json.dumps(obj))
     tmp.rename(p)
-
-
-def check_signature_settings(state_dir: str | Path, ckpt: dict, cfg: DedupConfig) -> dict:
-    """Raise ValueError when the state was built with another signature
-    kernel version, sim_algo or hash_algo; return the settings to record in
-    its checkpoint. A persisted state is bound to all three (the MinHash
-    format is fixed: functions/text.py), and comparing across them silently
-    degrades matches. A checkpoint without the kernel marker means v1 when a
-    ``signatures`` table exists: a crash between the state append and the
-    checkpoint write leaves state without a checkpoint. A checkpoint without
-    sim_algo/hash_algo gains them."""
-    from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
-
-    state_exists = (Path(state_dir) / "signatures").exists()
-    state_ver = ckpt.get("sig_kernel_version", 1 if state_exists else SIG_KERNEL_VERSION)
-    if state_ver != SIG_KERNEL_VERSION:
-        raise ValueError(
-            f"watch state at {state_dir} was built with signature kernel "
-            f"v{state_ver}, current engine is v{SIG_KERNEL_VERSION}: rebuild "
-            "the state (delete the state dir and re-bootstrap) — comparing "
-            "across kernel versions silently degrades match quality"
-        )
-    for key in ("sim_algo", "hash_algo"):
-        if ckpt.get(key, getattr(cfg, key)) != getattr(cfg, key):
-            raise ValueError(
-                f"watch state at {state_dir} was built with {key}="
-                f"{ckpt[key]!r}, this run has {getattr(cfg, key)!r}: use the "
-                "state's setting or rebuild the state"
-            )
-    return {"sig_kernel_version": SIG_KERNEL_VERSION,
-            "sim_algo": cfg.sim_algo, "hash_algo": cfg.hash_algo}
 
 
 def batch_alerts(
@@ -198,18 +171,19 @@ def process_new_snapshots(
     """
     state_dir = Path(state_dir)
     sig_table = state_dir / "signatures"
-    if sig_table.exists() and not iceberg_lite.is_iceberg_table(sig_table):
+    have_state = iceberg_lite.is_iceberg_table(sig_table)
+    if sig_table.exists() and not have_state:
         raise ValueError(
-            f"watch state at {state_dir} holds a signatures dir that is not an "
-            "Iceberg table (state in the retired JSON snapshot-log format, or "
-            "a bootstrap that died before its first commit): rebuild the "
-            "state (delete the state dir and re-bootstrap)"
-        )
+            f"watch state at {state_dir} holds a signatures dir that is not an Iceberg "
+            "table (the retired JSON snapshot-log format, or a bootstrap that died "
+            "before its first commit): rebuild the state (delete the state dir and "
+            "re-bootstrap)")
+    # the match below reads every state snapshot
+    summaries = iceberg_lite.snapshot_summaries(sig_table) if have_state else []
+    check_signature_settings(summaries, cfg, f"watch state at {state_dir}")
     ckpt = read_checkpoint(state_dir)
-    settings = check_signature_settings(state_dir, ckpt, cfg)
-    new_rows, latest = iceberg_lite.read_incremental(
-        spark, source_table, ckpt["last_source_snapshot"]
-    )
+    new_rows, latest = iceberg_lite.read_incremental(spark, source_table,
+                                                     ckpt["last_source_snapshot"])
     if new_rows is None:
         return {"new_rows": 0, "alerts": 0, "actions": 0, "batch": ckpt["batches"],
                 "last_source_snapshot": ckpt["last_source_snapshot"]}
@@ -220,7 +194,6 @@ def process_new_snapshots(
 
     # the whole signatures table is the state side of every match: a band
     # index read more than this scan (README scale notes)
-    have_state = iceberg_lite.is_iceberg_table(sig_table)
     state = iceberg_lite.read_table(spark, sig_table) if have_state else None
     alerts, match_stats = batch_alerts(new_sigs, state, cfg)
     n_alerts = match_stats["alerts"]
@@ -230,13 +203,11 @@ def process_new_snapshots(
     # commit protocol (idempotent replay): the state append is tagged with
     # the SOURCE snapshot id (summary values are strings) and skipped if that
     # snapshot was already ingested; alerts/actions overwrite a per-batch
-    # directory, so a replayed batch rewrites identical output.
-    already = have_state and any(
-        m.get("source_snapshot") == str(latest)
-        for m in iceberg_lite.snapshot_summaries(sig_table)
-    )
-    if not already:
-        iceberg_lite.append_snapshot(new_sigs, sig_table, source_snapshot=latest)
+    # directory, so a replayed batch rewrites identical output. The signature
+    # settings are committed with the rows they describe.
+    if not any(m.get("source_snapshot") == str(latest) for m in summaries):
+        iceberg_lite.append_snapshot(new_sigs, sig_table, source_snapshot=latest,
+                                     **signature_settings(cfg))
     if n_alerts:
         alerts.withColumn("batch", F.lit(batch_id)).write.mode("overwrite").parquet(
             str(state_dir / "alerts" / f"batch={batch_id}")
@@ -266,7 +237,7 @@ def process_new_snapshots(
         )
 
     write_json(_checkpoint_path(state_dir),
-               {"last_source_snapshot": latest, "batches": batch_id + 1, **settings})
+               {"last_source_snapshot": latest, "batches": batch_id + 1})
 
     new_sigs.unpersist()
     alerts.unpersist()

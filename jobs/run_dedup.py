@@ -68,12 +68,13 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                         "run's, reuse its recorded signatures for unchanged "
                         "partitions, and re-decode ONLY the changed ones. "
                         "Assumes an append/delete-only corpus (rows "
-                        "immutable per clip_id — the Iceberg-table posture) "
-                        "and the same --sim-algo, --hash-algo and "
-                        "--no-perceptual as the prior run.")
+                        "immutable per clip_id — the Iceberg-table posture). "
+                        "Refused if that run used another --sim-algo, "
+                        "--hash-algo, --no-perceptual or signature kernel.")
     p.add_argument("--no-save-signatures", action="store_true",
-                   help="skip recording the per-clip signature table "
-                        "(disables --resume-from against this run)")
+                   help="skip this run's snapshot (tagged with the run id and "
+                        "signature settings) in the <output>/signatures "
+                        "Iceberg table, so no --resume-from can name this run")
     p.add_argument("--shuffle-partitions", type=int, default=None)
     return p.parse_args(argv)
 
@@ -112,25 +113,29 @@ def build_resume_signatures(spark, clips, cfg, out: Path, prev_run_id: int):
 
     from file_deduplicator_spark.plans.pipeline import (
         apply_prefilters,
+        check_signature_settings,
         with_signatures,
     )
-    from file_deduplicator_spark.sources import sinks
+    from file_deduplicator_spark.sources import iceberg_lite, sinks
 
     sig_dir = out / "signatures"
-    if not sig_dir.exists():
-        raise SystemExit(
-            f"--resume-from {prev_run_id}: no signature table under {out} "
-            "(prior run used --no-save-signatures?)")
+    where = f"--resume-from {prev_run_id}: the signature table {sig_dir}"
+    if not iceberg_lite.is_iceberg_table(sig_dir):
+        raise ValueError(f"{where} is missing (--no-save-signatures?) or in an older "
+                         "engine's parquet layout: start a fresh --output")
+    # the latest snapshot of the run: a retried run id reads its last write
+    snap = next((m for m in reversed(iceberg_lite.snapshot_summaries(sig_dir))
+                 if m.get("run_id") == str(prev_run_id)), None)
+    if snap is None:
+        raise ValueError(f"{where} holds no snapshot of run {prev_run_id}")
+    check_signature_settings([snap], cfg, where)
     changed = sinks.changed_partitions(
         spark, clips, out / "partitions", prev_run_id).persist()
     changed_parts = changed.select("part")
     n_changed = changed_parts.count()
 
-    prev_sigs = (
-        spark.read.parquet(str(sig_dir))
-        .where(F.col("run_id") == prev_run_id)
-        .drop("run_id")
-    )
+    prev_sigs, _ = iceberg_lite.read_incremental(  # the rows that snapshot added
+        spark, sig_dir, snap["parent_snapshot_id"], snap["snapshot_id"])
     reused = prev_sigs.join(F.broadcast(changed_parts), "part", "left_anti")
     # FILE pruning for the fresh side: a part-hash predicate cannot push
     # down to the file listing, so filtering clips by changed part would
@@ -154,14 +159,13 @@ def build_resume_signatures(spark, clips, cfg, out: Path, prev_run_id: int):
         fresh_src = clips
     fresh_in = fresh_src.join(F.broadcast(changed_parts), "part", "left_semi")
     fresh = with_signatures(apply_prefilters(fresh_in, cfg), cfg).drop("bytes")
-    sigs = reused.select(*sorted(reused.columns)).unionByName(
-        fresh.select(*sorted(reused.columns)))
+    sigs = reused.unionByName(fresh)
     # the persisted changed-partitions frame is still referenced lazily by
     # fresh_in's broadcast semi-join — hand it to the caller for release
     # after the pipeline actions run (it otherwise pins executor storage
     # for the rest of the job — r05 advice)
     info = {"resumed_from": prev_run_id, "changed_partitions": n_changed,
-            "_release": [changed]}
+            "_release": changed}
     return sigs, info
 
 
@@ -173,9 +177,10 @@ def main(argv: list[str] | None = None) -> dict:
         collect_run_metrics,
         dedup_pipeline,
         release_pipeline,
+        signature_settings,
     )
     from file_deduplicator_spark.session import get_spark
-    from file_deduplicator_spark.sources import sinks
+    from file_deduplicator_spark.sources import iceberg_lite, sinks
 
     spark = get_spark(
         app_name="dedup_run",
@@ -197,8 +202,6 @@ def main(argv: list[str] | None = None) -> dict:
     out = Path(args.output)
 
     t0 = time.monotonic()
-    from pyspark.sql import functions as F
-
     clips = load_clips(spark, args.input)
     # append-stable input-partition id per row, stamped at the scan (all
     # signature stages are narrow, so it survives to the recorded signature
@@ -233,22 +236,16 @@ def main(argv: list[str] | None = None) -> dict:
     n_parts = sinks.append_partition_lineage(
         clips, out / "partitions", run_id=run_id)
     if not args.no_save_signatures:
-        # per-clip signature checkpoint keyed by run_id: what a later
-        # --resume-from run reuses for unchanged partitions. Slim columns
-        # only (payload never re-enters); appending reuses the pipeline's
-        # persisted sigs frame, so it costs one extra write, no recompute.
-        (result["signatures"].drop("digest_root")
-         .withColumn("run_id", F.lit(run_id))
-         .write.mode("append").partitionBy("run_id")
-         .parquet(str(out / "signatures")))
+        # per-clip signature checkpoint, one snapshot per run tagged with the
+        # run id and signature settings, for a later --resume-from. Slim
+        # columns only; it reuses the persisted sigs frame: one write.
+        iceberg_lite.append_snapshot(
+            result["signatures"].drop("digest_root"), out / "signatures",
+            run_id=run_id, **signature_settings(cfg))
 
     metrics = collect_run_metrics(result)
     if resume_info:
-        for df in resume_info.pop("_release", []):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        resume_info.pop("_release").unpersist()
         metrics.update(resume_info)
     metrics["input_partitions"] = n_parts
     metrics["wall_sec"] = round(time.monotonic() - t0, 3)

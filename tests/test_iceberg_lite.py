@@ -188,10 +188,43 @@ def test_iceberg_incremental_contract(spark, tmp_path):
     assert latest == 1 and [r.clip_id for r in df.collect()] == ["b"]
     df, latest = iceberg_lite.read_incremental(spark, t, s1)
     assert df is None and latest == 1
-    # snapshot summaries carry the idempotence metadata
+    # an end snapshot bounds the read: the rows one snapshot added
+    s2 = iceberg_lite.append_snapshot(_df(spark, [("c", "three", 3)]), t)
+    df, end = iceberg_lite.read_incremental(spark, t, s0, s1)
+    assert end == s1 and [r.clip_id for r in df.collect()] == ["b"]
+    df, end = iceberg_lite.read_incremental(spark, t, None, s0)
+    assert end == s0 and [r.clip_id for r in df.collect()] == ["a"]
+    # snapshot summaries carry the idempotence metadata and the parent id
     summ = iceberg_lite.snapshot_summaries(t)
     assert summ[1]["source_snapshot"] == "9"
     assert summ[1]["operation"] == "append"
+    assert [m["parent_snapshot_id"] for m in summ] == [None, s0, s1]
+    assert summ[-1]["snapshot_id"] == s2
+
+
+def test_iceberg_append_refuses_another_schema(spark, tmp_path):
+    """The table metadata declares one schema: a frame with another column
+    name or type is refused before any file is written, and nullability
+    alone does not count as another schema."""
+    from pyspark.sql import functions as F
+
+    t = tmp_path / "tbl"
+    iceberg_lite.append_snapshot(_df(spark, [("a", "one", 1)]), t)
+    other = {
+        "renamed": _df(spark, [("b", "two", 2)]).withColumnRenamed("n", "m"),
+        "retyped": _df(spark, [("b", "two", 2)]).withColumn("n", F.col("n").cast("int")),
+        "extra": _df(spark, [("b", "two", 2)]).withColumn("x", F.lit(1.0)),
+    }
+    for name, df in other.items():
+        with pytest.raises(ValueError, match="differ from the schema"):
+            iceberg_lite.append_snapshot(df, t)
+    assert [p.name for p in (t / "data").iterdir()] == ["snap-000000"]
+    assert len(iceberg_lite.snapshot_summaries(t)) == 1
+    # same names and types in another order, non-null: appended
+    iceberg_lite.append_snapshot(
+        _df(spark, [("b", "two", 2)]).select("n", F.coalesce("transcript", F.lit("")).alias(
+            "transcript"), "clip_id"), t)
+    assert sorted(r.clip_id for r in iceberg_lite.read_table(spark, t).collect()) == ["a", "b"]
 
 
 def test_iceberg_relocated_table_reads(spark, tmp_path):

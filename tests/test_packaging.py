@@ -182,8 +182,101 @@ def test_job_resume_after_append(spark, tmp_path, clips_df):
     assert a2.equals(a3), "action plan diverged between resume and full run"
     r2 = json.loads((out / "report.json").read_text())
     r3 = json.loads((out_full / "report.json").read_text())
-    for k in ("total_files", "duplicate_groups", "duplicate_files"):
-        assert r2.get(k) == r3.get(k)
+    assert r2 == r3 and r3["duplicate_groups"] > 0
+
+
+def test_job_resume_refuses_other_signatures(spark, tmp_path, clips_df, monkeypatch):
+    """--resume-from reads only signatures built with this run's settings:
+    another --sim-algo, --hash-algo, --no-perceptual or signature kernel
+    version raises (naming the setting) before any row is read, and so
+    does a signatures dir in the retired run_id-partitioned parquet
+    layout."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    import file_deduplicator_spark.plans.pipeline as pipeline
+    from file_deduplicator_spark.sources import iceberg_lite
+
+    sys.path.insert(0, str(REPO / "jobs"))
+    try:
+        from run_dedup import main
+    finally:
+        sys.path.pop(0)
+    src = tmp_path / "clips.parquet"
+    clips_df.write.parquet(str(src))
+    out = tmp_path / "run"
+    main(["--input", str(src), "--output", str(out), "--local", "--run-id", "1"])
+    resume = ["--input", str(src), "--output", str(out), "--local",
+              "--run-id", "2", "--resume-from", "1"]
+    for flags, key in ((["--sim-algo", "phash"], "sim_algo"),
+                       (["--hash-algo", "md5"], "hash_algo"),
+                       (["--no-perceptual"], "perceptual")):
+        with pytest.raises(ValueError, match=f"{key}="):
+            main(resume + flags)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "SIG_KERNEL_VERSION", pipeline.SIG_KERNEL_VERSION + 1)
+        with pytest.raises(ValueError, match="sig_kernel_version="):
+            main(resume)
+    assert [m["run_id"] for m in iceberg_lite.snapshot_summaries(out / "signatures")] == ["1"]
+
+    old = tmp_path / "old_run"
+    iceberg_lite.read_table(spark, out / "signatures").withColumn(
+        "run_id", F.lit(1)).write.partitionBy("run_id").parquet(str(old / "signatures"))
+    with pytest.raises(ValueError, match="fresh --output"):
+        main(["--input", str(src), "--output", str(old), "--local",
+              "--run-id", "2", "--resume-from", "1"])
+
+
+def test_job_resume_of_a_run_id_written_twice(spark, tmp_path, clips_df):
+    """A run id written twice (a retried job) resumes from its latest
+    snapshot alone: the report and action plan equal the full run's, and no
+    clip is planned for removal in favour of itself."""
+    sys.path.insert(0, str(REPO / "jobs"))
+    try:
+        from run_dedup import main
+    finally:
+        sys.path.pop(0)
+    src = tmp_path / "clips.parquet"
+    clips_df.write.parquet(str(src))
+    out = tmp_path / "run"
+    args = ["--input", str(src), "--output", str(out), "--local"]
+    full = main(args + ["--run-id", "1"])
+    main(args + ["--run-id", "1"])
+    resumed = main(args + ["--run-id", "3", "--resume-from", "1"])
+    assert resumed["metrics"]["changed_partitions"] == 0
+    assert resumed["report"] == full["report"]
+    cols = ["clip_id", "keeper_id", "cluster_id", "planned_action"]
+    actions = spark.read.parquet(str(out / "actions"))
+    plan = actions.where("run_id = 3").select(*cols)
+    assert plan.filter("clip_id = keeper_id").count() == 0
+    first = actions.where("run_id = 1").select(*cols).distinct()
+    assert plan.count() == first.count()
+    assert plan.exceptAll(first).count() == 0 and first.exceptAll(plan).count() == 0
+
+
+def test_one_signature_store_and_one_settings_guard():
+    """Batch runs and watch keep signatures in one Iceberg table format and
+    check their settings through one guard: pipeline.check_signature_settings
+    is defined once (not in watch), no run_id-partitioned parquet sink is
+    left, and only the kernel and the guard's module read
+    SIG_KERNEL_VERSION."""
+    import ast
+    import re
+
+    files = [*REPO.glob("file_deduplicator_spark/**/*.py"), *REPO.glob("jobs/*.py")]
+    defs = [p.relative_to(REPO).as_posix() for p in files
+            for _ in re.finditer(r"def check_signature_settings\b", p.read_text())]
+    assert defs == ["file_deduplicator_spark/plans/pipeline.py"]
+    assert not [p for p in files if 'partitionBy("run_id")' in p.read_text()]
+    readers = set()
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            names = ([a.name for a in node.names] if isinstance(node, ast.ImportFrom)
+                     else [getattr(node, "id", None), getattr(node, "attr", None)])
+            if "SIG_KERNEL_VERSION" in names:
+                readers.add(path.relative_to(REPO).as_posix())
+    assert readers == {"file_deduplicator_spark/functions/audio.py",
+                       "file_deduplicator_spark/plans/pipeline.py"}
 
 
 def test_entry_points_import_only_existing_names():

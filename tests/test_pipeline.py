@@ -598,3 +598,27 @@ def test_image_payloads_cluster_through_the_one_pipeline(spark):
     assert len(others) == 3, "noise and broken rows must be singletons"
     assert got["broken"].sim_sig is None
     assert got["img_ppm"].sim_sig is not None and got["noise"].sim_sig is not None
+
+
+def test_second_pipeline_run_reuses_generated_classes(spark, clips_df):
+    """One pipeline run compiles a few hundred generated classes; the
+    session's codegen cache holds them all (session.get_spark), so a second
+    run of the same plans compiles almost none (at Spark's default of 100
+    entries it compiled nearly all of them again)."""
+    from file_deduplicator_spark.plans.pipeline import release_pipeline
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run() -> int:
+        before = compiles.getCount()
+        result = dedup_pipeline(clips_df, CFG, containment=True)
+        result["report"].collect()
+        result["clusters"].collect()
+        result["pairs"].count()
+        result["plan"].count()
+        release_pipeline(result)
+        return compiles.getCount() - before
+
+    first = run()
+    second = run()
+    assert second <= 25, (first, second)

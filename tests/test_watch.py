@@ -270,17 +270,13 @@ def test_watch_state_is_signatures_table_only(spark, watch_env):
 
 def test_watch_refuses_json_snapshot_log_state(spark, watch_env):
     """A `signatures` dir in the retired JSON snapshot-log format (a
-    `_snapshots.json` log over parquet files, next to a checkpoint that
-    passes every other guard) is neither read nor bootstrapped over: the
-    batch raises and asks for a rebuild."""
+    `_snapshots.json` log over parquet files, next to a checkpoint) is
+    neither read nor bootstrapped over: the batch raises and asks for a
+    rebuild."""
     import json
 
-    from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
-
     env = watch_env
-    ckpt = {"last_source_snapshot": 0, "batches": 1,
-            "sig_kernel_version": SIG_KERNEL_VERSION,
-            "sim_algo": "dhash", "hash_algo": "sha256"}
+    ckpt = {"last_source_snapshot": 0, "batches": 1}
     env["state"].mkdir()
     (env["state"] / "_checkpoint.json").write_text(json.dumps(ckpt))
     old = env["state"] / "signatures"
@@ -345,59 +341,64 @@ def test_watch_image_arrival_matches_persisted_image_state(spark, tmp_path):
     assert list(sim.matched_id) == ["img_a"]
 
 
-def test_watch_kernel_guard_defaults_v1_when_state_without_checkpoint(spark, tmp_path):
-    """Round-3 advice: signature state on disk WITHOUT a checkpoint marker
-    (crash between the signatures append and the checkpoint write) must be
-    treated as kernel v1, not current — the guard must trip."""
-    from file_deduplicator_spark.functions.audio import SIG_KERNEL_VERSION
+def test_watch_state_without_checkpoint_is_checked_through_its_snapshots(
+        spark, watch_env, monkeypatch):
+    """The signature settings are committed with the state rows, so a crash
+    between the state append and the checkpoint write loses none of them:
+    with the checkpoint gone the state still passes the guard under its own
+    settings (the batch replays without a second append) and is refused
+    under another signature kernel version."""
+    import file_deduplicator_spark.plans.pipeline as pipeline
 
-    src = tmp_path / "src_table"
-    state = tmp_path / "state"
-    rng = np.random.RandomState(3)
-    iceberg_lite.append_snapshot(
-        spark.createDataFrame(
-            [_row("c1", _synth_pcm(rng, 16000, 300), 16000, "hello world sample")],
-            CLIP_SCHEMA,
-        ),
-        src,
-    )
+    env = watch_env
     cfg = DedupConfig()
-    process_new_snapshots(spark, src, state, cfg)
-    # simulate the crash: state artifacts persist, checkpoint lost
-    (state / "_checkpoint.json").unlink()
-    if SIG_KERNEL_VERSION != 1:
-        with pytest.raises(ValueError, match="signature kernel"):
-            process_new_snapshots(spark, src, state, cfg)
+    process_new_snapshots(spark, env["src"], env["state"], cfg)
+    (env["state"] / "_checkpoint.json").unlink()
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "SIG_KERNEL_VERSION", pipeline.SIG_KERNEL_VERSION + 1)
+        with pytest.raises(ValueError, match="sig_kernel_version="):
+            process_new_snapshots(spark, env["src"], env["state"], cfg)
+    s = process_new_snapshots(spark, env["src"], env["state"], cfg)
+    assert (s["new_rows"], s["alerts"]) == (2, 0)
+    assert len(iceberg_lite.snapshot_summaries(env["state"] / "signatures")) == 1
 
 
-@pytest.mark.parametrize("setting", [{"sim_algo": "phash"}, {"hash_algo": "md5"}])
-def test_watch_state_refuses_other_signature_settings(spark, watch_env, setting):
-    """State bootstrapped with the defaults records sim_algo and hash_algo;
-    a commit processed with another value raises instead of comparing
+@pytest.mark.parametrize("setting", [{"sim_algo": "phash"}, {"hash_algo": "md5"},
+                                     {"perceptual": False}])
+def test_watch_state_refuses_other_signature_settings(spark, watch_env, tmp_path, setting):
+    """Every state snapshot records the signature settings it was built
+    with; a commit processed with another value raises instead of comparing
     incomparable signatures (md5 digests never exact-match sha256 ones,
-    phash sims against dhash state give wrong audio alerts). A checkpoint
-    written before the guard, without the keys, is still accepted."""
+    phash sims against dhash state give wrong audio alerts). State whose
+    snapshots record no settings (written before they were recorded) is
+    refused under any settings."""
     import json
 
     env = watch_env
     process_new_snapshots(spark, env["src"], env["state"], DedupConfig())
     ck = read_checkpoint(env["state"])
-    assert (ck["sim_algo"], ck["hash_algo"]) == ("dhash", "sha256")
+    assert ck == {"last_source_snapshot": 0, "batches": 1}
+    summary = iceberg_lite.snapshot_summaries(env["state"] / "signatures")[0]
+    assert {k: summary[k] for k in ("sim_algo", "hash_algo", "perceptual")} == {
+        "sim_algo": "dhash", "hash_algo": "sha256", "perceptual": "True"}
     iceberg_lite.append_snapshot(
         spark.createDataFrame([_row("clip_e", env["third"], 16000, "novel words")], CLIP_SCHEMA),
         env["src"],
     )
-    with pytest.raises(ValueError, match=next(iter(setting))):
+    with pytest.raises(ValueError, match=f"{next(iter(setting))}="):
         process_new_snapshots(spark, env["src"], env["state"], DedupConfig(**setting))
     assert read_checkpoint(env["state"]) == ck  # nothing committed
 
-    # a pre-guard checkpoint: accepted, and it gains the keys on its write
-    ckpt_path = env["state"] / "_checkpoint.json"
-    ckpt_path.write_text(json.dumps({k: v for k, v in ck.items()
-                                     if k not in ("sim_algo", "hash_algo")}))
-    s = process_new_snapshots(spark, env["src"], env["state"], DedupConfig(**setting))
-    assert s["new_rows"] == 1
-    assert read_checkpoint(env["state"])[next(iter(setting))] == next(iter(setting.values()))
+    # the same rows and checkpoint, in a snapshot without settings
+    old = tmp_path / "old_state"
+    iceberg_lite.append_snapshot(
+        iceberg_lite.read_table(spark, env["state"] / "signatures"), old / "signatures",
+        source_snapshot=0)
+    (old / "_checkpoint.json").write_text(json.dumps(ck))
+    for cfg in (DedupConfig(), DedupConfig(**setting)):
+        with pytest.raises(ValueError, match="sig_kernel_version=<not recorded>"):
+            process_new_snapshots(spark, env["src"], old, cfg)
+    assert read_checkpoint(old) == ck
 
 
 def test_watch_image_arrival_matches_persisted_image(spark, tmp_path):
