@@ -82,16 +82,20 @@ def with_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 def signature_settings(cfg: DedupConfig) -> dict:
     """What a stored with_signatures row depends on beyond its input (the
-    MinHash format is fixed); recorded in every ``signatures`` snapshot."""
+    MinHash format is fixed), and the apply_prefilters settings that chose
+    which input rows were stored; recorded in every ``signatures`` snapshot."""
     return {"sig_kernel_version": SIG_KERNEL_VERSION, "sim_algo": cfg.sim_algo,
-            "hash_algo": cfg.hash_algo, "perceptual": cfg.perceptual}
+            "hash_algo": cfg.hash_algo, "perceptual": cfg.perceptual,
+            "min_size": cfg.min_size, "max_size": cfg.max_size,
+            "codec_filter": ",".join(sorted(c.lower() for c in cfg.codec_filter))}
 
 
 def check_signature_settings(summaries: list[dict], cfg: DedupConfig, where: str) -> None:
     """Raise ValueError unless each snapshot summary whose rows are about to
     be read records the signature_settings of ``cfg`` (a snapshot without
     them predates the record): md5 digests never equal sha256 ones, phash
-    sims never match dhash ones. ``where`` names the store."""
+    sims never match dhash ones, and rows kept under other prefilters are
+    not the rows this run would keep. ``where`` names the store."""
     for snap in summaries:
         for key, value in signature_settings(cfg).items():
             if snap.get(key) != str(value):

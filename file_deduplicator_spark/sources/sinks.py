@@ -151,10 +151,13 @@ def append_partition_lineage(
     snapshot_id: int | None = None,
 ) -> int:
     """Append this run's per-partition lineage rows (north rule: "resumable
-    from checkpoint with per-partition lineage + metrics tables"). Returns
-    the number of input partitions recorded. Collected once as Arrow (one
-    row per input file: metadata-sized at 100 TB, see input_part_expr), so
-    the write and the count do not run the aggregate again."""
+    from checkpoint with per-partition lineage + metrics tables"), stamped
+    with ``run_id`` and ``snapshot_id``: the id of the ``signatures``
+    snapshot the same write committed (null when it committed none), the
+    key changed_partitions reads them by. Returns the number of input
+    partitions recorded. Collected once as Arrow (one row per input file:
+    metadata-sized at 100 TB, see input_part_expr), so the write and the
+    count do not run the aggregate again."""
     lin = (
         partition_lineage(clips)
         .withColumn("run_id", F.lit(run_id))
@@ -167,16 +170,19 @@ def append_partition_lineage(
 
 
 def changed_partitions(
-    spark: SparkSession, clips: DataFrame, lineage_dir: str | Path, run_id: int
+    spark: SparkSession, clips: DataFrame, lineage_dir: str | Path, snapshot_id: int
 ) -> DataFrame:
     """Resume support: diff the CURRENT input's per-partition lineage against
-    the lineage recorded by ``run_id``. Returns the partitions that differ
-    (rows or membership checksum) or exist on only one side — the work a
-    resumed run must redo; an empty result proves the input is bit-identical
-    at the partition level and the prior run's outputs can be reused."""
+    the lineage recorded with the ``signatures`` snapshot ``snapshot_id`` (a
+    run id written twice holds one lineage per write; lineage without a
+    snapshot id matches none, so every partition diffs as changed). Returns
+    the partitions that differ (rows or membership checksum) or exist on
+    only one side — the work a resumed run must redo; an empty result proves
+    the input is bit-identical at the partition level and the prior run's
+    outputs can be reused."""
     prev = (
         spark.read.parquet(str(lineage_dir))
-        .where(F.col("run_id") == run_id)
+        .where(F.col("snapshot_id") == snapshot_id)
         .select("part", F.col("rows").alias("prev_rows"),
                 F.col("id_checksum").alias("prev_checksum"))
     )
@@ -190,4 +196,4 @@ def changed_partitions(
         | F.col("cur_rows").isNull()
         | (F.col("prev_rows") != F.col("cur_rows"))
         | (F.col("prev_checksum") != F.col("cur_checksum"))
-    ).orderBy("part")
+    )

@@ -19,17 +19,16 @@ Resumability (north rule): state = a ``signatures`` Iceberg table
 (sources/iceberg_lite.py), one snapshot per batch tagged with the source
 snapshot it ingested and the signature settings it was built with (each
 checked by pipeline.check_signature_settings before the state is read),
-+ ``_checkpoint.json`` carrying progress only (the last processed source
-snapshot id, the batch count), written only after a batch fully succeeds,
-+ ``alerts/batch=N`` and ``actions/batch=N``. A replayed batch skips the
-append its tag shows was made and overwrites its batch dirs, so it
-replays idempotently. The source is an Iceberg table too, read from the
-checkpointed snapshot id on.
++ ``alerts/batch=N`` and ``actions/batch=N``. The state snapshot is the
+one commit record: a batch writes its batch dirs first and appends its
+snapshot last, and the next batch reads the source after the latest
+snapshot's ``source_snapshot``, numbered by the count of snapshots. A
+batch that dies before its commit replays and overwrites its batch dirs,
+so it replays idempotently. The source is an Iceberg table too.
 """
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 from pyspark import StorageLevel
@@ -47,25 +46,6 @@ from file_deduplicator_spark.sources import iceberg_lite
 SIG_COLS = ["clip_id", "digest", "size", "sim_sig", "minhash_sig"]
 
 
-def _checkpoint_path(state_dir: str | Path) -> Path:
-    return Path(state_dir) / "_checkpoint.json"
-
-
-def read_checkpoint(state_dir: str | Path) -> dict:
-    p = _checkpoint_path(state_dir)
-    if not p.exists():
-        return {"last_source_snapshot": None, "batches": 0}
-    return json.loads(p.read_text())
-
-
-def write_json(p: Path, obj: dict) -> None:
-    """Atomic replace: a crash leaves the old file or the new one."""
-    p.parent.mkdir(parents=True, exist_ok=True)
-    tmp = p.with_suffix(".tmp")
-    tmp.write_text(json.dumps(obj))
-    tmp.rename(p)
-
-
 def batch_alerts(
     new_sigs: DataFrame, state: DataFrame | None, cfg: DedupConfig,
     include: tuple = ("exact", "similar_audio", "similar_text"),
@@ -78,12 +58,12 @@ def batch_alerts(
     later clip_id (SURVEY §4 determinism).
 
     New ∪ state rows, tagged ``in_state``, feed every match; state rows whose
-    clip_id is in the batch are dropped first, so a replayed batch meets its
-    own rows once, as arrivals. Exact: one digest equi-join (main.go:
-    1846-1856). Similar (replaces the O(n) scan, main.go:1874-1886): the
-    batch path's near-dup core — pipeline.near_dup_bands builds the band
-    families (carrying ``in_state``; ``include`` picks which are kept),
-    narrowed to the buckets holding a new row, then lsh.bucket_pairs keeps
+    clip_id is in the batch are dropped first, so a clip id that the source
+    commits again is matched once, as an arrival, never against its stored
+    row. Exact: one digest equi-join (main.go:1846-1856). Similar (replaces
+    the O(n) scan, main.go:1874-1886): the batch path's near-dup core —
+    pipeline.near_dup_bands builds the band families (carrying
+    ``in_state``; ``include`` picks which are kept), narrowed to the buckets holding a new row, then lsh.bucket_pairs keeps
     pairs with a new side that pass the family's in-bucket verify, and text
     pairs take the one slot-agreement verify, lsh.verify_pairs_minhash.
     Members sort new-first, so the cap evicts a new row only from a bucket
@@ -165,9 +145,11 @@ def process_new_snapshots(
     state_dir: str | Path,
     cfg: DedupConfig = DedupConfig(),
 ) -> dict:
-    """One incremental batch: read rows added since the checkpoint, alert on
-    duplicates vs state (and within the batch), extend state, advance the
-    checkpoint. Returns WatchStats-style metrics (A5).
+    """One incremental batch: read the source rows added after the snapshot
+    the last state commit ingested, alert on duplicates vs state (and within
+    the batch), write the batch's alerts and actions, then commit its
+    signatures as the next state snapshot. Returns WatchStats-style metrics
+    (A5).
     """
     state_dir = Path(state_dir)
     sig_table = state_dir / "signatures"
@@ -181,12 +163,14 @@ def process_new_snapshots(
     # the match below reads every state snapshot
     summaries = iceberg_lite.snapshot_summaries(sig_table) if have_state else []
     check_signature_settings(summaries, cfg, f"watch state at {state_dir}")
-    ckpt = read_checkpoint(state_dir)
-    new_rows, latest = iceberg_lite.read_incremental(spark, source_table,
-                                                     ckpt["last_source_snapshot"])
+    # progress is what the state committed: one snapshot per batch, each
+    # tagged with the source snapshot it ingested (summary values are strings)
+    batch_id = len(summaries)
+    last = int(summaries[-1]["source_snapshot"]) if summaries else None
+    new_rows, latest = iceberg_lite.read_incremental(spark, source_table, last)
     if new_rows is None:
-        return {"new_rows": 0, "alerts": 0, "actions": 0, "batch": ckpt["batches"],
-                "last_source_snapshot": ckpt["last_source_snapshot"]}
+        return {"new_rows": 0, "alerts": 0, "actions": 0, "batch": batch_id,
+                "last_source_snapshot": last}
 
     # F6: re-apply the batch filters to new arrivals (ref main.go:1683-1704
     # runs the same size/pattern checks per watch event)
@@ -198,16 +182,10 @@ def process_new_snapshots(
     alerts, match_stats = batch_alerts(new_sigs, state, cfg)
     n_alerts = match_stats["alerts"]
     n_new = new_sigs.count()
-    batch_id = ckpt["batches"]
 
-    # commit protocol (idempotent replay): the state append is tagged with
-    # the SOURCE snapshot id (summary values are strings) and skipped if that
-    # snapshot was already ingested; alerts/actions overwrite a per-batch
-    # directory, so a replayed batch rewrites identical output. The signature
-    # settings are committed with the rows they describe.
-    if not any(m.get("source_snapshot") == str(latest) for m in summaries):
-        iceberg_lite.append_snapshot(new_sigs, sig_table, source_snapshot=latest,
-                                     **signature_settings(cfg))
+    # commit protocol (idempotent replay): alerts/actions overwrite a
+    # per-batch directory, and the state append comes last, so a batch that
+    # dies before it replays and rewrites identical output
     if n_alerts:
         alerts.withColumn("batch", F.lit(batch_id)).write.mode("overwrite").parquet(
             str(state_dir / "alerts" / f"batch={batch_id}")
@@ -236,8 +214,10 @@ def process_new_snapshots(
             str(state_dir / "actions" / f"batch={batch_id}")
         )
 
-    write_json(_checkpoint_path(state_dir),
-               {"last_source_snapshot": latest, "batches": batch_id + 1})
+    # the commit: tagged with the SOURCE snapshot id, and the signature
+    # settings committed with the rows they describe
+    iceberg_lite.append_snapshot(new_sigs, sig_table, source_snapshot=latest,
+                                 **signature_settings(cfg))
 
     new_sigs.unpersist()
     alerts.unpersist()

@@ -64,13 +64,15 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                    help="lineage run id (default: unix seconds)")
     p.add_argument("--resume-from", type=int, default=None, dest="resume_from",
                    help="prior run id under the same --output: diff the "
-                        "current input's per-partition lineage against that "
-                        "run's, reuse its recorded signatures for unchanged "
+                        "current input's per-partition lineage against the "
+                        "lineage of that run's latest signatures snapshot, "
+                        "reuse the snapshot's signatures for unchanged "
                         "partitions, and re-decode ONLY the changed ones. "
                         "Assumes an append/delete-only corpus (rows "
                         "immutable per clip_id — the Iceberg-table posture). "
                         "Refused if that run used another --sim-algo, "
-                        "--hash-algo, --no-perceptual or signature kernel.")
+                        "--hash-algo, --no-perceptual, --min-size, "
+                        "--max-size or signature kernel.")
     p.add_argument("--no-save-signatures", action="store_true",
                    help="skip this run's snapshot (tagged with the run id and "
                         "signature settings) in the <output>/signatures "
@@ -102,7 +104,8 @@ def build_resume_signatures(spark, clips, cfg, out: Path, prev_run_id: int):
     input partitions + freshly computed rows for changed ones.
 
     The diff comes from sinks.changed_partitions (per-partition row count +
-    order-insensitive clip_id checksum) — a partition is reused only when
+    order-insensitive clip_id checksum, against the lineage written with
+    the signatures snapshot reused here) — a partition is reused only when
     BOTH match, so renumbered or re-split partitions conservatively
     recompute. Payload bytes are decoded ONLY for changed partitions; the
     reused rows never touch the input scan at all. The changed-partition
@@ -123,14 +126,15 @@ def build_resume_signatures(spark, clips, cfg, out: Path, prev_run_id: int):
     if not iceberg_lite.is_iceberg_table(sig_dir):
         raise ValueError(f"{where} is missing (--no-save-signatures?) or in an older "
                          "engine's parquet layout: start a fresh --output")
-    # the latest snapshot of the run: a retried run id reads its last write
+    # the latest snapshot of the run: a retried run id reads its last write,
+    # its rows and its lineage
     snap = next((m for m in reversed(iceberg_lite.snapshot_summaries(sig_dir))
                  if m.get("run_id") == str(prev_run_id)), None)
     if snap is None:
         raise ValueError(f"{where} holds no snapshot of run {prev_run_id}")
     check_signature_settings([snap], cfg, where)
     changed = sinks.changed_partitions(
-        spark, clips, out / "partitions", prev_run_id).persist()
+        spark, clips, out / "partitions", snap["snapshot_id"]).persist()
     changed_parts = changed.select("part")
     n_changed = changed_parts.count()
 
@@ -233,15 +237,17 @@ def main(argv: list[str] | None = None) -> dict:
     result["pairs"].write.mode("overwrite").parquet(str(out / "pairs"))
     report = sinks.write_report_json(result["report"], out / "report.json")
     sinks.append_actions(result["plan"], out / "actions", run_id=run_id)
-    n_parts = sinks.append_partition_lineage(
-        clips, out / "partitions", run_id=run_id)
+    snapshot_id = None
     if not args.no_save_signatures:
         # per-clip signature checkpoint, one snapshot per run tagged with the
         # run id and signature settings, for a later --resume-from. Slim
         # columns only; it reuses the persisted sigs frame: one write.
-        iceberg_lite.append_snapshot(
+        snapshot_id = iceberg_lite.append_snapshot(
             result["signatures"].drop("digest_root"), out / "signatures",
             run_id=run_id, **signature_settings(cfg))
+    # the lineage carries that snapshot's id, which a resume reads it by
+    n_parts = sinks.append_partition_lineage(
+        clips, out / "partitions", run_id=run_id, snapshot_id=snapshot_id)
 
     metrics = collect_run_metrics(result)
     if resume_info:

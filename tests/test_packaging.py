@@ -187,9 +187,10 @@ def test_job_resume_after_append(spark, tmp_path, clips_df):
 
 def test_job_resume_refuses_other_signatures(spark, tmp_path, clips_df, monkeypatch):
     """--resume-from reads only signatures built with this run's settings:
-    another --sim-algo, --hash-algo, --no-perceptual or signature kernel
-    version raises (naming the setting) before any row is read, and so
-    does a signatures dir in the retired run_id-partitioned parquet
+    another --sim-algo, --hash-algo, --no-perceptual, signature kernel
+    version, or prefilter (--min-size, --max-size: they chose the rows the
+    snapshot holds) raises (naming the setting) before any row is read, and
+    so does a signatures dir in the retired run_id-partitioned parquet
     layout."""
     import pytest
     from pyspark.sql import functions as F
@@ -210,7 +211,9 @@ def test_job_resume_refuses_other_signatures(spark, tmp_path, clips_df, monkeypa
               "--run-id", "2", "--resume-from", "1"]
     for flags, key in ((["--sim-algo", "phash"], "sim_algo"),
                        (["--hash-algo", "md5"], "hash_algo"),
-                       (["--no-perceptual"], "perceptual")):
+                       (["--no-perceptual"], "perceptual"),
+                       (["--min-size", "21740"], "min_size"),
+                       (["--max-size", "1000000"], "max_size")):
         with pytest.raises(ValueError, match=f"{key}="):
             main(resume + flags)
     with monkeypatch.context() as m:
@@ -227,31 +230,46 @@ def test_job_resume_refuses_other_signatures(spark, tmp_path, clips_df, monkeypa
               "--run-id", "2", "--resume-from", "1"])
 
 
-def test_job_resume_of_a_run_id_written_twice(spark, tmp_path, clips_df):
-    """A run id written twice (a retried job) resumes from its latest
-    snapshot alone: the report and action plan equal the full run's, and no
-    clip is planned for removal in favour of itself."""
+def test_job_resume_of_a_run_id_written_twice(spark, tmp_path, clips_fixture):
+    """A run id written twice (a retried job), over an input that lost a
+    clip in between, resumes from its latest write alone: its signatures
+    snapshot, and the lineage written with it, so the one input file diffs
+    as unchanged, and the outputs equal a full run's (the rows of both
+    writes would plan clips for removal in favour of themselves)."""
+    import pyarrow.parquet as pq
+
+    from file_deduplicator_spark.datagen import write_clips_parquet
+
     sys.path.insert(0, str(REPO / "jobs"))
     try:
         from run_dedup import main
     finally:
         sys.path.pop(0)
-    src = tmp_path / "clips.parquet"
-    clips_df.write.parquet(str(src))
-    out = tmp_path / "run"
-    args = ["--input", str(src), "--output", str(out), "--local"]
-    full = main(args + ["--run-id", "1"])
-    main(args + ["--run-id", "1"])
-    resumed = main(args + ["--run-id", "3", "--resume-from", "1"])
+    src = tmp_path / "input"
+    write_clips_parquet(clips_fixture, str(src))
+    out, out_full = tmp_path / "run", tmp_path / "run_full"
+    args = ["--input", str(src), "--local"]
+    main(args + ["--output", str(out), "--run-id", "1"])
+    t = pq.read_table(src / "clips.parquet")
+    pq.write_table(t.slice(1), src / "clips.parquet", row_group_size=512)
+    main(args + ["--output", str(out), "--run-id", "1"])
+    resumed = main(args + ["--output", str(out), "--run-id", "2", "--resume-from", "1"])
     assert resumed["metrics"]["changed_partitions"] == 0
-    assert resumed["report"] == full["report"]
-    cols = ["clip_id", "keeper_id", "cluster_id", "planned_action"]
-    actions = spark.read.parquet(str(out / "actions"))
-    plan = actions.where("run_id = 3").select(*cols)
-    assert plan.filter("clip_id = keeper_id").count() == 0
-    first = actions.where("run_id = 1").select(*cols).distinct()
-    assert plan.count() == first.count()
-    assert plan.exceptAll(first).count() == 0 and first.exceptAll(plan).count() == 0
+    full = main(args + ["--output", str(out_full), "--run-id", "2"])
+
+    assert resumed["report"] == full["report"] and full["report"]["duplicate_groups"] > 0
+
+    def rows(o, table, cols):  # actions appends: this run's rows
+        df = spark.read.parquet(str(o / table))
+        return (df.where("run_id = 2") if table == "actions" else df).select(*cols)
+
+    for table, cols in (("clusters", ["cluster_id", "group_count", "duplicates",
+                                      "reclaimable_bytes"]),
+                        ("pairs", ["id_a", "id_b"]),
+                        ("actions", ["clip_id", "keeper_id", "cluster_id", "planned_action"])):
+        a, b = rows(out, table, cols), rows(out_full, table, cols)
+        assert a.count() == b.count() > 0, table
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, table
 
 
 def test_one_signature_store_and_one_settings_guard():

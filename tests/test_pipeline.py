@@ -385,7 +385,9 @@ def test_partition_lineage_resume_diff(spark, clips_df, tmp_path):
     """North rule: "resumable from checkpoint with per-partition lineage +
     metrics tables". Lineage rows cover every input row; an unchanged input
     diffs empty against its own recorded run; dropping rows flags exactly
-    the partitions whose membership changed (the work a resume must redo)."""
+    the partitions whose membership changed (the work a resume must redo).
+    The diff reads the lineage of one signatures snapshot id: another
+    write's lineage, or lineage written without one, is not read."""
     from file_deduplicator_spark.sources.sinks import (
         append_partition_lineage,
         changed_partitions,
@@ -393,7 +395,7 @@ def test_partition_lineage_resume_diff(spark, clips_df, tmp_path):
     )
 
     lin_dir = tmp_path / "partitions"
-    n_parts = append_partition_lineage(clips_df, lin_dir, run_id=7)
+    n_parts = append_partition_lineage(clips_df, lin_dir, run_id=7, snapshot_id=3)
     back = spark.read.parquet(str(lin_dir))
     assert back.count() == n_parts
     # lineage accounts for every input row, no partition double-counted
@@ -402,14 +404,19 @@ def test_partition_lineage_resume_diff(spark, clips_df, tmp_path):
     assert back.select("part").distinct().count() == n_parts
 
     # identical input → empty resume diff (prior outputs reusable)
-    assert changed_partitions(spark, clips_df, lin_dir, run_id=7).count() == 0
+    assert changed_partitions(spark, clips_df, lin_dir, snapshot_id=3).count() == 0
+    # a second write of run 7 with no snapshot id is not read as snapshot
+    # 3's; a snapshot with no lineage diffs every partition as changed
+    append_partition_lineage(clips_df, lin_dir, run_id=7)
+    assert changed_partitions(spark, clips_df, lin_dir, snapshot_id=3).count() == 0
+    assert changed_partitions(spark, clips_df, lin_dir, snapshot_id=4).count() == n_parts
 
     # membership change → exactly the touched partitions flagged; the
     # checksum (sum of xxhash64) catches same-count swaps too
     cur = partition_lineage(clips_df)
     victim = clips_df.limit(1).select("clip_id").first()[0]
     mutated = clips_df.where(F.col("clip_id") != victim)
-    diff = changed_partitions(spark, mutated, lin_dir, run_id=7).collect()
+    diff = changed_partitions(spark, mutated, lin_dir, snapshot_id=3).collect()
     assert len(diff) >= 1
     for row in diff:
         assert row.prev_rows is None or row.cur_rows is None or (

@@ -1,8 +1,11 @@
 """Incremental ("watch mode") dedup tests: snapshot source, state bootstrap,
-new-arrival-is-victim, exact + similar matching, resumable checkpoints.
+new-arrival-is-victim, exact + similar matching, resumable from the state's
+own snapshots.
 
 Mirrors reference semantics: initialScan (main.go:1757-1826), processNewFiles
 (main.go:1829-1921), new-file-is-victim (SURVEY §2.7 note)."""
+
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -12,7 +15,7 @@ from file_deduplicator_spark.config import DedupConfig
 from file_deduplicator_spark.datagen import _synth_pcm
 from file_deduplicator_spark.functions.audio import wav_encode
 from file_deduplicator_spark.sources import iceberg_lite
-from file_deduplicator_spark.streaming.watch import process_new_snapshots, read_checkpoint
+from file_deduplicator_spark.streaming.watch import SIG_COLS, process_new_snapshots
 
 CLIP_SCHEMA = T.StructType(
     [
@@ -28,6 +31,38 @@ CLIP_SCHEMA = T.StructType(
 
 def _row(cid, pcm, sr, txt):
     return (cid, bytearray(wav_encode(pcm, sr)), sr, int(len(pcm) / sr * 1000), "wav", txt)
+
+
+def _crash_before_commit(monkeypatch, state):
+    """The next append to ``state``'s signatures table (a batch's commit)
+    raises once; appends to other tables go through."""
+    append = iceberg_lite.append_snapshot
+
+    def crash(df, table_dir, **summary):
+        if Path(table_dir) == state / "signatures":
+            monkeypatch.setattr(iceberg_lite, "append_snapshot", append)
+            raise RuntimeError("crash before the commit")
+        return append(df, table_dir, **summary)
+
+    monkeypatch.setattr(iceberg_lite, "append_snapshot", crash)
+
+
+def _outputs(spark, state):
+    """Every alert and action, and each state snapshot's source snapshot and
+    rows (SIG_COLS, by clip_id)."""
+    def rows(name, cols):
+        d = state / name
+        if not d.exists():
+            return []
+        return sorted(map(tuple, spark.read.parquet(str(d)).select(*cols).collect()))
+
+    snaps = [
+        (m["source_snapshot"], sorted(iceberg_lite.read_incremental(
+            spark, state / "signatures", m["parent_snapshot_id"], m["snapshot_id"])[0]
+            .select(*SIG_COLS).collect(), key=lambda r: r.clip_id))
+        for m in iceberg_lite.snapshot_summaries(state / "signatures")]
+    return (rows("alerts", ["new_id", "matched_id", "match_kind", "batch"]),
+            rows("actions", ["clip_id", "keeper_id", "action", "batch"]), snaps)
 
 
 @pytest.fixture()
@@ -102,9 +137,8 @@ def test_similar_audio_and_text_match(spark, watch_env):
 def test_checkpoint_resume(spark, watch_env):
     cfg = DedupConfig()
     env = watch_env
-    process_new_snapshots(spark, env["src"], env["state"], cfg)
-    ck = read_checkpoint(env["state"])
-    assert ck["last_source_snapshot"] == 0 and ck["batches"] == 1
+    s0 = process_new_snapshots(spark, env["src"], env["state"], cfg)
+    assert (s0["last_source_snapshot"], s0["batch"]) == (0, 0)
 
     iceberg_lite.append_snapshot(
         spark.createDataFrame([_row("clip_e", env["third"], 16000, "novel words")], CLIP_SCHEMA),
@@ -117,8 +151,13 @@ def test_checkpoint_resume(spark, watch_env):
     # one batch consumes BOTH pending snapshots; clip_f dups clip_e within batch
     s = process_new_snapshots(spark, env["src"], env["state"], cfg)
     assert s["new_rows"] == 2
-    ck2 = read_checkpoint(env["state"])
-    assert ck2["last_source_snapshot"] == 2 and ck2["batches"] == 2
+    assert (s["last_source_snapshot"], s["batch"]) == (2, 1)
+    # progress is the state's own snapshots: one per batch, each tagged with
+    # the last source snapshot it ingested
+    summaries = iceberg_lite.snapshot_summaries(env["state"] / "signatures")
+    assert [m["source_snapshot"] for m in summaries] == ["0", "2"]
+    s_noop = process_new_snapshots(spark, env["src"], env["state"], cfg)
+    assert (s_noop["new_rows"], s_noop["last_source_snapshot"], s_noop["batch"]) == (0, 2, 2)
     alerts = spark.read.parquet(str(env["state"] / "alerts")).toPandas()
     ex = alerts.query("match_kind == 'exact'")
     assert ("clip_f" in set(ex.new_id)) and ("clip_e" in set(ex.matched_id))
@@ -169,15 +208,15 @@ def test_watch_auto_clean_actions(spark, watch_env):
     assert list(actions.target) == ["/qz/clip_c"]
 
 
-def test_watch_replay_is_idempotent(spark, watch_env):
-    """Crash between state append and checkpoint write: the replayed batch
-    must not duplicate state rows nor self-match its own rows."""
-    import json
-
-    cfg = DedupConfig()
+def test_watch_replay_is_idempotent(spark, watch_env, tmp_path, monkeypatch):
+    """A batch that dies before its commit (the state append, its last
+    write) replays: the rerun writes the alerts, actions and state snapshots
+    of an uninterrupted run, with no self-match."""
+    cfg = DedupConfig(watch_auto_clean=True)
     env = watch_env
-    process_new_snapshots(spark, env["src"], env["state"], cfg)
-
+    clean = tmp_path / "clean_state"
+    for state in (env["state"], clean):
+        process_new_snapshots(spark, env["src"], state, cfg)
     iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [_row("clip_c", env["base"], 16000,
@@ -186,23 +225,19 @@ def test_watch_replay_is_idempotent(spark, watch_env):
         ),
         env["src"],
     )
-    s1 = process_new_snapshots(spark, env["src"], env["state"], cfg)
-    state_rows = iceberg_lite.read_table(spark, env["state"] / "signatures").count()
+    s1 = process_new_snapshots(spark, env["src"], clean, cfg)
 
-    # simulate the crash: rewind the engine checkpoint to before the batch
-    ckpt_path = env["state"] / "_checkpoint.json"
-    ck = json.loads(ckpt_path.read_text())
-    ck["last_source_snapshot"] -= 1
-    ck["batches"] -= 1
-    ckpt_path.write_text(json.dumps(ck))
-
+    _crash_before_commit(monkeypatch, env["state"])
+    with pytest.raises(RuntimeError, match="crash before the commit"):
+        process_new_snapshots(spark, env["src"], env["state"], cfg)
+    assert len(iceberg_lite.snapshot_summaries(env["state"] / "signatures")) == 1
     s2 = process_new_snapshots(spark, env["src"], env["state"], cfg)
-    # state not re-appended; alerts identical to the first run (no clip_c →
-    # clip_c self-match rows)
-    assert iceberg_lite.read_table(spark, env["state"] / "signatures").count() == state_rows
-    assert s2["alerts"] == s1["alerts"]
-    alerts = spark.read.parquet(str(env["state"] / "alerts")).toPandas()
-    assert not ((alerts.new_id == alerts.matched_id).any())
+
+    assert s2 == s1 and s1["alerts"] >= 1
+    got = _outputs(spark, env["state"])
+    assert got == _outputs(spark, clean)
+    assert [src for src, _ in got[2]] == ["0", "1"]
+    assert not [a for a in got[0] if a[0] == a[1]]
 
 
 def test_watch_empty_transcripts_never_text_match(spark, watch_env):
@@ -235,8 +270,8 @@ def test_watch_empty_transcripts_never_text_match(spark, watch_env):
 
 def test_watch_state_is_signatures_table_only(spark, watch_env):
     """Every commit matches against the `signatures` snapshot table itself:
-    after bootstrap + 2 auto-clean commits the state dir holds only the
-    checkpoint, that table and the per-batch alerts/actions — no
+    after bootstrap + 2 auto-clean commits the state dir holds only that
+    table and the per-batch alerts/actions — no progress file and no
     hash-bucket-partitioned index directories."""
     cfg = DedupConfig(watch_auto_clean=True)
     env = watch_env
@@ -255,8 +290,7 @@ def test_watch_state_is_signatures_table_only(spark, watch_env):
         assert s["alerts"] >= 1 and s["actions"] == 1
 
     state = env["state"]
-    assert {p.name for p in state.iterdir()} == {
-        "_checkpoint.json", "signatures", "alerts", "actions"}
+    assert {p.name for p in state.iterdir()} == {"signatures", "alerts", "actions"}
     paths = [str(p.relative_to(state)) for p in state.rglob("*")]
     assert not [p for p in paths
                 if any(k in p for k in ("pbkt=", "dbkt=", "sbkt="))]
@@ -270,15 +304,11 @@ def test_watch_state_is_signatures_table_only(spark, watch_env):
 
 def test_watch_refuses_json_snapshot_log_state(spark, watch_env):
     """A `signatures` dir in the retired JSON snapshot-log format (a
-    `_snapshots.json` log over parquet files, next to a checkpoint) is
-    neither read nor bootstrapped over: the batch raises and asks for a
-    rebuild."""
+    `_snapshots.json` log over parquet files) is neither read nor
+    bootstrapped over: the batch raises and asks for a rebuild."""
     import json
 
     env = watch_env
-    ckpt = {"last_source_snapshot": 0, "batches": 1}
-    env["state"].mkdir()
-    (env["state"] / "_checkpoint.json").write_text(json.dumps(ckpt))
     old = env["state"] / "signatures"
     data = old / "data" / "snap-000000"
     spark.createDataFrame(
@@ -289,7 +319,8 @@ def test_watch_refuses_json_snapshot_log_state(spark, watch_env):
         [{"snapshot_id": 0, "files": files, "row_count": 1, "source_snapshot": 0}]))
     with pytest.raises(ValueError, match="not an Iceberg table"):
         process_new_snapshots(spark, env["src"], env["state"], DedupConfig())
-    assert read_checkpoint(env["state"]) == ckpt
+    assert {p.name for p in env["state"].iterdir()} == {"signatures"}
+    assert {p.name for p in old.iterdir()} == {"data", "_snapshots.json"}
 
 
 def test_watch_image_arrival_matches_persisted_image_state(spark, tmp_path):
@@ -341,64 +372,54 @@ def test_watch_image_arrival_matches_persisted_image_state(spark, tmp_path):
     assert list(sim.matched_id) == ["img_a"]
 
 
-def test_watch_state_without_checkpoint_is_checked_through_its_snapshots(
-        spark, watch_env, monkeypatch):
-    """The signature settings are committed with the state rows, so a crash
-    between the state append and the checkpoint write loses none of them:
-    with the checkpoint gone the state still passes the guard under its own
-    settings (the batch replays without a second append) and is refused
-    under another signature kernel version."""
+@pytest.mark.parametrize("setting", [{"sim_algo": "phash"}, {"hash_algo": "md5"},
+                                     {"perceptual": False}, {"sig_kernel_version": 1},
+                                     {"min_size": 1}, {"max_size": 1 << 30},
+                                     {"codec_filter": ("wav",)}])
+def test_watch_state_refuses_other_signature_settings(
+        spark, watch_env, tmp_path, monkeypatch, setting):
+    """Every state snapshot records the signature settings it was built
+    with, the prefilters that chose its rows among them; a commit processed
+    with another value, or under another signature kernel version, raises
+    instead of comparing incomparable signatures (md5 digests never
+    exact-match sha256 ones, phash sims against dhash state give wrong audio
+    alerts) or matching against rows its own filters would drop. State
+    whose snapshots record no settings (written before they were recorded)
+    is refused under any settings."""
     import file_deduplicator_spark.plans.pipeline as pipeline
 
     env = watch_env
-    cfg = DedupConfig()
-    process_new_snapshots(spark, env["src"], env["state"], cfg)
-    (env["state"] / "_checkpoint.json").unlink()
-    with monkeypatch.context() as m:
-        m.setattr(pipeline, "SIG_KERNEL_VERSION", pipeline.SIG_KERNEL_VERSION + 1)
-        with pytest.raises(ValueError, match="sig_kernel_version="):
-            process_new_snapshots(spark, env["src"], env["state"], cfg)
-    s = process_new_snapshots(spark, env["src"], env["state"], cfg)
-    assert (s["new_rows"], s["alerts"]) == (2, 0)
-    assert len(iceberg_lite.snapshot_summaries(env["state"] / "signatures")) == 1
-
-
-@pytest.mark.parametrize("setting", [{"sim_algo": "phash"}, {"hash_algo": "md5"},
-                                     {"perceptual": False}])
-def test_watch_state_refuses_other_signature_settings(spark, watch_env, tmp_path, setting):
-    """Every state snapshot records the signature settings it was built
-    with; a commit processed with another value raises instead of comparing
-    incomparable signatures (md5 digests never exact-match sha256 ones,
-    phash sims against dhash state give wrong audio alerts). State whose
-    snapshots record no settings (written before they were recorded) is
-    refused under any settings."""
-    import json
-
-    env = watch_env
     process_new_snapshots(spark, env["src"], env["state"], DedupConfig())
-    ck = read_checkpoint(env["state"])
-    assert ck == {"last_source_snapshot": 0, "batches": 1}
-    summary = iceberg_lite.snapshot_summaries(env["state"] / "signatures")[0]
-    assert {k: summary[k] for k in ("sim_algo", "hash_algo", "perceptual")} == {
-        "sim_algo": "dhash", "hash_algo": "sha256", "perceptual": "True"}
+    summaries = iceberg_lite.snapshot_summaries(env["state"] / "signatures")
+    assert {k: summaries[0][k] for k in ("sim_algo", "hash_algo", "perceptual", "min_size",
+                                         "max_size", "codec_filter")} == {
+        "sim_algo": "dhash", "hash_algo": "sha256", "perceptual": "True", "min_size": "0",
+        "max_size": "0", "codec_filter": ""}
     iceberg_lite.append_snapshot(
         spark.createDataFrame([_row("clip_e", env["third"], 16000, "novel words")], CLIP_SCHEMA),
         env["src"],
     )
-    with pytest.raises(ValueError, match=f"{next(iter(setting))}="):
-        process_new_snapshots(spark, env["src"], env["state"], DedupConfig(**setting))
-    assert read_checkpoint(env["state"]) == ck  # nothing committed
+    key = next(iter(setting))
+    if key == "sig_kernel_version":  # a kernel change, not a DedupConfig field
+        monkeypatch.setattr(pipeline, "SIG_KERNEL_VERSION", pipeline.SIG_KERNEL_VERSION + 1)
+        other = DedupConfig()
+    else:
+        other = DedupConfig(**setting)
+    with pytest.raises(ValueError, match=f"{key}="):
+        process_new_snapshots(spark, env["src"], env["state"], other)
+    # nothing committed or written
+    assert iceberg_lite.snapshot_summaries(env["state"] / "signatures") == summaries
+    assert {p.name for p in env["state"].iterdir()} == {"signatures"}
 
-    # the same rows and checkpoint, in a snapshot without settings
+    # the same rows, in a snapshot without settings
     old = tmp_path / "old_state"
     iceberg_lite.append_snapshot(
         iceberg_lite.read_table(spark, env["state"] / "signatures"), old / "signatures",
         source_snapshot=0)
-    (old / "_checkpoint.json").write_text(json.dumps(ck))
-    for cfg in (DedupConfig(), DedupConfig(**setting)):
+    for cfg in (DedupConfig(), other):
         with pytest.raises(ValueError, match="sig_kernel_version=<not recorded>"):
             process_new_snapshots(spark, env["src"], old, cfg)
-    assert read_checkpoint(old) == ck
+    assert len(iceberg_lite.snapshot_summaries(old / "signatures")) == 1
 
 
 def test_watch_image_arrival_matches_persisted_image(spark, tmp_path):
@@ -556,17 +577,17 @@ def test_watch_aiff_and_adpcm_arrivals_match_persisted_wav(spark, tmp_path):
     assert ("adpcm_dup", "w_orig") in sim
 
 
-def test_watch_replay_of_within_batch_duplicates_is_idempotent(spark, watch_env):
+def test_watch_replay_of_within_batch_duplicates_is_idempotent(
+        spark, watch_env, tmp_path, monkeypatch):
     """Two byte-identical arrivals in one commit: the later id is the victim.
-    A replay after a crash between the state append and the checkpoint finds
-    both rows in state; it must alert exactly as the first run did, not on
-    each pair in both directions (which would mark the keeper for removal
-    too)."""
-    import json
-
+    A replay after a crash before the commit alerts exactly as an
+    uninterrupted run does, on the pair in one direction only (both
+    directions would mark the keeper for removal too)."""
     cfg = DedupConfig(watch_auto_clean=True)
     env = watch_env
-    process_new_snapshots(spark, env["src"], env["state"], cfg)
+    clean = tmp_path / "clean_state"
+    for state in (env["state"], clean):
+        process_new_snapshots(spark, env["src"], state, cfg)
     iceberg_lite.append_snapshot(
         spark.createDataFrame(
             [_row(cid, env["third"], 16000, "identical words in both copies")
@@ -575,26 +596,16 @@ def test_watch_replay_of_within_batch_duplicates_is_idempotent(spark, watch_env)
         ),
         env["src"],
     )
-
-    def outputs():
-        alerts = spark.read.parquet(str(env["state"] / "alerts" / "batch=1")).toPandas()
-        actions = spark.read.parquet(str(env["state"] / "actions" / "batch=1")).toPandas()
-        return (sorted(zip(alerts.new_id, alerts.matched_id, alerts.match_kind)),
-                sorted(zip(actions.clip_id, actions.keeper_id, actions.action)))
-
-    s1 = process_new_snapshots(spark, env["src"], env["state"], cfg)
-    first = outputs()
-    assert first[0] == [("x2", "x1", k) for k in ("exact", "similar_audio", "similar_text")]
-    assert first[1] == [("x2", "x1", "remove")]
-
-    ckpt_path = env["state"] / "_checkpoint.json"
-    ck = json.loads(ckpt_path.read_text())
-    ck["last_source_snapshot"] -= 1
-    ck["batches"] -= 1
-    ckpt_path.write_text(json.dumps(ck))
-
+    s1 = process_new_snapshots(spark, env["src"], clean, cfg)
+    _crash_before_commit(monkeypatch, env["state"])
+    with pytest.raises(RuntimeError, match="crash before the commit"):
+        process_new_snapshots(spark, env["src"], env["state"], cfg)
     s2 = process_new_snapshots(spark, env["src"], env["state"], cfg)
-    assert outputs() == first
+
+    alerts, actions, snaps = _outputs(spark, env["state"])
+    assert (alerts, actions, snaps) == _outputs(spark, clean)
+    assert alerts == [("x2", "x1", k, 1) for k in ("exact", "similar_audio", "similar_text")]
+    assert actions == [("x2", "x1", "remove", 1)]
     assert (s2["alerts"], s2["actions"]) == (s1["alerts"], s1["actions"]) == (3, 1)
 
 
